@@ -54,17 +54,16 @@ VARIANT_OFFSET = 1_000_000
 # SPARK_GRAFT_DISABLE_PINS to a comma-separated tag list, or "all") and
 # (b) cluster deployments where a non-replicated checkpoint block is a
 # fault-tolerance liability can switch them off without a code change.
-_PINS_DISABLED = frozenset(
-    t.strip()
-    for t in os.environ.get("SPARK_GRAFT_DISABLE_PINS", "").split(",")
-    if t.strip()
-)
-
-
+# The variable is read on every call, so a change made after import
+# (same-process A/Bs, notebooks, long-lived drivers) takes effect.
 def _pin(df: DataFrame, tag: str) -> DataFrame:
     """Materialize a shared intermediate once (localCheckpoint) unless
     the pin is disabled via ``SPARK_GRAFT_DISABLE_PINS``."""
-    if tag in _PINS_DISABLED or "all" in _PINS_DISABLED:
+    disabled = {
+        t.strip()
+        for t in os.environ.get("SPARK_GRAFT_DISABLE_PINS", "").split(",")
+    }
+    if tag in disabled or "all" in disabled:
         return df
     return df.localCheckpoint()
 
@@ -678,10 +677,13 @@ def _min_label_propagate(edges: DataFrame, max_rounds: int) -> DataFrame | None:
     """
     from pyspark.sql import Observation
 
-    # the helper's contract needs at least one loop round (ADVICE r16:
-    # with max_rounds=1 the body never runs and even an empty edge list
-    # would return None)
-    assert max_rounds >= 2, "min-label propagation needs >= 2 rounds"
+    # the helper's contract needs at least one loop round: with
+    # max_rounds=1 the body never runs and even an empty edge list
+    # would return None
+    if max_rounds < 2:
+        raise ValueError(
+            f"min-label propagation needs >= 2 rounds, got {max_rounds}"
+        )
     # localCheckpoint (not persist): iterative plans snowball otherwise —
     # each round would re-optimize the whole previous lineage and round
     # latency grows without bound. Checkpointing pins each round's result

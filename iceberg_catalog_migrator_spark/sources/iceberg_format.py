@@ -1291,9 +1291,24 @@ def export_iceberg_metadata(
         columns, which is what the engine's key files already hold)."""
         if rel in converted:
             return converted[rel]
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from .snapshot_stream import _key_type
+
         t = pq.read_table(os.path.join(table.path, rel), columns=key_cols)
+        # Iceberg timestamps are microseconds; a Spark-written key
+        # file's INT96 column reads as nanoseconds
+        t = t.cast(
+            pa.schema(
+                [
+                    pa.field(f.name, _key_type(f.type), f.nullable)
+                    if pa.types.is_timestamp(f.type)
+                    else f
+                    for f in t.schema
+                ]
+            )
+        )
         # key_cols shape the converted content, so they join the name:
         # the same immutable key file exported under different delete
         # keys must not collide on one path

@@ -504,13 +504,50 @@ def _rewrite_commit_plans(path: str, snap: dict, psnap: dict) -> list[dict]:
     return plans
 
 
-def _keys_table(paths: list, keys: list) -> pa.Table:
+def _key_type(t: pa.DataType) -> pa.DataType:
+    """The one Arrow type a delete-key column loads as, whichever
+    writer produced the file: integers widen to int64, floats to
+    float64, large strings/binaries narrow to the plain ones, and
+    timestamps go to microseconds — UTC-adjusted when the file says so
+    or when they are Spark's legacy INT96 (read as naive nanoseconds),
+    naive otherwise (TIMESTAMP_NTZ)."""
+    if pa.types.is_signed_integer(t):
+        return pa.int64()
+    if pa.types.is_floating(t):
+        return pa.float64()
+    if pa.types.is_large_string(t):
+        return pa.string()
+    if pa.types.is_large_binary(t):
+        return pa.binary()
+    if pa.types.is_timestamp(t):
+        utc = t.tz is not None or t.unit == "ns"
+        return pa.timestamp("us", tz="UTC" if utc else None)
+    return t
+
+
+def _keys_table(paths: list, keys: list, seqs: list | None = None) -> pa.Table:
     """Distinct keys-only arrow table from the given delete files —
-    small by the merge-on-read write contract."""
+    small by the merge-on-read write contract — with every file cast to
+    one key schema (:func:`_key_type`) so Spark- and Arrow-written
+    files, or files written before a key widening, concatenate. With
+    ``seqs`` (one sequence number per path) each key also carries
+    ``_dseq``, the largest sequence among the files listing it: a key
+    hides a row iff some delete file sequenced after the row's data
+    file lists it."""
     import pyarrow.parquet as pq
 
-    t = pa.concat_tables([pq.read_table(p, columns=keys) for p in paths])
-    return t.group_by(keys).aggregate([])
+    parts = []
+    for i, p in enumerate(paths):
+        t = pq.read_table(p, columns=keys)
+        t = t.cast(pa.schema([(f.name, _key_type(f.type)) for f in t.schema]))
+        if seqs is not None:
+            dseq = pa.array([float(seqs[i])] * len(t), pa.float64())
+            t = t.append_column("_dseq", dseq)
+        parts.append(t)
+    grouped = pa.concat_tables(parts).group_by(keys)
+    if seqs is None:
+        return grouped.aggregate([])
+    return grouped.aggregate([("_dseq", "max")]).rename_columns([*keys, "_dseq"])
 
 
 def _filter_by_keys(
@@ -524,13 +561,17 @@ def _filter_by_keys(
     import numpy as np
     import pyarrow.compute as pc
 
+    # the data side's key columns are compared in the delete keys'
+    # (widened, unit-normalized) types
     if len(keys) == 1:
         k = keys[0]
-        in_set = pc.is_in(tbl[k], value_set=keys_tbl[k].combine_chunks().drop_null())
+        col = tbl[k].cast(keys_tbl.schema.field(k).type)
+        in_set = pc.is_in(col, value_set=keys_tbl[k].combine_chunks().drop_null())
         mask = pc.fill_null(in_set if keep_matching else pc.invert(in_set), False)
         return tbl.filter(mask)
     idx = pa.array(np.arange(len(tbl), dtype="int64"))
-    tmp = tbl.select(keys).append_column("__idx", idx)
+    tmp = tbl.select(keys).cast(keys_tbl.select(keys).schema)
+    tmp = tmp.append_column("__idx", idx)
     join_type = "left semi" if keep_matching else "left anti"
     kept = tmp.join(keys_tbl, keys=keys, join_type=join_type)
     return tbl.take(np.sort(kept["__idx"].to_numpy(zero_copy_only=False)))

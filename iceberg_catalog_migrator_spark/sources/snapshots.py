@@ -809,6 +809,23 @@ class SnapshotTable:
         shutil.rmtree(tmp)
         return out
 
+    def _write_arrow_file(self, tbl) -> str:
+        """Materialize a driver-side Arrow table as ONE immutable file
+        under data/ — staged like :meth:`_write_data_files` (so orphan
+        cleanup sweeps a torn write) and renamed into place."""
+        import pyarrow.parquet as pq
+
+        os.makedirs(self._data, exist_ok=True)
+        token = uuid.uuid4().hex[:12]
+        tmp = os.path.join(self.path, f"_stage_{token}")
+        os.makedirs(tmp)
+        part = os.path.join(tmp, "part-00000.parquet")
+        pq.write_table(tbl, part)
+        dest = os.path.join(self._data, f"{token}-00000.parquet")
+        os.replace(part, dest)
+        os.rmdir(tmp)
+        return os.path.relpath(dest, self.path)
+
     @contextmanager
     def _commit_lock(self):
         """Exclusive same-host commit lock (flock on metadata/commit.lock).
@@ -3206,11 +3223,14 @@ def delete_where(
     file instead of rewriting data (the Iceberg-v2 read path's other
     half, next to :func:`merge_upsert`'s copy-on-write).
 
-    The delete file is just parquet holding ``key_cols`` rows; the
-    snapshot manifest lists it under ``"deletes"`` and readers apply
-    one anti-join. Writes are O(|deleted keys|) regardless of table
-    size — the trade is read-time work, reclaimed by
-    :func:`compact_deletes`. ``ref`` stages the delete on a branch
+    The delete file is just parquet holding the distinct ``key_cols``
+    rows; the snapshot manifest lists it under ``"deletes"`` and
+    readers apply one anti-join. ``keys`` must be broadcast-sized: it
+    is collected to the driver once, as Arrow, and that copy is the
+    written file, the key range that prunes the visible-count scan and
+    that scan's semi-join side. Writes are O(|deleted keys|)
+    regardless of table size — the trade is read-time work, reclaimed
+    by :func:`compact_deletes`. ``ref`` stages the delete on a branch
     (main's rows stay visible until the branch is published)."""
     table._check_writable_ref(ref)
     parent = table.head(ref)
@@ -3226,8 +3246,8 @@ def delete_where(
             f"pending equality deletes are keyed by {snap['delete_keys']}; "
             f"compact_deletes before deleting by {key_cols}"
         )
-    kdf = keys.select(*key_cols).distinct()
-    del_files = table._write_data_files(kdf)
+    akeys = keys.select(*key_cols).toArrow().group_by(key_cols).aggregate([])
+    del_files = [table._write_arrow_file(akeys)]
     # carry the parent's FULL delete state (notably pending positional
     # vectors — dropping them here would resurrect every pos-deleted
     # row); the explicit entries below override the carried equality
@@ -3248,19 +3268,27 @@ def delete_where(
     }
     # visible-count maintenance (metadata_count under equality deletes):
     # the rows this delete NEWLY hides are the currently-VISIBLE rows
-    # matching the keys — one stats-pruned counting job at commit time
-    # buys O(1) COUNT(*) forever after. Candidate files prune on the
-    # first key column's recorded [min, max] exactly like merge pruning;
-    # rows already hidden (stacked/overlapping deletes) don't re-count
-    # because the scan is over the visible state.
+    # matching the keys — one stats-pruned semi-join count at commit
+    # time buys O(1) COUNT(*) forever after. Candidate files prune on
+    # the first key column's recorded [min, max] exactly like merge
+    # pruning; rows already hidden (stacked/overlapping deletes) don't
+    # re-count because the scan is over the visible state.
     if snap.get("visible_rows") is not None:
+        import pyarrow.compute as pc
         from pyspark.sql import functions as F
 
-        cand = _key_range_candidates(table, snap, key_cols[0], kdf)
+        b = pc.min_max(akeys[key_cols[0]])
+        cand = _key_range_candidates(
+            snap, key_cols[0], b["min"].as_py(), b["max"].as_py()
+        )
         n_hidden = (
             (
                 _resolve_visible(table, snap, cand)
-                .join(F.broadcast(kdf), key_cols, "left_semi")
+                .join(
+                    F.broadcast(table.spark.createDataFrame(akeys)),
+                    key_cols,
+                    "left_semi",
+                )
                 .count()
             )
             if cand
@@ -3270,24 +3298,20 @@ def delete_where(
     return table._commit(snap["files"], "delete", parent, extra=extra, ref=ref)
 
 
-def _key_range_candidates(
-    table: SnapshotTable, snap: dict, key0: str, keys: DataFrame
-) -> list[str]:
+def _key_range_candidates(snap: dict, key0: str, lo, hi) -> list[str]:
     """Files whose recorded [min, max] on ``key0`` intersects the key
-    set's range — files without recorded stats conservatively count.
+    set's range ``[lo, hi]`` (``lo`` None: no non-null key, nothing
+    can match) — files without recorded stats conservatively count.
     The same footerless-stats shape merge pruning uses, so a delete's
     commit-time counting scan is delta-bounded, not table-bounded."""
-    from pyspark.sql import functions as F
-
-    b = keys.agg(F.min(key0).alias("lo"), F.max(key0).alias("hi")).first()
-    if b.lo is None:
+    if lo is None:
         return []
     stats = snap.get("file_stats", {})
     out = []
     for f in snap["files"]:
         rng = (stats.get(f) or {}).get(key0)
         try:
-            hit = rng is None or (rng[0] <= b.hi and rng[1] >= b.lo)
+            hit = rng is None or (rng[0] <= hi and rng[1] >= lo)
         except TypeError:  # incomparable recorded/live types: conservative
             hit = True
         if hit:
@@ -3373,12 +3397,12 @@ def read_with_deletes(
 def _eq_exempt_files(snap: dict, files: list[str]) -> list[str]:
     """Data files among ``files`` escaping AT LEAST ONE pending
     equality delete — sequenced at/after the OLDEST delete file (a key
-    re-appended after its deletion, or a merge's own output). A file
-    between the oldest and a younger delete's sequence is still hidden
-    by the younger deletes, so this is a TRIGGER for the per-file
-    sequence-aware path, not a skip-deletes-entirely list. Empty on
-    every delete-is-newest history, so the simple anti-join — and its
-    exact physical plan — stays the common path."""
+    re-appended after its deletion, an append after any delete, or a
+    merge's own output). A file between the oldest and a younger
+    delete's sequence is still hidden by the younger deletes, so this
+    is a TRIGGER for the per-file sequence-aware path, not a
+    skip-deletes-entirely list. Empty only while every data file is
+    older than every pending delete (no append since the first one)."""
     dels = snap.get("deletes", [])
     if not dels:
         return []
@@ -3397,36 +3421,39 @@ def _apply_eq_deletes(
     data-sequence-number rule; unstamped legacy files read as 0,
     unstamped legacy delete files as +infinity). When no file is
     exempt — every history whose deletes are newest — this is the
-    plain broadcastable anti-join. Otherwise ``df`` must carry the
-    ``_file`` column; the caller drops it afterwards."""
+    plain broadcast anti-join. Otherwise ``df`` must carry the
+    ``_file`` column; the caller drops it afterwards.
+
+    The delete side is loaded once on the driver as Arrow (small by the
+    merge-on-read write contract) and enters the plan as a local
+    relation, so the job count does not grow with the number of
+    pending delete files."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
+
+    from .snapshot_stream import _keys_table
 
     dels = snap.get("deletes", [])
     if not dels:
         return df
     key_cols = snap["delete_keys"]
+    paths = [os.path.join(table.path, d) for d in dels]
     exempt = _eq_exempt_files(snap, files)
     if not exempt:
-        return df.join(table._read_files(dels), key_cols, "left_anti")
+        keys = table.spark.createDataFrame(_keys_table(paths, key_cols))
+        return df.join(F.broadcast(keys), key_cols, "left_anti")
     dseqs = snap.get("delete_seqs", {})
     fseqs = snap.get("file_seqs", {})
-    keys = None
-    for d in dels:
-        part = (
-            table._read_files([d])
-            .select(*key_cols)
-            .withColumn("_dseq", F.lit(float(dseqs.get(d, float("inf")))))
-        )
-        keys = part if keys is None else keys.unionByName(part)
-    # a key hides a row iff SOME delete file newer than the row's data
-    # file lists it — max per key, one broadcastable frame
-    keys = keys.groupBy(*key_cols).agg(F.max("_dseq").alias("_dseq"))
-    fmap = table.spark.createDataFrame(
-        [(f, int(fseqs.get(f, 0))) for f in files], "_file string, _fseq bigint"
+    keys = _keys_table(paths, key_cols, [dseqs.get(d, float("inf")) for d in dels])
+    fmap = pa.table(
+        {
+            "_file": pa.array(files, pa.string()),
+            "_fseq": pa.array([int(fseqs.get(f, 0)) for f in files], pa.int64()),
+        }
     )
     return (
-        df.join(F.broadcast(fmap), "_file", "left")
-        .join(F.broadcast(keys), key_cols, "left")
+        df.join(F.broadcast(table.spark.createDataFrame(fmap)), "_file", "left")
+        .join(F.broadcast(table.spark.createDataFrame(keys)), key_cols, "left")
         .filter(F.col("_dseq").isNull() | (F.col("_dseq") <= F.col("_fseq")))
         .drop("_dseq", "_fseq")
     )

@@ -1,0 +1,138 @@
+"""The merge-on-read equality-delete key set: one driver-side Arrow
+loader feeds every read path, whichever writer produced the delete
+files, and its cost in Spark jobs does not grow with their number."""
+
+from __future__ import annotations
+
+import os
+import uuid
+from datetime import datetime, timedelta, timezone
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from iceberg_catalog_migrator_spark.sources import snapshots as S
+from iceberg_catalog_migrator_spark.sources.iceberg_format import (
+    export_iceberg_metadata,
+)
+from iceberg_catalog_migrator_spark.sources.iceberg_read import read_iceberg_table
+from iceberg_catalog_migrator_spark.sources.snapshot_stream import (
+    register_snapshot_stream_source,
+)
+from iceberg_catalog_migrator_spark.sources.snapshots import (
+    SnapshotTable,
+    delete_where,
+    read_with_deletes,
+)
+
+SCHEMA = "k bigint, s string, t timestamp, v bigint"
+T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+
+
+def _rows(keys):
+    return [(i, f"s{i}", T0 + timedelta(seconds=i), 10 * i) for i in keys]
+
+
+def _canon(df):
+    return sorted(
+        df.select("k", "s", F.col("t").cast("string"), "v").collect()
+    )
+
+
+def _spark_written(self, tbl):
+    """The delete-file writer of earlier releases: a Spark parquet
+    write (INT96 timestamps, Spark's own string and nullability)."""
+    return self._write_data_files(self.spark.createDataFrame(tbl).coalesce(1))[0]
+
+
+@pytest.mark.parametrize("key_cols", [["t"], ["k", "s", "t"]])
+def test_spark_and_arrow_written_delete_files_read_identically(
+    spark, tmp_path, monkeypatch, key_cols
+):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(spark.createDataFrame(_rows(range(0, 20)), SCHEMA))
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_write_arrow_file", _spark_written)
+        delete_where(t, key_cols, spark.createDataFrame(_rows(range(0, 5)), SCHEMA))
+    # keys 3 and 4 come back after their deletion: the sequence-aware
+    # branch has to keep them visible
+    t.append(spark.createDataFrame(_rows(range(3, 25)), SCHEMA))
+    delete_where(
+        t, key_cols, spark.createDataFrame(_rows([8, 9, 10, 11, 22]), SCHEMA)
+    )
+    dels = S.load_manifest(t.path, t.current_snapshot_id())["deletes"]
+    layouts = {
+        str(pq.read_schema(os.path.join(t.path, d)).field("t").type) for d in dels
+    }
+    assert len(dels) == 2 and len(layouts) == 2  # two writers, two layouts
+
+    model = list(range(5, 20)) + list(range(3, 25))
+    expected = sorted(
+        spark.createDataFrame(
+            _rows([i for i in model if i not in (8, 9, 10, 11, 22)]), SCHEMA
+        )
+        .select("k", "s", F.col("t").cast("string"), "v")
+        .collect()
+    )
+    assert _canon(read_with_deletes(t)) == expected
+    register_snapshot_stream_source(spark)
+    assert (
+        _canon(spark.read.format("snapshot_commits").option("path", t.path).load())
+        == expected
+    )
+    out = export_iceberg_metadata(t)
+    assert _canon(read_iceberg_table(spark, out["metadata_location"])) == expected
+
+
+def _jobs(spark, fn):
+    """(result, exact number of Spark jobs ``fn`` ran)."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("tests", "tests")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sequence_aware_read_jobs_do_not_grow_with_delete_files(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+
+    def keyed(lo, hi):
+        return spark.range(lo, hi, numPartitions=2).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        )
+
+    t.append(keyed(0, 100))
+    delete_where(t, ["k"], keyed(0, 5))
+    t.append(keyed(100, 110))  # an append after a delete
+    snap = S.load_manifest(t.path, t.current_snapshot_id())
+    assert S._eq_exempt_files(snap, snap["files"])  # sequence-aware branch
+    n1, jobs1 = _jobs(spark, lambda: read_with_deletes(t).count())
+    for lo in (10, 20, 30):
+        delete_where(t, ["k"], keyed(lo, lo + 5))
+    t.append(keyed(110, 120))
+    assert len(S.load_manifest(t.path, t.current_snapshot_id())["deletes"]) == 4
+    n4, jobs4 = _jobs(spark, lambda: read_with_deletes(t).count())
+    assert (n1, n4) == (105, 100)
+    assert jobs1 == jobs4
+
+
+def test_delete_where_key_bounds_launch_no_job(spark, tmp_path, monkeypatch):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(spark.range(0, 50).select(F.col("id").alias("k")))
+    seen = []
+    real = S._key_range_candidates
+
+    def probe(*args):
+        out, jobs = _jobs(spark, lambda: real(*args))
+        seen.append(jobs)
+        return out
+
+    monkeypatch.setattr(S, "_key_range_candidates", probe)
+    delete_where(t, ["k"], spark.range(10, 20).select(F.col("id").alias("k")))
+    assert seen == [0]
+    assert S.metadata_count(t) == 40

@@ -72,11 +72,20 @@ def test_min_label_propagate_respects_round_bound(spark):
     pairs = [(i, i + 1) for i in range(0, 12)]
     assert D._min_label_propagate(_sym(spark, pairs), 2) is None
     # bound 1 would skip the loop entirely and could return None even
-    # for an empty edge list (ADVICE r16): asserted away
-    import pytest
-
-    with pytest.raises(AssertionError):
+    # for an empty edge list: refused with an exception that survives -O
+    with pytest.raises(ValueError, match=">= 2 rounds"):
         D._min_label_propagate(_sym(spark, pairs), 1)
+
+
+def test_pin_reads_disable_list_at_call_time(spark, monkeypatch):
+    df = spark.range(3)
+    monkeypatch.setenv("SPARK_GRAFT_DISABLE_PINS", "other, probe")
+    assert D._pin(df, "probe") is df
+    monkeypatch.setenv("SPARK_GRAFT_DISABLE_PINS", "all")
+    assert D._pin(df, "probe") is df
+    monkeypatch.delenv("SPARK_GRAFT_DISABLE_PINS")
+    pinned = D._pin(df, "probe")
+    assert pinned is not df and pinned.count() == 3
 
 
 # ------------------------------------------------- grouped CDC snapshot

@@ -1423,3 +1423,16 @@ def test_keys_table_distinct_union():
         out = _keys_table([p1, p2], ["k"])
         assert sorted(out["k"].to_pylist()) == [1, 2, 3]
         assert out.column_names == ["k"]
+        # a file written before a key widening (int32) joins the int64
+        # ones under one key schema; with per-file sequence numbers
+        # each key carries the newest file listing it
+        p3 = os.path.join(tmp, "c.parquet")
+        pq.write_table(pa.table({"k": pa.array([3, 4], pa.int32())}), p3)
+        out = _keys_table([p1, p2, p3], ["k"], [1, 2, float("inf")])
+        assert out.schema == pa.schema([("k", pa.int64()), ("_dseq", pa.float64())])
+        assert sorted(zip(out["k"].to_pylist(), out["_dseq"].to_pylist())) == [
+            (1, 1.0),
+            (2, 2.0),
+            (3, float("inf")),
+            (4, float("inf")),
+        ]

@@ -2786,9 +2786,11 @@ def test_rewrite_manifests_checkpoints_head_to_full_form(spark, table):
         rewrite_manifests,
     )
 
+    # eight files per append whatever the core count: the manifest's
+    # delta-vs-full choice depends on how many files each commit lists
     for lo in range(0, 40, 10):
         table.append(
-            spark.range(lo, lo + 10).select(
+            spark.range(lo, lo + 10, numPartitions=8).select(
                 F.col("id").alias("k"), (F.col("id") % 3).alias("v")
             )
         )
