@@ -16,95 +16,28 @@ CLI, ``__spark_entry__``) gets identical semantics:
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Iceberg Spark runtime (public Maven Central coordinates for the Spark
-# 4.x line). The live swap path (catalog/iceberg_spark.py) activates
-# when this jar is on the driver classpath; environments without
-# network make exactly ONE fetch attempt (marker-gated), log it, and
-# carry on jar-less — the adapter tests stay skip-gated.
-_ICEBERG_COORDS = ("org.apache.iceberg", "iceberg-spark-runtime-4.0_2.13", "1.10.0")
+# Iceberg Spark runtime for the Spark 4.x line. The live swap path
+# (catalog/iceberg_spark.py) activates when this jar is on the driver
+# classpath. The session never downloads it: place the jar in
+# ``$SPARK_GRAFT_JAR_CACHE`` to enable the path; without it the session
+# starts jar-less and the adapter tests stay skip-gated.
+_ICEBERG_JAR = "iceberg-spark-runtime-4.0_2.13-1.10.0.jar"
 ICEBERG_JAR_CACHE = os.environ.get("SPARK_GRAFT_JAR_CACHE", "/tmp/spark_graft_jars")
 ICEBERG_WAREHOUSE = "/tmp/spark_graft_iceberg"
 
 
 def _resolve_iceberg_runtime_jar() -> str | None:
-    """Find (or fetch once from Maven Central) the Iceberg runtime jar.
-
-    The attempt is recorded with a marker file so a no-network sandbox
-    pays the connect timeout exactly once per cache dir, and every
-    later session start sees the logged outcome instead of re-trying."""
+    """The Iceberg runtime jar's path when it is present in the jar
+    cache (and not disabled by ``SPARK_GRAFT_DISABLE_ICEBERG_JAR``)."""
     if os.environ.get("SPARK_GRAFT_DISABLE_ICEBERG_JAR"):
         return None
-    g, a, v = _ICEBERG_COORDS
-    path = os.path.join(ICEBERG_JAR_CACHE, f"{a}-{v}.jar")
-    if os.path.exists(path):
-        return path
-    marker = f"{path}.fetch-attempted"
-    if os.path.exists(marker):
-        return None
-    os.makedirs(ICEBERG_JAR_CACHE, exist_ok=True)
-    url = f"https://repo1.maven.org/maven2/{g.replace('.', '/')}/{a}/{v}/{a}-{v}.jar"
-    outcome = "failed"
-    try:
-        import hashlib
-        import shutil
-        import urllib.request
-
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with urllib.request.urlopen(url, timeout=5) as r, open(tmp, "wb") as f:
-            shutil.copyfileobj(r, f)
-        # integrity before the jar ever reaches a JVM classpath:
-        # always check Maven Central's published .sha1 (catches
-        # truncation/corruption); additionally honor an out-of-band
-        # sha256 pin (SPARK_GRAFT_ICEBERG_JAR_SHA256) for
-        # tamper-resistant deployments — mismatch = failed fetch.
-        digest_sha1 = hashlib.sha1()
-        digest_sha256 = hashlib.sha256()
-        with open(tmp, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                digest_sha1.update(chunk)
-                digest_sha256.update(chunk)
-        with urllib.request.urlopen(url + ".sha1", timeout=5) as r:
-            published = r.read().decode("ascii", "ignore").split()[0].lower()
-        if digest_sha1.hexdigest() != published:
-            os.unlink(tmp)
-            raise RuntimeError(
-                f"sha1 mismatch: got {digest_sha1.hexdigest()}, Maven "
-                f"publishes {published}"
-            )
-        pin = os.environ.get("SPARK_GRAFT_ICEBERG_JAR_SHA256", "").lower()
-        if pin and digest_sha256.hexdigest() != pin:
-            os.unlink(tmp)
-            raise RuntimeError(
-                f"sha256 pin mismatch: got {digest_sha256.hexdigest()}"
-            )
-        os.replace(tmp, path)
-        outcome = f"ok sha256={digest_sha256.hexdigest()}"
-        return path
-    except Exception as exc:  # noqa: BLE001 - no network is the normal case
-        try:
-            if os.path.exists(f"{path}.tmp.{os.getpid()}"):
-                os.unlink(f"{path}.tmp.{os.getpid()}")
-        except OSError:
-            pass
-        outcome = f"{type(exc).__name__}: {exc}"[:200]
-        print(
-            f"[session] iceberg-spark-runtime fetch attempted and failed "
-            f"({outcome}); live Iceberg catalog tests stay skipped",
-            file=sys.stderr,
-        )
-        return None
-    finally:
-        try:
-            with open(marker, "w") as f:
-                f.write(outcome + "\n")
-        except OSError:
-            pass
+    path = os.path.join(ICEBERG_JAR_CACHE, _ICEBERG_JAR)
+    return path if os.path.exists(path) else None
 
 
 def get_spark(

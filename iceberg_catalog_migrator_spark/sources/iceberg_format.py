@@ -1294,7 +1294,7 @@ def export_iceberg_metadata(
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from .snapshot_stream import _key_type
+        from .mor import _key_type
 
         t = pq.read_table(os.path.join(table.path, rel), columns=key_cols)
         # Iceberg timestamps are microseconds; a Spark-written key

@@ -1245,11 +1245,14 @@ class IcebergTable:
     def _apply_equality_deletes(self, df, snap, kept, eq_deletes):
         """Sequence-scoped equality-delete application (spec rule: a
         delete applies to rows of data files sequenced STRICTLY before
-        it). The per-file sequence map (metadata-sized) broadcasts;
-        the per-key max-delete-sequence frame is O(deleted rows), so
-        its join strategy is left to the planner — a row survives iff
-        no newer delete lists its key."""
+        it) through the shared kernel :func:`mor._hide_sequenced`, one
+        call per equality-id group. The per-key max-delete-sequence
+        frame is built with Spark — O(deleted rows), so it never loads
+        into driver memory and its join strategy is left to the
+        planner (AQE)."""
         from pyspark.sql import functions as F
+
+        from .mor import _hide_sequenced
 
         name_by_id = {f["id"]: f["name"] for f in self.schema_fields(snap)}
         fmap = self.spark.createDataFrame(
@@ -1257,9 +1260,8 @@ class IcebergTable:
                 (os.path.basename(e["file_path"]), e["sequence"])
                 for e in kept
             ],
-            "__icb_fp string, __icb_fseq bigint",
+            "__icb_fp string, _fseq bigint",
         )
-        df = df.join(F.broadcast(fmap), "__icb_fp", "left")
         groups: dict[tuple, list[dict]] = {}
         for d in eq_deletes:
             groups.setdefault(d["equality_ids"], []).append(d)
@@ -1275,23 +1277,14 @@ class IcebergTable:
                 part = (
                     self.spark.read.parquet(d["file_path"])
                     .select(*key_cols)
-                    .withColumn("__icb_dseq", F.lit(d["sequence"]))
+                    .withColumn("_dseq", F.lit(d["sequence"]))
                 )
                 keys = part if keys is None else keys.unionByName(part)
-            keys = keys.groupBy(*key_cols).agg(
-                F.max("__icb_dseq").alias("__icb_dseq")
+            keys = keys.groupBy(*key_cols).agg(F.max("_dseq").alias("_dseq"))
+            df = _hide_sequenced(
+                df, fmap, keys, key_cols, "__icb_fp", broadcast_keys=False
             )
-            # no broadcast hint: the key set is O(deleted rows), not
-            # metadata-sized — let the planner (AQE) pick the strategy
-            df = (
-                df.join(keys, key_cols, "left")
-                .filter(
-                    F.col("__icb_dseq").isNull()
-                    | (F.col("__icb_dseq") <= F.col("__icb_fseq"))
-                )
-                .drop("__icb_dseq")
-            )
-        return df.drop("__icb_fseq")
+        return df
 
 
 def read_iceberg_table(spark, location: str, **kwargs):

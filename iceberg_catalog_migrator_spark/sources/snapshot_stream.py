@@ -74,6 +74,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .mor import _eq_applies, _filter_by_keys, _keys_table
+
 SNAPSHOT_STREAM_NAME = "snapshot_commits"
 
 # operations whose new files are pure additions: safe to stream.
@@ -154,15 +156,6 @@ def _rename_map(snap: dict, f_rel: str) -> dict | None:
         if cname is not None and cname != fld["name"]:
             m[fld["name"]] = cname
     return m or None
-
-
-def _eq_applies(snap: dict, d: str, f: str) -> bool:
-    """Does equality-delete file ``d`` apply to data file ``f`` under
-    ``snap``? Iceberg's data-sequence rule: only when the delete is
-    sequenced AFTER the data file (legacy defaults: unstamped data file
-    = 0, unstamped delete file = +infinity — applies to everything)."""
-    dseq = snap.get("delete_seqs", {}).get(d, float("inf"))
-    return dseq > snap.get("file_seqs", {}).get(f, 0)
 
 
 def _sid_as_of(path: str, ts_ms: int) -> int:
@@ -324,45 +317,22 @@ def _changelog_partitions(
                         os.path.join(path, v), columns=["_file"]
                     )["_file"].to_pylist()
                 )
-            for f in snap["files"]:
-                if f not in touched:
-                    continue
-                plans.append(
-                    {
-                        "kind": "delete",
-                        "file": os.path.join(path, f),
-                        "rel": f,
-                        "pos_include": [os.path.join(path, v) for v in new_vecs],
-                        "pos_exclude": [os.path.join(path, v) for v in pos_parent],
-                        "exclude": [
-                            os.path.join(path, d)
-                            for d in psnap.get("deletes", [])
-                            if _eq_applies(psnap, d, f)
-                        ],
-                        "keys": psnap.get("delete_keys", []),
-                        "rename": _rename_map(snap, f),
-                        "sid": sid,
-                    }
+            plans.extend(
+                _file_plan(
+                    path, psnap, f, "delete", psnap.get("deletes", []),
+                    vecs=pos_parent, sid=sid, pos_include=new_vecs,
                 )
+                for f in snap["files"]
+                if f in touched
+            )
             per_commit.append(plans)
             sid = parent
             continue
-        for f in snap["files"]:
-            if f not in parent_files:
-                plans.append(
-                    {
-                        "kind": "insert",
-                        "file": os.path.join(path, f),
-                        "exclude": [
-                            os.path.join(path, d)
-                            for d in deletes
-                            if _eq_applies(snap, d, f)
-                        ],
-                        "keys": key_cols,
-                        "rename": _rename_map(snap, f),
-                        "sid": sid,
-                    }
-                )
+        plans.extend(
+            _file_plan(path, snap, f, "insert", deletes, sid=sid)
+            for f in snap["files"]
+            if f not in parent_files
+        )
         parent_dels = set(psnap.get("deletes", []))
         new_deletes = [d for d in deletes if d not in parent_dels]
         if new_deletes:
@@ -380,25 +350,14 @@ def _changelog_partitions(
                     # the file is sequenced past every new delete (a
                     # re-append): none of its rows flip
                     continue
+                # rows the carried vectors already hide were never
+                # visible: a newly-matched key among them is NOT a
+                # newly-deleted row
                 plans.append(
-                    {
-                        "kind": "delete",
-                        "file": os.path.join(path, f),
-                        "rel": f,
-                        "include": [os.path.join(path, d) for d in applying],
-                        "exclude": [
-                            os.path.join(path, d)
-                            for d in old_deletes
-                            if _eq_applies(snap, d, f)
-                        ],
-                        # rows the carried vectors already hide were
-                        # never visible: a newly-matched key among them
-                        # is NOT a newly-deleted row
-                        "pos_exclude": [os.path.join(path, v) for v in pos_now],
-                        "keys": key_cols,
-                        "rename": _rename_map(snap, f),
-                        "sid": sid,
-                    }
+                    _file_plan(
+                        path, snap, f, "delete", old_deletes,
+                        vecs=pos_now, sid=sid, include=applying,
+                    )
                 )
         per_commit.append(plans)
         sid = parent
@@ -462,119 +421,21 @@ def _rewrite_commit_plans(path: str, snap: dict, psnap: dict) -> list[dict]:
                 "batch diff, or restart the stream from this snapshot"
             )
 
-    plans: list[dict] = []
-    for f in psnap["files"]:
-        if f in snap_files:
-            continue
-        plans.append(
-            {
-                "kind": "delete",
-                "file": os.path.join(path, f),
-                "rel": f,
-                "exclude": [
-                    os.path.join(path, d)
-                    for d in psnap.get("deletes", [])
-                    if _eq_applies(psnap, d, f)
-                ],
-                "pos_exclude": [os.path.join(path, v) for v in pos_parent],
-                "keys": psnap.get("delete_keys", []),
-                "rename": _rename_map(psnap, f),
-                "sid": sid,
-            }
+    return [
+        _file_plan(
+            path, psnap, f, "delete", psnap.get("deletes", []),
+            vecs=pos_parent, sid=sid,
         )
-    for f in snap["files"]:
-        if f in parent_files:
-            continue
-        plans.append(
-            {
-                "kind": "insert",
-                "file": os.path.join(path, f),
-                "rel": f,
-                "exclude": [
-                    os.path.join(path, d)
-                    for d in snap.get("deletes", [])
-                    if _eq_applies(snap, d, f)
-                ],
-                "pos_exclude": [os.path.join(path, v) for v in pos_now],
-                "keys": snap.get("delete_keys", []),
-                "rename": _rename_map(snap, f),
-                "sid": sid,
-            }
+        for f in psnap["files"]
+        if f not in snap_files
+    ] + [
+        _file_plan(
+            path, snap, f, "insert", snap.get("deletes", []),
+            vecs=pos_now, sid=sid,
         )
-    return plans
-
-
-def _key_type(t: pa.DataType) -> pa.DataType:
-    """The one Arrow type a delete-key column loads as, whichever
-    writer produced the file: integers widen to int64, floats to
-    float64, large strings/binaries narrow to the plain ones, and
-    timestamps go to microseconds — UTC-adjusted when the file says so
-    or when they are Spark's legacy INT96 (read as naive nanoseconds),
-    naive otherwise (TIMESTAMP_NTZ)."""
-    if pa.types.is_signed_integer(t):
-        return pa.int64()
-    if pa.types.is_floating(t):
-        return pa.float64()
-    if pa.types.is_large_string(t):
-        return pa.string()
-    if pa.types.is_large_binary(t):
-        return pa.binary()
-    if pa.types.is_timestamp(t):
-        utc = t.tz is not None or t.unit == "ns"
-        return pa.timestamp("us", tz="UTC" if utc else None)
-    return t
-
-
-def _keys_table(paths: list, keys: list, seqs: list | None = None) -> pa.Table:
-    """Distinct keys-only arrow table from the given delete files —
-    small by the merge-on-read write contract — with every file cast to
-    one key schema (:func:`_key_type`) so Spark- and Arrow-written
-    files, or files written before a key widening, concatenate. With
-    ``seqs`` (one sequence number per path) each key also carries
-    ``_dseq``, the largest sequence among the files listing it: a key
-    hides a row iff some delete file sequenced after the row's data
-    file lists it."""
-    import pyarrow.parquet as pq
-
-    parts = []
-    for i, p in enumerate(paths):
-        t = pq.read_table(p, columns=keys)
-        t = t.cast(pa.schema([(f.name, _key_type(f.type)) for f in t.schema]))
-        if seqs is not None:
-            dseq = pa.array([float(seqs[i])] * len(t), pa.float64())
-            t = t.append_column("_dseq", dseq)
-        parts.append(t)
-    grouped = pa.concat_tables(parts).group_by(keys)
-    if seqs is None:
-        return grouped.aggregate([])
-    return grouped.aggregate([("_dseq", "max")]).rename_columns([*keys, "_dseq"])
-
-
-def _filter_by_keys(
-    tbl: pa.Table, keys_tbl: pa.Table, keys: list, keep_matching: bool
-) -> pa.Table:
-    """Order-preserving semi/anti selection of ``tbl`` rows whose key
-    tuple appears in ``keys_tbl`` — vectorized (arrow is_in / hash
-    join), replacing the per-batch pandas merges (guide §4.2). Null
-    keys never match (SQL semantics, same as the JVM read path's
-    left_anti in sources/snapshots.py)."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    # the data side's key columns are compared in the delete keys'
-    # (widened, unit-normalized) types
-    if len(keys) == 1:
-        k = keys[0]
-        col = tbl[k].cast(keys_tbl.schema.field(k).type)
-        in_set = pc.is_in(col, value_set=keys_tbl[k].combine_chunks().drop_null())
-        mask = pc.fill_null(in_set if keep_matching else pc.invert(in_set), False)
-        return tbl.filter(mask)
-    idx = pa.array(np.arange(len(tbl), dtype="int64"))
-    tmp = tbl.select(keys).cast(keys_tbl.select(keys).schema)
-    tmp = tmp.append_column("__idx", idx)
-    join_type = "left semi" if keep_matching else "left anti"
-    kept = tmp.join(keys_tbl, keys=keys, join_type=join_type)
-    return tbl.take(np.sort(kept["__idx"].to_numpy(zero_copy_only=False)))
+        for f in snap["files"]
+        if f not in parent_files
+    ]
 
 
 def _align_to_schema(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
@@ -592,6 +453,117 @@ def _align_to_schema(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
             col = pa.nulls(len(tbl), type=field.type)
         cols.append(col)
     return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _file_plan(
+    path: str,
+    snap: dict,
+    f: str,
+    kind: str,
+    deletes: list,
+    vecs: list = (),
+    sid: int | None = None,
+    include: list = (),
+    pos_include: list = (),
+) -> dict:
+    """The input-partition plan :func:`_read_plan` reads for data file
+    ``f`` under ``snap``: the equality ``deletes`` that reach ``f`` by
+    sequence (``exclude``), the vector files ``vecs`` whose ordinals in
+    ``f`` are hidden, the field-id rename, and — for changelog plans —
+    the delete / vector files whose matches ARE the emitted rows
+    (``include`` / ``pos_include``, already scoped by the caller) and
+    the commit ``sid`` stamped on every row."""
+
+    def _abs(names):
+        return [os.path.join(path, n) for n in names]
+
+    return {
+        "kind": kind,
+        "file": os.path.join(path, f),
+        # table-relative name: pos-delete vectors key on it
+        "rel": f,
+        "exclude": _abs(d for d in deletes if _eq_applies(snap, d, f)),
+        "include": _abs(include),
+        "pos_exclude": _abs(vecs),
+        "pos_include": _abs(pos_include),
+        "keys": snap.get("delete_keys", []),
+        "rename": _rename_map(snap, f),
+        "sid": sid,
+    }
+
+
+def _read_plan(plan: dict, schema: pa.Schema | None):
+    """Arrow batches of one planned data file — a :func:`_file_plan`
+    dict, or ``{"file": path}`` for a plain tail — read executor-side:
+    rows its vectors and equality deletes hide are dropped (changelog
+    plans keep only the rows their ``include`` sides select), columns
+    take their current names, rows of a commit plan are stamped with
+    ``_change_type`` and ``_commit_snapshot_id``, and every batch is
+    aligned to ``schema`` when given. The delete sides load once per
+    file (keys-only, small by the merge-on-read write contract); row
+    selection is vectorized arrow/numpy, not per-batch pandas merges."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keys = plan.get("keys", [])
+    include = _keys_table(plan["include"], keys) if plan.get("include") else None
+    exclude = (
+        _keys_table(plan["exclude"], keys) if plan.get("exclude") and keys else None
+    )
+
+    def _ordinals(paths):
+        """This file's row ordinals named by the given vector files —
+        the per-file slice of the (file, pos) delete side."""
+        if not paths:
+            return None
+        out = []
+        for p in paths:
+            t = pq.read_table(p, columns=["_file", "_pos"])
+            out.append(
+                t.filter(pc.equal(t["_file"], plan["rel"]))["_pos"].to_numpy(
+                    zero_copy_only=False
+                )
+            )
+        return np.unique(np.concatenate(out))
+
+    pos_inc = _ordinals(plan.get("pos_include"))
+    pos_exc = _ordinals(plan.get("pos_exclude"))
+    rename = plan.get("rename")
+    row_offset = 0
+    for batch in pq.ParquetFile(plan["file"]).iter_batches():
+        tbl = pa.Table.from_batches([batch])
+        base = row_offset
+        row_offset += len(tbl)
+        if pos_inc is not None or pos_exc is not None:
+            ords = np.arange(base, base + len(tbl))
+            mask = np.ones(len(tbl), dtype=bool)
+            if pos_inc is not None:
+                mask &= np.isin(ords, pos_inc)
+            if pos_exc is not None:
+                mask &= ~np.isin(ords, pos_exc)
+            if not mask.any():
+                continue
+            if not mask.all():
+                tbl = tbl.filter(pa.array(mask))
+        if rename:
+            tbl = tbl.rename_columns([rename.get(c, c) for c in tbl.column_names])
+        if include is not None:
+            tbl = _filter_by_keys(tbl, include, keys, keep_matching=True)
+        if exclude is not None and len(tbl):
+            tbl = _filter_by_keys(tbl, exclude, keys, keep_matching=False)
+        if not len(tbl):
+            continue
+        if plan.get("sid") is not None:
+            tbl = tbl.append_column(
+                "_change_type", pa.array([plan["kind"]] * len(tbl), pa.string())
+            ).append_column(
+                "_commit_snapshot_id",
+                pa.array([plan["sid"]] * len(tbl), pa.int64()),
+            )
+        if schema is not None:
+            tbl = _align_to_schema(tbl, schema)
+        yield from tbl.to_batches()
 
 
 class _SnapshotStreamReader(DataSourceStreamReader):
@@ -683,114 +655,22 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         end_snap = _load_snap(self.path, int(end["sid"])) if files else None
         parts = []
         for f in files:
-            rename = _rename_map(end_snap, f)
-            if rename:
-                parts.append(
-                    InputPartition(
-                        {"kind": "plain", "file": os.path.join(self.path, f), "rename": rename}
-                    )
-                )
+            if _rename_map(end_snap, f):
+                # schema-tracked tail: rename written columns to the
+                # current names (field-id resolution) before aligning
+                plan = _file_plan(self.path, end_snap, f, "plain", [])
+                parts.append(InputPartition(plan))
             else:
                 parts.append(InputPartition(os.path.join(self.path, f)))
         return parts or [InputPartition(None)]
 
     def read(self, partition):
-        if partition.value is None:
-            return
-        import pyarrow.parquet as pq
-
-        if isinstance(partition.value, str):  # plain append tail
-            for batch in pq.ParquetFile(partition.value).iter_batches():
-                if self.arrow_schema is not None:
-                    yield from _align_to_schema(
-                        pa.Table.from_batches([batch]), self.arrow_schema
-                    ).to_batches()
-                else:
-                    yield batch
-            return
-
         plan = partition.value
-        if plan["kind"] == "plain":
-            # schema-tracked tail: rename written columns to the
-            # current names (field-id resolution) before aligning
-            for batch in pq.ParquetFile(plan["file"]).iter_batches():
-                tbl = pa.Table.from_batches([batch])
-                tbl = tbl.rename_columns(
-                    [plan["rename"].get(c, c) for c in tbl.column_names]
-                )
-                if self.arrow_schema is not None:
-                    tbl = _align_to_schema(tbl, self.arrow_schema)
-                yield from tbl.to_batches()
+        if plan is None:
             return
-
-        # changelog plan: filter this data file against the keys-only
-        # delete files (small — the merge-on-read write contract), then
-        # stamp _change_type. All executor-side; the driver only ever
-        # touched manifest metadata. Row selection runs as vectorized
-        # arrow/numpy masks (guide §4.2) — the pandas merges this used
-        # row-converted every batch and dominated addBatch time.
-        keys = plan["keys"]
-
-        include = _keys_table(plan["include"], keys) if plan.get("include") else None
-        exclude = (
-            _keys_table(plan["exclude"], keys) if plan.get("exclude") and keys else None
-        )
-
-        def _pos_array(paths):
-            """This file's row ordinals named by the given vector files
-            — the per-file slice of the (file, pos) delete side."""
-            import numpy as np
-            import pyarrow.compute as pc
-
-            out = []
-            for p in paths:
-                t = pq.read_table(p, columns=["_file", "_pos"])
-                out.append(
-                    t.filter(pc.equal(t["_file"], plan["rel"]))["_pos"].to_numpy(
-                        zero_copy_only=False
-                    )
-                )
-            return np.unique(np.concatenate(out)) if out else np.array([], dtype="int64")
-
-        pos_inc = _pos_array(plan["pos_include"]) if plan.get("pos_include") else None
-        pos_exc = _pos_array(plan["pos_exclude"]) if plan.get("pos_exclude") else None
-        row_offset = 0
-        for batch in pq.ParquetFile(plan["file"]).iter_batches():
-            tbl = pa.Table.from_batches([batch])
-            base = row_offset
-            row_offset += len(tbl)
-            if pos_inc is not None or pos_exc is not None:
-                import numpy as np
-
-                ords = np.arange(base, base + len(tbl))
-                mask = np.ones(len(tbl), dtype=bool)
-                if pos_inc is not None:
-                    mask &= np.isin(ords, pos_inc)
-                if pos_exc is not None:
-                    mask &= ~np.isin(ords, pos_exc)
-                if not mask.any():
-                    continue
-                if not mask.all():
-                    tbl = tbl.filter(pa.array(mask))
-            if plan.get("rename"):
-                tbl = tbl.rename_columns(
-                    [plan["rename"].get(c, c) for c in tbl.column_names]
-                )
-            if include is not None:
-                tbl = _filter_by_keys(tbl, include, keys, keep_matching=True)
-            if exclude is not None and len(tbl):
-                tbl = _filter_by_keys(tbl, exclude, keys, keep_matching=False)
-            if not len(tbl):
-                continue
-            tbl = tbl.append_column(
-                "_change_type", pa.array([plan["kind"]] * len(tbl), pa.string())
-            ).append_column(
-                "_commit_snapshot_id",
-                pa.array([plan["sid"]] * len(tbl), pa.int64()),
-            )
-            if self.arrow_schema is not None:
-                tbl = _align_to_schema(tbl, self.arrow_schema)
-            yield from tbl.to_batches()
+        if isinstance(plan, str):  # plain append tail: a bare path
+            plan = {"file": plan}
+        yield from _read_plan(plan, self.arrow_schema)
 
     def commit(self, end):
         # planning is pure over (manifests, offsets): nothing to ack
@@ -965,7 +845,6 @@ class _SnapshotBatchReader(DataSourceReader):
         snap = _load_snap(self.path, self.sid)
         stats = snap.get("file_stats", {})
         deletes = snap.get("deletes", []) if self.apply_deletes else []
-        key_cols = snap.get("delete_keys", []) if deletes else []
         pos_deletes = snap.get("pos_deletes", []) if self.apply_deletes else []
         # columnar prune first: the sidecar answers the pushed bounds
         # as one vectorized parquet scan (O(matching files) driver
@@ -1009,83 +888,16 @@ class _SnapshotBatchReader(DataSourceReader):
                     continue
             parts.append(
                 InputPartition(
-                    {
-                        "kind": "insert",
-                        "file": os.path.join(self.path, f),
-                        # table-relative name: pos-delete vectors key on it
-                        "rel": f,
-                        "exclude": [
-                            os.path.join(self.path, d)
-                            for d in deletes
-                            if _eq_applies(snap, d, f)
-                        ],
-                        "pos_exclude": [
-                            os.path.join(self.path, d) for d in pos_deletes
-                        ],
-                        "keys": key_cols,
-                        "rename": _rename_map(snap, f),
-                    }
+                    _file_plan(
+                        self.path, snap, f, "insert", deletes, vecs=pos_deletes
+                    )
                 )
             )
         return parts or [InputPartition(None)]
 
     def read(self, partition):
-        if partition.value is None:
-            return
-        import pyarrow.parquet as pq
-
-        plan = partition.value
-        keys = plan["keys"]
-        # the keys-only delete frame is per FILE, not per record batch:
-        # build it once (the streaming reader does the same); row
-        # selection below is vectorized arrow/numpy, not pandas merges
-        # (guide §4.2)
-        excl = (
-            _keys_table(plan["exclude"], keys)
-            if plan["exclude"] and keys
-            else None
-        )
-        # positional vectors: this task filters only ITS file's row
-        # ordinals out of the (file, pos) pairs — the per-file slice of
-        # the delete side, O(deleted rows in this file) memory
-        doomed_pos = None
-        if plan.get("pos_exclude"):
-            import numpy as np
-            import pyarrow.compute as pc
-
-            chunks = []
-            for p in plan["pos_exclude"]:
-                t = pq.read_table(p, columns=["_file", "_pos"])
-                mask = pc.equal(t["_file"], plan["rel"])
-                chunks.append(t.filter(mask)["_pos"].to_numpy(zero_copy_only=False))
-            if chunks:
-                doomed_pos = np.unique(np.concatenate(chunks))
-                if not len(doomed_pos):
-                    doomed_pos = None
-        row_offset = 0
-        for batch in pq.ParquetFile(plan["file"]).iter_batches():
-            tbl = pa.Table.from_batches([batch])
-            if doomed_pos is not None:
-                import numpy as np
-
-                ords = np.arange(row_offset, row_offset + len(tbl))
-                row_offset += len(tbl)
-                mask = ~np.isin(ords, doomed_pos)
-                if not mask.any():
-                    continue
-                if not mask.all():
-                    tbl = tbl.filter(pa.array(mask))
-            else:
-                row_offset += len(tbl)
-            if plan.get("rename"):
-                tbl = tbl.rename_columns(
-                    [plan["rename"].get(c, c) for c in tbl.column_names]
-                )
-            if excl is not None:
-                tbl = _filter_by_keys(tbl, excl, keys, keep_matching=False)
-                if not len(tbl):
-                    continue
-            yield from _align_to_schema(tbl, self.arrow_schema).to_batches()
+        if partition.value is not None:
+            yield from _read_plan(partition.value, self.arrow_schema)
 
 
 # ------------------------------------------------------------ batch write

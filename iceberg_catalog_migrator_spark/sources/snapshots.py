@@ -57,6 +57,14 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .mor import (
+    _delete_seq,
+    _eq_exempt_files,
+    _file_seq,
+    _hide_sequenced,
+    _keys_table,
+)
+
 
 class SnapshotError(RuntimeError):
     pass
@@ -1492,13 +1500,6 @@ class SnapshotTable:
 
         pos_b, pos_a = _pos_set(pos_b_files), _pos_set(pos_a_files)
 
-        def _delete_keys(snap, dels):
-            return (
-                self._read_files(dels).select(*snap["delete_keys"]).distinct()
-                if dels
-                else None
-            )
-
         if with_lineage and not (
             snap_a.get("row_lineage") and snap_b.get("row_lineage")
         ):
@@ -1528,12 +1529,15 @@ class SnapshotTable:
         #     exactly.
         cands = []
         if dels_b != dels_a and carried:
-            kb, ka = _delete_keys(snap_b, dels_b), _delete_keys(snap_a, dels_a)
-            if kb is not None and ka is not None and snap_b["delete_keys"] != snap_a["delete_keys"]:
+            if dels_b and dels_a and snap_b["delete_keys"] != snap_a["delete_keys"]:
                 cands.append(_reader(carried, snap_a))  # no common semi-join key
             else:
-                keys = kb if ka is None else ka if kb is None else kb.unionByName(ka).distinct()
+                # both sides' delete keys, loaded once as a local relation
                 key_cols = snap_a["delete_keys"] if dels_a else snap_b["delete_keys"]
+                paths = [
+                    os.path.join(self.path, d) for d in dict.fromkeys(dels_b + dels_a)
+                ]
+                keys = self.spark.createDataFrame(_keys_table(paths, key_cols))
                 cands.append(
                     _reader(carried, snap_a).join(keys, key_cols, "left_semi")
                 )
@@ -2685,17 +2689,6 @@ def _merge_stats_extra(
     return {"file_stats": out} if out else {}
 
 
-def _check_merge_deletes(snap: dict, key_cols: list[str]) -> None:
-    """Merge over pending MOR deletes — now unconditionally supported:
-    positional vectors are file-bound (touched files' entries consumed,
-    carried files' entries carried), and equality deletes apply
-    SEQUENCE-AWARE (Iceberg's data-sequence-number rule): the merge's
-    output files are sequenced after every pending delete, so carried
-    delete entries can never hide them — any delete-key columns
-    compose with any merge keys. Kept as the single documentation point
-    for the safety argument; nothing left to refuse."""
-
-
 def _carry_deletes_after_merge(
     table: SnapshotTable,
     snap: dict,
@@ -2704,7 +2697,13 @@ def _carry_deletes_after_merge(
     carried: list[str],
 ) -> dict:
     """Delete state for a merge commit over pending MOR deletes — the
-    consumed entries are DROPPED in the same commit:
+    consumed entries are DROPPED in the same commit.
+
+    A merge over pending deletes of any kind is safe, whatever their
+    key columns: positional vectors are file-bound, and equality
+    deletes apply SEQUENCE-AWARE (Iceberg's data-sequence-number rule)
+    — the merge's output files are sequenced after every pending
+    delete, so no carried delete entry can hide them.
 
     - positional vectors: entries naming a TOUCHED file were applied
       during the visible read (the rewrite materialized them); entries
@@ -2713,13 +2712,17 @@ def _carry_deletes_after_merge(
     - equality keys: with SAME-keyed deletes, the source's own keys are
       subtracted as hygiene (their entries are fully consumed — carried
       files hold no source keys by the pruning contract, and the
-      rewritten files are sequenced past every delete anyway); with
+      rewritten files are sequenced past every delete anyway), so a CDC
+      replica's delete files do not grow with every merge; with
       DIFFERENTLY-keyed deletes the entries carry verbatim — the
       sequence rule alone keeps them exact (they apply to carried
       files, never to the merge's output). Legacy UNSTAMPED entries
       are adopted with the merge commit's sequence so they cannot
       read as +infinity and hide the merge's output.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     out = {}
     pos = snap.get("pos_deletes", [])
     if pos:
@@ -2735,57 +2738,55 @@ def _carry_deletes_after_merge(
         if surviving.limit(1).count():
             out["pos_deletes"] = table._write_data_files(surviving)
     dels = snap.get("deletes", [])
-    if dels:
-        if snap["delete_keys"] != key_cols:
-            # differently-keyed deletes: carry verbatim, sequences keep
-            # them exact (one rewritten delete-file set would lose the
-            # per-file sequence stamps). A LEGACY unstamped entry would
-            # read as +infinity ("applies to everything") and hide the
-            # merge's own output, so it is ADOPTED into the sequence
-            # model here: stamped with the merge commit's sequence, it
-            # keeps hiding every pre-merge file (all sequenced before)
-            # while the merge's output — and future appends — escape.
-            out["deletes"] = dels
-            out["delete_keys"] = snap["delete_keys"]
-            live_dels = set(dels)
-            dseqs = {
-                d: s
-                for d, s in snap.get("delete_seqs", {}).items()
-                if d in live_dels
-            }
-            adopt_seq = int(snap.get("sequence_number", 0)) + 1
-            for d in dels:
-                dseqs.setdefault(d, adopt_seq)
-            out["delete_seqs"] = dseqs
-            return out
-        # same-keyed: consume the source's keys as hygiene — FILE BY
-        # FILE, so each surviving entry keeps ITS OWN sequence stamp
-        # (stacked deletes spanning an append apply to different file
-        # generations; collapsing them to one sequence would mis-scope
-        # the younger entries)
-        src_keys = source.select(*key_cols).distinct()
-        dseqs = snap.get("delete_seqs", {})
-        new_out: list[str] = []
-        new_seqs: dict[str, int] = {}
-        for d in dels:
-            surviving = (
-                table._read_files([d])
-                .select(*key_cols)
-                .distinct()
-                .join(src_keys, key_cols, "left_anti")
-                .coalesce(1)  # keys-only and small: one file per vintage
-            )
-            if surviving.limit(1).count():
-                nf = table._write_data_files(surviving)
-                new_out.extend(nf)
-                if d in dseqs:
-                    for f in nf:
-                        new_seqs[f] = dseqs[d]
-        if new_out:
-            out["deletes"] = sorted(new_out)
-            out["delete_keys"] = snap["delete_keys"]
-            if new_seqs:
-                out["delete_seqs"] = new_seqs
+    if not dels:
+        return out
+    pending = table._pending_deletes(snap["snapshot_id"])
+    dseqs = pending.get("delete_seqs", {})
+    if snap["delete_keys"] != key_cols:
+        # differently-keyed deletes: carry verbatim, sequences keep
+        # them exact (one rewritten delete-file set would lose the
+        # per-file sequence stamps). A LEGACY unstamped entry would
+        # read as +infinity ("applies to everything") and hide the
+        # merge's own output, so it is ADOPTED into the sequence
+        # model here: stamped with the merge commit's sequence, it
+        # keeps hiding every pre-merge file (all sequenced before)
+        # while the merge's output — and future appends — escape.
+        adopt_seq = int(snap.get("sequence_number", 0)) + 1
+        out["deletes"] = pending["deletes"]
+        out["delete_keys"] = pending["delete_keys"]
+        out["delete_seqs"] = {d: dseqs.get(d, adopt_seq) for d in dels}
+        return out
+    # same-keyed: consume the source's keys as hygiene VINTAGE BY
+    # VINTAGE (one pending delete file), so each surviving entry keeps
+    # ITS OWN sequence stamp — stacked deletes spanning an append apply
+    # to different file generations; collapsing them to one sequence
+    # would mis-scope the younger entries. Every vintage loads through
+    # the Arrow key loader, tagged with its index, and one anti-join
+    # against the source keys serves them all.
+    vintages = []
+    for i, d in enumerate(dels):
+        t = _keys_table([os.path.join(table.path, d)], key_cols)
+        tag = pa.array([i] * len(t), pa.int32())
+        vintages.append(t.append_column("_vintage", tag))
+    survivors = (
+        table.spark.createDataFrame(pa.concat_tables(vintages))
+        .join(source.select(*key_cols), key_cols, "left_anti")
+        .toArrow()
+    )
+    new_out: list[str] = []
+    new_seqs: dict[str, int] = {}
+    for i, d in enumerate(dels):
+        kept = survivors.filter(pc.equal(survivors["_vintage"], i))
+        if len(kept):
+            nf = table._write_arrow_file(kept.drop_columns(["_vintage"]))
+            new_out.append(nf)
+            if d in dseqs:
+                new_seqs[nf] = dseqs[d]
+    if new_out:
+        out["deletes"] = sorted(new_out)
+        out["delete_keys"] = snap["delete_keys"]
+        if new_seqs:
+            out["delete_seqs"] = new_seqs
     return out
 
 
@@ -2824,7 +2825,6 @@ def merge_upsert(
         table._commit(new, "merge-insert-only", parent, ref=ref)
         return MergeResult(rewritten=0, carried=0, inserted=delta.count())
     snap = table._load_snap(parent)
-    _check_merge_deletes(snap, key_cols)
 
     key0 = key_cols[0]
     bounds = delta.agg(
@@ -2864,7 +2864,9 @@ def merge_upsert(
         # materializes them, and the commit below drops the consumed
         # delete entries
         if lineage:
-            current = _observe_visible(_visible_with_lineage(table, snap, touched))
+            current = _observe_visible(
+                _resolve_visible(table, snap, touched, with_row_ids=True)
+            )
             keep = current.join(delta.select(*key_cols), key_cols, "left_anti")
             # an updated row KEEPS its _row_id (matched mapping);
             # unmatched delta rows get NULL here, fresh ids below.
@@ -3018,7 +3020,6 @@ def merge_into(
         )
         return MergeResult(rewritten=0, carried=0, new_files=len(new))
     psnap = table._load_snap(parent)
-    _check_merge_deletes(psnap, key_cols)
     _dup_check()
     if not psnap["files"]:  # committed-but-empty table: inserts only
         ins = _apply_insert_clauses(source, unmatched, prefix_applied=False)
@@ -3061,12 +3062,11 @@ def merge_into(
     # (correctly-typed) target side: every source row lands in the
     # NOT MATCHED clauses
     lineage = bool(psnap.get("row_lineage"))
-    _visible = _visible_with_lineage if lineage else _resolve_visible
-    cur = (
-        _visible(table, psnap, touched)
-        if touched
-        else _visible(table, psnap, psnap["files"]).limit(0)
+    cur = _resolve_visible(
+        table, psnap, touched or psnap["files"], with_row_ids=lineage
     )
+    if not touched:
+        cur = cur.limit(0)
     # visible-count maintenance: the touched files' visible rows are
     # exactly what this COW rewrite replaces; observe() counts them on
     # the SAME job that writes the merge output — no extra scan
@@ -3394,35 +3394,14 @@ def read_with_deletes(
     return _resolve_visible(table, snap, snap["files"])
 
 
-def _eq_exempt_files(snap: dict, files: list[str]) -> list[str]:
-    """Data files among ``files`` escaping AT LEAST ONE pending
-    equality delete — sequenced at/after the OLDEST delete file (a key
-    re-appended after its deletion, an append after any delete, or a
-    merge's own output). A file between the oldest and a younger
-    delete's sequence is still hidden by the younger deletes, so this
-    is a TRIGGER for the per-file sequence-aware path, not a
-    skip-deletes-entirely list. Empty only while every data file is
-    older than every pending delete (no append since the first one)."""
-    dels = snap.get("deletes", [])
-    if not dels:
-        return []
-    dseqs = snap.get("delete_seqs", {})
-    min_dseq = min(dseqs.get(d, float("inf")) for d in dels)
-    fseqs = snap.get("file_seqs", {})
-    return [f for f in files if fseqs.get(f, 0) >= min_dseq]
-
-
 def _apply_eq_deletes(
     table: SnapshotTable, snap: dict, df: DataFrame, files: list[str]
 ) -> DataFrame:
     """Hide equality-deleted rows of ``df`` (rows of ``files``) under
-    ``snap``'s delete state, SEQUENCE-AWARE: a delete file applies only
-    to rows whose data file is sequenced before it (Iceberg's
-    data-sequence-number rule; unstamped legacy files read as 0,
-    unstamped legacy delete files as +infinity). When no file is
-    exempt — every history whose deletes are newest — this is the
-    plain broadcast anti-join. Otherwise ``df`` must carry the
-    ``_file`` column; the caller drops it afterwards.
+    ``snap``'s delete state, SEQUENCE-AWARE (:func:`mor._hide_sequenced`).
+    When no file is exempt — every history whose deletes are newest —
+    this is the plain broadcast anti-join. Otherwise ``df`` must carry
+    the ``_file`` column; the caller drops it afterwards.
 
     The delete side is loaded once on the driver as Arrow (small by the
     merge-on-read write contract) and enters the plan as a local
@@ -3431,31 +3410,24 @@ def _apply_eq_deletes(
     import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from .snapshot_stream import _keys_table
-
     dels = snap.get("deletes", [])
     if not dels:
         return df
     key_cols = snap["delete_keys"]
     paths = [os.path.join(table.path, d) for d in dels]
-    exempt = _eq_exempt_files(snap, files)
-    if not exempt:
+    if not _eq_exempt_files(snap, files):
         keys = table.spark.createDataFrame(_keys_table(paths, key_cols))
         return df.join(F.broadcast(keys), key_cols, "left_anti")
-    dseqs = snap.get("delete_seqs", {})
-    fseqs = snap.get("file_seqs", {})
-    keys = _keys_table(paths, key_cols, [dseqs.get(d, float("inf")) for d in dels])
+    keys = _keys_table(paths, key_cols, [_delete_seq(snap, d) for d in dels])
     fmap = pa.table(
         {
             "_file": pa.array(files, pa.string()),
-            "_fseq": pa.array([int(fseqs.get(f, 0)) for f in files], pa.int64()),
+            "_fseq": pa.array([int(_file_seq(snap, f)) for f in files], pa.int64()),
         }
     )
-    return (
-        df.join(F.broadcast(table.spark.createDataFrame(fmap)), "_file", "left")
-        .join(F.broadcast(table.spark.createDataFrame(keys)), key_cols, "left")
-        .filter(F.col("_dseq").isNull() | (F.col("_dseq") <= F.col("_fseq")))
-        .drop("_dseq", "_fseq")
+    create = table.spark.createDataFrame
+    return _hide_sequenced(
+        df, create(fmap), create(keys), key_cols, "_file", broadcast_keys=True
     )
 
 
@@ -3473,21 +3445,33 @@ def _observed_or_counted(obs, df: DataFrame) -> int:
 
 
 def _resolve_visible(
-    table: SnapshotTable, snap: dict, files: list[str], keep_pos: bool = False
+    table: SnapshotTable,
+    snap: dict,
+    files: list[str],
+    keep_pos: bool = False,
+    with_row_ids: bool = False,
 ) -> DataFrame:
     """The VISIBLE rows of ``files`` under ``snap``'s delete state:
     field-id-resolved, minus positional vectors (anti-join on the
     (file, pos) row identity), minus equality-deleted keys
-    (sequence-aware). This is both the whole-table read
-    (:func:`read_with_deletes`) and the touched-file read of a merge
-    over pending MOR deletes. ``keep_pos`` retains the ``(_file,
-    _pos)`` identity columns (positional deletes record visible-row
-    coordinates through it)."""
+    (sequence-aware). This is the whole-table read
+    (:func:`read_with_deletes`, :func:`read_with_lineage`) and the
+    touched-file read of a merge over pending MOR deletes. ``keep_pos``
+    retains the ``(_file, _pos)`` identity columns (positional deletes
+    record visible-row coordinates through it); ``with_row_ids``
+    attaches each row's stable ``_row_id`` on a lineage table, so
+    merges and maintenance keep ids across their rewrites."""
     pos_deletes = snap.get("pos_deletes", [])
-    need_id = keep_pos or bool(pos_deletes) or bool(_eq_exempt_files(snap, files))
-    df = table._resolve_files(snap, files, with_pos=need_id)
-    if snap.get("row_lineage"):
-        df = df.drop("_row_id")  # surfaced by read_with_lineage only
+    if with_row_ids:
+        need_id = True
+        df = _attach_row_ids(table, snap, files)
+    else:
+        need_id = (
+            keep_pos or bool(pos_deletes) or bool(_eq_exempt_files(snap, files))
+        )
+        df = table._resolve_files(snap, files, with_pos=need_id)
+        if snap.get("row_lineage"):
+            df = df.drop("_row_id")  # surfaced by read_with_lineage only
     if pos_deletes:
         pos = table._read_files(pos_deletes).select("_file", "_pos").distinct()
         df = df.join(pos, ["_file", "_pos"], "left_anti")
@@ -3594,22 +3578,7 @@ def read_with_lineage(
     snap = table._load_snap(sid)
     if not snap.get("row_lineage"):
         raise SnapshotError("enable_row_lineage first")
-    return _visible_with_lineage(table, snap, snap["files"])
-
-
-def _visible_with_lineage(
-    table: SnapshotTable, snap: dict, files: list[str]
-) -> DataFrame:
-    """Visible rows of ``files`` with ``_row_id`` attached — the
-    lineage twin of :func:`_resolve_visible` (merges and maintenance on
-    lineage tables read through this so ids survive their rewrites)."""
-    df = _attach_row_ids(table, snap, files)
-    pos_deletes = snap.get("pos_deletes", [])
-    if pos_deletes:
-        pos = table._read_files(pos_deletes).select("_file", "_pos").distinct()
-        df = df.join(pos, ["_file", "_pos"], "left_anti")
-    df = _apply_eq_deletes(table, snap, df, files)
-    return df.drop("_file", "_pos")
+    return _resolve_visible(table, snap, snap["files"], with_row_ids=True)
 
 
 def _assign_new_row_ids(
@@ -3645,7 +3614,7 @@ def compact_deletes(table: SnapshotTable, ref: str = MAIN) -> int:
     extra = {}
     if snap.get("row_lineage"):
         # lineage survives compaction: ids ride the rewrite physically
-        survivors = _visible_with_lineage(table, snap, snap["files"])
+        survivors = _resolve_visible(table, snap, snap["files"], with_row_ids=True)
         files = table._write_data_files(survivors)
         extra["lineage_files"] = {f: True for f in files}
     else:

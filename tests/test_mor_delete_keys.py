@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections import Counter
 from datetime import datetime, timedelta, timezone
 
 import pyarrow.parquet as pq
@@ -136,3 +137,40 @@ def test_delete_where_key_bounds_launch_no_job(spark, tmp_path, monkeypatch):
     delete_where(t, ["k"], spark.range(10, 20).select(F.col("id").alias("k")))
     assert seen == [0]
     assert S.metadata_count(t) == 40
+
+
+@pytest.mark.parametrize("key_cols", [["k"], ["k", "g"]])
+def test_null_delete_key_hides_no_row_on_any_read_path(spark, tmp_path, key_cols):
+    """Today's null-key rule, pinned on all three read paths: a null in
+    a delete key never matches, so it hides no row — not even a row
+    whose own key is null. Iceberg's spec matches a null delete key to
+    null data keys; adopting it changes the Arrow key filter and the
+    DataFrame kernel in ``sources/mor.py``, and this case with them."""
+    schema = "k bigint, g string, v bigint"
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(
+        spark.createDataFrame([(None, "a", 0), (1, "a", 10), (2, "a", 20)], schema)
+    )
+    delete_where(
+        t,
+        key_cols,
+        spark.createDataFrame([(None, "a", 0), (2, "a", 0)], schema).select(*key_cols),
+    )
+    # an append after a delete: reads take the sequence-aware branch
+    t.append(spark.createDataFrame([(None, "a", 1), (3, "a", 30)], schema))
+    delete_where(
+        t, key_cols, spark.createDataFrame([(None, "a", 0)], schema).select(*key_cols)
+    )
+    expected = Counter([(None, 0), (None, 1), (1, 10), (3, 30)])
+
+    def bag(df):
+        return Counter((r["k"], r["v"]) for r in df.collect())
+
+    assert bag(read_with_deletes(t)) == expected
+    register_snapshot_stream_source(spark)
+    assert (
+        bag(spark.read.format("snapshot_commits").option("path", t.path).load())
+        == expected
+    )
+    out = export_iceberg_metadata(t)
+    assert bag(read_iceberg_table(spark, out["metadata_location"])) == expected
