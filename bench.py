@@ -24,6 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from iceberg_catalog_migrator_spark.queries import all_queries
+from iceberg_catalog_migrator_spark.queries.registry import FIXTURES
 from iceberg_catalog_migrator_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -140,30 +141,15 @@ def main() -> None:
                     pass
         except Exception as exc:  # noqa: BLE001
             errors[f"warmup:pagecache:{t}"] = f"{type(exc).__name__}: {exc}"[:300]
-    # fixture prebuild: the snapshot/connector queries build cached
-    # table fixtures (multi-commit snapshot tables, stream drains,
-    # replicas) under /tmp on first touch — run that family once
-    # UNTIMED so the timed loop measures the queries, not one-time
-    # fixture construction
-    for name, qd in sorted(queries.items()):
-        if qd.fn.__module__.endswith("queries.connectors"):
-            try:
-                qd.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001
-                errors[f"prebuild:{name}"] = f"{type(exc).__name__}: {exc}"[:300]
-    # dedup_snapshot_commit_delta builds the same kind of /tmp
-    # snapshot-table fixture on first touch (two full-corpus appends); build the
-    # TABLE here, untimed, exactly like the connector fixtures above —
-    # only the fixture is constructed, the query itself (and its
-    # in-session candidate cache) still runs cold in the timed loop.
-    try:
-        from iceberg_catalog_migrator_spark.operators.dedup import (
-            _doc_snapshot_fixture,
-        )
-
-        _doc_snapshot_fixture(spark, SF_DIR)
-    except Exception as exc:  # noqa: BLE001
-        errors["prebuild:docsnap_fixture"] = f"{type(exc).__name__}: {exc}"[:300]
+    # fixture prebuild: every registered on-disk fixture (snapshot
+    # tables, exported Iceberg trees, replicas) is built once UNTIMED,
+    # so the timed loop measures the queries, not one-time fixture
+    # construction; the queries themselves still run cold in the loop
+    for name, fixture in sorted(FIXTURES.items()):
+        try:
+            fixture(spark, SF_DIR)
+        except Exception as exc:  # noqa: BLE001
+            errors[f"prebuild:{name}"] = f"{type(exc).__name__}: {exc}"[:300]
     # Spark-epoch calibration: after all warmups, before the timed loop
     try:
         CALIBRATION["spark_s"] = _calibrate_spark(spark)

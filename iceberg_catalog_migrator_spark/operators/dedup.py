@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.registry import register_query
+from ..queries.registry import register_fixture, register_query
 from ..sources import load_table
 from .hashing import (
     LSH_BANDS,
@@ -1389,26 +1389,17 @@ def sample_leakage_guarded_splits(spark: SparkSession, sf_dir: str) -> DataFrame
 # operational shape of dedup_incremental_delta_vs_corpus: the delta
 # boundary is the table's own commit history instead of an id-range
 # convention.
-_SNAPDOC_CACHE_ROOT = "/tmp/spark_graft_docsnap"
 _SNAP_DELTA_CAND_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-def _doc_snapshot_fixture(spark: SparkSession, sf_dir: str):
-    import hashlib
-    import os
-
+@register_fixture("documents_corpus_crawl")
+def _corpus_crawl_docs(spark: SparkSession, sf_dir: str, root: str) -> None:
     from ..sources.snapshots import SnapshotTable
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAPDOC_CACHE_ROOT, key))
-    if tbl.current_snapshot_id() != 2:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        full = _corpus(spark, sf_dir)
-        tbl.append(full.filter(F.col("doc_id") < VARIANT_OFFSET))  # the corpus
-        tbl.append(full.filter(F.col("doc_id") >= VARIANT_OFFSET))  # the crawl
-    return tbl
+    tbl = SnapshotTable(spark, root)
+    full = _corpus(spark, sf_dir)
+    tbl.append(full.filter(F.col("doc_id") < VARIANT_OFFSET))  # the corpus
+    tbl.append(full.filter(F.col("doc_id") >= VARIANT_OFFSET))  # the crawl
 
 
 @register_query(
@@ -1455,7 +1446,9 @@ def _doc_snapshot_fixture(spark: SparkSession, sf_dir: str):
     ),
 )
 def dedup_snapshot_commit_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tbl = _doc_snapshot_fixture(spark, sf_dir)
+    from ..sources.snapshots import SnapshotTable
+
+    tbl = SnapshotTable(spark, _corpus_crawl_docs(spark, sf_dir))
     delta_docs = tbl.read_incremental(1, 2)
     corpus_docs = tbl.read(1)
     # each shingle table feeds three plan subtrees (band-bucket build,

@@ -18,7 +18,7 @@ from ..sources.synthetic import (
     register_synthetic_source,
     synthetic_oracle_cte,
 )
-from .registry import register_query
+from .registry import register_fixture, register_query
 
 _ROWS = 120_000
 _USERS = 997
@@ -63,7 +63,8 @@ def synthetic_source_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (even orderkeys, then odd), read INCREMENTALLY between them — the
 # CDC-consumption path — and aggregate. DuckDB replays the delta as a
 # plain filter, so the file-set difference is value-checked end to end.
-_SNAP_CACHE_ROOT = "/tmp/spark_graft_snaptbl"
+# Every table these queries read is a registered on-disk fixture
+# (registry.register_fixture): built once per key, never mutated.
 
 
 def _rest_req(uri: str, method: str, path: str, body=None):
@@ -89,63 +90,79 @@ def _rest_req(uri: str, method: str, path: str, body=None):
         return e.code, _json.loads(e.read() or b"{}")
 
 
-def _icfr_exported(spark: SparkSession, sf_dir: str) -> dict:
-    """The shared even/odd orders SnapshotTable (cache key '-icfr')
-    exported as Iceberg metadata; returns the parsed metadata doc.
-    Every REST-conformance query publishes these snapshots through the
-    endpoint, so the build block must stay ONE definition — divergent
-    copies over the shared cache dir would corrupt each other's
-    oracle expectations."""
-    import hashlib
-    import json as _json
-    import os
-    import shutil
-
+@register_fixture("orders_even_odd_exported")
+def _even_odd_exported_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
     from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.snapshots import SnapshotTable
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = SnapshotTable(
-        spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icfr")
+    src = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
     )
-    if src.current_snapshot_id() != 2:
-        shutil.rmtree(src.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        src.append(orders.filter(F.col("o_orderkey") % 2 == 0).coalesce(2))
-        src.append(orders.filter(F.col("o_orderkey") % 2 == 1).coalesce(1))
+    src.append(orders.filter(F.col("o_orderkey") % 2 == 0).coalesce(2))
+    src.append(orders.filter(F.col("o_orderkey") % 2 == 1).coalesce(1))
+    export_iceberg_metadata(src, reuse=True)
+
+
+def _icfr_exported(spark: SparkSession, sf_dir: str) -> dict:
+    """The even/odd orders SnapshotTable exported as Iceberg metadata;
+    returns the parsed metadata doc. Every REST-conformance query
+    publishes these snapshots through the endpoint."""
+    import json as _json
+
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable
+
+    src = SnapshotTable(spark, _even_odd_exported_orders(spark, sf_dir))
     with open(
         export_iceberg_metadata(src, reuse=True)["metadata_location"]
     ) as f:
         return _json.load(f)
 
 
-def _snapshot_fixture(spark: SparkSession, sf_dir: str):
-    import hashlib
+def _table(spark: SparkSession, fixture, sf_dir: str, *parts: str):
+    """The SnapshotTable at ``parts`` inside ``fixture``'s directory."""
     import os
 
-    from pyspark.sql import functions as F
+    from ..sources.snapshots import SnapshotTable
 
+    return SnapshotTable(spark, os.path.join(fixture(spark, sf_dir), *parts))
+
+
+@register_fixture("orders_even_odd")
+def _even_odd_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Snapshot 1 = even orderkeys, 2 = + odd."""
     from ..sources import load_table
     from ..sources.snapshots import SnapshotTable
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key))
-    # valid cached states: 2 (both appends) or 3 (+ the MOR delete the
-    # delete-read query stacks on) — anything else is a stale/partial
-    # build from another run and gets recreated
-    if tbl.current_snapshot_id() not in (2, 3):
-        import shutil
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1))
 
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
-        tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1))
-    return tbl
+
+@register_fixture("orders_even_odd_mor")
+def _even_odd_mor_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """The even/odd history plus snapshot 3 = equality delete of even
+    orderkeys % 5 == 0 — its own table, so the base stays at 2."""
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, delete_where
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1))
+    doomed = (
+        tbl.read(2)
+        .filter((F.col("o_orderkey") % 2 == 0) & (F.col("o_orderkey") % 5 == 0))
+        .select("o_orderkey")
+    )
+    delete_where(tbl, ["o_orderkey"], doomed)
 
 
 @register_query(
@@ -162,7 +179,7 @@ def _snapshot_fixture(spark: SparkSession, sf_dir: str):
     ),
 )
 def snapshot_incremental_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tbl = _snapshot_fixture(spark, sf_dir)
+    tbl = _table(spark, _even_odd_orders, sf_dir)
     inc = tbl.read_incremental(1, 2)
     return inc.agg(
         F.count("*").cast("bigint").alias("n_rows"),
@@ -184,36 +201,17 @@ def snapshot_incremental_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def snapshot_mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reads the 2-snapshot fixture with an equality delete stacked on
+    """Reads the even/odd history with an equality delete stacked on
     top: even orderkeys divisible by 5 are deleted via an O(keys)
     delete file (no data rewrite), and the read applies one
-    broadcastable anti-join. Cached per sf_dir alongside the
-    incremental fixture (snapshot 3 = the delete)."""
+    broadcastable anti-join (snapshot 3 = the delete)."""
     from ..sources.snapshots import read_with_deletes
 
-    tbl = _mor_fixture(spark, sf_dir)
+    tbl = _table(spark, _even_odd_mor_orders, sf_dir)
     return read_with_deletes(tbl).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         dsum("o_totalprice").alias("total"),
     )
-
-
-def _mor_fixture(spark: SparkSession, sf_dir: str):
-    """The shared fixture advanced to state 3: snapshot 1 = even
-    orderkeys, 2 = + odd, 3 = equality delete of even keys % 5 == 0."""
-    from pyspark.sql import functions as F2
-
-    from ..sources.snapshots import delete_where
-
-    tbl = _snapshot_fixture(spark, sf_dir)
-    if tbl.current_snapshot_id() == 2:
-        doomed = (
-            tbl.read(2)
-            .filter((F2.col("o_orderkey") % 2 == 0) & (F2.col("o_orderkey") % 5 == 0))
-            .select("o_orderkey")
-        )
-        delete_where(tbl, ["o_orderkey"], doomed)
-    return tbl
 
 
 @register_query(
@@ -242,7 +240,7 @@ def snapshot_changelog_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted even keys. The diff scans only the added files and the
     carried rows matching a delete key (sources/snapshots.py
     read_changelog) — never the unchanged remainder."""
-    tbl = _mor_fixture(spark, sf_dir)
+    tbl = _table(spark, _even_odd_mor_orders, sf_dir)
     log = tbl.read_changelog(1, 3)
     return log.groupBy("_change_type").agg(
         F.count("*").cast("bigint").alias("n_rows"),
@@ -264,10 +262,9 @@ def snapshot_changelog_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def snapshot_stream_drain_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streams the shared 2-commit fixture through the snapshot_commits
-    connector (sources/snapshot_stream.py) and aggregates the drained
-    rows. Equality-delete commits add no data files, so the fixture's
-    optional MOR state does not change the appended row stream."""
+    """Streams the 2-commit even/odd fixture through the
+    snapshot_commits connector (sources/snapshot_stream.py) and
+    aggregates the drained rows."""
     import tempfile
 
     from ..sources.snapshot_stream import (
@@ -275,7 +272,7 @@ def snapshot_stream_drain_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_snapshot_stream_source,
     )
 
-    tbl = _snapshot_fixture(spark, sf_dir)
+    tbl = _table(spark, _even_odd_orders, sf_dir)
     register_snapshot_stream_source(spark)
     with tempfile.TemporaryDirectory(prefix="snapstream_") as tmp:
         out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
@@ -299,7 +296,18 @@ def snapshot_stream_drain_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, drained.schema)
 
 
-_PART_CACHE_ROOT = "/tmp/spark_graft_parttbl"
+@register_fixture("orders_bucket8")
+def _bucketed_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.plan_index import ensure_plan_index
+    from ..sources.snapshots import SnapshotTable, append_partitioned
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    append_partitioned(tbl, orders, [("o_custkey", "bucket[8]")])
+    ensure_plan_index(root, tbl.current_snapshot_id())  # the pruned scan's sidecar
 
 
 @register_query(
@@ -321,29 +329,9 @@ def snapshot_partition_pruned_orders(spark: SparkSession, sf_dir: str) -> DataFr
     smallest custkey through partition_pruned_scan — asserting inside
     the query that pruning actually hit one file, so the oracle match
     also certifies the metadata plan, not just the row values."""
-    import hashlib
-    import os
+    from ..sources.snapshots import partition_pruned_scan
 
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        append_partitioned,
-        partition_pruned_scan,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_PART_CACHE_ROOT, key))
-    snap_ok = False
-    if tbl.current_snapshot_id() == 1:
-        snap_ok = tbl._load_snap(1).get("partition_spec") == [["o_custkey", "bucket[8]"]]
-    if not snap_ok:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        append_partitioned(tbl, orders, [("o_custkey", "bucket[8]")])
+    tbl = _table(spark, _bucketed_orders, sf_dir)
     target = tbl.read().agg(F.min("o_custkey").alias("m")).first()["m"]
     pruned, summary = partition_pruned_scan(tbl, {"o_custkey": target})
     if summary["scanned_files"] != 1:  # pragma: no cover - plan regression guard
@@ -354,7 +342,26 @@ def snapshot_partition_pruned_orders(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_WAP_CACHE_ROOT = "/tmp/spark_graft_waptbl"
+@register_fixture("orders_wap_published")
+def _wap_published_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Stages the odd-key half on an ``audit`` branch (main still
+    serves the even half), audits the branch head, then publishes by
+    fast-forwarding main — a metadata-only pointer move."""
+    from ..sources import load_table
+    from ..sources.snapshots import MAIN, SnapshotTable
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    tbl.create_branch("audit")
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1), ref="audit")
+    staged = tbl.read(ref="audit")
+    bad = staged.filter(F.col("o_orderkey").isNull() | (F.col("o_totalprice") < 0))
+    if bad.count() != 0:  # pragma: no cover - fixture data always passes
+        raise RuntimeError("audit failed: not publishing the staged branch")
+    tbl.fast_forward(MAIN, "audit")
 
 
 @register_query(
@@ -370,25 +377,13 @@ _WAP_CACHE_ROOT = "/tmp/spark_graft_waptbl"
     ),
 )
 def snapshot_refs_metadata_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runs AFTER snapshot_wap_publish_orders' fixture logic (same cache,
-    same published end state: main fast-forwarded to the audit branch's
-    snapshot 2), then reads the ref census through metadata_table —
-    driver-side manifest reads, no data files opened."""
+    """Reads the ref census of the published write-audit-publish
+    fixture (main fast-forwarded to the audit branch's snapshot 2)
+    through metadata_table — driver-side manifest reads, no data
+    files opened."""
     from ..sources.snapshots import metadata_table
 
-    snapshot_wap_publish_orders(spark, sf_dir)  # ensure published state
-    key = _wap_table(spark, sf_dir)
-    return metadata_table(key, "refs")
-
-
-def _wap_table(spark: SparkSession, sf_dir: str):
-    import hashlib
-    import os
-
-    from ..sources.snapshots import SnapshotTable
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return SnapshotTable(spark, os.path.join(_WAP_CACHE_ROOT, key))
+    return metadata_table(_table(spark, _wap_published_orders, sf_dir), "refs")
 
 
 @register_query(
@@ -406,42 +401,10 @@ def _wap_table(spark: SparkSession, sf_dir: str):
     ),
 )
 def snapshot_wap_publish_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stages the odd-key half on an ``audit`` branch (main still serves
-    the even half), runs the audit checks against the branch head, then
-    publishes by fast-forwarding main — a metadata-only pointer move,
-    no data rewrite. Cached per sf_dir at the published state."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import MAIN, SnapshotTable
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_WAP_CACHE_ROOT, key))
-    published = tbl.current_snapshot_id() == 2 and tbl.refs()["branches"].get("audit") == 2
-    if not published:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        tbl.create_branch("audit")
-        tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 1), ref="audit")
-        staged = tbl.read(ref="audit")
-        audit_ok = (
-            staged.filter(
-                F2.col("o_orderkey").isNull() | (F2.col("o_totalprice") < 0)
-            ).count()
-            == 0
-        )
-        if not audit_ok:  # pragma: no cover - fixture data always passes
-            raise RuntimeError("audit failed: not publishing the staged branch")
-        tbl.fast_forward(MAIN, "audit")
-    return tbl.read().agg(
+    """Reads the published write-audit-publish fixture: the audited
+    branch's odd half fast-forwarded onto main's even half, no data
+    rewrite."""
+    return _table(spark, _wap_published_orders, sf_dir).read().agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
         dsum("o_totalprice").alias("total"),
@@ -449,7 +412,31 @@ def snapshot_wap_publish_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------ schema evolution
-_EVO_CACHE_ROOT = "/tmp/spark_graft_evotbl"
+@register_fixture("orders_schema_evolution")
+def _evolved_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import (
+        SnapshotTable,
+        rename_column,
+        track_schema,
+        widen_column,
+    )
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders")
+    era1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
+        F.col("o_orderkey").cast("int").alias("o_orderkey"),
+        "o_orderstatus",
+        F.col("o_totalprice").alias("price"),
+    )
+    tbl.append(era1)
+    track_schema(tbl)
+    rename_column(tbl, "price", "o_totalprice")
+    widen_column(tbl, "o_orderkey", "bigint")
+    era2 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    tbl.append(era2)
 
 
 @register_query(
@@ -470,7 +457,7 @@ _EVO_CACHE_ROOT = "/tmp/spark_graft_evotbl"
     ),
 )
 def snapshot_schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixture history (cached per sf_dir at snapshot 5):
+    """Fixture history (snapshot 5 is the head):
 
     1. append even orderkeys as (o_orderkey INT, o_orderstatus, price)
     2. track_schema            — field ids recorded
@@ -486,54 +473,7 @@ def snapshot_schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataFr
     Reference tie-in: the schema travels in the metadata docs the
     migration plane registers (`CatalogMigrator.java:208-224`) — this
     is the table-format capability those docs exist to carry."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        rename_column,
-        track_schema,
-        widen_column,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_EVO_CACHE_ROOT, key))
-
-    def _built() -> bool:
-        if tbl.current_snapshot_id() != 5:
-            return False
-        snap = tbl._load_snap(5)
-        if not snap.get("schemas"):
-            return False
-        cur = {
-            f["name"]: f["type"]
-            for s in snap["schemas"]
-            if s["schema_id"] == snap["current_schema_id"]
-            for f in s["fields"]
-        }
-        return cur.get("o_totalprice") == "double" and cur.get("o_orderkey") == "bigint"
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        era1 = orders.filter(F2.col("o_orderkey") % 2 == 0).select(
-            F2.col("o_orderkey").cast("int").alias("o_orderkey"),
-            "o_orderstatus",
-            F2.col("o_totalprice").alias("price"),
-        )
-        tbl.append(era1)
-        track_schema(tbl)
-        rename_column(tbl, "price", "o_totalprice")
-        widen_column(tbl, "o_orderkey", "bigint")
-        era2 = orders.filter(F2.col("o_orderkey") % 2 == 1).select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        tbl.append(era2)
+    tbl = _table(spark, _evolved_orders, sf_dir)
     return tbl.read().groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("o_orderkey").cast("bigint").alias("key_sum"),
@@ -542,7 +482,32 @@ def snapshot_schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 # ------------------------------------------------------------ branch merge WAP
-_MWAP_CACHE_ROOT = "/tmp/spark_graft_mwaptbl"
+@register_fixture("orders_merge_on_branch")
+def _branch_merged_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import (
+        MAIN,
+        SnapshotTable,
+        delete_where,
+        merge_upsert,
+        read_with_deletes,
+    )
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    tbl.append(orders)
+    tbl.create_branch("audit")
+    updates = orders.filter(F.col("o_orderkey") % 7 == 0).select(
+        "o_orderkey", (F.col("o_totalprice") * 2).alias("o_totalprice")
+    )
+    merge_upsert(tbl, updates, ["o_orderkey"], ref="audit")
+    doomed = orders.filter(F.col("o_orderkey") % 11 == 0).select("o_orderkey")
+    delete_where(tbl, ["o_orderkey"], doomed, ref="audit")
+    # audit gate: staged row count is exactly the expected survivors
+    staged = read_with_deletes(tbl, ref="audit")
+    if staged.filter(F.col("o_totalprice") <= 0).count() != 0:  # pragma: no cover
+        raise RuntimeError("audit failed: not publishing")
+    tbl.fast_forward(MAIN, "audit")
 
 
 @register_query(
@@ -573,52 +538,11 @@ def snapshot_merge_on_branch_publish(spark: SparkSession, sf_dir: str) -> DataFr
     not just appends. This fixture stages a copy-on-write MERGE and a
     merge-on-read DELETE on ``audit`` while main still serves the
     original rows, audits the staged state, then publishes with one
-    metadata-only fast-forward. Cached per sf_dir at the published
-    state (main == audit head, deletes pending)."""
-    import hashlib
-    import os
+    metadata-only fast-forward. The fixture holds the published state
+    (main == audit head, deletes pending)."""
+    from ..sources.snapshots import read_with_deletes
 
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        MAIN,
-        SnapshotTable,
-        delete_where,
-        merge_upsert,
-        read_with_deletes,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_MWAP_CACHE_ROOT, key))
-
-    def _built() -> bool:
-        head = tbl.current_snapshot_id()
-        if head is None or tbl.refs()["branches"].get("audit") != head:
-            return False
-        return tbl._load_snap(head)["operation"] == "delete"
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        tbl.append(orders)
-        tbl.create_branch("audit")
-        updates = orders.filter(F2.col("o_orderkey") % 7 == 0).select(
-            "o_orderkey", (F2.col("o_totalprice") * 2).alias("o_totalprice")
-        )
-        merge_upsert(tbl, updates, ["o_orderkey"], ref="audit")
-        doomed = orders.filter(F2.col("o_orderkey") % 11 == 0).select("o_orderkey")
-        delete_where(tbl, ["o_orderkey"], doomed, ref="audit")
-        # audit gate: staged row count is exactly the expected survivors
-        staged = read_with_deletes(tbl, ref="audit")
-        if staged.filter(F2.col("o_totalprice") <= 0).count() != 0:  # pragma: no cover
-            raise RuntimeError("audit failed: not publishing")
-        tbl.fast_forward(MAIN, "audit")
-    published = read_with_deletes(tbl)
+    published = read_with_deletes(_table(spark, _branch_merged_orders, sf_dir))
     return published.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.count(F.when(F.col("o_orderkey") % 7 == 0, 1)).cast("bigint").alias("n_updated"),
@@ -659,7 +583,7 @@ def snapshot_changelog_stream_orders(spark: SparkSession, sf_dir: str) -> DataFr
         register_snapshot_stream_source,
     )
 
-    tbl = _mor_fixture(spark, sf_dir)
+    tbl = _table(spark, _even_odd_mor_orders, sf_dir)
     register_snapshot_stream_source(spark)
     with tempfile.TemporaryDirectory(prefix="snapcdc_") as tmp:
         out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
@@ -683,7 +607,15 @@ def snapshot_changelog_stream_orders(spark: SparkSession, sf_dir: str) -> DataFr
     return spark.createDataFrame(rows, drained.schema)
 
 
-_PARTMETA_CACHE_ROOT = "/tmp/spark_graft_partmeta"
+@register_fixture("events_day_partitioned")
+def _day_partitioned_events(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, append_partitioned
+
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    append_partitioned(SnapshotTable(spark, root), events, [("ts", "day")])
 
 
 @register_query(
@@ -707,30 +639,29 @@ def snapshot_partitions_metadata_events(spark: SparkSession, sf_dir: str) -> Dat
     rollup needs only the manifest's recorded tuples and each file's
     footer row count — the introspection a 100 TB maintenance planner
     runs before choosing what to compact."""
-    import hashlib
-    import os
+    from ..sources.snapshots import metadata_table
 
-    from ..sources import load_table
-    from ..sources.snapshots import SnapshotTable, append_partitioned, metadata_table
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_PARTMETA_CACHE_ROOT, key))
-    if tbl.current_snapshot_id() != 1:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        events = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        append_partitioned(tbl, events, [("ts", "day")])
-    parts = metadata_table(tbl, "partitions")
+    parts = metadata_table(_table(spark, _day_partitioned_events, sf_dir), "partitions")
     return parts.select(
         F.element_at("partition_values", 1).alias("day"),
         F.col("n_rows"),
     )
 
 
-_SORT_CACHE_ROOT = "/tmp/spark_graft_sorttbl"
+@register_fixture("orders_sorted")
+def _sorted_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Orders appended unclustered (8 full-domain files), then
+    rewrite_sorted on o_totalprice — one range shuffle, per-file stats
+    recorded in the rewrite commit."""
+    from ..sources import load_table
+    from ..sources.plan_index import ensure_plan_index
+    from ..sources.snapshots import SnapshotTable, rewrite_sorted
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    tbl.append(orders.repartition(8))
+    rewrite_sorted(tbl, ["o_totalprice"], n_files=8)
+    ensure_plan_index(root, tbl.current_snapshot_id())  # the planned scan's sidecar
 
 
 @register_query(
@@ -752,34 +683,14 @@ _SORT_CACHE_ROOT = "/tmp/spark_graft_sorttbl"
     ),
 )
 def snapshot_sorted_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixture: orders appended unclustered (8 full-domain files), then
-    rewrite_sorted on o_totalprice — one range shuffle, stats recorded
-    in the rewrite commit. planned_scan then opens only the files whose
-    recorded envelope intersects [50k, 100k]; the exact filter still
-    applies (envelopes are lossy). Asserted scannable-file reduction
-    lives in test_snapshots.py; here the VALUES are oracle-checked."""
-    import hashlib
-    import os
+    """Over the range-clustered fixture, planned_scan opens only the
+    files whose recorded envelope intersects [50k, 100k]; the exact
+    filter still applies (envelopes are lossy). Asserted scannable-file
+    reduction lives in test_snapshots.py; here the VALUES are
+    oracle-checked."""
+    from ..sources.snapshots import planned_scan
 
-    from ..sources import load_table
-    from ..sources.snapshots import SnapshotTable, planned_scan, rewrite_sorted
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SORT_CACHE_ROOT, key))
-
-    def _built() -> bool:
-        sid = tbl.current_snapshot_id()
-        return sid == 2 and tbl._load_snap(sid)["operation"] == "rewrite-sorted"
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        tbl.append(orders.repartition(8))
-        rewrite_sorted(tbl, ["o_totalprice"], n_files=8)
+    tbl = _table(spark, _sorted_orders, sf_dir)
     df, _summary = planned_scan(tbl, "o_totalprice", 50000.0, 100000.0)
     return df.agg(
         F.count("*").cast("bigint").alias("n_rows"),
@@ -806,25 +717,19 @@ def snapshot_sorted_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def snapshot_connector_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reads the RANGE-CLUSTERED fixture (built by
-    snapshot_sorted_scan_orders: append + rewrite_sorted, per-file
-    stats recorded in the rewrite commit) AT ITS SORTED SNAPSHOT
-    through the Python Data Source batch reader. The price predicate
-    reaches ``pushFilters`` and prunes files by the manifest envelopes
-    — actual file skipping, pinned at the partition-planner level in
-    test_snapshot_stream.py — then Spark re-applies it exactly."""
-    import hashlib
-    import os
-
+    """Reads the RANGE-CLUSTERED fixture (append + rewrite_sorted,
+    per-file stats recorded in the rewrite commit) AT ITS SORTED
+    SNAPSHOT through the Python Data Source batch reader. The price
+    predicate reaches ``pushFilters`` and prunes files by the manifest
+    envelopes — actual file skipping, pinned at the partition-planner
+    level in test_snapshot_stream.py — then Spark re-applies it
+    exactly."""
     from ..sources.snapshot_stream import (
         SNAPSHOT_STREAM_NAME,
         register_snapshot_stream_source,
     )
-    from ..sources.snapshots import SnapshotTable
 
-    snapshot_sorted_scan_orders(spark, sf_dir)  # ensure the sorted fixture
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SORT_CACHE_ROOT, key))
+    tbl = _table(spark, _sorted_orders, sf_dir)
     register_snapshot_stream_source(spark)
     df = (
         spark.read.format(SNAPSHOT_STREAM_NAME)
@@ -840,7 +745,37 @@ def snapshot_connector_time_travel_orders(spark: SparkSession, sf_dir: str) -> D
     )
 
 
-_REPL_CACHE_ROOT = "/tmp/spark_graft_repltbl"
+@register_fixture("orders_cdc_replica")
+def _replicated_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """``src``: append evens, equality-delete every 10th key, append
+    odds, then a MERGE over the pending deletes; ``dst``: the replica
+    drained from src's changelog stream (checkpoint in ``ckpt``)."""
+    import os
+
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, delete_where, merge_upsert
+    from ..streaming.jobs import replicate_snapshot_table_stream
+
+    src = SnapshotTable(spark, os.path.join(root, "src"))
+    dst = SnapshotTable(spark, os.path.join(root, "dst"))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    src.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    doomed = orders.filter(F.col("o_orderkey") % 10 == 0).select("o_orderkey")
+    delete_where(src, ["o_orderkey"], doomed)
+    src.append(orders.filter(F.col("o_orderkey") % 2 == 1))
+    # a MERGE straight over the pending MOR deletes: bumps the %8==4
+    # keys and REVIVES the deleted ones among them; streams to the
+    # replica as the non-net rewrite emission
+    delta = orders.filter(F.col("o_orderkey") % 8 == 4).withColumn(
+        "o_totalprice", F.col("o_totalprice") + 2000
+    )
+    merge_upsert(src, delta, ["o_orderkey"])
+    q = replicate_snapshot_table_stream(
+        spark, src.path, dst, ["o_orderkey"], os.path.join(root, "ckpt")
+    )
+    q.awaitTermination(300)
 
 
 @register_query(
@@ -871,63 +806,17 @@ _REPL_CACHE_ROOT = "/tmp/spark_graft_repltbl"
     ),
 )
 def snapshot_cdc_replication_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Builds (cached per sf_dir) a source snapshot table with an
-    append/delete/append history, replicates it via
+    """Reads the fixture pair: a source snapshot table with an
+    append/delete/append/merge history, replicated via
     ``replicate_snapshot_table_stream`` (the changelog stream applied
     as per-epoch net effects), and aggregates the replica through the
     merge-on-read read path. The drained replica — not the source — is
     the value-checked side, so the whole loop (changelog planning,
     executor-side delete filtering, ordinal-ordered apply, epoch
     idempotence) sits under the oracle gate."""
-    import hashlib
-    import os
+    from ..sources.snapshots import read_with_deletes
 
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import SnapshotTable, delete_where, read_with_deletes
-    from ..streaming.jobs import replicate_snapshot_table_stream
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(_REPL_CACHE_ROOT, key)
-    src = SnapshotTable(spark, os.path.join(root, "src"))
-    dst = SnapshotTable(spark, os.path.join(root, "dst"))
-
-    def _built() -> bool:
-        if src.current_snapshot_id() != 4 or dst.current_snapshot_id() is None:
-            return False
-        if src._load_snap(4)["operation"] != "merge":
-            return False
-        return dst._load_snap(dst.current_snapshot_id())["operation"] in (
-            "replicate-epoch",
-            "append",
-            "merge",
-        )
-
-    if not _built():
-        import shutil
-
-        from ..sources.snapshots import merge_upsert
-
-        shutil.rmtree(root, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        src.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        doomed = orders.filter(F2.col("o_orderkey") % 10 == 0).select("o_orderkey")
-        delete_where(src, ["o_orderkey"], doomed)
-        src.append(orders.filter(F2.col("o_orderkey") % 2 == 1))
-        # a MERGE straight over the pending MOR deletes: bumps the
-        # %8==4 keys and REVIVES the deleted ones among them; streams
-        # to the replica as the non-net rewrite emission
-        delta = orders.filter(F2.col("o_orderkey") % 8 == 4).withColumn(
-            "o_totalprice", F2.col("o_totalprice") + 2000
-        )
-        merge_upsert(src, delta, ["o_orderkey"])
-        q = replicate_snapshot_table_stream(
-            spark, src.path, dst, ["o_orderkey"], os.path.join(root, "ckpt")
-        )
-        q.awaitTermination(300)
+    dst = _table(spark, _replicated_orders, sf_dir, "dst")
     return read_with_deletes(dst).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
@@ -936,7 +825,53 @@ def snapshot_cdc_replication_orders(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # ------------------------------------------------------------ catalog CAS
-_CAS_CACHE_ROOT = "/tmp/spark_graft_castbl"
+@register_fixture("orders_catalog_cas")
+def _cas_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Two appends CAS a ``SqlCatalog`` pointer (``cat.db``); a stale
+    third commit must lose and roll back its staged manifest."""
+    import os
+
+    from ..catalog import SqlCatalog, TableIdentifier
+    from ..sources import load_table
+    from ..sources.snapshots import CatalogArbitratedTable, CommitConflictError
+
+    cat = SqlCatalog("arbiter", os.path.join(root, "cat.db"))
+    cat.create_namespace(("lake",))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl = CatalogArbitratedTable.create(
+        spark, cat, TableIdentifier.of("lake", "orders_cas"), os.path.join(root, "tbl")
+    )
+    s1 = tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1))
+    # a stale writer races off the old head: the CAS (parent check
+    # against the catalog pointer) must refuse and clean up
+    try:
+        tbl._commit(tbl._load_snap(s1)["files"], "append", s1)
+        raise RuntimeError("stale commit unexpectedly won the CAS")
+    except CommitConflictError:
+        pass
+    cat.close()
+
+
+def _read_catalog_table(spark: SparkSession, root: str, table: str) -> DataFrame:
+    """Aggregate the CAS-committed ``lake.<table>`` whose ``SqlCatalog``
+    lives in ``root``."""
+    import os
+
+    from ..catalog import SqlCatalog, TableIdentifier
+    from ..sources.snapshots import CatalogArbitratedTable
+
+    cat = SqlCatalog("arbiter", os.path.join(root, "cat.db"))
+    tbl = CatalogArbitratedTable(spark, cat, TableIdentifier.of("lake", table))
+    out = tbl.read().agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
+        dsum("o_totalprice").alias("total"),
+    )
+    cat.close()
+    return out
 
 
 @register_query(
@@ -962,63 +897,25 @@ def snapshot_catalog_cas_commit_orders(spark: SparkSession, sf_dir: str) -> Data
     catalogs). The fixture also replays a STALE-parent commit, which
     must raise ``CommitConflictError`` and roll back its staged
     manifest — so conflict cleanup sits under the oracle gate too."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F2
-
-    from ..catalog import SqlCatalog, TableIdentifier
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        CatalogArbitratedTable,
-        CommitConflictError,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(_CAS_CACHE_ROOT, key)
-    cat = SqlCatalog("arbiter", os.path.join(root, "cat.db"))
-    ident = TableIdentifier.of("lake", "orders_cas")
-
-    def _built(tbl) -> bool:
-        return tbl.current_snapshot_id() == 2 and tbl.history_ids() == [1, 2]
-
-    try:
-        tbl = CatalogArbitratedTable(spark, cat, ident)
-    except Exception:
-        tbl = None
-    if tbl is None or not _built(tbl):
-        import shutil
-
-        cat.close()
-        shutil.rmtree(root, ignore_errors=True)
-        cat = SqlCatalog("arbiter", os.path.join(root, "cat.db"))
-        cat.create_namespace(("lake",))
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl = CatalogArbitratedTable.create(
-            spark, cat, ident, os.path.join(root, "tbl")
-        )
-        s1 = tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 1))
-        # a stale writer races off the old head: the CAS (parent check
-        # against the catalog pointer) must refuse and clean up
-        try:
-            tbl._commit(tbl._load_snap(s1)["files"], "append", s1)
-            raise RuntimeError("stale commit unexpectedly won the CAS")
-        except CommitConflictError:
-            pass
-    out = tbl.read().agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
-        dsum("o_totalprice").alias("total"),
-    )
-    cat.close()
-    return out
+    return _read_catalog_table(spark, _cas_orders(spark, sf_dir), "orders_cas")
 
 
 # ------------------------------------------------------------ positional deletes
-_DV_CACHE_ROOT = "/tmp/spark_graft_dvtbl"
+@register_fixture("orders_positional_delete")
+def _pos_deleted_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, delete_where, delete_where_positional
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    delete_where_positional(tbl, "o_totalprice < 20000")
+    doomed = orders.filter(
+        (F.col("o_orderkey") % 2 == 0) & (F.col("o_orderkey") % 4 == 2)
+    ).select("o_orderkey")
+    delete_where(tbl, ["o_orderkey"], doomed)
 
 
 @register_query(
@@ -1042,7 +939,7 @@ _DV_CACHE_ROOT = "/tmp/spark_graft_dvtbl"
     ),
 )
 def snapshot_positional_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deletion-vector fixture (cached per sf_dir): append even orders,
+    """Deletion-vector fixture: append even orders,
     positionally delete the cheap rows (``o_totalprice < 20000`` — the
     vectors record exact (file, pos) coordinates, O(matched rows), no
     key columns needed), then stack an equality delete (keys with
@@ -1050,43 +947,9 @@ def snapshot_positional_delete_orders(spark: SparkSession, sf_dir: str) -> DataF
     vectors or every pos-deleted row silently resurrects. The result
     exposes the post-delete aggregate AND the pre-delete row count via
     time travel, both value-checked by the oracle's filter replay."""
-    import hashlib
-    import os
+    from ..sources.snapshots import read_with_deletes
 
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where,
-        delete_where_positional,
-        read_with_deletes,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_DV_CACHE_ROOT, key))
-
-    def _built() -> bool:
-        if tbl.current_snapshot_id() != 3:
-            return False
-        head = tbl._load_snap(3)
-        return bool(head.get("pos_deletes")) and bool(head.get("deletes"))
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        delete_where_positional(tbl, "o_totalprice < 20000")
-        doomed = (
-            orders.filter(
-                (F2.col("o_orderkey") % 2 == 0) & (F2.col("o_orderkey") % 4 == 2)
-            ).select("o_orderkey")
-        )
-        delete_where(tbl, ["o_orderkey"], doomed)
+    tbl = _table(spark, _pos_deleted_orders, sf_dir)
     post = read_with_deletes(tbl)
     pre_n = read_with_deletes(tbl, snapshot_id=1).count()
     return post.agg(
@@ -1097,7 +960,30 @@ def snapshot_positional_delete_orders(spark: SparkSession, sf_dir: str) -> DataF
 
 
 # ------------------------------------------------------------ MERGE clause surface
-_MERGE_CACHE_ROOT = "/tmp/spark_graft_mergetbl"
+@register_fixture("orders_merge_clauses")
+def _merge_clause_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import MergeClause, SnapshotTable, merge_into
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    src = orders.filter(
+        (F.col("o_orderkey") % 4 == 0)
+        | ((F.col("o_orderkey") % 2 == 1) & (F.col("o_orderkey") % 3 == 0))
+    )
+    merge_into(
+        tbl,
+        src,
+        ["o_orderkey"],
+        [
+            MergeClause("delete", "src_o_totalprice < 30000"),
+            MergeClause("update", None, {"o_totalprice": "src_o_totalprice + 1000"}),
+            MergeClause("insert"),
+        ],
+    )
 
 
 @register_query(
@@ -1135,54 +1021,35 @@ def snapshot_merge_matched_delete_orders(spark: SparkSession, sf_dir: str) -> Da
     """MERGE INTO with the full ordered clause list (the ANSI surface
     ``merge_upsert`` specializes): cheap matched rows are DELETED,
     remaining matched rows take an UPDATE expression over both sides,
-    unmatched source rows INSERT. Cached per sf_dir; the oracle
-    replays the clause semantics with plain joins."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import MergeClause, SnapshotTable, merge_into
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_MERGE_CACHE_ROOT, key))
-
-    def _built() -> bool:
-        return (
-            tbl.current_snapshot_id() == 2
-            and tbl._load_snap(2)["operation"] == "merge"
-        )
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        src = orders.filter(
-            (F2.col("o_orderkey") % 4 == 0)
-            | ((F2.col("o_orderkey") % 2 == 1) & (F2.col("o_orderkey") % 3 == 0))
-        )
-        merge_into(
-            tbl,
-            src,
-            ["o_orderkey"],
-            [
-                MergeClause("delete", "src_o_totalprice < 30000"),
-                MergeClause(
-                    "update", None, {"o_totalprice": "src_o_totalprice + 1000"}
-                ),
-                MergeClause("insert"),
-            ],
-        )
-    return tbl.read().agg(
+    unmatched source rows INSERT. The oracle replays the clause
+    semantics with plain joins."""
+    return _table(spark, _merge_clause_orders, sf_dir).read().agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
         dsum("o_totalprice").alias("total"),
     )
+
+
+@register_fixture("orders_merge_over_mor")
+def _merged_over_mor_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, delete_where, merge_upsert
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    evens = orders.filter(F.col("o_orderkey") % 2 == 0)
+    tbl.append(evens)
+    delete_where(
+        tbl,
+        ["o_orderkey"],
+        evens.filter(F.col("o_orderkey") % 10 == 0).select("o_orderkey"),
+    )
+    delta = evens.filter(
+        (F.col("o_orderkey") % 20 == 0) | (F.col("o_orderkey") % 10 == 4)
+    ).withColumn("o_totalprice", F.col("o_totalprice") + 5000)
+    merge_upsert(tbl, delta, ["o_orderkey"])
 
 
 @register_query(
@@ -1218,53 +1085,16 @@ def snapshot_merge_matched_delete_orders(spark: SparkSession, sf_dir: str) -> Da
     ),
 )
 def snapshot_merge_over_mor_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixture (cached per sf_dir): append even orders, equality-delete
+    """Fixture: append even orders, equality-delete
     keys with ``o_orderkey % 10 = 0``, then merge_upsert a delta that
     REVIVES the ``% 20 = 0`` half of the deleted keys and updates the
     live ``% 10 = 4`` keys (price + 5000) — all in ONE merge commit
     made directly over the pending delete state. The result also
     surfaces the count of delete keys the merge did NOT consume, read
     from the head manifest's surviving delete files."""
-    import hashlib
-    import os
+    from ..sources.snapshots import read_with_deletes
 
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where,
-        merge_upsert,
-        read_with_deletes,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_MERGE_CACHE_ROOT, key + "-mor"))
-
-    def _built() -> bool:
-        if tbl.current_snapshot_id() != 3:
-            return False
-        head = tbl._load_snap(3)
-        return head["operation"] == "merge" and bool(head.get("deletes"))
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        evens = orders.filter(F2.col("o_orderkey") % 2 == 0)
-        tbl.append(evens)
-        delete_where(
-            tbl,
-            ["o_orderkey"],
-            evens.filter(F2.col("o_orderkey") % 10 == 0).select("o_orderkey"),
-        )
-        delta = evens.filter(
-            (F2.col("o_orderkey") % 20 == 0) | (F2.col("o_orderkey") % 10 == 4)
-        ).withColumn("o_totalprice", F2.col("o_totalprice") + 5000)
-        merge_upsert(tbl, delta, ["o_orderkey"])
+    tbl = _table(spark, _merged_over_mor_orders, sf_dir)
     head = tbl._load_snap(tbl.current_snapshot_id())
     surviving = (
         tbl._read_files(head["deletes"]).distinct().count()
@@ -1276,6 +1106,25 @@ def snapshot_merge_over_mor_orders(spark: SparkSession, sf_dir: str) -> DataFram
         dsum("o_totalprice").alias("total"),
         F.lit(surviving).cast("bigint").alias("n_surviving_delete_keys"),
     )
+
+
+@register_fixture("orders_row_lineage")
+def _lineage_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, enable_row_lineage, merge_upsert
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    enable_row_lineage(tbl)
+    delta = orders.filter(
+        (F.col("o_orderkey") % 2 == 0) & (F.col("o_orderkey") % 10 == 2)
+    ).withColumn("o_totalprice", F.col("o_totalprice") + 1000).unionByName(
+        orders.filter((F.col("o_orderkey") % 2 == 1) & (F.col("o_orderkey") % 9 == 0))
+    )
+    merge_upsert(tbl, delta, ["o_orderkey"])
 
 
 @register_query(
@@ -1310,51 +1159,15 @@ def snapshot_merge_over_mor_orders(spark: SparkSession, sf_dir: str) -> DataFram
     ),
 )
 def snapshot_row_lineage_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixture (cached per sf_dir): append even orders, enable row
+    """Fixture: append even orders, enable row
     lineage (ids 0..N-1 assigned, metadata-only), then one merge_upsert
     that updates the ``% 10 = 2`` keys (price + 1000) and inserts the
     odd ``% 9 = 0`` orders. Ids are 0-based consecutive, so stability
     is fully arithmetic: kept ids are exactly those < N, new ids are
     exactly the insert count at >= N, and all ids stay distinct."""
-    import hashlib
-    import os
+    from ..sources.snapshots import read_with_lineage
 
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        enable_row_lineage,
-        merge_upsert,
-        read_with_lineage,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_MERGE_CACHE_ROOT, key + "-lineage"))
-
-    def _built() -> bool:
-        if tbl.current_snapshot_id() != 3:
-            return False
-        head = tbl._load_snap(3)
-        return head["operation"] == "merge" and bool(head.get("row_lineage"))
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        enable_row_lineage(tbl)
-        delta = orders.filter(
-            (F2.col("o_orderkey") % 2 == 0) & (F2.col("o_orderkey") % 10 == 2)
-        ).withColumn("o_totalprice", F2.col("o_totalprice") + 1000).unionByName(
-            orders.filter(
-                (F2.col("o_orderkey") % 2 == 1) & (F2.col("o_orderkey") % 9 == 0)
-            )
-        )
-        merge_upsert(tbl, delta, ["o_orderkey"])
+    tbl = _table(spark, _lineage_orders, sf_dir)
     n0 = tbl._load_snap(2)["next_row_id"]  # ids minted at enable time
     rows = read_with_lineage(tbl)
     return rows.agg(
@@ -1364,6 +1177,17 @@ def snapshot_row_lineage_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("_row_id") >= n0, 1)).cast("bigint").alias("n_new_ids"),
         dsum("o_totalprice").alias("total"),
     )
+
+
+@register_fixture("orders_metadata_count")
+def _pos_vector_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, delete_where_positional
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    delete_where_positional(tbl, "o_totalprice < 20000")
 
 
 @register_query(
@@ -1383,47 +1207,50 @@ def snapshot_row_lineage_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def snapshot_metadata_count_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixture (cached per sf_dir): append even orders, then a
+    """Fixture: append even orders, then a
     positional delete of the cheap rows. Both counts come from
     :func:`metadata_count` — manifest row counts minus the vector
     coordinate set, no scan — and are value-checked against DuckDB
     counting the real data."""
-    import hashlib
-    import os
+    from ..sources.snapshots import metadata_count
 
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where_positional,
-        metadata_count,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_MERGE_CACHE_ROOT, key + "-count"))
-
-    def _built() -> bool:
-        return (
-            tbl.current_snapshot_id() == 2
-            and bool(tbl._load_snap(2).get("pos_deletes"))
-        )
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        delete_where_positional(tbl, "o_totalprice < 20000")
+    tbl = _table(spark, _pos_vector_orders, sf_dir)
     n_pre = metadata_count(tbl, snapshot_id=1)
     n_after = metadata_count(tbl)  # head: vectors subtract exactly
     return spark.range(1).select(
         F.lit(n_pre).cast("bigint").alias("n_pre"),
         F.lit(n_after).cast("bigint").alias("n_after_vectors"),
     )
+
+
+@register_fixture("orders_catalog_wap")
+def _catalog_wap_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    import os
+
+    from ..catalog import SqlCatalog, TableIdentifier
+    from ..sources import load_table
+    from ..sources.snapshots import CatalogArbitratedTable
+
+    cat = SqlCatalog("arbiter", os.path.join(root, "cat.db"))
+    cat.create_namespace(("lake",))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl = CatalogArbitratedTable.create(
+        spark, cat, TableIdentifier.of("lake", "orders_wap"), os.path.join(root, "tbl")
+    )
+    s1 = tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    tbl.create_branch("audit")
+    s2 = tbl.append(
+        orders.filter((F.col("o_orderkey") % 2 == 1) & (F.col("o_orderkey") % 3 == 0)),
+        ref="audit",
+    )
+    if tbl.current_snapshot_id() != s1:
+        raise RuntimeError(f"audit commit reached main: head {tbl.current_snapshot_id()}")
+    published = tbl.fast_forward("main", "audit")
+    if published != s2:
+        raise RuntimeError(f"fast-forward published {published}, expected {s2}")
+    cat.close()
 
 
 @register_query(
@@ -1446,63 +1273,24 @@ def snapshot_catalog_wap_publish_orders(spark: SparkSession, sf_dir: str) -> Dat
     multiples of 3 stage on the ``audit`` branch's own catalog entry
     (commits CAS that entry, main never sees them), then main adopts
     the audited snapshots via a fast-forward routed through MAIN's
-    catalog CAS. Cached per sf_dir."""
-    import hashlib
-    import os
+    catalog CAS."""
+    return _read_catalog_table(spark, _catalog_wap_orders(spark, sf_dir), "orders_wap")
 
-    from pyspark.sql import functions as F2
 
-    from ..catalog import SqlCatalog, TableIdentifier
+@register_fixture("orders_sequence_revive")
+def _revived_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
     from ..sources import load_table
-    from ..sources.snapshots import CatalogArbitratedTable
+    from ..sources.snapshots import SnapshotTable, delete_where
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(_CAS_CACHE_ROOT, key + "-wap")
-    cat = SqlCatalog("arbiter", os.path.join(root, "cat.db"))
-    ident = TableIdentifier.of("lake", "orders_wap")
-
-    def _built(tbl) -> bool:
-        return (
-            tbl.current_snapshot_id() == 2
-            and tbl.head("audit") == 2
-            and tbl.history_ids() == [1, 2]
-        )
-
-    try:
-        tbl = CatalogArbitratedTable(spark, cat, ident)
-    except Exception:
-        tbl = None
-    if tbl is None or not _built(tbl):
-        import shutil
-
-        cat.close()
-        shutil.rmtree(root, ignore_errors=True)
-        cat = SqlCatalog("arbiter", os.path.join(root, "cat.db"))
-        cat.create_namespace(("lake",))
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl = CatalogArbitratedTable.create(
-            spark, cat, ident, os.path.join(root, "tbl")
-        )
-        s1 = tbl.append(orders.filter(F2.col("o_orderkey") % 2 == 0))
-        tbl.create_branch("audit")
-        s2 = tbl.append(
-            orders.filter(
-                (F2.col("o_orderkey") % 2 == 1) & (F2.col("o_orderkey") % 3 == 0)
-            ),
-            ref="audit",
-        )
-        assert tbl.current_snapshot_id() == s1  # staged, not published
-        published = tbl.fast_forward("main", "audit")
-        assert published == s2
-    out = tbl.read().agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
-        dsum("o_totalprice").alias("total"),
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    tbl.append(orders)
+    delete_where(
+        tbl,
+        ["o_orderkey"],
+        orders.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey"),
     )
-    cat.close()
-    return out
+    tbl.append(orders.filter(F.col("o_orderkey") % 14 == 0))
 
 
 @register_query(
@@ -1531,39 +1319,25 @@ def snapshot_sequence_revive_orders(spark: SparkSession, sf_dir: str) -> DataFra
     (seq 3). The delete file is sequenced BEFORE the third commit, so
     the re-appended rows revive while the rest of the deleted keys stay
     hidden — Iceberg's data-sequence rule (spec: 'equality delete files
-    applied to data files from strictly prior sequence numbers').
-    Cached per sf_dir; rebuilt when the cached chain is stale."""
-    import hashlib
-    import os
+    applied to data files from strictly prior sequence numbers')."""
+    from ..sources.snapshots import read_with_deletes
 
-    from pyspark.sql import functions as F2
-
-    from ..sources import load_table
-    from ..sources.snapshots import SnapshotTable, delete_where, read_with_deletes
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-seq"))
-    if tbl.current_snapshot_id() != 3:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        tbl.append(orders)
-        delete_where(
-            tbl,
-            ["o_orderkey"],
-            orders.filter(F2.col("o_orderkey") % 7 == 0).select("o_orderkey"),
-        )
-        tbl.append(orders.filter(F2.col("o_orderkey") % 14 == 0))
-    return read_with_deletes(tbl).agg(
+    return read_with_deletes(_table(spark, _revived_orders, sf_dir)).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.count(F.when(F.col("o_orderkey") % 14 == 0, 1))
         .cast("bigint")
         .alias("n_revived"),
         dsum("o_totalprice").alias("total"),
     )
+
+
+@register_fixture("lineitem_add_files")
+def _adopted_lineitem(spark: SparkSession, sf_dir: str, root: str) -> None:
+    import os
+
+    from ..sources.snapshots import SnapshotTable, add_files
+
+    add_files(SnapshotTable(spark, root), [os.path.join(sf_dir, "lineitem.parquet")])
 
 
 @register_query(
@@ -1584,25 +1358,31 @@ def snapshot_sequence_revive_orders(spark: SparkSession, sf_dir: str) -> DataFra
 def snapshot_add_files_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adopts ``lineitem.parquet`` in place via :func:`add_files` —
     the data-plane sibling of the reference's register-don't-move
-    model (CatalogMigrator.java:208-224 moves pointers, never data).
-    Cached per sf_dir; rebuilt when the cached state is stale."""
-    import hashlib
-    import os
-
-    from ..sources.snapshots import SnapshotTable, add_files
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-addf"))
-    if tbl.current_snapshot_id() != 1:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        add_files(tbl, [os.path.join(sf_dir, "lineitem.parquet")])
-    return tbl.read().agg(
+    model (CatalogMigrator.java:208-224 moves pointers, never data)."""
+    return _table(spark, _adopted_lineitem, sf_dir).read().agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.countDistinct("l_suppkey").cast("bigint").alias("n_supps"),
         dsum("l_extendedprice").alias("total"),
     )
+
+
+@register_fixture("orders_iceberg_export")
+def _exported_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable, record_file_stats
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    # repartition, NOT coalesce: the oracle pins n_files = 2 for the
+    # even commit, and coalesce(2) silently yields ONE file whenever
+    # the scan has a single split (tiny SFs / unchunked fixtures)
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0).repartition(2))
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1).coalesce(1))
+    record_file_stats(tbl, ["o_orderkey"])
+    export_iceberg_metadata(tbl, reuse=True)
 
 
 @register_query(
@@ -1637,32 +1417,12 @@ def snapshot_iceberg_export_orders(spark: SparkSession, sf_dir: str) -> DataFram
     file counts from the manifests, min/max keys from the field-id-
     keyed bounds (present only once stats are recorded — the NULL rows
     pin the honest absence)."""
-    import hashlib
     import json
-    import os
     import struct
 
-    from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata, read_avro
-    from ..sources.snapshots import SnapshotTable, record_file_stats
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icex"))
-    if tbl.current_snapshot_id() != 3:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        # repartition, NOT coalesce: the oracle pins n_files = 2 for the
-        # even commit, and coalesce(2) silently yields ONE file whenever
-        # the scan has a single split (tiny SFs / unchunked fixtures) —
-        # found as an inherited stale-fixture failure at sf0.001
-        tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0).repartition(2))
-        tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1).coalesce(1))
-        record_file_stats(tbl, ["o_orderkey"])
-    out = export_iceberg_metadata(tbl, reuse=True)
+    out = export_iceberg_metadata(_table(spark, _exported_orders, sf_dir), reuse=True)
     meta = json.load(open(out["metadata_location"]))
     key_fid = next(
         f["id"]
@@ -1701,6 +1461,30 @@ def snapshot_iceberg_export_orders(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+@register_fixture("orders_range_split")
+def _range_split_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Orders below the key midpoint as two range-disjoint files, the
+    rest as one, with file stats; exported with null- and zstd-coded
+    manifests."""
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable, record_file_stats
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    mn, mx = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
+    mid = (int(mn) + int(mx)) // 2
+    tbl.append(
+        orders.filter(F.col("o_orderkey") < mid).repartitionByRange(2, "o_orderkey")
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") >= mid).coalesce(1))
+    record_file_stats(tbl, ["o_orderkey"])
+    export_iceberg_metadata(tbl, reuse=True)
+    export_iceberg_metadata(tbl, reuse=True, compression="zstd")
+
+
 @register_query(
     "snapshot_iceberg_import_orders",
     oracle=f"""
@@ -1734,32 +1518,15 @@ def snapshot_iceberg_import_orders(spark: SparkSession, sf_dir: str) -> DataFram
     becomes an operable Spark scan. The pruned read plans from manifest
     bounds alone — the assert pins that the plan kept exactly one of
     the three range-disjoint files without opening any parquet footer."""
-    import hashlib
-    import os
-
     from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import SnapshotError, SnapshotTable, record_file_stats
+    from ..sources.snapshots import SnapshotError
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icim2"))
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
+    tbl = _table(spark, _range_split_orders, sf_dir)
+    orders = load_table(spark, sf_dir, "orders")
     mn, mx = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     mid = (int(mn) + int(mx)) // 2
-    if tbl.current_snapshot_id() != 3:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        tbl.append(
-            orders.filter(F.col("o_orderkey") < mid).repartitionByRange(
-                2, "o_orderkey"
-            )
-        )
-        tbl.append(orders.filter(F.col("o_orderkey") >= mid).coalesce(1))
-        record_file_stats(tbl, ["o_orderkey"])
     out = export_iceberg_metadata(tbl, reuse=True)
     it = IcebergTable(spark, out["metadata_location"])
     head = it.read()
@@ -1955,32 +1722,10 @@ def snapshot_iceberg_zstd_export_orders(
     emits the most common modern manifest codec, and the engine's own
     RFC 8878 decoder — independently pinned against libzstd — reads
     it back through the standard import plane."""
-    import hashlib
-    import os
-
-    from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import SnapshotTable, record_file_stats
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icim2"))
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    if tbl.current_snapshot_id() != 3:
-        import shutil
-
-        mn, mx = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-        mid = (int(mn) + int(mx)) // 2
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        tbl.append(
-            orders.filter(F.col("o_orderkey") < mid).repartitionByRange(
-                2, "o_orderkey"
-            )
-        )
-        tbl.append(orders.filter(F.col("o_orderkey") >= mid).coalesce(1))
-        record_file_stats(tbl, ["o_orderkey"])
+    tbl = _table(spark, _range_split_orders, sf_dir)
     out = export_iceberg_metadata(tbl, reuse=True, compression="zstd")
     avros = [f for f in out["files"] if f.endswith(".avro")]
     if not avros:
@@ -1998,6 +1743,28 @@ def snapshot_iceberg_zstd_export_orders(
         F.count("*").cast("bigint").alias("n_rows_snap1")
     )
     return head.crossJoin(F.broadcast(snap1))
+
+
+@register_fixture("orders_iceberg_mor")
+def _mor_exported_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Both delete flavors pending (positional %10==3, equality %10==6)
+    and exported."""
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable, delete_where, delete_where_positional
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.repartition(3))
+    delete_where_positional(tbl, "o_orderkey % 10 = 3")
+    delete_where(
+        tbl,
+        ["o_orderkey"],
+        orders.filter(F.col("o_orderkey") % 10 == 6).select("o_orderkey"),
+    )
+    export_iceberg_metadata(tbl, reuse=True)
 
 
 @register_query(
@@ -2027,35 +1794,10 @@ def snapshot_iceberg_mor_roundtrip_orders(
     snapshot-1 time travel still seeing the pre-delete rows. The
     reference's pointer (CatalogMigrator.java:212-213) stays fully
     operable under pending deletes instead of refusing."""
-    import hashlib
-    import os
-
-    from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where,
-        delete_where_positional,
-    )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icmor"))
-    if tbl.current_snapshot_id() != 3:
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl.append(orders.repartition(3))
-        delete_where_positional(tbl, "o_orderkey % 10 = 3")
-        delete_where(
-            tbl,
-            ["o_orderkey"],
-            orders.filter(F.col("o_orderkey") % 10 == 6).select("o_orderkey"),
-        )
-    out = export_iceberg_metadata(tbl, reuse=True)
+    out = export_iceberg_metadata(_table(spark, _mor_exported_orders, sf_dir), reuse=True)
     it = IcebergTable(spark, out["metadata_location"])
     return (
         it.read()
@@ -2071,6 +1813,26 @@ def snapshot_iceberg_mor_roundtrip_orders(
             )
         )
     )
+
+
+@register_fixture("orders_iceberg_adopt")
+def _adopted_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """``src`` exported to Iceberg metadata, adopted into ``dst``."""
+    import os
+
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.iceberg_read import adopt_iceberg_table
+    from ..sources.snapshots import SnapshotTable, record_file_stats
+
+    src = SnapshotTable(spark, os.path.join(root, "src"))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    src.append(orders.repartition(2))
+    record_file_stats(src, ["o_orderkey"])
+    mpath = export_iceberg_metadata(src, reuse=True)["metadata_location"]
+    adopt_iceberg_table(spark, mpath, os.path.join(root, "dst"))
 
 
 @register_query(
@@ -2094,36 +1856,33 @@ def snapshot_iceberg_adopt_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     a fresh engine table (add_files hard links, stats re-recorded),
     and aggregate the adopted table. Zero bytes of data copied or
     rewritten end to end."""
-    import hashlib
-    import os
-
-    from ..sources import load_table
-    from ..sources.iceberg_format import export_iceberg_metadata
-    from ..sources.iceberg_read import adopt_iceberg_table
-    from ..sources.snapshots import SnapshotTable, record_file_stats
-
-    import shutil
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icsrc"))
-    if src.current_snapshot_id() != 2:
-        shutil.rmtree(src.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        src.append(orders.repartition(2))
-        record_file_stats(src, ["o_orderkey"])
-    mpath = export_iceberg_metadata(src, reuse=True)["metadata_location"]
-    dest = os.path.join(_SNAP_CACHE_ROOT, key + "-icdst")
-    adopted = SnapshotTable(spark, dest)
-    if adopted.current_snapshot_id() != 2:  # add_files + stats commits
-        shutil.rmtree(dest, ignore_errors=True)
-        adopted = adopt_iceberg_table(spark, mpath, dest)
-    return adopted.read().agg(
+    return _table(spark, _adopted_orders, sf_dir, "dst").read().agg(
         F.count("*").cast("bigint").alias("n_rows"),
         dsum("o_totalprice").alias("total"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
     )
+
+
+@register_fixture("orders_iceberg_publish")
+def _published_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Two commits, two publication triggers plus one no-op trigger in
+    between: the published pointer lands on v2 at head 2."""
+    import os
+
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable
+    from ..streaming.jobs import publish_iceberg_metadata_stream
+
+    tbl = SnapshotTable(spark, os.path.join(root, "tbl"))
+    ckpt = os.path.join(root, "ckpt")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+    publish_iceberg_metadata_stream(spark, tbl.path, ckpt).awaitTermination(300)
+    publish_iceberg_metadata_stream(spark, tbl.path, ckpt).awaitTermination(300)  # no-op
+    tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1))
+    publish_iceberg_metadata_stream(spark, tbl.path, ckpt).awaitTermination(300)
 
 
 @register_query(
@@ -2143,37 +1902,15 @@ def snapshot_iceberg_adopt_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     ),
 )
 def snapshot_iceberg_publish_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two commits, two publication triggers (plus one no-op trigger in
-    between): the published pointer lands on v2 at head 2, and reading
-    THROUGH the published metadata reproduces the base table."""
-    import hashlib
+    """Reading THROUGH the stream-published metadata of the
+    two-commit fixture (pointer at v2, head 2) reproduces the base
+    table."""
     import os
-    import shutil
 
-    from ..sources import load_table
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import SnapshotTable
-    from ..streaming.jobs import publish_iceberg_metadata_stream
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icpub"))
-    ckpt = tbl.path + "-ckpt"
-    out_dir = os.path.join(tbl.path, "metadata", "iceberg")
-    if tbl.current_snapshot_id() != 2:
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl.append(orders.filter(F.col("o_orderkey") % 2 == 0))
-        q = publish_iceberg_metadata_stream(spark, tbl.path, ckpt)
-        q.awaitTermination(300)
-        q = publish_iceberg_metadata_stream(spark, tbl.path, ckpt)  # no-op
-        q.awaitTermination(300)
-        tbl.append(orders.filter(F.col("o_orderkey") % 2 == 1))
-    q = publish_iceberg_metadata_stream(spark, tbl.path, ckpt)
-    q.awaitTermination(300)
-    it = IcebergTable(spark, out_dir)
+    tbl = _table(spark, _published_orders, sf_dir, "tbl")
+    it = IcebergTable(spark, os.path.join(tbl.path, "metadata", "iceberg"))
     version = int(
         os.path.basename(it.metadata_location).split(".")[0][1:]
     )
@@ -2182,6 +1919,32 @@ def snapshot_iceberg_publish_orders(spark: SparkSession, sf_dir: str) -> DataFra
         dsum("o_totalprice").alias("total"),
         F.lit(version).cast("int").alias("published_version"),
     )
+
+
+@register_fixture("orders_iceberg_adopt_mor")
+def _adopted_mor_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """``src`` with both delete flavors pending, exported, adopted into
+    ``dst``."""
+    import os
+
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.iceberg_read import adopt_iceberg_table
+    from ..sources.snapshots import SnapshotTable, delete_where, delete_where_positional
+
+    src = SnapshotTable(spark, os.path.join(root, "src"))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    src.append(orders.repartition(2))
+    delete_where_positional(src, "o_orderkey % 10 = 3")
+    delete_where(
+        src,
+        ["o_orderkey"],
+        orders.filter(F.col("o_orderkey") % 10 == 6).select("o_orderkey"),
+    )
+    mpath = export_iceberg_metadata(src, reuse=True)["metadata_location"]
+    adopt_iceberg_table(spark, mpath, os.path.join(root, "dst"))
 
 
 @register_query(
@@ -2208,49 +1971,207 @@ def snapshot_iceberg_adopt_mor_orders(
     real tables carry between compactions) and aggregate the adopted
     table's visible rows. Round 10 refused this shape; the conversion
     is file-level like the data files themselves."""
-    import hashlib
-    import os
-    import shutil
+    from ..sources.snapshots import read_with_deletes
 
-    from ..sources import load_table
-    from ..sources.iceberg_format import export_iceberg_metadata
-    from ..sources.iceberg_read import adopt_iceberg_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where,
-        delete_where_positional,
-        read_with_deletes,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = SnapshotTable(
-        spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icmorsrc")
-    )
-    if src.current_snapshot_id() != 3:
-        shutil.rmtree(src.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        src.append(orders.repartition(2))
-        delete_where_positional(src, "o_orderkey % 10 = 3")
-        delete_where(
-            src,
-            ["o_orderkey"],
-            orders.filter(F.col("o_orderkey") % 10 == 6).select(
-                "o_orderkey"
-            ),
-        )
-    mpath = export_iceberg_metadata(src, reuse=True)["metadata_location"]
-    dest = os.path.join(_SNAP_CACHE_ROOT, key + "-icmordst")
-    adopted = SnapshotTable(spark, dest)
-    if adopted.current_snapshot_id() != 2:  # adopt commit + stats
-        shutil.rmtree(dest, ignore_errors=True)
-        adopted = adopt_iceberg_table(spark, mpath, dest)
+    adopted = _table(spark, _adopted_mor_orders, sf_dir, "dst")
     return read_with_deletes(adopted).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         dsum("o_totalprice").alias("total"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
     )
+
+
+@register_fixture("orders_iceberg_v1")
+def _v1_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """A hand-shaped format-version 1 tree over projected orders."""
+    import json
+    import os
+    import struct
+
+    import pyarrow.parquet as _pq
+
+    from ..sources.iceberg_format import write_avro
+
+    src_pq = os.path.join(sf_dir, "orders.parquet")
+    mpath = os.path.join(root, "metadata", "v1.metadata.json")
+    os.makedirs(os.path.join(root, "data"), exist_ok=True)
+    os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
+    cols = ["o_orderkey", "o_custkey", "o_totalprice"]
+    tbl = _pq.read_table(src_pq, columns=cols)
+    data = os.path.join(root, "data", "orders-projected.parquet")
+    _pq.write_table(tbl, data)
+    import pyarrow.compute as _pc
+
+    mm = _pc.min_max(tbl.column("o_orderkey")).as_py()
+    lo, hi = mm["min"], mm["max"]
+    entry_schema = {
+        "type": "record",
+        "name": "manifest_entry",
+        "fields": [
+            {"name": "status", "type": "int", "field-id": 0},
+            {
+                "name": "snapshot_id",
+                "type": ["null", "long"],
+                "field-id": 1,
+            },
+            {
+                "name": "data_file",
+                "type": {
+                    "type": "record",
+                    "name": "r2",
+                    "fields": [
+                        {
+                            "name": "file_path",
+                            "type": "string",
+                            "field-id": 100,
+                        },
+                        {
+                            "name": "file_format",
+                            "type": "string",
+                            "field-id": 101,
+                        },
+                        {
+                            "name": "partition",
+                            "type": {
+                                "type": "record",
+                                "name": "r102",
+                                "fields": [],
+                            },
+                            "field-id": 102,
+                        },
+                        {
+                            "name": "record_count",
+                            "type": "long",
+                            "field-id": 103,
+                        },
+                        {
+                            "name": "file_size_in_bytes",
+                            "type": "long",
+                            "field-id": 104,
+                        },
+                        {
+                            "name": "lower_bounds",
+                            "type": [
+                                "null",
+                                {
+                                    "type": "array",
+                                    "items": {
+                                        "type": "record",
+                                        "name": "k126_v127",
+                                        "fields": [
+                                            {
+                                                "name": "key",
+                                                "type": "int",
+                                                "field-id": 126,
+                                            },
+                                            {
+                                                "name": "value",
+                                                "type": "bytes",
+                                                "field-id": 127,
+                                            },
+                                        ],
+                                    },
+                                    "logicalType": "map",
+                                },
+                            ],
+                            "field-id": 125,
+                        },
+                        {
+                            "name": "upper_bounds",
+                            "type": [
+                                "null",
+                                {
+                                    "type": "array",
+                                    "items": {
+                                        "type": "record",
+                                        "name": "k129_v130",
+                                        "fields": [
+                                            {
+                                                "name": "key",
+                                                "type": "int",
+                                                "field-id": 129,
+                                            },
+                                            {
+                                                "name": "value",
+                                                "type": "bytes",
+                                                "field-id": 130,
+                                            },
+                                        ],
+                                    },
+                                    "logicalType": "map",
+                                },
+                            ],
+                            "field-id": 128,
+                        },
+                    ],
+                },
+                "field-id": 2,
+            },
+        ],
+    }
+    mp = os.path.join(root, "metadata", "m0.avro")
+    write_avro(
+        mp,
+        entry_schema,
+        [
+            {
+                "status": 1,
+                "snapshot_id": 1,
+                "data_file": {
+                    "file_path": data,
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": tbl.num_rows,
+                    "file_size_in_bytes": os.path.getsize(data),
+                    "lower_bounds": [
+                        {"key": 1, "value": struct.pack("<q", lo)}
+                    ],
+                    "upper_bounds": [
+                        {"key": 1, "value": struct.pack("<q", hi)}
+                    ],
+                },
+            }
+        ],
+    )
+    meta = {
+        "format-version": 1,
+        "table-uuid": "00000000-0000-0000-0000-000000000101",
+        "location": root,
+        "last-updated-ms": 1,
+        "last-column-id": 3,
+        "schema": {
+            "type": "struct",
+            "fields": [
+                {
+                    "id": 1,
+                    "name": "o_orderkey",
+                    "required": False,
+                    "type": "long",
+                },
+                {
+                    "id": 2,
+                    "name": "o_custkey",
+                    "required": False,
+                    "type": "long",
+                },
+                {
+                    "id": 3,
+                    "name": "o_totalprice",
+                    "required": False,
+                    "type": "double",
+                },
+            ],
+        },
+        "partition-spec": [],
+        "properties": {},
+        "current-snapshot-id": 1,
+        "snapshots": [
+            {"snapshot-id": 1, "timestamp-ms": 1, "manifests": [mp]}
+        ],
+        "snapshot-log": [{"snapshot-id": 1, "timestamp-ms": 1}],
+    }
+    with open(mpath, "w") as fh:
+        json.dump(meta, fh)
 
 
 @register_query(
@@ -2275,213 +2196,34 @@ def snapshot_iceberg_v1_import_orders(
     format real lakes still carry) over a projected orders parquet:
     the reader treats v1's absent sequence numbers as the legacy 0
     default and serves the same plan surface as v2."""
-    import hashlib
-    import json
     import os
-    import struct
-
-    import pyarrow.parquet as _pq
 
     from ..sources.iceberg_read import IcebergTable
 
-    src_pq = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src_pq)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(_SNAP_CACHE_ROOT, key + "-icv1")
-    mpath = os.path.join(root, "metadata", "v1.metadata.json")
-    if not os.path.exists(mpath):
-        from ..sources.iceberg_format import write_avro
-
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
-        cols = ["o_orderkey", "o_custkey", "o_totalprice"]
-        tbl = _pq.read_table(src_pq, columns=cols)
-        data = os.path.join(root, "data", "orders-projected.parquet")
-        _pq.write_table(tbl, data)
-        import pyarrow.compute as _pc
-
-        mm = _pc.min_max(tbl.column("o_orderkey")).as_py()
-        lo, hi = mm["min"], mm["max"]
-        entry_schema = {
-            "type": "record",
-            "name": "manifest_entry",
-            "fields": [
-                {"name": "status", "type": "int", "field-id": 0},
-                {
-                    "name": "snapshot_id",
-                    "type": ["null", "long"],
-                    "field-id": 1,
-                },
-                {
-                    "name": "data_file",
-                    "type": {
-                        "type": "record",
-                        "name": "r2",
-                        "fields": [
-                            {
-                                "name": "file_path",
-                                "type": "string",
-                                "field-id": 100,
-                            },
-                            {
-                                "name": "file_format",
-                                "type": "string",
-                                "field-id": 101,
-                            },
-                            {
-                                "name": "partition",
-                                "type": {
-                                    "type": "record",
-                                    "name": "r102",
-                                    "fields": [],
-                                },
-                                "field-id": 102,
-                            },
-                            {
-                                "name": "record_count",
-                                "type": "long",
-                                "field-id": 103,
-                            },
-                            {
-                                "name": "file_size_in_bytes",
-                                "type": "long",
-                                "field-id": 104,
-                            },
-                            {
-                                "name": "lower_bounds",
-                                "type": [
-                                    "null",
-                                    {
-                                        "type": "array",
-                                        "items": {
-                                            "type": "record",
-                                            "name": "k126_v127",
-                                            "fields": [
-                                                {
-                                                    "name": "key",
-                                                    "type": "int",
-                                                    "field-id": 126,
-                                                },
-                                                {
-                                                    "name": "value",
-                                                    "type": "bytes",
-                                                    "field-id": 127,
-                                                },
-                                            ],
-                                        },
-                                        "logicalType": "map",
-                                    },
-                                ],
-                                "field-id": 125,
-                            },
-                            {
-                                "name": "upper_bounds",
-                                "type": [
-                                    "null",
-                                    {
-                                        "type": "array",
-                                        "items": {
-                                            "type": "record",
-                                            "name": "k129_v130",
-                                            "fields": [
-                                                {
-                                                    "name": "key",
-                                                    "type": "int",
-                                                    "field-id": 129,
-                                                },
-                                                {
-                                                    "name": "value",
-                                                    "type": "bytes",
-                                                    "field-id": 130,
-                                                },
-                                            ],
-                                        },
-                                        "logicalType": "map",
-                                    },
-                                ],
-                                "field-id": 128,
-                            },
-                        ],
-                    },
-                    "field-id": 2,
-                },
-            ],
-        }
-        mp = os.path.join(root, "metadata", "m0.avro")
-        write_avro(
-            mp,
-            entry_schema,
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": 1,
-                    "data_file": {
-                        "file_path": data,
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": tbl.num_rows,
-                        "file_size_in_bytes": os.path.getsize(data),
-                        "lower_bounds": [
-                            {"key": 1, "value": struct.pack("<q", lo)}
-                        ],
-                        "upper_bounds": [
-                            {"key": 1, "value": struct.pack("<q", hi)}
-                        ],
-                    },
-                }
-            ],
-        )
-        meta = {
-            "format-version": 1,
-            "table-uuid": "00000000-0000-0000-0000-000000000101",
-            "location": root,
-            "last-updated-ms": 1,
-            "last-column-id": 3,
-            "schema": {
-                "type": "struct",
-                "fields": [
-                    {
-                        "id": 1,
-                        "name": "o_orderkey",
-                        "required": False,
-                        "type": "long",
-                    },
-                    {
-                        "id": 2,
-                        "name": "o_custkey",
-                        "required": False,
-                        "type": "long",
-                    },
-                    {
-                        "id": 3,
-                        "name": "o_totalprice",
-                        "required": False,
-                        "type": "double",
-                    },
-                ],
-            },
-            "partition-spec": [],
-            "properties": {},
-            "current-snapshot-id": 1,
-            "snapshots": [
-                {"snapshot-id": 1, "timestamp-ms": 1, "manifests": [mp]}
-            ],
-            "snapshot-log": [{"snapshot-id": 1, "timestamp-ms": 1}],
-        }
-        tmp = mpath + f".tmp.{os.getpid()}"
-        # explicit close before the rename: relying on refcount
-        # finalization to flush would rename a truncated file on
-        # non-CPython runtimes
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, mpath)
+    mpath = os.path.join(_v1_orders(spark, sf_dir), "metadata", "v1.metadata.json")
     return IcebergTable(spark, mpath).read().agg(
         F.count("*").cast("bigint").alias("n_rows"),
         dsum("o_totalprice").alias("total"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
     )
+
+
+@register_fixture("orders_iceberg_v3_dv")
+def _dv_exported_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Append + row lineage + positional delete, exported (v3: the
+    table tracks lineage)."""
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable, delete_where_positional, enable_row_lineage
+
+    src = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    src.append(orders.repartition(2))
+    enable_row_lineage(src)
+    delete_where_positional(src, "o_orderkey % 10 = 4")
+    export_iceberg_metadata(src, reuse=True)
 
 
 @register_query(
@@ -2510,39 +2252,34 @@ def snapshot_iceberg_v3_dv_orders(
     sources/puffin.py for the public formats), and the exported
     pointer reads back through IcebergTable with the bitmaps applied
     distributed-side."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where_positional,
-        enable_row_lineage,
-    )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = SnapshotTable(
-        spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icdvsrc")
-    )
-    if src.current_snapshot_id() != 3:  # append + lineage + pos-delete
-        shutil.rmtree(src.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
+    src = _table(spark, _dv_exported_orders, sf_dir)
+    it = IcebergTable(spark, export_iceberg_metadata(src, reuse=True)["metadata_location"])
+    if it.format_version != 3 or not it.deletion_vectors(it.snapshot()):
+        raise RuntimeError(
+            f"expected a v3 export carrying deletion vectors, got "
+            f"format-version {it.format_version}"
         )
-        src.append(orders.repartition(2))
-        enable_row_lineage(src)
-        delete_where_positional(src, "o_orderkey % 10 = 4")
-    mpath = export_iceberg_metadata(src, reuse=True)["metadata_location"]
-    it = IcebergTable(spark, mpath)
-    assert it.format_version == 3 and it.deletion_vectors(it.snapshot())
     return it.read().agg(
         F.count("*").cast("bigint").alias("n_rows"),
         dsum("o_totalprice").alias("total"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
     )
+
+
+@register_fixture("orders_iceberg_stats_ndv")
+def _ndv_exported_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable, record_table_statistics
+
+    src = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    src.append(orders.repartition(4))
+    record_table_statistics(src, ["o_custkey"])
+    export_iceberg_metadata(src, reuse=True)
 
 
 @register_query(
@@ -2569,29 +2306,11 @@ def snapshot_iceberg_stats_ndv_orders(
     IcebergTable.ndv_estimates): at 100 TB a COUNT(DISTINCT) is a
     full shuffle; the recorded sketch answers from kilobytes of
     metadata, within theta's ~1.6% rse at k=4096."""
-    import hashlib
-    import os
-    import shutil
-
     from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import (
-        SnapshotTable,
-        record_table_statistics,
-    )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = SnapshotTable(
-        spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icndvsrc")
-    )
-    if src.current_snapshot_id() != 2:  # append + set-statistics
-        shutil.rmtree(src.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        src.append(orders.repartition(4))
-        record_table_statistics(src, ["o_custkey"])
+    src = _table(spark, _ndv_exported_orders, sf_dir)
     mpath = export_iceberg_metadata(src, reuse=True)["metadata_location"]
     ndv = IcebergTable(spark, mpath).ndv_estimates()["o_custkey"]
     orders = load_table(spark, sf_dir, "orders")
@@ -2604,6 +2323,18 @@ def snapshot_iceberg_stats_ndv_orders(
             <= 0.05 * F.col("exact_ndv")
         ).alias("ndv_within_5pct"),
     )
+
+
+@register_fixture("orders_iceberg_partition_stats")
+def _priority_partitioned_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable, append_partitioned
+
+    src = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    append_partitioned(src, orders, [("o_orderpriority", "identity")])
+    export_iceberg_metadata(src, reuse=True)
 
 
 @register_query(
@@ -2628,25 +2359,10 @@ def snapshot_iceberg_partition_stats_orders(
     """Hidden-partitioned orders exported with partition statistics:
     at 100 TB 'how big is each partition' should never be a scan —
     the stats file answers per partition from kilobytes."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources import load_table
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import SnapshotTable, append_partitioned
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = SnapshotTable(
-        spark, os.path.join(_SNAP_CACHE_ROOT, key + "-icpstat")
-    )
-    if src.current_snapshot_id() != 1:
-        shutil.rmtree(src.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        )
-        append_partitioned(src, orders, [("o_orderpriority", "identity")])
+    src = _table(spark, _priority_partitioned_orders, sf_dir)
     mpath = export_iceberg_metadata(src, reuse=True)["metadata_location"]
     ps = IcebergTable(spark, mpath).partition_stats()
     return ps.select(
@@ -2655,7 +2371,21 @@ def snapshot_iceberg_partition_stats_orders(
     )
 
 
-_MAINT_CACHE_ROOT = "/tmp/spark_graft_mainttbl"
+@register_fixture("orders_maintained")
+def _maintained_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, delete_where, run_maintenance
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    for i in range(4):  # four deliberately small files
+        tbl.append(orders.filter(F.col("o_orderkey") % 4 == i).repartition(1))
+    delete_where(
+        tbl,
+        ["o_orderkey"],
+        orders.filter(F.col("o_orderkey") % 97 == 0).select("o_orderkey"),
+    )
+    run_maintenance(tbl)
 
 
 @register_query(
@@ -2682,48 +2412,10 @@ def snapshot_run_maintenance_orders(spark: SparkSession, sf_dir: str) -> DataFra
     order key MOR-deleted, then :func:`run_maintenance` applies the
     advisor's plan. The result pins BOTH the data (visible rows equal
     the oracle's filter) and the closed loop (zero pending delete
-    files, zero remaining recommendations) — cache validity is the
-    clean end state itself, so a stale/dirty cache re-runs."""
-    import hashlib
-    import os
+    files, zero remaining recommendations)."""
+    from ..sources.snapshots import plan_maintenance
 
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where,
-        plan_maintenance,
-        run_maintenance,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_MAINT_CACHE_ROOT, key))
-
-    def _built() -> bool:
-        sid = tbl.current_snapshot_id()
-        if sid is None:
-            return False
-        snap = tbl._load_snap(sid)
-        return snap["operation"] == "rewrite-small-files" and not snap.get(
-            "deletes"
-        )
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        for i in range(4):  # four deliberately small files
-            tbl.append(
-                orders.filter(F.col("o_orderkey") % 4 == i).repartition(1)
-            )
-        delete_where(
-            tbl,
-            ["o_orderkey"],
-            orders.filter(F.col("o_orderkey") % 97 == 0).select("o_orderkey"),
-        )
-        run_maintenance(tbl)
+    tbl = _table(spark, _maintained_orders, sf_dir)
     snap = tbl._load_snap(tbl.current_snapshot_id())
     after = plan_maintenance(tbl)
     return tbl.read().agg(
@@ -2738,7 +2430,22 @@ def snapshot_run_maintenance_orders(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_V3_CACHE_ROOT = "/tmp/spark_graft_v3tbl"
+@register_fixture("orders_v3_lineage")
+def _v3_lineage_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    from ..sources import load_table
+    from ..sources.iceberg_format import export_iceberg_metadata
+    from ..sources.snapshots import SnapshotTable, delete_where, enable_row_lineage
+
+    tbl = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    tbl.append(orders.coalesce(1).sortWithinPartitions("o_orderkey"))
+    enable_row_lineage(tbl)
+    delete_where(
+        tbl,
+        ["o_orderkey"],
+        orders.filter(F.col("o_orderkey") % 97 == 0).select("o_orderkey"),
+    )
+    export_iceberg_metadata(tbl, reuse=True)  # auto v3: lineage
 
 
 @register_query(
@@ -2768,48 +2475,11 @@ def snapshot_iceberg_v3_lineage_orders(spark: SparkSession, sf_dir: str) -> Data
     """Fixture: ONE sorted file so row ids are the sort ranks, lineage
     enabled, an equality delete pending at export time (the v3 tree
     carries the delete manifest; the import applies it sequence-
-    scoped). Cache validity = lineage head with the delete pending."""
-    import hashlib
-    import os
-
+    scoped)."""
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
-    from ..sources.snapshots import (
-        SnapshotTable,
-        delete_where,
-        enable_row_lineage,
-    )
-    from ..sources import load_table
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    tbl = SnapshotTable(spark, os.path.join(_V3_CACHE_ROOT, key))
-
-    def _built() -> bool:
-        sid = tbl.current_snapshot_id()
-        if sid is None:
-            return False
-        snap = tbl._load_snap(sid)
-        return (
-            snap["operation"] == "delete"
-            and bool(snap.get("row_lineage"))
-            and bool(snap.get("deletes"))
-        )
-
-    if not _built():
-        import shutil
-
-        shutil.rmtree(tbl.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        tbl.append(orders.coalesce(1).sortWithinPartitions("o_orderkey"))
-        enable_row_lineage(tbl)
-        delete_where(
-            tbl,
-            ["o_orderkey"],
-            orders.filter(F.col("o_orderkey") % 97 == 0).select("o_orderkey"),
-        )
-    out = export_iceberg_metadata(tbl, reuse=True)  # auto v3: lineage
+    out = export_iceberg_metadata(_table(spark, _v3_lineage_orders, sf_dir), reuse=True)
     it = IcebergTable(spark, out["metadata_location"])
     df = it.read(with_row_ids=True)
     return df.agg(
@@ -2817,6 +2487,178 @@ def snapshot_iceberg_v3_lineage_orders(spark: SparkSession, sf_dir: str) -> Data
         F.sum("_row_id").cast("bigint").alias("sum_row_id"),
         dsum("o_totalprice").alias("total"),
     )
+
+
+@register_fixture("orders_iceberg_v3_default")
+def _v3_default_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """A hand-shaped v3 tree: even keys predate column ``flag``
+    (initial-default 7), odd keys carry ``flag = o_orderkey % 3``."""
+    import json
+    import os
+
+    import pyarrow as _pa
+    import pyarrow.compute as _pc
+    import pyarrow.parquet as _pq
+
+    from ..sources.iceberg_format import write_avro
+
+    src_pq = os.path.join(sf_dir, "orders.parquet")
+    mpath = os.path.join(root, "metadata", "v1.metadata.json")
+    os.makedirs(os.path.join(root, "data"), exist_ok=True)
+    os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
+    tbl = _pq.read_table(
+        src_pq, columns=["o_orderkey", "o_totalprice"]
+    )
+    keys = tbl.column("o_orderkey")
+    even = tbl.filter(
+        _pc.equal(_pc.bit_wise_and(keys, _pa.scalar(1)), 0)
+    )
+    odd = tbl.filter(
+        _pc.equal(_pc.bit_wise_and(keys, _pa.scalar(1)), 1)
+    )
+    odd = odd.append_column(
+        "flag",
+        _pc.cast(
+            _pc.subtract(
+                odd.column("o_orderkey"),
+                _pc.multiply(
+                    _pc.divide(odd.column("o_orderkey"), _pa.scalar(3)),
+                    _pa.scalar(3),
+                ),
+            ),
+            _pa.int64(),
+        ),
+    )
+    fa = os.path.join(root, "data", "pre-addition.parquet")
+    fb = os.path.join(root, "data", "post-addition.parquet")
+    _pq.write_table(even, fa)
+    _pq.write_table(odd, fb)
+    entry_schema = {
+        "type": "record",
+        "name": "manifest_entry",
+        "fields": [
+            {"name": "status", "type": "int", "field-id": 0},
+            {
+                "name": "snapshot_id",
+                "type": ["null", "long"],
+                "field-id": 1,
+            },
+            {
+                "name": "data_file",
+                "type": {
+                    "type": "record",
+                    "name": "r2",
+                    "fields": [
+                        {
+                            "name": "content",
+                            "type": "int",
+                            "field-id": 134,
+                        },
+                        {
+                            "name": "file_path",
+                            "type": "string",
+                            "field-id": 100,
+                        },
+                        {
+                            "name": "file_format",
+                            "type": "string",
+                            "field-id": 101,
+                        },
+                        {
+                            "name": "partition",
+                            "type": {
+                                "type": "record",
+                                "name": "r102",
+                                "fields": [],
+                            },
+                            "field-id": 102,
+                        },
+                        {
+                            "name": "record_count",
+                            "type": "long",
+                            "field-id": 103,
+                        },
+                        {
+                            "name": "file_size_in_bytes",
+                            "type": "long",
+                            "field-id": 104,
+                        },
+                    ],
+                },
+                "field-id": 2,
+            },
+        ],
+    }
+    mp = os.path.join(root, "metadata", "m0.avro")
+    write_avro(
+        mp,
+        entry_schema,
+        [
+            {
+                "status": 1,
+                "snapshot_id": 1,
+                "data_file": {
+                    "content": 0,
+                    "file_path": p,
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": t.num_rows,
+                    "file_size_in_bytes": os.path.getsize(p),
+                },
+            }
+            for p, t in ((fa, even), (fb, odd))
+        ],
+        codec="snappy",  # exercises the foreign-codec path too
+    )
+    meta = {
+        "format-version": 3,
+        "next-row-id": 0,
+        "table-uuid": "00000000-0000-0000-0000-000000000301",
+        "location": root,
+        "last-sequence-number": 1,
+        "last-updated-ms": 1,
+        "last-column-id": 3,
+        "current-schema-id": 0,
+        "schemas": [
+            {
+                "type": "struct",
+                "schema-id": 0,
+                "fields": [
+                    {
+                        "id": 1,
+                        "name": "o_orderkey",
+                        "required": False,
+                        "type": "long",
+                    },
+                    {
+                        "id": 2,
+                        "name": "o_totalprice",
+                        "required": False,
+                        "type": "double",
+                    },
+                    {
+                        "id": 3,
+                        "name": "flag",
+                        "required": False,
+                        "type": "long",
+                        "initial-default": 7,
+                        "write-default": 7,
+                    },
+                ],
+            }
+        ],
+        "default-spec-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": []}],
+        "last-partition-id": 999,
+        "properties": {},
+        "current-snapshot-id": 1,
+        "snapshots": [
+            {"snapshot-id": 1, "timestamp-ms": 1, "manifests": [mp]}
+        ],
+        "snapshot-log": [{"snapshot-id": 1, "timestamp-ms": 1}],
+    }
+    with open(mpath, "w") as fh:
+        json.dump(meta, fh)
 
 
 @register_query(
@@ -2851,183 +2693,11 @@ def snapshot_iceberg_v3_default_orders(
     odd keys carry ``flag = o_orderkey % 3`` — the read must serve 7
     for the old file and the stored values for the new one
     (sources/iceberg_read.py _apply_initial_defaults)."""
-    import hashlib
-    import json
     import os
-
-    import pyarrow as _pa
-    import pyarrow.compute as _pc
-    import pyarrow.parquet as _pq
 
     from ..sources.iceberg_read import IcebergTable
 
-    src_pq = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src_pq)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(_SNAP_CACHE_ROOT, key + "-icv3dflt")
-    mpath = os.path.join(root, "metadata", "v1.metadata.json")
-    if not os.path.exists(mpath):
-        from ..sources.iceberg_format import write_avro
-
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
-        tbl = _pq.read_table(
-            src_pq, columns=["o_orderkey", "o_totalprice"]
-        )
-        keys = tbl.column("o_orderkey")
-        even = tbl.filter(
-            _pc.equal(_pc.bit_wise_and(keys, _pa.scalar(1)), 0)
-        )
-        odd = tbl.filter(
-            _pc.equal(_pc.bit_wise_and(keys, _pa.scalar(1)), 1)
-        )
-        odd = odd.append_column(
-            "flag",
-            _pc.cast(
-                _pc.subtract(
-                    odd.column("o_orderkey"),
-                    _pc.multiply(
-                        _pc.divide(odd.column("o_orderkey"), _pa.scalar(3)),
-                        _pa.scalar(3),
-                    ),
-                ),
-                _pa.int64(),
-            ),
-        )
-        fa = os.path.join(root, "data", "pre-addition.parquet")
-        fb = os.path.join(root, "data", "post-addition.parquet")
-        _pq.write_table(even, fa)
-        _pq.write_table(odd, fb)
-        entry_schema = {
-            "type": "record",
-            "name": "manifest_entry",
-            "fields": [
-                {"name": "status", "type": "int", "field-id": 0},
-                {
-                    "name": "snapshot_id",
-                    "type": ["null", "long"],
-                    "field-id": 1,
-                },
-                {
-                    "name": "data_file",
-                    "type": {
-                        "type": "record",
-                        "name": "r2",
-                        "fields": [
-                            {
-                                "name": "content",
-                                "type": "int",
-                                "field-id": 134,
-                            },
-                            {
-                                "name": "file_path",
-                                "type": "string",
-                                "field-id": 100,
-                            },
-                            {
-                                "name": "file_format",
-                                "type": "string",
-                                "field-id": 101,
-                            },
-                            {
-                                "name": "partition",
-                                "type": {
-                                    "type": "record",
-                                    "name": "r102",
-                                    "fields": [],
-                                },
-                                "field-id": 102,
-                            },
-                            {
-                                "name": "record_count",
-                                "type": "long",
-                                "field-id": 103,
-                            },
-                            {
-                                "name": "file_size_in_bytes",
-                                "type": "long",
-                                "field-id": 104,
-                            },
-                        ],
-                    },
-                    "field-id": 2,
-                },
-            ],
-        }
-        mp = os.path.join(root, "metadata", "m0.avro")
-        write_avro(
-            mp,
-            entry_schema,
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": 1,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": p,
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": t.num_rows,
-                        "file_size_in_bytes": os.path.getsize(p),
-                    },
-                }
-                for p, t in ((fa, even), (fb, odd))
-            ],
-            codec="snappy",  # exercises the foreign-codec path too
-        )
-        meta = {
-            "format-version": 3,
-            "next-row-id": 0,
-            "table-uuid": "00000000-0000-0000-0000-000000000301",
-            "location": root,
-            "last-sequence-number": 1,
-            "last-updated-ms": 1,
-            "last-column-id": 3,
-            "current-schema-id": 0,
-            "schemas": [
-                {
-                    "type": "struct",
-                    "schema-id": 0,
-                    "fields": [
-                        {
-                            "id": 1,
-                            "name": "o_orderkey",
-                            "required": False,
-                            "type": "long",
-                        },
-                        {
-                            "id": 2,
-                            "name": "o_totalprice",
-                            "required": False,
-                            "type": "double",
-                        },
-                        {
-                            "id": 3,
-                            "name": "flag",
-                            "required": False,
-                            "type": "long",
-                            "initial-default": 7,
-                            "write-default": 7,
-                        },
-                    ],
-                }
-            ],
-            "default-spec-id": 0,
-            "partition-specs": [{"spec-id": 0, "fields": []}],
-            "last-partition-id": 999,
-            "properties": {},
-            "current-snapshot-id": 1,
-            "snapshots": [
-                {"snapshot-id": 1, "timestamp-ms": 1, "manifests": [mp]}
-            ],
-            "snapshot-log": [{"snapshot-id": 1, "timestamp-ms": 1}],
-        }
-        tmp = mpath + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, mpath)
+    mpath = os.path.join(_v3_default_orders(spark, sf_dir), "metadata", "v1.metadata.json")
     return (
         IcebergTable(spark, mpath)
         .read()
@@ -3038,6 +2708,38 @@ def snapshot_iceberg_v3_default_orders(
         )
         .orderBy("flag_val")
     )
+
+
+@register_fixture("orders_rest_catalog_cas")
+def _rest_cas_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Two appends CAS the pointer through the REST endpoint over
+    ``cat.db``; a stale third commit must lose with the spec 409."""
+    import os
+
+    from ..catalog import TableIdentifier
+    from ..catalog.service import RestCatalog
+    from ..sources import load_table
+    from ..sources.snapshots import CatalogArbitratedTable, CommitConflictError
+
+    cat = RestCatalog("arbiter", {"uri": os.path.join(root, "cat.db")})
+    cat.create_namespace(("lake",))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    tbl = CatalogArbitratedTable.create(
+        spark, cat, TableIdentifier.of("lake", "orders_rest_cas"), os.path.join(root, "tbl")
+    )
+    s1 = tbl.append(orders.filter(F.col("o_orderkey") % 3 == 0))
+    tbl.append(orders.filter(F.col("o_orderkey") % 3 == 1))
+    # a stale writer races off the old head: the commit route's 409
+    # CommitFailedException surfaces as a lost CAS and the staged
+    # manifest rolls back
+    try:
+        tbl._commit(tbl._load_snap(s1)["files"], "append", s1)
+        raise RuntimeError("stale commit unexpectedly won the CAS")
+    except CommitConflictError:
+        pass
+    cat.close()
 
 
 @register_query(
@@ -3068,56 +2770,15 @@ def snapshot_rest_catalog_cas_orders(
     assert/set-current-metadata-location over real HTTP, so the
     reference's most consequential catalog type
     (CatalogMigrationUtil.java:36-46) sits under the oracle gate."""
-    import hashlib
     import os
-
-    from pyspark.sql import functions as F2
 
     from ..catalog import TableIdentifier
     from ..catalog.service import RestCatalog
-    from ..sources import load_table
-    from ..sources.snapshots import (
-        CatalogArbitratedTable,
-        CommitConflictError,
-    )
+    from ..sources.snapshots import CatalogArbitratedTable
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(_CAS_CACHE_ROOT, key + "-rest")
-    os.makedirs(root, exist_ok=True)
+    root = _rest_cas_orders(spark, sf_dir)
     cat = RestCatalog("arbiter", {"uri": os.path.join(root, "cat.db")})
-    ident = TableIdentifier.of("lake", "orders_rest_cas")
-
-    def _built(tbl) -> bool:
-        return tbl.current_snapshot_id() == 2 and tbl.history_ids() == [1, 2]
-
-    try:
-        tbl = CatalogArbitratedTable(spark, cat, ident)
-    except Exception:  # noqa: BLE001 - first run: not registered yet
-        tbl = None
-    if tbl is None or not _built(tbl):
-        import shutil
-
-        cat.close()
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
-        cat = RestCatalog("arbiter", {"uri": os.path.join(root, "cat.db")})
-        cat.create_namespace(("lake",))
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        tbl = CatalogArbitratedTable.create(
-            spark, cat, ident, os.path.join(root, "tbl")
-        )
-        s1 = tbl.append(orders.filter(F2.col("o_orderkey") % 3 == 0))
-        tbl.append(orders.filter(F2.col("o_orderkey") % 3 == 1))
-        # a stale writer races off the old head: the commit route's
-        # 409 CommitFailedException surfaces as a lost CAS and the
-        # staged manifest rolls back
-        try:
-            tbl._commit(tbl._load_snap(s1)["files"], "append", s1)
-            raise RuntimeError("stale commit unexpectedly won the CAS")
-        except CommitConflictError:
-            pass
+    tbl = CatalogArbitratedTable(spark, cat, TableIdentifier.of("lake", "orders_rest_cas"))
     served = cat._server.requests_served if cat._server else -1
     if cat._server is not None and served <= 0:
         raise RuntimeError("REST catalog never touched the wire")
@@ -3157,8 +2818,8 @@ def snapshot_rest_foreign_client_orders(
     org.apache.iceberg.rest.RESTCatalog); this query drives the
     engine's endpoint with exactly that vocabulary — hand-rolled HTTP
     on the client side (catalog/rest_managed.py on the server) — and
-    gates the round-trip through the oracle. The exported tree is
-    cached per sf_dir; the REST dance re-runs every call, so the
+    gates the round-trip through the oracle. The exported tree is a
+    registered fixture; the REST dance re-runs every call, so the
     requests_served assertion always proves live wire traffic."""
     import os
     import shutil
@@ -3392,6 +3053,26 @@ def snapshot_rest_stage_create_orders(
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+@register_fixture("orders_add_column_defaults")
+def _defaulted_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Five commits: append, track-schema, add-column, and two more
+    appends (one omitting the column, one carrying it)."""
+    from ..sources import load_table
+    from ..sources.snapshots import SnapshotTable, add_column, track_schema
+
+    t = SnapshotTable(spark, root)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    t.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+    track_schema(t)
+    add_column(t, "flag", "bigint", initial_default=7, write_default=9)
+    # a writer omitting the column -> write_default lands physically
+    t.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(1))
+    # a writer carrying it -> stored values win
+    t.append(
+        orders.filter(F.col("o_orderkey") % 3 == 2).withColumn("flag", F.lit(5)).coalesce(1)
+    )
+
+
 @register_query(
     "snapshot_add_column_defaults_orders",
     oracle=f"""
@@ -3421,35 +3102,7 @@ def snapshot_add_column_defaults_orders(
     _resolve_files: initial-default serves files predating the column;
     write-default fills omitted columns at write time (the spec's
     writer rule, v3 schema vocabulary)."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources import load_table
-    from ..sources.snapshots import SnapshotTable, add_column, track_schema
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    t = SnapshotTable(spark, os.path.join(_SNAP_CACHE_ROOT, key + "-acdflt"))
-    # the build mints FIVE commits: append, track-schema, add-column,
-    # and two more appends — a wrong head count here would silently
-    # rebuild the fixture on every call
-    if t.current_snapshot_id() != 5:
-        shutil.rmtree(t.path, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        t.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        track_schema(t)
-        add_column(t, "flag", "bigint", initial_default=7, write_default=9)
-        # a writer omitting the column -> write_default lands physically
-        t.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(1))
-        # a writer carrying it -> stored values win
-        t.append(
-            orders.filter(F.col("o_orderkey") % 3 == 2)
-            .withColumn("flag", F.lit(5))
-            .coalesce(1)
-        )
-    df = t.read()
+    df = _table(spark, _defaulted_orders, sf_dir).read()
     return df.agg(
         F.sum(F.when(F.col("flag") == 7, 1).otherwise(0))
         .cast("bigint")

@@ -8,10 +8,15 @@ names must match exactly (alias everything on both sides).
 
 from __future__ import annotations
 
+import fcntl
+import glob
+import hashlib
 import importlib
+import inspect
 import json
 import os
 import re
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
@@ -61,6 +66,79 @@ def register_query(name: str, oracle: str | None = None, description: str = ""):
             raise ValueError(f"duplicate query name: {name}")
         REGISTRY[name] = QueryDef(name=name, fn=fn, oracle=oracle, description=description)
         return fn
+
+    return deco
+
+
+# ON-DISK QUERY FIXTURES. A builder ``(spark, sf_dir, root) -> None``
+# fills the empty directory ``root`` once; the registered fixture
+# ``(spark, sf_dir) -> root`` returns ``FIXTURE_ROOT/<name>/<key>``,
+# building it first when its marker is missing or holds another key.
+# The key covers the name, the builder's own source and the input
+# dataset (absolute sf_dir plus size and mtime of its parquet inputs),
+# so an edited builder or a regenerated dataset rebuilds instead of
+# silently serving the old tree. Fixtures are immutable: a query reads
+# its fixture and writes nothing into it. Builds happen in place, not
+# in a temp dir renamed afterwards, because the trees record absolute
+# paths (Iceberg ``location``, catalog metadata pointers).
+FixtureFn = Callable[[SparkSession, str], str]
+FIXTURES: dict[str, FixtureFn] = {}
+FIXTURE_ROOT = "/tmp/spark_graft_fixtures"
+_MARKER = ".fixture-key"
+
+
+def _fixture_key(name: str, build: Callable, sf_dir: str) -> str:
+    h = hashlib.sha256(f"{name}\0{inspect.getsource(build)}\0".encode())
+    sf = os.path.abspath(sf_dir)
+    h.update(sf.encode())
+    for path in sorted(glob.glob(os.path.join(sf, "*.parquet"))):
+        st = os.stat(path)
+        h.update(f"\0{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+def _marker_key(root: str) -> str | None:
+    try:
+        with open(os.path.join(root, _MARKER)) as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
+
+
+def ensure_fixture(name: str, build: Callable, spark: SparkSession, sf_dir: str) -> str:
+    """Return the fixture directory, (re)building it unless its marker
+    holds the current key. The marker is written last, through a temp
+    file and ``os.replace``, so a build that dies midway leaves none
+    and the next call starts again from an empty directory. A file
+    lock serializes concurrent builders of the same key."""
+    key = _fixture_key(name, build, sf_dir)
+    root = os.path.join(FIXTURE_ROOT, name, key)
+    if _marker_key(root) == key:
+        return root
+    os.makedirs(os.path.dirname(root), exist_ok=True)
+    with open(root + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if _marker_key(root) != key:
+            shutil.rmtree(root, ignore_errors=True)
+            os.makedirs(root)
+            build(spark, sf_dir, root)
+            tmp = os.path.join(root, f"{_MARKER}.tmp.{os.getpid()}")
+            with open(tmp, "w") as f:
+                f.write(key)
+            os.replace(tmp, os.path.join(root, _MARKER))
+    return root
+
+
+def register_fixture(name: str):
+    def deco(build: Callable[[SparkSession, str, str], None]) -> FixtureFn:
+        if name in FIXTURES:
+            raise ValueError(f"duplicate fixture name: {name}")
+
+        def fixture(spark: SparkSession, sf_dir: str) -> str:
+            return ensure_fixture(name, build, spark, sf_dir)
+
+        FIXTURES[name] = fixture
+        return fixture
 
     return deco
 

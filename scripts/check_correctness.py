@@ -5,6 +5,10 @@ oracle at sf0.01, compare row count, column names, and order-insensitive
 values. Exit nonzero on any mismatch.
 
 Usage: python scripts/check_correctness.py [query ...]
+
+With no names, every query runs in sorted order; given names run in the
+given order, and an unknown name exits 2 before any query runs. A seeded
+shuffled sweep is therefore one command over a shuffled name list.
 """
 
 from __future__ import annotations
@@ -108,14 +112,17 @@ def main() -> int:
     from iceberg_catalog_migrator_spark.queries import all_queries
     from iceberg_catalog_migrator_spark.session import get_spark
 
-    only = set(sys.argv[1:])
+    queries = all_queries()
+    names = sys.argv[1:] or sorted(queries)
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="check-correctness")
     con = duck_connection()
-    queries = all_queries()
     failures = 0
-    for name, qd in sorted(queries.items()):
-        if only and name not in only:
-            continue
+    for name in names:
+        qd = queries[name]
         t0 = time.time()
         try:
             spark_pdf = qd.fn(spark, SF_DIR).toPandas()
@@ -140,7 +147,7 @@ def main() -> int:
                 print(f"      - {p}")
         else:
             print(f"PASS  {name}: rows={len(spark_pdf)} [{time.time()-t0:.1f}s]")
-    print(f"\n{failures} failures / {len(queries)} queries")
+    print(f"\n{failures} failures / {len(names)} queries run")
     return 1 if failures else 0
 
 
