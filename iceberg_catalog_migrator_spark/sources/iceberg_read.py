@@ -51,6 +51,7 @@ import re
 import struct
 
 from .iceberg_format import read_avro
+from .pruning import overlaps, render_sets
 from .snapshots import SnapshotError
 
 # inverse of the exporter's _SPARK_TO_ICEBERG; timestamptz loses the
@@ -300,28 +301,6 @@ def _dv_coordinates_df(spark, dvs: list[dict]):
                     )
 
     return meta.mapInPandas(expand, "__icb_fp string, __icb_pos bigint")
-
-
-def _overlaps(op: str, lit, lo, hi) -> bool:
-    """Can a file whose column spans [lo, hi] contain a row matching
-    ``col <op> lit``? Missing bound (None) = unbounded on that side.
-    A literal that can't be ordered against foreign metadata's decoded
-    bounds (mismatched Python types) conservatively keeps the file —
-    pruning is an optimization, never a correctness gate."""
-    try:
-        if op == "=":
-            return (lo is None or lo <= lit) and (hi is None or lit <= hi)
-        if op == "<":
-            return lo is None or lo < lit
-        if op == "<=":
-            return lo is None or lo <= lit
-        if op == ">":
-            return hi is None or hi > lit
-        if op == ">=":
-            return hi is None or hi >= lit
-    except TypeError:
-        return True
-    raise SnapshotError(f"unsupported prune operator {op!r}")
 
 
 class IcebergTable:
@@ -822,7 +801,7 @@ class IcebergTable:
                 fid = id_by_name.get(col)
                 if fid is None:
                     raise SnapshotError(f"no column {col!r} in table schema")
-                if not _overlaps(
+                if not overlaps(
                     op, lit, e["lower"].get(fid), e["upper"].get(fid)
                 ):
                     alive = False
@@ -859,17 +838,13 @@ class IcebergTable:
         return kept, len(entries) - len(kept)
 
     def _transform_probe(self, snapshot, col, transform, lit):
-        """The partition value ``lit`` would be written with — computed
-        by the exact Spark expression the write path used (one
-        metadata-sized local job per distinct probe, cached). None =
-        unknown transform (a foreign writer's): prune conservatively
-        keeps the file."""
+        """The partition value ``lit`` would be written with: the shared
+        probe builder renders it as a one-value set, through the exact
+        Spark expression the write path used (cached). None = unknown
+        transform (a foreign writer's) or a literal that does not render
+        as Spark compares it: prune conservatively keeps the file."""
         key = (col, transform, lit)
         if key not in self._probe_cache:
-            from pyspark.sql import functions as F
-
-            from .snapshots import _transform_col
-
             try:
                 typ = _spark_type(
                     next(
@@ -878,12 +853,9 @@ class IcebergTable:
                         if f["name"] == col
                     )
                 )
-                row = self.spark.createDataFrame([(lit,)], f"{col} {typ}")
-                self._probe_cache[key] = row.select(
-                    F.coalesce(
-                        _transform_col(col, transform), F.lit("null")
-                    ).alias("v")
-                ).first()["v"]
+                probe = (col, transform, typ)
+                vals = render_sets(self.spark, {col: [lit]}, [probe])[probe]
+                self._probe_cache[key] = next(iter(vals)) if vals else None
             except ValueError:  # foreign transform: cannot probe
                 self._probe_cache[key] = None
         return self._probe_cache[key]

@@ -33,11 +33,15 @@ Planning reads push the keep-predicate into each segment's parquet
 scan, then apply the ``cur`` filter vectorized (``pc.index_in``
 against the small map) — the driver only ever holds Arrow buffers of
 the MATCHING rows plus the churn-bounded map, never a per-file Python
-object. Files without recorded stats carry nulls and are always KEPT
-by plans (absence of stats never un-matches — same rule as the dict
-planner and the Iceberg import pruner). Stats columns whose values
-cannot type consistently are listed in ``unindexed_cols`` and plans
-on them fall back to the dict path.
+object. The predicates are the Arrow renderings of the rules in
+:mod:`.pruning`: :func:`plan_paths` takes ``(col, op, literal)``
+ranges (the range rule; files without recorded stats carry nulls and
+are always KEPT), :func:`plan_partition_paths` takes value sets in
+their one form, ``{spec_id: {position: {vintage: frozenset | None}}}``
+(the keep rule; a vintage is the file's ``schema_id``, ``None`` on an
+untracked table). Stats columns whose values cannot type consistently
+are listed in ``unindexed_cols`` and plans on them fall back to the
+dict path.
 
 Freshness: the index doc records the snapshot doc's stat fingerprint
 (mtime_ns:size). A stale or missing index advances from the nearest
@@ -59,6 +63,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import reduce
 
 _FORMAT_VERSION = 4  # v4: lazy spec-id default — part_spec_id stores the
 # EXPLICIT per-file entry or NULL when the file has none, and readers
@@ -187,9 +192,8 @@ def _part_meta_from_snap(snap: dict) -> dict | None:
         ),
         "max_k": max_k,
         # schema-tracked tables may carry files written under WIDENED
-        # source-column types; bucket's hash is type-sensitive, so one
-        # probe value cannot serve mixed vintages — the columnar
-        # partition path defers to the dict planner there
+        # source-column types; bucket's hash is type-sensitive, so value
+        # sets are rendered per vintage and matched on schema_id
         "schema_tracked": bool(snap.get("schemas")),
     }
 
@@ -515,13 +519,7 @@ def advance_plan_index(
         if not specs:
             return None  # spec state unclear: the full build decides
         part_meta = {
-            "specs": [
-                {
-                    "spec_id": s["spec_id"],
-                    "spec": [list(p) for p in s["spec"]],
-                }
-                for s in specs
-            ],
+            "specs": [{**s, "spec": [list(p) for p in s["spec"]]} for s in specs],
             "current_spec_id": raw.get(
                 "current_spec_id",
                 (part_meta or {}).get(
@@ -834,15 +832,12 @@ def _live_mask(paths, ordinal: int, cur: dict):
     )
 
 
-def first_path(table_path: str, snapshot_id: int) -> str | None:
-    """Any one LIVE file path of the snapshot (schema anchor for empty
-    plans) without materializing the file list — newest segments
+def first_path(table_path: str, doc: dict) -> str | None:
+    """Any one LIVE file path of the fresh ``doc``'s snapshot (a schema
+    anchor) without materializing the file list — newest segments
     first, so the scan stops within the churn-bounded dead prefix."""
     import pyarrow.parquet as pq
 
-    doc = ensure_plan_index(table_path, snapshot_id)
-    if doc is None:
-        return None
     cur = doc["cur"]
     try:
         for ordinal in range(len(doc["segments"]) - 1, -1, -1):
@@ -855,88 +850,76 @@ def first_path(table_path: str, snapshot_id: int) -> str | None:
                     if cur.get(p, ordinal) == ordinal:
                         return p
     except Exception:
-        _heal(table_path, snapshot_id)
+        _heal(table_path, doc["snapshot_id"])
         return None
     return None
 
 
-def _keep_expr(col: str, op: str, lit):
-    """The pushdown predicate keeping files whose [min, max] MAY hold a
-    row matching ``col <op> lit`` — null bounds (no recorded stats for
-    the file) always keep."""
-    import pyarrow.compute as pc
+def _live_paths(table_path: str, doc: dict, seg_filter) -> list[str] | None:
+    """The live paths of the rows passing ``seg_filter(segment)`` — a
+    pushdown predicate per segment, None keeping every row — across
+    all of ``doc``'s segments. None when a segment read fails: a torn
+    segment (the doc is dropped so the next plan rebuilds) or a
+    predicate the segment cannot evaluate (an incomparable literal)."""
+    import pyarrow.dataset as ds
 
-    lo = pc.field(f"min:{col}")
-    hi = pc.field(f"max:{col}")
-    nulls = lo.is_null() | hi.is_null()
-    if op == "=":
-        return nulls | ((lo <= lit) & (hi >= lit))
-    if op == "<":
-        return nulls | (lo < lit)
-    if op == "<=":
-        return nulls | (lo <= lit)
-    if op == ">":
-        return nulls | (hi > lit)
-    if op == ">=":
-        return nulls | (hi >= lit)
-    raise ValueError(f"unsupported plan operator {op!r}")
+    kept: list[str] = []
+    try:
+        for ordinal, seg in enumerate(doc["segments"]):
+            if seg["rows"] == 0:
+                continue
+            dataset = ds.dataset(
+                _segment_file(table_path, seg["name"]), format="parquet"
+            )
+            tbl = dataset.to_table(columns=["path"], filter=seg_filter(seg))
+            if tbl.num_rows == 0:
+                continue
+            paths = tbl.column("path").combine_chunks()
+            kept.extend(paths.filter(_live_mask(paths, ordinal, doc["cur"])).to_pylist())
+    except OSError:
+        _heal(table_path, doc["snapshot_id"])
+        return None
+    except Exception:
+        # the plan is an optimization: the dict path answers exactly
+        return None
+    return kept
 
 
 def plan_paths(
     table_path: str,
     snapshot_id: int,
     filters: list[tuple],
+    doc: dict | None = None,
 ) -> tuple[list[str], dict] | None:
-    """Columnar scan plan: the table-relative paths surviving
+    """Columnar scan plan (``doc``, when the caller holds the fresh doc,
+    saves re-resolving it here and in the two plan reads below): the
+    table-relative paths surviving
     ``filters`` (``[(col, op, literal), ...]`` with ops ``= < <= >
-    >=``), plus a summary dict. Each segment's read pushes the
-    keep-predicate into the parquet scan (columns the segment never
-    indexed conservatively keep), then the churn-bounded ``cur`` map
-    filters superseded rows vectorized — driver memory is O(matching
-    files + churn), never the full file list as Python objects.
+    >=``, the range rule :func:`.pruning.keep_expr`), plus a summary
+    dict. Each segment's read pushes the keep-predicate into the
+    parquet scan (columns the segment never indexed conservatively
+    keep), then the churn-bounded ``cur`` map filters superseded rows
+    vectorized — driver memory is O(matching files + churn), never the
+    full file list as Python objects.
 
     Returns None when a columnar plan can't answer exactly — a
     filtered column recorded but unindexable, or a literal that won't
     compare against the indexed type — and the caller falls back to
     the dict planner."""
-    import pyarrow.dataset as ds
+    from .pruning import keep_expr
 
-    doc = ensure_plan_index(table_path, snapshot_id)
-    if doc is None:
+    doc = doc or ensure_plan_index(table_path, snapshot_id)
+    if doc is None or any(c in doc["unindexed_cols"] for c, _, _ in filters):
         return None
-    for col, _, _ in filters:
-        if col in doc["unindexed_cols"]:
-            return None
-    kept: list[str] = []
-    cur = doc["cur"]
-    try:
-        for ordinal, seg in enumerate(doc["segments"]):
-            if seg["rows"] == 0:
-                continue
-            expr = None
-            for col, op, lit in filters:
-                if col not in seg["stat_cols"]:
-                    # this segment never indexed the column: its rows
-                    # are conservatively kept — the filter prunes
-                    # nothing here (same rule as missing stats)
-                    continue
-                e = _keep_expr(col, op, lit)
-                expr = e if expr is None else (expr & e)
-            dataset = ds.dataset(
-                _segment_file(table_path, seg["name"]), format="parquet"
-            )
-            tbl = dataset.to_table(columns=["path"], filter=expr)
-            if tbl.num_rows == 0:
-                continue
-            paths = tbl.column("path").combine_chunks()
-            live = paths.filter(_live_mask(paths, ordinal, cur))
-            kept.extend(live.to_pylist())
-    except OSError:
-        _heal(table_path, snapshot_id)
-        return None
-    except Exception:
-        # incomparable literal/type: the plan is an optimization —
-        # answer exactly via the dict path instead
+
+    def seg_filter(seg):
+        # a column the segment never indexed prunes nothing there
+        # (same rule as missing stats)
+        exprs = [keep_expr(*f) for f in filters if f[0] in seg["stat_cols"]]
+        return reduce(lambda a, b: a & b, exprs) if exprs else None
+
+    kept = _live_paths(table_path, doc, seg_filter)
+    if kept is None:
         return None
     return kept, {
         "total_files": doc["live_files"],
@@ -949,119 +932,40 @@ def plan_paths(
 def plan_partition_paths(
     table_path: str,
     snapshot_id: int,
-    wanted_by_spec: dict[int, dict[int, str]],
+    wanted_by_spec: dict[int, dict[int, dict]],
+    doc: dict | None = None,
 ) -> tuple[list[str], int] | None:
-    """Columnar partition plan: paths whose recorded tuple agrees with
-    ``wanted_by_spec`` (spec_id -> {tuple position: rendered value OR
-    list/set of acceptable values — the merge planner probes the
-    source's distinct transforms — OR ``{"by_schema": {schema_id:
-    rendered-or-None}}`` for schema-tracked tables, where the
-    acceptable rendering depends on the file's recorded schema vintage
-    (bucket's hash is type-sensitive across widenings) and None keeps
-    that vintage conservatively}), plus the total file count.
-    Tuple-less files (pre-partitioning commits), files under spec ids
-    outside the map, and vintage-less rows conservatively keep —
-    exactly the dict planner's rule. None when the index can't answer
-    (no partition columns indexed)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
+    """Columnar partition plan: the paths whose recorded tuple passes the
+    keep rule (:func:`.pruning.keep_tuple_expr`) under ``wanted_by_spec``
+    — value sets in their one form, ``{spec_id: {position: {vintage:
+    frozenset | None}}}`` — plus the total file count. Tuple-less files,
+    files under spec ids outside the map and files whose vintage the map
+    does not list keep. None when the index can't answer (no partition
+    columns indexed, a torn segment)."""
+    from .pruning import keep_tuple_expr
 
-    doc = ensure_plan_index(table_path, snapshot_id)
+    doc = doc or ensure_plan_index(table_path, snapshot_id)
     if doc is None or not doc.get("partition_specs"):
         return None
-    kept: list[str] = []
-    cur = doc["cur"]
     # v4: a NULL part_spec_id means "no explicit entry" — the file's
     # effective spec is the doc's CURRENT one (the dict rule
-    # file_spec_ids.get(f, current_spec_id)), resolved here so spec
-    # evolution never rewrites rows. Null must be matched explicitly:
-    # pyarrow's tri-state isin/negation would silently drop (= prune)
-    # null rows from a filter.
+    # file_spec_ids.get(f, current_spec_id)), resolved at plan time so
+    # spec evolution never rewrites rows
     cur_spec = doc["partition_specs"]["current_spec_id"]
-
-    def _spec_is(spec_id):
-        e = pc.field("part_spec_id") == spec_id
-        if spec_id == cur_spec:
-            e = e | pc.field("part_spec_id").is_null()
-        return e
-
-    try:
-        for ordinal, seg in enumerate(doc["segments"]):
-            if seg["rows"] == 0:
-                continue
-            dataset = ds.dataset(
-                _segment_file(table_path, seg["name"]), format="parquet"
-            )
-            if seg["part_k"] < 0:
-                keep = None  # segment predates partition columns: keep all
-            else:
-                keep = ~pc.field("has_part")
-                known = list(wanted_by_spec)
-                if known:
-                    unknown_spec = ~pc.field("part_spec_id").isin(known)
-                    if cur_spec in known:
-                        unknown_spec = unknown_spec & ~pc.field(
-                            "part_spec_id"
-                        ).is_null()
-                    else:
-                        unknown_spec = unknown_spec | pc.field(
-                            "part_spec_id"
-                        ).is_null()
-                    keep = keep | unknown_spec
-                for spec_id, wanted in wanted_by_spec.items():
-                    e = _spec_is(spec_id)
-                    dead = False
-                    for i, v in wanted.items():
-                        if i >= seg["part_k"]:
-                            # no recorded tuple in this segment reaches
-                            # the position: nothing here can match
-                            dead = True
-                            break
-                        if isinstance(v, dict):
-                            # per-vintage rendering: match each file's
-                            # tuple against ITS schema's probe value
-                            # (scalar for scan equality, a SET for the
-                            # merge planner's distinct source values)
-                            sub = pc.field("schema_id").is_null()
-                            by_val: dict = {}
-                            for sid_k, val in v["by_schema"].items():
-                                if isinstance(val, (set, list)):
-                                    val = frozenset(val)
-                                by_val.setdefault(val, []).append(int(sid_k))
-                            for val, ids in by_val.items():
-                                grp = pc.field("schema_id").isin(ids)
-                                if isinstance(val, frozenset):
-                                    grp = grp & pc.field(
-                                        f"part:{i}"
-                                    ).isin(sorted(val))
-                                elif val is not None:
-                                    grp = grp & (pc.field(f"part:{i}") == val)
-                                # val None = the vintage lacks the
-                                # column: its files keep conservatively
-                                sub = sub | grp
-                            e = e & sub
-                        elif isinstance(v, (set, frozenset, list, tuple)):
-                            e = e & pc.field(f"part:{i}").isin(sorted(v))
-                        else:
-                            e = e & (pc.field(f"part:{i}") == v)
-                    if not dead:
-                        keep = keep | e
-            tbl = dataset.to_table(columns=["path"], filter=keep)
-            if tbl.num_rows == 0:
-                continue
-            paths = tbl.column("path").combine_chunks()
-            live = paths.filter(_live_mask(paths, ordinal, cur))
-            kept.extend(live.to_pylist())
-    except OSError:
-        _heal(table_path, snapshot_id)
-        return None
-    except Exception:
-        return None
-    return kept, doc["live_files"]
+    kept = _live_paths(
+        table_path,
+        doc,
+        lambda seg: (
+            None  # segment predates partition columns: keep all
+            if seg["part_k"] < 0
+            else keep_tuple_expr(wanted_by_spec, seg["part_k"], cur_spec)
+        ),
+    )
+    return None if kept is None else (kept, doc["live_files"])
 
 
 def paths_missing_stat(
-    table_path: str, snapshot_id: int, col: str
+    table_path: str, snapshot_id: int, col: str, doc: dict | None = None
 ) -> list[str] | None:
     """LIVE paths with NO recorded [min, max] for ``col`` (both bounds
     null, or the file's segment never indexed the column) — the merge
@@ -1069,38 +973,19 @@ def paths_missing_stat(
     and gets its discovered range recorded. None when the index can't
     answer (unindexed column, torn segment)."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as ds
 
-    doc = ensure_plan_index(table_path, snapshot_id)
+    doc = doc or ensure_plan_index(table_path, snapshot_id)
     if doc is None or col in doc["unindexed_cols"]:
         return None
-    kept: list[str] = []
-    cur = doc["cur"]
-    try:
-        for ordinal, seg in enumerate(doc["segments"]):
-            if seg["rows"] == 0:
-                continue
-            dataset = ds.dataset(
-                _segment_file(table_path, seg["name"]), format="parquet"
-            )
-            expr = (
-                pc.field(f"min:{col}").is_null()
-                & pc.field(f"max:{col}").is_null()
-                if col in seg["stat_cols"]
-                else None  # column never indexed here: every row missing
-            )
-            tbl = dataset.to_table(columns=["path"], filter=expr)
-            if tbl.num_rows == 0:
-                continue
-            paths = tbl.column("path").combine_chunks()
-            live = paths.filter(_live_mask(paths, ordinal, cur))
-            kept.extend(live.to_pylist())
-    except OSError:
-        _heal(table_path, snapshot_id)
-        return None
-    except Exception:
-        return None
-    return kept
+    return _live_paths(
+        table_path,
+        doc,
+        lambda seg: (
+            pc.field(f"min:{col}").is_null() & pc.field(f"max:{col}").is_null()
+            if col in seg["stat_cols"]
+            else None  # column never indexed here: every row missing
+        ),
+    )
 
 
 def current_rows_table(table_path: str, snapshot_id: int):

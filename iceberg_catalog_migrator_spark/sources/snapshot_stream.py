@@ -843,56 +843,31 @@ class _SnapshotBatchReader(DataSourceReader):
 
     def partitions(self):
         snap = _load_snap(self.path, self.sid)
-        stats = snap.get("file_stats", {})
         deletes = snap.get("deletes", []) if self.apply_deletes else []
         pos_deletes = snap.get("pos_deletes", []) if self.apply_deletes else []
-        # columnar prune first: the sidecar answers the pushed bounds
-        # as one vectorized parquet scan (O(matching files) driver
-        # memory) instead of a per-file per-column dict probe; the
-        # loop's dict probing remains as the exact fallback
-        kept: set | None = None
-        filters = []
-        for col, (lo, hi) in self.bounds.items():
-            if lo is not None:
-                filters.append((col, ">=", lo))
-            if hi is not None:
-                filters.append((col, "<=", hi))
-        # only when some bound is FINITE: an unbounded filter set would
-        # pay a sidecar scan (and an O(files) kept-set) to prune nothing
-        if filters:
-            from .plan_index import plan_paths
+        files = snap["files"]
+        ranges = [
+            (col, op, v)
+            for col, (lo, hi) in self.bounds.items()
+            for op, v in ((">=", lo), ("<=", hi))
+            if v is not None
+        ]
+        # only when some bound is FINITE: an unbounded plan would pay a
+        # sidecar scan (and an O(files) kept-set) to prune nothing
+        if ranges:
+            from .pruning import plan_files
+            from .snapshots import SnapshotTable
 
-            res = plan_paths(self.path, self.sid, filters)
-            if res is not None:
-                kept = set(res[0])
-        parts = []
-        for f in snap["files"]:
-            if kept is not None:
-                if f not in kept:
-                    continue
-            else:
-                pruned = False
-                for col, (lo, hi) in self.bounds.items():
-                    rng = stats.get(f, {}).get(col)
-                    if rng is None:
-                        continue  # no recorded stats: conservative
-                    try:
-                        if (hi is not None and rng[0] > hi) or (
-                            lo is not None and rng[1] < lo
-                        ):
-                            pruned = True
-                            break
-                    except TypeError:  # incomparable types: conservative
-                        continue
-                if pruned:
-                    continue
-            parts.append(
-                InputPartition(
-                    _file_plan(
-                        self.path, snap, f, "insert", deletes, vecs=pos_deletes
-                    )
-                )
+            # a session-less handle: a range plan renders no probes
+            table = SnapshotTable(None, self.path)
+            kept = set(plan_files(table, self.sid, ranges, snap=snap).files)
+            files = [f for f in files if f in kept]
+        parts = [
+            InputPartition(
+                _file_plan(self.path, snap, f, "insert", deletes, vecs=pos_deletes)
             )
+            for f in files
+        ]
         return parts or [InputPartition(None)]
 
     def read(self, partition):

@@ -64,6 +64,7 @@ from .mor import (
     _hide_sequenced,
     _keys_table,
 )
+from .pruning import overlaps, plan_files, transform_col
 
 
 class SnapshotError(RuntimeError):
@@ -1396,10 +1397,7 @@ class SnapshotTable:
         named ref's head (``ref="audit"`` / a tag). Schema-tracked
         tables (``track_schema``) resolve by field id — renames and
         type widening apply across every file transparently."""
-        if snapshot_id is not None and ref is not None:
-            raise ValueError("pass snapshot_id or ref, not both")
-        if snapshot_id is None:
-            snapshot_id = self.head(ref if ref is not None else MAIN)
+        snapshot_id = _scan_sid(self, snapshot_id, ref)
         if snapshot_id is None:
             raise SnapshotError(f"no committed snapshot at {self.path}")
         snap = self._load_snap(snapshot_id)
@@ -1837,263 +1835,6 @@ def _harvest_stats(table: SnapshotTable, files: list[str], cols: list[str]) -> d
     return stats
 
 
-# source partition-value sets larger than this skip partition pruning
-# for that spec entry (the probe must stay metadata-sized)
-_MAX_PARTITION_PROBE = 1000
-
-
-def _source_probe(source: DataFrame):
-    """A memoized (col, transform) -> source's DISTINCT transformed
-    values (rendered like the write path), or None past
-    _MAX_PARTITION_PROBE — one metadata-sized job per distinct pair."""
-    from pyspark.sql import functions as F
-
-    probe_cache: dict[tuple[str, str], set | None] = {}
-
-    def _source_values(col: str, transform: str) -> set | None:
-        key = (col, transform)
-        if key not in probe_cache:
-            rows = (
-                source.select(
-                    F.coalesce(_transform_col(col, transform), F.lit("null")).alias("v")
-                )
-                .distinct()
-                .limit(_MAX_PARTITION_PROBE + 1)
-                .collect()
-            )
-            probe_cache[key] = (
-                None  # too many distinct values: skip this entry
-                if len(rows) > _MAX_PARTITION_PROBE
-                else {r["v"] for r in rows}
-            )
-        return probe_cache[key]
-
-    return _source_values
-
-
-def _merge_wanted_by_spec(
-    specs: list[dict], key_cols: list[str], _source_values
-) -> dict[int, dict[int, set]]:
-    """spec_id -> {tuple position: acceptable rendered values} for
-    every spec entry whose source column is a merge key."""
-    wanted_by_spec: dict[int, dict[int, set]] = {}
-    for s in specs:
-        wanted = {}
-        for i, (col, transform) in enumerate(s["spec"]):
-            if col in key_cols:
-                vals = _source_values(col, transform)
-                if vals is not None:
-                    wanted[i] = vals
-        wanted_by_spec[s["spec_id"]] = wanted
-    return wanted_by_spec
-
-
-def _merge_tracked_wanted_by_spec(
-    table: SnapshotTable,
-    schemas: list[dict],
-    current_schema_id: int,
-    specs: list[dict],
-    key_cols: list[str],
-    source: DataFrame,
-) -> dict[int, dict[int, dict]]:
-    """Per-VINTAGE merge partition probes for a schema-tracked table —
-    the merge twin of :func:`_tracked_wanted_by_spec`. bucket's hash
-    is type-sensitive, so a file written before a widening recorded
-    its tuple under the OLD type: the source's distinct key values
-    render ONCE PER (transform, vintage type), and the tuple check
-    matches each file against ITS schema's rendering. Spec columns
-    resolve through field ids (renamed keys still prune); a vintage
-    that lacks the field keeps its files conservatively (None).
-    Returns {spec_id: {pos: {"by_schema": {schema_id: frozenset |
-    None}}}} — a position with too many distinct source values is
-    omitted entirely (no pruning on it), like the untracked probe."""
-    from pyspark.sql import functions as F
-
-    cur = _schema_by_id(schemas, current_schema_id)
-    id_by_cur_name = {f["name"]: f["id"] for f in cur["fields"]}
-    name_by_id = {f["id"]: f["name"] for f in cur["fields"]}
-    key_ids = {
-        id_by_cur_name[c] for c in key_cols if c in id_by_cur_name
-    }
-
-    def _spec_fid(name: str) -> int | None:
-        if name in id_by_cur_name:
-            return id_by_cur_name[name]
-        ids = {
-            f["id"] for s in schemas for f in s["fields"] if f["name"] == name
-        }
-        return next(iter(ids)) if len(ids) == 1 else None
-
-    cache: dict[tuple, frozenset | None] = {}
-
-    def _vals(cur_name: str, transform: str, vtype: str):
-        key = (cur_name, transform, vtype)
-        if key not in cache:
-            rows = (
-                source.select(
-                    F.col(cur_name).cast(vtype).alias("__probe")
-                )
-                .select(
-                    F.coalesce(
-                        _transform_col("__probe", transform),
-                        F.lit("null"),
-                    ).alias("v")
-                )
-                .distinct()
-                .limit(_MAX_PARTITION_PROBE + 1)
-                .collect()
-            )
-            cache[key] = (
-                None
-                if len(rows) > _MAX_PARTITION_PROBE
-                else frozenset(r["v"] for r in rows)
-            )
-        return cache[key]
-
-    wanted_by_spec: dict[int, dict[int, dict]] = {}
-    for s in specs:
-        w: dict[int, dict] = {}
-        for i, (name, transform) in enumerate(s["spec"]):
-            fid = _spec_fid(name)
-            if fid is None or fid not in key_ids:
-                continue
-            cur_name = name_by_id[fid]
-            by_schema: dict[int, frozenset | None] = {}
-            dead = False
-            for sc in schemas:
-                fld = next(
-                    (f for f in sc["fields"] if f["id"] == fid), None
-                )
-                if fld is None:
-                    by_schema[sc["schema_id"]] = None  # conservative
-                    continue
-                vals = _vals(cur_name, transform, fld["type"])
-                if vals is None:  # too many distinct: skip the position
-                    dead = True
-                    break
-                by_schema[sc["schema_id"]] = vals
-            if not dead:
-                w[i] = {"by_schema": by_schema}
-        wanted_by_spec[s["spec_id"]] = w
-    return wanted_by_spec
-
-
-def _merge_tuple_matches(tup, wanted: dict, fschema) -> bool:
-    """The merge planner's keep rule for one recorded tuple: plain
-    value-sets for type-stable tables, per-vintage sets for tracked
-    ones (a missing vintage rendering keeps the file)."""
-    for i, v in wanted.items():
-        if isinstance(v, dict):
-            pv = v["by_schema"].get(fschema)
-            if pv is None:  # unknown/field-less vintage: conservative
-                continue
-            if tup[i] not in pv:
-                return False
-        elif tup[i] not in v:
-            return False
-    return True
-
-
-def _merge_prune_columnar(
-    table: SnapshotTable,
-    snap: dict,
-    source: DataFrame,
-    key_cols: list[str],
-    bounds,
-) -> tuple[list[str], list[str], dict] | None:
-    """FILE-GRANULAR merge planning through the segmented plan index
-    (round-12 verdict ask #2): the same three-stage rule as the dict
-    loop — recorded stats on the first key column, recorded partition
-    tuples against the source's distinct transforms (per-vintage typed
-    probes on schema-tracked tables, ask #3), footer fallback for
-    files with neither — but every per-file probe is a predicate-
-    pushdown parquet read of the index. The driver holds the TOUCHED
-    candidates and the footer-fallback set, never the resolved dict's
-    per-file maps; at 10^6+ files a one-row merge plans in megabytes.
-
-    None when the index can't answer exactly (no/stale index — the
-    table never opted in —, unindexable stat types), and the dict loop
-    answers instead."""
-    from .plan_index import (
-        _fresh_doc,
-        paths_missing_stat,
-        plan_partition_paths,
-        plan_paths,
-    )
-
-    sid = snap["snapshot_id"]
-    doc = _fresh_doc(table.path, sid)
-    if doc is None:
-        return None
-    tracked = bool(doc.get("schema_tracked"))
-    key0 = key_cols[0]
-    # stats plan: segment stat columns are keyed exactly like the
-    # dict's file_stats (the name current when recorded), so the same
-    # predicate selects the same files on tracked tables too; files
-    # whose stats live under a retired name simply join the footer-
-    # fallback set on BOTH paths
-    stats_res = plan_paths(
-        table.path, sid, [(key0, ">=", bounds.lo), (key0, "<=", bounds.hi)]
-    )
-    if stats_res is None:
-        return None
-    kept = set(stats_res[0])
-    pmeta = doc.get("partition_specs")
-    if pmeta:
-        if tracked:
-            wanted_by_spec = _merge_tracked_wanted_by_spec(
-                table,
-                snap["schemas"],
-                snap["current_schema_id"],
-                pmeta["specs"],
-                key_cols,
-                source,
-            )
-        else:
-            wanted_by_spec = _merge_wanted_by_spec(
-                pmeta["specs"], key_cols, _source_probe(source)
-            )
-        part_res = plan_partition_paths(table.path, sid, wanted_by_spec)
-        if part_res is None:
-            return None
-        kept &= set(part_res[0])
-    missing = paths_missing_stat(table.path, sid, key0)
-    if missing is None:
-        return None
-    probe = kept & set(missing)
-    touched_set = set()
-    discovered: dict[str, dict] = {}
-    for f in kept:
-        if f not in probe:
-            touched_set.add(f)
-            continue
-        # footer fallback — at most ONE footer read per file lifetime:
-        # the discovered range rides the merge's own commit. Tracked
-        # tables resolve the written name through the file's vintage
-        # (pre-rename files); discovery records only under the current
-        # name, exactly like the dict loop.
-        wname = _written_column_name(snap, f, key0) if tracked else key0
-        rng = (
-            _file_key_range(os.path.join(table.path, f), wname)
-            if wname is not None
-            else None
-        )
-        jr = _jsonable_range(rng) if wname == key0 else None
-        if jr is not None:
-            discovered[f] = {key0: jr}
-        try:
-            intersects = rng is None or (
-                rng[0] <= bounds.hi and rng[1] >= bounds.lo
-            )
-        except TypeError:  # incomparable recorded/live types: conservative
-            intersects = True
-        if intersects:
-            touched_set.add(f)
-    touched = [f for f in snap["files"] if f in touched_set]
-    carried = [f for f in snap["files"] if f not in touched_set]
-    return touched, carried, discovered
-
-
 def _merge_prune(
     table: SnapshotTable,
     snap: dict,
@@ -2102,89 +1843,49 @@ def _merge_prune(
     bounds,
 ) -> tuple[list[str], list[str], dict]:
     """FILE-GRANULAR copy-on-write planning for MERGE: split the
-    snapshot's files into (touched, carried) using, in order:
+    snapshot's files into (touched, carried) with :func:`plan_files`:
 
-    1. **manifest-recorded stats** (``file_stats``) on the first key
-       column — zero storage reads; at 10^6 files on an object store
-       this is the difference between a metadata lookup and 10^6
-       sequential footer GETs per merge,
-    2. **recorded partition tuples**: for every spec entry whose source
-       column is a merge key, the source's DISTINCT transformed values
-       (one metadata-sized job per (col, transform)) — a file whose
-       recorded tuple cannot match any source tuple is carried even
-       when its key RANGE overlaps (bucket layouts defeat range stats),
+    1. **recorded stats** on the first key column — zero storage reads;
+       at 10^6 files on an object store this is the difference between
+       a metadata lookup and 10^6 sequential footer GETs per merge,
+    2. **recorded partition tuples** against the source's distinct
+       transformed key values — a file whose tuple cannot match any
+       source tuple is carried even when its key RANGE overlaps (bucket
+       layouts defeat range stats),
     3. **footer fallback** only for files with neither; the range read
        is returned in ``discovered`` so the caller records it in the
        merge's own commit — each file pays at most ONE footer read in
-       its lifetime, and steady-state merges make zero storage reads.
+       its lifetime, and steady-state merges make zero storage reads
+       (the partition probes render at the key types the spec records;
+       a spec written before those were recorded costs one footer read
+       per merge on an untracked table).
 
-    ``bounds`` has .lo/.hi of the first key column (nulls never match
-    in MERGE ON, so an all-null-keyed source touches nothing)."""
+    The plan uses the sidecar only when the table already has one (it
+    opted in by a scan or ``record_file_stats``); a merge never builds
+    it. ``bounds`` has .lo/.hi of the first key column (nulls never
+    match in MERGE ON, so an all-null-keyed source touches nothing)."""
     key0 = key_cols[0]
-    stats = snap.get("file_stats", {})
     files = snap["files"]
     if bounds.lo is None and bounds.hi is None:
-        # a non-empty source whose keys are ALL null: MERGE ON never
-        # matches a null, so no target row can be touched
         return [], list(files), {}
-
-    # columnar fast path: plan (stats ranges + partition sets +
-    # footer-fallback set) against the segmented plan index — the
-    # merge planner then never probes the resolved dict's per-file
-    # maps. Only for tables whose index already exists (they opted in
-    # by their first columnar plan / record_file_stats); the dict loop
-    # below stays as the exact fallback.
-    res = _merge_prune_columnar(table, snap, source, key_cols, bounds)
-    if res is not None:
-        return res
-
-    # --- partition-transform probe (spec entries over merge keys)
-    file_parts = snap.get("file_partitions", {})
-    specs = snap.get("partition_specs") or (
-        [{"spec_id": 0, "spec": [list(p) for p in snap["partition_spec"]]}]
-        if snap.get("partition_spec")
-        else []
+    ranges = [(key0, ">=", bounds.lo), (key0, "<=", bounds.hi)]
+    partitioned = snap.get("partition_specs") or snap.get("partition_spec")
+    plan = plan_files(
+        table,
+        snap["snapshot_id"],
+        ranges,
+        source if partitioned else None,
+        key_cols,
+        snap=snap,
+        build_index=False,
+        unstatted=key0,
     )
-    file_spec_ids = snap.get("file_spec_ids", {})
-    current_spec_id = snap.get(
-        "current_spec_id", max((s["spec_id"] for s in specs), default=0)
-    )
-    _source_values = _source_probe(source)
-
-    wanted_by_spec: dict[int, dict[int, set]] = {}
-    if file_parts and specs:
-        if snap.get("schemas"):
-            # tracked tables probe once per (transform, vintage type):
-            # bucket's hash is type-sensitive, so matching a widened
-            # file against only the source's rendering would wrongly
-            # carry it and duplicate the MATCHED row as an insert
-            wanted_by_spec = _merge_tracked_wanted_by_spec(
-                table,
-                snap["schemas"],
-                snap["current_schema_id"],
-                specs,
-                key_cols,
-                source,
-            )
-        else:
-            wanted_by_spec = _merge_wanted_by_spec(
-                specs, key_cols, _source_values
-            )
-    file_schemas = snap.get("file_schema_ids", {})
-
-    touched, carried, discovered = [], [], {}
-    for f in files:
-        # partition pruning first: exact-set membership beats ranges
-        tup = file_parts.get(f)
-        if tup is not None:
-            wanted = wanted_by_spec.get(file_spec_ids.get(f, current_spec_id), {})
-            if not _merge_tuple_matches(tup, wanted, file_schemas.get(f)):
-                carried.append(f)
-                continue
-        rng = stats.get(f, {}).get(key0)
-        if rng is None:
-            # footer fallback — resolve the CURRENT key column to the
-            # name the file was written under (pre-rename files)
+    touched, discovered = set(), {}
+    for f in plan.files:
+        if f in plan.unstatted:
+            # the current key column resolves to the name the file was
+            # written under (pre-rename files); discovery records only
+            # under the current name
             wname = _written_column_name(snap, f, key0)
             rng = (
                 _file_key_range(os.path.join(table.path, f), wname)
@@ -2194,16 +1895,16 @@ def _merge_prune(
             jr = _jsonable_range(rng) if wname == key0 else None
             if jr is not None:
                 discovered[f] = {key0: jr}
-        try:
-            intersects = (
-                rng is None
-                or bounds.lo is None
-                or (rng[0] <= bounds.hi and rng[1] >= bounds.lo)
-            )
-        except TypeError:  # incomparable recorded/live types: conservative
-            intersects = True
-        (touched if intersects else carried).append(f)
-    return touched, carried, discovered
+            if rng is not None and not all(
+                overlaps(op, lit, *rng) for _, op, lit in ranges
+            ):
+                continue
+        touched.add(f)
+    return (
+        [f for f in files if f in touched],
+        [f for f in files if f not in touched],
+        discovered,
+    )
 
 
 # ------------------------------------------------------------ schema evolution
@@ -3279,7 +2980,7 @@ def delete_where(
 
         b = pc.min_max(akeys[key_cols[0]])
         cand = _key_range_candidates(
-            snap, key_cols[0], b["min"].as_py(), b["max"].as_py()
+            table, snap, key_cols[0], b["min"].as_py(), b["max"].as_py()
         )
         n_hidden = (
             (
@@ -3298,25 +2999,23 @@ def delete_where(
     return table._commit(snap["files"], "delete", parent, extra=extra, ref=ref)
 
 
-def _key_range_candidates(snap: dict, key0: str, lo, hi) -> list[str]:
-    """Files whose recorded [min, max] on ``key0`` intersects the key
-    set's range ``[lo, hi]`` (``lo`` None: no non-null key, nothing
-    can match) — files without recorded stats conservatively count.
-    The same footerless-stats shape merge pruning uses, so a delete's
-    commit-time counting scan is delta-bounded, not table-bounded."""
+def _key_range_candidates(
+    table: SnapshotTable, snap: dict, key0: str, lo, hi
+) -> list[str]:
+    """Files whose recorded bounds on ``key0`` may hold a key in
+    ``[lo, hi]`` (``lo`` None: no non-null key, nothing can match) —
+    files without recorded stats count, so a delete's commit-time
+    counting scan is delta-bounded, not table-bounded. Like a merge, it
+    uses the sidecar only when one already exists."""
     if lo is None:
         return []
-    stats = snap.get("file_stats", {})
-    out = []
-    for f in snap["files"]:
-        rng = (stats.get(f) or {}).get(key0)
-        try:
-            hit = rng is None or (rng[0] <= hi and rng[1] >= lo)
-        except TypeError:  # incomparable recorded/live types: conservative
-            hit = True
-        if hit:
-            out.append(f)
-    return out
+    return plan_files(
+        table,
+        snap["snapshot_id"],
+        [(key0, ">=", lo), (key0, "<=", hi)],
+        snap=snap,
+        build_index=False,
+    ).files
 
 
 def delete_where_positional(
@@ -3385,9 +3084,7 @@ def read_with_deletes(
     equality-deleted keys (anti-join on the key columns); both delete
     sides are small and typically broadcastable. ``ref`` reads a
     branch head (e.g. to audit a staged delete)."""
-    if snapshot_id is not None and ref is not None:
-        raise ValueError("pass snapshot_id or ref, not both")
-    sid = snapshot_id if snapshot_id is not None else table.head(ref if ref is not None else MAIN)
+    sid = _scan_sid(table, snapshot_id, ref)
     if sid is None:
         raise SnapshotError(f"no committed snapshot at {table.path}")
     snap = table._load_snap(sid)
@@ -3566,13 +3263,7 @@ def read_with_lineage(
     """The table's VISIBLE rows (merge-on-read deletes applied) plus
     their stable ``_row_id`` — Iceberg v3's lineage read. Time travel
     and branch reads work like :func:`read_with_deletes`."""
-    if snapshot_id is not None and ref is not None:
-        raise ValueError("pass snapshot_id or ref, not both")
-    sid = (
-        snapshot_id
-        if snapshot_id is not None
-        else table.head(ref if ref is not None else MAIN)
-    )
+    sid = _scan_sid(table, snapshot_id, ref)
     if sid is None:
         raise SnapshotError(f"no committed snapshot at {table.path}")
     snap = table._load_snap(sid)
@@ -4040,6 +3731,51 @@ def update_partition_statistics(table: SnapshotTable, ref: str = MAIN) -> int:
     )
 
 
+def _scan_sid(table: SnapshotTable, snapshot_id: int | None, ref: str | None) -> int | None:
+    """The snapshot a read of ``snapshot_id`` or ``ref`` (default: main's
+    head) sees; None on a table with no commit."""
+    if snapshot_id is not None and ref is not None:
+        raise ValueError("pass snapshot_id or ref, not both")
+    if snapshot_id is not None:
+        return snapshot_id
+    return table.head(ref if ref is not None else MAIN)
+
+
+def _read_plan(table: SnapshotTable, sid: int, plan, exact) -> DataFrame:
+    """A scan plan's files as a DataFrame with the ``exact`` filter
+    applied (bounds and transforms are lossy). Schema-tracked tables
+    read id-resolved (renames and widenings apply), taking the files'
+    vintages from the sidecar rows when the sidecar planned; an empty
+    plan keeps the snapshot's resolved schema."""
+    from .plan_index import _fetch_current_rows
+
+    doc = plan.doc
+    if not plan.files:
+        snap = plan.snap or table._load_snap(sid)
+        return table._resolve_files(snap, snap["files"]).limit(0)
+    if doc is None:
+        df = table._resolve_files(plan.snap, plan.files)
+    elif doc.get("schema_tracked") and doc.get("schemas"):
+        rows = _fetch_current_rows(table.path, doc, set(plan.files))
+        resolved = (
+            {
+                "schemas": doc["schemas"],
+                "current_schema_id": doc["current_schema_id"],
+                "file_schema_ids": {
+                    p: r["schema_id"]
+                    for p, r in rows.items()
+                    if r["schema_id"] is not None
+                },
+            }
+            if rows is not None
+            else table._load_snap(sid)  # the index raced away mid-plan
+        )
+        df = table._resolve_files(resolved, plan.files)
+    else:
+        df = table._read_files(plan.files)
+    return df if exact is None else df.filter(exact)
+
+
 def planned_scan(
     table: SnapshotTable,
     col: str,
@@ -4052,80 +3788,18 @@ def planned_scan(
     [min, max] for ``col`` intersects [lo, hi], then apply the exact
     filter. Returns (DataFrame, plan summary) so callers — and tests —
     can see how many files the predicate pruned. Files without recorded
-    stats are conservatively scanned. ``ref`` plans against a branch
-    head (snapshot_id and ref are mutually exclusive)."""
+    stats, or whose stats do not compare with the literals, are
+    conservatively scanned. ``ref`` plans against a branch head
+    (snapshot_id and ref are mutually exclusive)."""
     from pyspark.sql import functions as F
 
-    from .plan_index import plan_paths
-
-    if snapshot_id is not None and ref is not None:
-        raise ValueError("pass snapshot_id or ref, not both")
-    sid = snapshot_id if snapshot_id is not None else table.head(ref if ref is not None else MAIN)
-    # columnar fast path: plan against the parquet sidecar with the
-    # keep-predicate pushed into the scan — driver memory is
-    # O(matching files), not O(table files) Python dicts. The dict
-    # path below stays as the exact fallback (unindexable stat types,
-    # incomparable literals).
-    res = plan_paths(
-        table.path, sid, [(col, ">=", lo), (col, "<=", hi)]
-    )
-    if res is not None:
-        chosen, summary = res
-        if not summary.pop("has_file_stats"):
-            raise SnapshotError(
-                "no file_stats in this snapshot; run record_file_stats "
-                "first"
-            )
-        if not chosen:  # predicate excludes every file: empty, schema kept
-            # schema must stay the resolved current shape, exactly like
-            # the dict path — the all-paths list is only materialized
-            # on this rare branch
-            snap = table._load_snap(sid)
-            if not snap["files"]:
-                raise SnapshotError("snapshot has no data files")
-            return table._resolve_files(snap, snap["files"]).limit(0), summary
-        from .plan_index import _fetch_current_rows, ensure_plan_index
-
-        doc = ensure_plan_index(table.path, sid)
-        if doc is not None and doc.get("schema_tracked") and doc.get("schemas"):
-            # id-resolved read: per-vintage casts/renames apply; the
-            # chosen files' schema ids come from the index rows,
-            # never the resolved dict
-            rows = _fetch_current_rows(table.path, doc, set(chosen))
-            if rows is not None:
-                mini = {
-                    "schemas": doc["schemas"],
-                    "current_schema_id": doc["current_schema_id"],
-                    "file_schema_ids": {
-                        p: r["schema_id"]
-                        for p, r in rows.items()
-                        if r["schema_id"] is not None
-                    },
-                }
-                df = table._resolve_files(mini, chosen).filter(
-                    F.col(col).between(lo, hi)
-                )
-                return df, summary
-            # index raced away mid-plan: fall through to the dict path
-        elif doc is not None:
-            df = table._read_files(chosen).filter(F.col(col).between(lo, hi))
-            return df, summary
-    snap = table._load_snap(sid)
-    stats = snap.get("file_stats")
-    if stats is None:
+    sid = _scan_sid(table, snapshot_id, ref)
+    plan = plan_files(table, sid, [(col, ">=", lo), (col, "<=", hi)])
+    if not plan.has_file_stats:
         raise SnapshotError(
             "no file_stats in this snapshot; run record_file_stats first"
         )
-    chosen = []
-    for f in snap["files"]:
-        rng = stats.get(f, {}).get(col)
-        if rng is None or (rng[0] <= hi and rng[1] >= lo):
-            chosen.append(f)
-    summary = {"total_files": len(snap["files"]), "scanned_files": len(chosen)}
-    if not chosen:  # predicate excludes every file: empty, schema kept
-        return table._resolve_files(snap, snap["files"]).limit(0), summary
-    df = table._resolve_files(snap, chosen).filter(F.col(col).between(lo, hi))
-    return df, summary
+    return _read_plan(table, sid, plan, F.col(col).between(lo, hi)), plan.summary()
 
 
 # ------------------------------------------------------------ catalog tie-in
@@ -4517,13 +4191,7 @@ def metadata_count(
     `compact_deletes` first."""
     import pyarrow.parquet as pq
 
-    if snapshot_id is not None and ref is not None:
-        raise ValueError("pass snapshot_id or ref, not both")
-    sid = (
-        snapshot_id
-        if snapshot_id is not None
-        else table.head(ref if ref is not None else MAIN)
-    )
+    sid = _scan_sid(table, snapshot_id, ref)
     if sid is None:
         raise SnapshotError(f"no committed snapshot at {table.path}")
     snap = table._load_snap(sid)
@@ -4740,34 +4408,6 @@ def metadata_table(
 # pruning in planned_scan: range stats cannot prune bucket(N) layouts,
 # a recorded bucket value prunes a point lookup to 1/N of the files.
 
-_PARTITION_TRANSFORMS = ("identity", "day", "month", "hour", "bucket", "truncate")
-
-
-def _transform_col(col: str, transform: str):
-    """The Spark Column computing a transform's partition value (as a
-    string — manifest values survive JSON round-trips)."""
-    from pyspark.sql import functions as F
-
-    if transform == "identity":
-        return F.col(col).cast("string")
-    if transform == "day":
-        return F.date_format(col, "yyyy-MM-dd")
-    if transform == "month":
-        return F.date_format(col, "yyyy-MM")
-    if transform == "hour":
-        return F.date_format(col, "yyyy-MM-dd-HH")
-    if transform.startswith("bucket["):
-        n = int(transform[len("bucket[") : -1])
-        return F.pmod(F.hash(F.col(col)), F.lit(n)).cast("string")
-    if transform.startswith("truncate["):
-        w = int(transform[len("truncate[") : -1])
-        return F.substring(F.col(col).cast("string"), 1, w)
-    raise ValueError(
-        f"unknown partition transform {transform!r}; expected one of "
-        f"{_PARTITION_TRANSFORMS} (bucket[N] / truncate[W] parameterized)"
-    )
-
-
 def append_partitioned(
     table: SnapshotTable,
     df: DataFrame,
@@ -4793,7 +4433,7 @@ def append_partitioned(
     pcols = [f"_p{i}" for i in range(len(spec))]
     routed = df
     for pc, (col, transform) in zip(pcols, spec):
-        routed = routed.withColumn(pc, F.coalesce(_transform_col(col, transform), F.lit("null")))
+        routed = routed.withColumn(pc, F.coalesce(transform_col(col, transform), F.lit("null")))
     token = _uuid.uuid4().hex[:12]
     stage = os.path.join(table.path, f"_stage_{token}")
     routed.repartition(*[F.col(c) for c in pcols]).write.partitionBy(*pcols).parquet(stage)
@@ -4826,7 +4466,7 @@ def append_partitioned(
         # mixed-spec tables stay scannable and pruning matches each
         # file against ITS OWN spec (Iceberg's spec-id model)
         specs = [
-            {"spec_id": s["spec_id"], "spec": [list(p) for p in s["spec"]]}
+            {**s, "spec": [list(p) for p in s["spec"]]}
             for s in snap.get("partition_specs", [])
         ]
         if not specs and snap.get("partition_spec"):
@@ -4840,7 +4480,10 @@ def append_partitioned(
     match = next((s["spec_id"] for s in specs if s["spec"] == new_spec), None)
     if match is None:
         match = max((s["spec_id"] for s in specs), default=-1) + 1
-        specs = specs + [{"spec_id": match, "spec": new_spec}]
+        # the source columns' types the tuples were rendered at: pruning
+        # renders its probes at them without reading a data file
+        types = {c: df.schema[c].dataType.simpleString() for c, _ in spec if c in df.columns}
+        specs = specs + [{"spec_id": match, "spec": new_spec, "types": types}]
     extra = {
         "partition_spec": new_spec,
         "partition_specs": specs,
@@ -4850,101 +4493,6 @@ def append_partitioned(
         **table._pending_deletes(parent),
     }
     return table._commit(base_files + new_files, "append", parent, extra=extra, ref=ref)
-
-
-def _tracked_wanted_by_spec(
-    table: SnapshotTable,
-    schemas: list[dict],
-    current_schema_id: int,
-    specs: list[dict],
-    equals: dict[str, object],
-) -> dict | None:
-    """Per-VINTAGE partition probes for a schema-tracked table: bucket's
-    hash is type-sensitive, so a file written before a widening
-    recorded its tuple under the OLD type — one probe value per
-    (transform, vintage type) makes old and new files prune exactly.
-    Spec columns resolve through FIELD IDS (a renamed source column
-    still prunes); a vintage that lacks the field keeps its files
-    conservatively (rendered None). Returns {spec_id: {pos:
-    {"by_schema": {schema_id: rendered | None}}}}, or None when a
-    predicate column is not in the current schema."""
-    from pyspark.sql import functions as F
-
-    cur = _schema_by_id(schemas, current_schema_id)
-    id_by_cur_name = {f["name"]: f["id"] for f in cur["fields"]}
-    pred: dict[int, object] = {}
-    for name, v in equals.items():
-        fid = id_by_cur_name.get(name)
-        if fid is None:
-            return None  # unknown column: the exact filter will say so
-        pred[fid] = v
-    name_by_id = {f["id"]: f["name"] for f in cur["fields"]}
-
-    def _spec_fid(name: str) -> int | None:
-        # a spec records the column NAME as written at append time:
-        # prefer the current schema's owner, else the unique historical
-        # owner (ambiguity -> no pruning on this entry, conservative)
-        if name in id_by_cur_name:
-            return id_by_cur_name[name]
-        ids = {
-            f["id"] for s in schemas for f in s["fields"] if f["name"] == name
-        }
-        return next(iter(ids)) if len(ids) == 1 else None
-
-    probe_cache: dict[tuple, str] = {}
-
-    def _probe(col: str, transform: str, vtype: str, value) -> str:
-        key = (col, transform, vtype)
-        if key not in probe_cache:
-            row = (
-                table.spark.range(1)
-                .select(F.lit(value).cast(vtype).alias(col))
-                .select(
-                    F.coalesce(
-                        _transform_col(col, transform), F.lit("null")
-                    ).alias("v")
-                )
-                .first()
-            )
-            probe_cache[key] = row["v"]
-        return probe_cache[key]
-
-    wanted: dict[int, dict] = {}
-    for s in specs:
-        w = {}
-        for i, (name, transform) in enumerate(s["spec"]):
-            fid = _spec_fid(name)
-            if fid is None or fid not in pred:
-                continue
-            cur_name = name_by_id[fid]
-            by_schema = {}
-            for sc in schemas:
-                fld = next(
-                    (f for f in sc["fields"] if f["id"] == fid), None
-                )
-                by_schema[sc["schema_id"]] = (
-                    None
-                    if fld is None
-                    else _probe(cur_name, transform, fld["type"], pred[fid])
-                )
-            w[i] = {"by_schema": by_schema}
-        wanted[s["spec_id"]] = w
-    return wanted
-
-
-def _tuple_matches(tup, wanted: dict, fschema) -> bool:
-    """The dict planner's keep rule for one recorded tuple — plain
-    values for type-stable tables, per-vintage maps for tracked ones."""
-    for i, v in wanted.items():
-        if isinstance(v, dict):
-            pv = v["by_schema"].get(fschema)
-            if pv is None:  # vintage lacks the column: conservative
-                continue
-            if tup[i] != pv:
-                return False
-        elif tup[i] != v:
-            return False
-    return True
 
 
 def partition_pruned_scan(
@@ -4960,216 +4508,34 @@ def partition_pruned_scan(
     day() keeps the whole day, bucket() the whole bucket). Files
     without a recorded tuple (pre-partitioning commits) are scanned.
     Schema-tracked tables prune with per-vintage typed probes and read
-    id-resolved (renames and widenings apply transparently). ``ref``
-    plans against a branch head."""
+    id-resolved (renames and widenings apply transparently). The
+    summary's ``pruned_on`` shows the current spec's rendered value
+    sets. ``ref`` plans against a branch head."""
     from pyspark.sql import functions as F
 
-    if snapshot_id is not None and ref is not None:
-        raise ValueError("pass snapshot_id or ref, not both")
-    sid = snapshot_id if snapshot_id is not None else table.head(ref if ref is not None else MAIN)
-
-    def _wanted_by_spec(specs, schema):
-        # transform each predicate constant EXACTLY as the write path
-        # did: one metadata-sized local job per distinct (col,
-        # transform) across ALL specs — pre-evolution files prune under
-        # THEIR spec whenever it covers a predicate column, and scan
-        # conservatively otherwise
-        probe = table.spark.createDataFrame(
-            [tuple(equals.get(f.name) for f in schema.fields)], schema
+    sid = _scan_sid(table, snapshot_id, ref)
+    plan = plan_files(
+        table, sid, values={c: [v] for c, v in equals.items()}, cols=list(equals)
+    )
+    if plan.wanted is None:
+        raise SnapshotError(
+            "no partition_spec in this snapshot; write with append_partitioned first"
         )
-        xform_cache: dict[tuple[str, str], str] = {}
-
-        def _probe_value(col: str, transform: str) -> str:
-            key = (col, transform)
-            if key not in xform_cache:
-                xform_cache[key] = probe.select(
-                    F.coalesce(
-                        _transform_col(col, transform), F.lit("null")
-                    ).alias("v")
-                ).first()["v"]
-            return xform_cache[key]
-
-        return {
-            s["spec_id"]: {
-                i: _probe_value(col, transform)
-                for i, (col, transform) in enumerate(s["spec"])
-                if col in equals
-            }
-            for s in specs
-        }
-
     exact = None
     for col, value in equals.items():
         cond = F.col(col) == F.lit(value)
         exact = cond if exact is None else exact & cond
-
-    # columnar fast path: the sidecar carries the recorded tuples and
-    # spec definitions, so the plan is one pushdown parquet read —
-    # O(matching files) driver memory, no resolved-dict materialization
-    from .plan_index import (
-        ensure_plan_index,
-        first_path,
-        plan_partition_paths,
-    )
-
-    pmeta = ensure_plan_index(table.path, sid)
-    wanted_by_spec = None
-    tracked = bool(pmeta and pmeta.get("schema_tracked"))
-    if pmeta is not None and pmeta.get("partition_specs"):
-        specs = pmeta["partition_specs"]["specs"]
-        current_spec_id = pmeta["partition_specs"]["current_spec_id"]
-        schema = None
-        if tracked:
-            # per-vintage typed probes from the index's schema log —
-            # bucket hashes match each file's recorded vintage
-            if pmeta.get("schemas"):
-                wanted_by_spec = _tracked_wanted_by_spec(
-                    table,
-                    pmeta["schemas"],
-                    pmeta["current_schema_id"],
-                    specs,
-                    equals,
-                )
-        else:
-            # the probe schema comes from ONE anchor file instead of
-            # the O(files) mergeSchema union: untracked tables must be
-            # type-stable across files anyway (the recorded-tuple
-            # comparison assumes it), and a predicate column the
-            # anchor lacks falls back to the dict path's union schema
-            anchor = first_path(table.path, sid)
-            schema = (
-                table._read_files([anchor]).schema
-                if anchor is not None
-                else None
-            )
-            if schema is not None and all(c in schema.names for c in equals):
-                wanted_by_spec = _wanted_by_spec(specs, schema)
-        if wanted_by_spec is not None:
-            res = plan_partition_paths(table.path, sid, wanted_by_spec)
-            if res is not None:
-                chosen, total = res
-                cur_spec = next(
-                    s["spec"]
-                    for s in specs
-                    if s["spec_id"] == current_spec_id
-                )
-
-                def _shown(v):
-                    # tracked probes render per vintage: show the
-                    # current schema's rendering in the summary
-                    if isinstance(v, dict):
-                        return v["by_schema"].get(
-                            pmeta["current_schema_id"]
-                        )
-                    return v
-
-                summary = {
-                    "total_files": total,
-                    "scanned_files": len(chosen),
-                    "pruned_on": {
-                        cur_spec[i][0]: _shown(v)
-                        for i, v in wanted_by_spec.get(
-                            current_spec_id, {}
-                        ).items()
-                    },
-                    "columnar": True,
-                }
-                if not chosen:
-                    # schema stays the full union like the dict path
-                    # (additive drift) — the O(files) path list is
-                    # paid only on this empty-match branch
-                    snap = table._load_snap(sid)
-                    if not snap["files"]:
-                        raise SnapshotError("snapshot has no data files")
-                    return (
-                        table._resolve_files(snap, snap["files"]).limit(0),
-                        summary,
-                    )
-                if tracked:
-                    # id-resolved read: per-vintage casts/renames apply;
-                    # the chosen files' schema ids come from the index
-                    # rows, never the resolved dict
-                    from .plan_index import _fetch_current_rows
-
-                    rows = _fetch_current_rows(
-                        table.path, pmeta, set(chosen)
-                    )
-                    if rows is not None:
-                        mini = {
-                            "schemas": pmeta["schemas"],
-                            "current_schema_id": pmeta[
-                                "current_schema_id"
-                            ],
-                            "file_schema_ids": {
-                                p: r["schema_id"]
-                                for p, r in rows.items()
-                                if r["schema_id"] is not None
-                            },
-                        }
-                        df = table._resolve_files(mini, chosen)
-                        return (
-                            df.filter(exact) if exact is not None else df
-                        ), summary
-                    # index raced away mid-plan: fall through to dict
-                else:
-                    df = table._read_files(chosen)
-                    return (
-                        df.filter(exact) if exact is not None else df
-                    ), summary
-
-    snap = table._load_snap(sid)
-    spec = snap.get("partition_spec")
-    if spec is None:
-        raise SnapshotError(
-            "no partition_spec in this snapshot; write with append_partitioned first"
-        )
-    file_parts = snap.get("file_partitions", {})
-    specs = snap.get("partition_specs") or [{"spec_id": 0, "spec": spec}]
-    file_spec_ids = snap.get("file_spec_ids", {})
-    current_spec_id = snap.get(
-        "current_spec_id", max(s["spec_id"] for s in specs)
-    )
-    file_schema_ids = snap.get("file_schema_ids", {})
-    current_schema_id = snap.get("current_schema_id")
-    if wanted_by_spec is None:  # not computed by the columnar attempt
-        if snap.get("schemas"):
-            wanted_by_spec = _tracked_wanted_by_spec(
-                table, snap["schemas"], current_schema_id, specs, equals
-            ) or {s["spec_id"]: {} for s in specs}
-        else:
-            wanted_by_spec = _wanted_by_spec(
-                specs, table._read_files(snap["files"]).schema
-            )
-    chosen = []
-    for f in snap["files"]:
-        tup = file_parts.get(f)
-        if tup is None:
-            chosen.append(f)  # unpartitioned commit: conservative
-            continue
-        wanted = wanted_by_spec.get(
-            file_spec_ids.get(f, current_spec_id), {}
-        )
-        if _tuple_matches(tup, wanted, file_schema_ids.get(f, current_schema_id)):
-            chosen.append(f)
-    cur_spec = next(s["spec"] for s in specs if s["spec_id"] == current_spec_id)
-
-    def _shown_d(v):
-        if isinstance(v, dict):
-            return v["by_schema"].get(current_schema_id)
-        return v
-
+    cur = plan.parts["current_spec_id"]
+    spec = next(s["spec"] for s in plan.parts["specs"] if s["spec_id"] == cur)
+    vintage = (plan.doc or plan.snap).get("current_schema_id")
     summary = {
-        "total_files": len(snap["files"]),
-        "scanned_files": len(chosen),
+        **plan.summary(),
         "pruned_on": {
-            cur_spec[i][0]: _shown_d(v)
-            for i, v in wanted_by_spec.get(current_spec_id, {}).items()
+            spec[i][0]: sorted(by_vintage.get(vintage) or ())
+            for i, by_vintage in plan.wanted[cur].items()
         },
     }
-    if not chosen:
-        return table._resolve_files(snap, snap["files"]).limit(0), summary
-    df = table._resolve_files(snap, chosen)
-    return (df.filter(exact) if exact is not None else df), summary
+    return _read_plan(table, sid, plan, exact), summary
 
 
 def vacuum_orphans(table: SnapshotTable, min_age_sec: float = 3600.0) -> dict:

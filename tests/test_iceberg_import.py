@@ -1283,11 +1283,9 @@ def test_foreign_date_bounds_prune_against_date_literals(spark, tmp_path):
     got = it.read(filters=[("o_odate", "=", lo_d)])
     assert got.count() == orders.filter(F.col("o_odate") == lo_d).count()
     # an unorderable literal keeps the file rather than raising
-    from iceberg_catalog_migrator_spark.sources.iceberg_read import (
-        _overlaps,
-    )
+    from iceberg_catalog_migrator_spark.sources.pruning import overlaps
 
-    assert _overlaps("<", "not-a-date", datetime.date(2020, 1, 1), None)
+    assert overlaps("<", "not-a-date", datetime.date(2020, 1, 1), None)
 
 
 def test_publish_wap_cycle_and_ref_coverage(spark, tmp_path):

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import iceberg_catalog_migrator_spark.sources.snapshots as S
+from iceberg_catalog_migrator_spark.sources import pruning
 from iceberg_catalog_migrator_spark.sources.plan_index import (
     ensure_plan_index,
     write_plan_index,
@@ -26,7 +27,6 @@ from iceberg_catalog_migrator_spark.sources.snapshots import (
     MergeClause,
     SnapshotTable,
     _merge_prune,
-    _merge_prune_columnar,
     merge_into,
     merge_upsert,
     record_file_stats,
@@ -47,6 +47,18 @@ def indexed_table(spark, tmp_path):
 
 def _bounds(lo, hi):
     return SimpleNamespace(lo=lo, hi=hi, n=1)
+
+
+def _sidecar_prune(monkeypatch, *args):
+    """``_merge_prune`` with the manifest dict loop forbidden: what it
+    returns is the sidecar's answer."""
+
+    def no_dict(*a, **k):
+        raise AssertionError("the sidecar did not answer")
+
+    with monkeypatch.context() as m:
+        m.setattr(pruning, "_plan_dict", no_dict)
+        return _merge_prune(*args)
 
 
 def test_prune_never_reads_dict_stats_or_footers(indexed_table, spark, monkeypatch):
@@ -72,7 +84,7 @@ def test_prune_never_reads_dict_stats_or_footers(indexed_table, spark, monkeypat
     assert res[2] == {}  # nothing discovered: stats served by the index
 
 
-def test_columnar_prune_equals_dict_prune(indexed_table, spark):
+def test_columnar_prune_equals_dict_prune(indexed_table, spark, monkeypatch):
     t = indexed_table
     sid = t.current_snapshot_id()
     snap = t._load_snap(sid)
@@ -80,7 +92,7 @@ def test_columnar_prune_equals_dict_prune(indexed_table, spark):
         F.col("id").alias("k"), F.lit(1).alias("v")
     )
     b = _bounds(10_000, 10_019)
-    col = _merge_prune_columnar(t, snap, src, ["k"], b)
+    col = _sidecar_prune(monkeypatch, t, snap, src, ["k"], b)
     assert col is not None
     import iceberg_catalog_migrator_spark.sources.plan_index as P
 
@@ -95,7 +107,7 @@ def test_columnar_prune_equals_dict_prune(indexed_table, spark):
     assert col[2] == dict_res[2]
 
 
-def test_columnar_prune_with_partitions_and_footer_fallback(spark, tmp_path):
+def test_columnar_prune_with_partitions_and_footer_fallback(spark, tmp_path, monkeypatch):
     """All three stages at once: bucket-partitioned files prune by the
     source's transformed sets, unstatted files pay exactly one footer
     read and ride the discovered map — identical to the dict loop."""
@@ -124,7 +136,7 @@ def test_columnar_prune_with_partitions_and_footer_fallback(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") % 16).alias("b")
     )
     b = _bounds(100, 139)
-    col = _merge_prune_columnar(t, snap, src, ["b", "k"], b)
+    col = _sidecar_prune(monkeypatch, t, snap, src, ["b", "k"], b)
     assert col is not None
     import iceberg_catalog_migrator_spark.sources.plan_index as P
 
@@ -155,7 +167,7 @@ def test_merge_keeps_zero_footer_reads_via_index(indexed_table, spark, monkeypat
     goes through the index (not the dict loop)."""
     t = indexed_table
     used = {"columnar": 0}
-    real = S._merge_prune_columnar
+    real = pruning._plan_sidecar
 
     def spy(*a, **k):
         out = real(*a, **k)
@@ -163,7 +175,7 @@ def test_merge_keeps_zero_footer_reads_via_index(indexed_table, spark, monkeypat
             used["columnar"] += 1
         return out
 
-    monkeypatch.setattr(S, "_merge_prune_columnar", spy)
+    monkeypatch.setattr(pruning, "_plan_sidecar", spy)
 
     def boom(path, col):
         raise AssertionError("footer read in steady-state merge")
@@ -181,7 +193,7 @@ def test_merge_keeps_zero_footer_reads_via_index(indexed_table, spark, monkeypat
     assert got.count() == 10
 
 
-def test_prune_memory_order_under_dict_at_50k(tmp_path):
+def test_prune_memory_order_under_dict_at_50k(tmp_path, monkeypatch):
     """tracemalloc pin (memory only): pruning a one-file merge window
     over a 50k-file indexed snapshot peaks an order of magnitude under
     json-loading the resolved dict — the prune holds matching rows and
@@ -200,7 +212,7 @@ def test_prune_memory_order_under_dict_at_50k(tmp_path):
     dummy = SimpleNamespace(path=root)
     lo, hi = (n // 2) * 100, (n // 2) * 100 + 50
     tracemalloc.start()
-    res = _merge_prune_columnar(dummy, snap, None, ["k"], _bounds(lo, hi))
+    res = _sidecar_prune(monkeypatch, dummy, snap, None, ["k"], _bounds(lo, hi))
     _, prune_peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     assert res is not None
@@ -221,7 +233,7 @@ def test_merge_widened_bucket_tracked_updates_matched_rows(spark, tmp_path):
     partition probe renders only the source's (wide) type, wrongly
     carries the old file, and the MATCHED row duplicates as an insert
     — the probe must render one value per schema vintage, exactly
-    like the scan path's _tracked_wanted_by_spec."""
+    like the scan path's probes."""
     from iceberg_catalog_migrator_spark.sources.snapshots import (
         append_partitioned,
         read_with_deletes,
@@ -249,7 +261,7 @@ def test_merge_widened_bucket_tracked_updates_matched_rows(spark, tmp_path):
     assert read_with_deletes(t).count() == 100
 
 
-def test_merge_tracked_columnar_equals_dict(spark, tmp_path):
+def test_merge_tracked_columnar_equals_dict(spark, tmp_path, monkeypatch):
     """With the index built, a tracked table's merge prune goes
     COLUMNAR and chooses exactly the dict loop's files — multi-vintage
     bucket probes, renamed stats fallback and all."""
@@ -284,7 +296,7 @@ def test_merge_tracked_columnar_equals_dict(spark, tmp_path):
         [(5, 99.0), (2_500, 98.0)], "k bigint, v double"
     )
     b = _bounds(5, 2_500)
-    col = _merge_prune_columnar(t, snap, src, ["k"], b)
+    col = _sidecar_prune(monkeypatch, t, snap, src, ["k"], b)
     assert col is not None, "tracked tables must plan columnar now"
     import iceberg_catalog_migrator_spark.sources.plan_index as P
 
@@ -307,7 +319,7 @@ def test_merge_tracked_columnar_equals_dict(spark, tmp_path):
 
 
 @pytest.mark.parametrize("evolve", ["rename", "widen_then_rename"])
-def test_merge_tracked_evolution_matrix(spark, tmp_path, evolve):
+def test_merge_tracked_evolution_matrix(spark, tmp_path, evolve, monkeypatch):
     """Columnar == dict across the evolution shapes that bend the
     probes: renamed merge keys resolve the spec's recorded (old)
     column name through field ids; widened vintages probe per type;
@@ -361,7 +373,7 @@ def test_merge_tracked_evolution_matrix(spark, tmp_path, evolve):
         [(7, 99.0), (1_200, 98.0), (1_510, 97.0)], f"key {ktype}, v double"
     )
     b = _bounds(7, 1_510)
-    col = _merge_prune_columnar(t, snap, src, ["key"], b)
+    col = _sidecar_prune(monkeypatch, t, snap, src, ["key"], b)
     assert col is not None
     import iceberg_catalog_migrator_spark.sources.plan_index as P
 

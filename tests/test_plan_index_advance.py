@@ -604,11 +604,11 @@ def test_advance_widens_part_k_for_longer_tuples(tmp_path):
     assert doc is not None
     assert doc["partition_specs"]["max_k"] >= 2
     # the 2-tuple file matches the spec-7 probe and MUST be kept
-    res = plan_partition_paths(root, 2, {7: {0: "x", 1: "z"}})
+    res = plan_partition_paths(root, 2, {7: {0: {None: {"x"}}, 1: {None: {"z"}}}})
     assert res is not None
     assert "data/f3.parquet" in res[0]
     # and a non-matching probe still prunes it
-    res2 = plan_partition_paths(root, 2, {7: {0: "x", 1: "QQ"}})
+    res2 = plan_partition_paths(root, 2, {7: {0: {None: {"x"}}, 1: {None: {"QQ"}}}})
     assert "data/f3.parquet" not in res2[0]
 
 
@@ -863,7 +863,12 @@ def test_advance_chain_with_evolution_equals_full_rebuild(data):
                 label=f"probe{sid}",
             )
             v = data.draw(st.sampled_from(vals), label=f"probeval{sid}")
-            wanted = {pid: {0: v} for pid in probe_ids}
+            # the value set applies to every vintage in the state
+            vintages = {d["schema"] for d in state.values()} | {None}
+            wanted = {
+                pid: {0: dict.fromkeys(vintages, frozenset([v]))}
+                for pid in probe_ids
+            }
             res = _ppp(root, sid, wanted)
             assert res is not None
             expected = sorted(
