@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from iceberg_catalog_migrator_spark.queries import all_queries
-from iceberg_catalog_migrator_spark.queries.registry import FIXTURES
+from iceberg_catalog_migrator_spark.queries.registry import CACHE_STATS, FIXTURES
 from iceberg_catalog_migrator_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -211,6 +211,11 @@ def emit(
         "load": load1,
         "calibration": CALIBRATION,
         "idle_floor_s_per_q": round(idle_floor, 3),
+        # fixture and stage cache counters (local detail only)
+        "caches": {
+            name: dict(stats, build_s=round(stats["build_s"], 3))
+            for name, stats in sorted(CACHE_STATS.items())
+        },
     }
     if errors:
         full["errors"] = errors
@@ -229,6 +234,7 @@ def emit(
 
     line = dict(full, queries={}, detail="BENCH.local.json")
     line.pop("scale_growth", None)
+    line.pop("caches")
     # stdout carries the two scalars only (drop any error text)
     line["calibration"] = {
         k: v for k, v in CALIBRATION.items() if k != "error"

@@ -79,6 +79,7 @@ class CatalogMigrator:
         self._result = CatalogMigrationResult()
         self._lock = Lock()
         self._processed_namespaces: set[Namespace] = set()
+        self._namespace_latches: dict[Namespace, Lock] = {}
 
     # -- discovery (O2-O4) -------------------------------------------------
     def _all_namespaces(self) -> list[Namespace]:
@@ -126,20 +127,26 @@ class CatalogMigrator:
     # -- namespace auto-create (O8) -----------------------------------------
     def _create_namespaces_if_missing(self, namespace: Namespace) -> None:
         """Prefix expansion: for a.b.c create a, a.b, a.b.c on the target;
-        memoized; AlreadyExists swallowed (``CatalogMigrator.java:179-196``)."""
+        memoized; AlreadyExists swallowed (``CatalogMigrator.java:179-196``).
+        Each prefix has a once-latch, so pool threads create it once: the
+        first caller creates while the others wait, and a create that
+        raises anything but a CatalogError leaves the prefix to the next."""
         for depth in range(1, len(namespace) + 1):
             prefix = namespace[:depth]
-            if prefix in self._processed_namespaces:
-                continue
-            try:
-                self.target_catalog.create_namespace(prefix)
-            except CatalogError as ex:
-                LOG.debug(
-                    "%s. Ignoring the error as forcefully creating the namespace "
-                    "even if it exists.",
-                    ex,
-                )
-            self._processed_namespaces.add(prefix)
+            with self._lock:
+                latch = self._namespace_latches.setdefault(prefix, Lock())
+            with latch:
+                if prefix in self._processed_namespaces:
+                    continue
+                try:
+                    self.target_catalog.create_namespace(prefix)
+                except CatalogError as ex:
+                    LOG.debug(
+                        "%s. Ignoring the error as forcefully creating the namespace "
+                        "even if it exists.",
+                        ex,
+                    )
+                self._processed_namespaces.add(prefix)
 
     # -- register / migrate one table (O9-O11) ------------------------------
     def register_table(self, identifier: TableIdentifier) -> "CatalogMigrator":

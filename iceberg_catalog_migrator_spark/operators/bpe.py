@@ -54,14 +54,13 @@ operator family is mandated by the analytics-engine brief.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.registry import register_query
+from ..queries.registry import register_query, register_stage
 from ..sources import load_table
 
 EOW = "</w>"
@@ -272,20 +271,12 @@ w{k} AS MATERIALIZED (
     return "WITH " + ",\n".join(parts)
 
 
-# merges memo: training is deterministic per corpus, so one process
-# (the driver's correctness run, the bench) trains once and all three
-# registered queries share the result
-_MERGE_CACHE: dict[str, list[BpeMerge]] = {}
-
-
+# a registered stage: training is deterministic per corpus, so a
+# session trains once and all three registered queries share the result
+@register_stage("bpe_merges")
 def corpus_merges(spark: SparkSession, sf_dir: str) -> list[BpeMerge]:
-    key = os.path.abspath(sf_dir)
-    if key not in _MERGE_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _MERGE_CACHE[key] = train_bpe(
-            word_frequencies(docs), N_MERGES, strict=True
-        )
-    return _MERGE_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return train_bpe(word_frequencies(docs), N_MERGES, strict=True)
 
 
 # ------------------------------------------------------------ queries

@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.registry import register_fixture, register_query
+from ..queries.registry import register_fixture, register_query, register_stage
 from ..sources import load_table
 from .hashing import (
     LSH_BANDS,
@@ -218,38 +218,21 @@ def _candidates_from_shingles(shingles: DataFrame) -> DataFrame:
     )
 
 
-# The candidate-pair stage feeds four queries (LSH listing, Jaccard
-# re-rank, connected components, filtered corpus). A production pipeline
-# materializes it once at the stage boundary; the in-process analogue is
-# one persisted DataFrame per (application, sf_dir). Keyed by
-# applicationId so a restarted session recomputes instead of touching
-# another session's cache blocks.
-_CANDIDATES_CACHE: dict[tuple[str, str], DataFrame] = {}
-# The shingle table is likewise a shared stage boundary (candidates,
-# Jaccard re-rank, and containment re-rank all read it). One persisted
-# frame per (application, sf_dir) keeps repeated queries from stacking
-# fresh persists AND makes every consumer's physical plan build on the
-# same cached relation — plan-shape tests stay deterministic regardless
-# of which query ran first.
-_SHINGLES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The shingle table and the candidate pairs are shared stage
+# boundaries: shingles feed the candidates, the Jaccard re-rank and the
+# containment re-rank; candidates feed the LSH listing, the re-rank,
+# connected components and the filtered corpus. A production pipeline
+# materializes each once; here each is one persisted registered stage,
+# so repeated queries neither recompute nor stack fresh persists, and
+# every consumer's physical plan builds on the same cached relation.
+@register_stage("dedup_shingles")
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLES_CACHE.get(key)
-    if cached is None:
-        cached = _shingles(_corpus(spark, sf_dir)).persist()
-        _SHINGLES_CACHE[key] = cached
-    return cached
+    return _shingles(_corpus(spark, sf_dir)).persist()
 
 
+@register_stage("dedup_candidates")
 def _candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CANDIDATES_CACHE.get(key)
-    if cached is None:
-        cached = _candidates_from_shingles(_shingles_cached(spark, sf_dir)).persist()
-        _CANDIDATES_CACHE[key] = cached
-    return cached
+    return _candidates_from_shingles(_shingles_cached(spark, sf_dir)).persist()
 
 
 # ------------------------------------------------------------- queries
@@ -283,9 +266,10 @@ def dedup_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _candidates(spark, sf_dir)
 
 
-@register_query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
+# The exact re-rank input shared by the Jaccard and containment
+# queries: per LSH candidate pair, the shared-shingle count and both
+# docs' shingle counts.
+_OVERLAPS_SQL = f"""
     WITH cand AS ({_CANDIDATES_SQL}),
     sh AS ({_SHINGLE_SQL}),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -296,16 +280,11 @@ def dedup_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
       GROUP BY c.doc_a, c.doc_b
     )
-    SELECT i.doc_a, i.doc_b,
-           ROUND(CAST(i.n_common AS DOUBLE) / (za.n + zb.n - i.n_common), 6) AS jaccard
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.doc_a
-    JOIN sizes zb ON zb.doc_id = i.doc_b
-    WHERE CAST(i.n_common AS DOUBLE) / (za.n + zb.n - i.n_common) >= 0.5
-    """,
-    description="exact shingle-Jaccard re-rank of LSH candidates (never O(n²): pairwise work only on collisions)",
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+"""
+
+
+def _candidate_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, n_common, na, nb) over the LSH candidates."""
     # shingles and candidate pairs both come from the shared
     # materialized stages (the in-process analogue of materializing
     # both tables, which is what a 100 TB pipeline would do between
@@ -329,12 +308,27 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return inter.join(za, "doc_a").join(zb, "doc_b")
+
+
+@register_query(
+    "dedup_ngram_jaccard",
+    oracle=_OVERLAPS_SQL + f"""
+    SELECT i.doc_a, i.doc_b,
+           ROUND(CAST(i.n_common AS DOUBLE) / (za.n + zb.n - i.n_common), 6) AS jaccard
+    FROM inter i
+    JOIN sizes za ON za.doc_id = i.doc_a
+    JOIN sizes zb ON zb.doc_id = i.doc_b
+    WHERE CAST(i.n_common AS DOUBLE) / (za.n + zb.n - i.n_common) >= 0.5
+    """,
+    description="exact shingle-Jaccard re-rank of LSH candidates (never O(n²): pairwise work only on collisions)",
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("n_common").cast("double") / (
         F.col("na") + F.col("nb") - F.col("n_common")
     )
     return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
+        _candidate_overlaps(spark, sf_dir)
         .filter(jac >= 0.5)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -342,17 +336,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register_query(
     "dedup_containment_pairs",
-    oracle=f"""
-    WITH cand AS ({_CANDIDATES_SQL}),
-    sh AS ({_SHINGLE_SQL}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-      FROM cand c
-      JOIN sh sa ON sa.doc_id = c.doc_a
-      JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-      GROUP BY c.doc_a, c.doc_b
-    )
+    oracle=_OVERLAPS_SQL + f"""
     SELECT doc_a, doc_b, containment FROM (
       SELECT i.doc_a, i.doc_b,
              ROUND(CAST(i.n_common AS DOUBLE)
@@ -381,24 +365,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (not containment) level — a tiny doc inside a huge one may not
     collide; a dedicated containment sketch (e.g. bottom-k of the
     small side) would recover those and is the scale follow-up."""
-    sh = _shingles_cached(spark, sf_dir)
-    cand = _candidates(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    sb = sb.join(cand.select("doc_b").distinct(), "doc_b", "leftsemi")
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     cont = F.col("n_common").cast("double") / F.least("na", "nb")
     return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
+        _candidate_overlaps(spark, sf_dir)
         .filter(F.round(cont, 6) >= CONTAINMENT_MIN)
         .select("doc_a", "doc_b", F.round(cont, 6).alias("containment"))
     )
@@ -644,15 +613,6 @@ _CC_ORACLE = f"""
     """
 
 
-# Labels are the shared stage between dedup_connected_components and
-# dedup_filtered_corpus: both queries need candidates → clusters, and a
-# real pipeline would materialize that boundary once. The in-process
-# analogue is caching the checkpointed label DataFrame per (application,
-# sf_dir) — the second query reuses it instead of re-running LSH + the
-# propagation loop. Keyed by applicationId so a restarted session never
-# sees another session's (now-invalid) checkpoint blocks.
-_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # Round bound for min-label propagation; pointer jumping doubles reach
 # per round, so 50 covers diameters up to ~2^50. If somehow exceeded,
 # the loop falls back to small-star/large-star contraction (below),
@@ -829,6 +789,7 @@ def _star_contract_labels(edges: DataFrame, max_iters: int = 200) -> DataFrame:
     return members.unionByName(centers)
 
 
+@register_stage("dedup_component_labels")
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse candidate pairs into duplicate clusters: every doc that
     appears in a candidate pair gets its component's minimum doc_id as
@@ -838,11 +799,11 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(log diameter) rounds); if the CC_MAX_ROUNDS bound is ever hit,
     the small-star/large-star contraction — convergent for any graph —
     finishes the job instead of aborting. Same labels either way.
+
+    A registered stage: connected components and the filtered corpus
+    both read these labels, so the second reuses them instead of
+    re-running LSH and the propagation loop.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LABELS_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = _candidates(spark, sf_dir)
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -856,7 +817,6 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = _star_contract_labels(edges)
     out = labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("component"))
     edges.unpersist()
-    _LABELS_CACHE[key] = out
     return out
 
 @register_query(
@@ -1389,7 +1349,6 @@ def sample_leakage_guarded_splits(spark: SparkSession, sf_dir: str) -> DataFrame
 # operational shape of dedup_incremental_delta_vs_corpus: the delta
 # boundary is the table's own commit history instead of an id-range
 # convention.
-_SNAP_DELTA_CAND_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 @register_fixture("documents_corpus_crawl")
@@ -1400,6 +1359,34 @@ def _corpus_crawl_docs(spark: SparkSession, sf_dir: str, root: str) -> None:
     full = _corpus(spark, sf_dir)
     tbl.append(full.filter(F.col("doc_id") < VARIANT_OFFSET))  # the corpus
     tbl.append(full.filter(F.col("doc_id") >= VARIANT_OFFSET))  # the crawl
+
+
+@register_stage("dedup_snapshot_delta_candidates")
+def _snap_delta_candidates(
+    spark: SparkSession, sf_dir: str, *, delta_sh: DataFrame, corpus_sh: DataFrame
+) -> DataFrame:
+    delta_b = _band_buckets(_signatures(delta_sh))
+    corpus_b = _band_buckets(_signatures(corpus_sh))
+    # honest join strategy: in this fixture the delta is ~half the
+    # corpus, and a real nightly crawl can be arbitrarily large —
+    # so the band join SHUFFLES on (band, key) and only the
+    # genuinely bounded frames below (candidate pairs, per-doc
+    # sizes of candidate docs) get broadcast hints. AQE may still
+    # broadcast a small delta at runtime; we don't force it.
+    return (
+        corpus_b.alias("c")
+        .join(
+            delta_b.alias("d"),
+            (F.col("d.band") == F.col("c.band"))
+            & (F.col("d.key") == F.col("c.key")),
+        )
+        .select(
+            F.col("d.doc_id").alias("doc_delta"),
+            F.col("c.doc_id").alias("doc_corpus"),
+        )
+        .distinct()
+        .persist()
+    )
 
 
 @register_query(
@@ -1466,36 +1453,9 @@ def dedup_snapshot_commit_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with no occurrence-sized materialization at all).
     delta_sh = _pin(_shingles(delta_docs), "snapdelta_shingles")
     corpus_sh = _pin(_shingles(corpus_docs), "snapdelta_shingles")
-    # candidate generation is the shared stage boundary: persisted once
-    # per (application, sf_dir) like every other dedup stage, so
-    # repeated invocations (bench, oracle gate) reuse one cached frame
-    # instead of stacking fresh persists
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cand = _SNAP_DELTA_CAND_CACHE.get(cache_key)
-    if cand is None:
-        delta_b = _band_buckets(_signatures(delta_sh))
-        corpus_b = _band_buckets(_signatures(corpus_sh))
-        # honest join strategy: in this fixture the delta is ~half the
-        # corpus, and a real nightly crawl can be arbitrarily large —
-        # so the band join SHUFFLES on (band, key) and only the
-        # genuinely bounded frames below (candidate pairs, per-doc
-        # sizes of candidate docs) get broadcast hints. AQE may still
-        # broadcast a small delta at runtime; we don't force it.
-        cand = (
-            corpus_b.alias("c")
-            .join(
-                delta_b.alias("d"),
-                (F.col("d.band") == F.col("c.band"))
-                & (F.col("d.key") == F.col("c.key")),
-            )
-            .select(
-                F.col("d.doc_id").alias("doc_delta"),
-                F.col("c.doc_id").alias("doc_corpus"),
-            )
-            .distinct()
-            .persist()
-        )
-        _SNAP_DELTA_CAND_CACHE[cache_key] = cand
+    # candidate generation is a registered stage, built on a miss from
+    # the two pinned shingle tables above
+    cand = _snap_delta_candidates(spark, sf_dir, delta_sh=delta_sh, corpus_sh=corpus_sh)
     sizes_a = delta_sh.groupBy("doc_id").agg(F.count("*").alias("na"))
     sa = delta_sh.select(F.col("doc_id").alias("doc_delta"), "shingle")
     sb = corpus_sh.select(F.col("doc_id").alias("doc_corpus"), "shingle").join(

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..queries.registry import register_query
+from ..queries.registry import register_query, register_stage
 from ..sources import load_table
 from .hashing import TOKEN_SPLIT_REGEX
 from .text import _tok, _TOK_SQL
@@ -257,42 +257,34 @@ def _pr_iter_sql(prev: str, out: str) -> str:
     )"""
 
 
-# persisted invariant graph tables: an iterative algorithm must pin its
-# edge list once, not rebuild it per round — without this the statically
-# unrolled plan re-derives edges/outdeg/nodes inside every iteration
-# (3x the shuffles for zero new information). Keyed by applicationId so
-# a restarted session refits; same pattern as the shingle/CC stages.
-_PR_GRAPH_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+# persisted invariant graph tables, a registered stage: an iterative
+# algorithm must pin its edge list once, not rebuild it per round —
+# without this the statically unrolled plan re-derives edges/outdeg/nodes
+# inside every iteration (3x the shuffles for zero new information)
+@register_stage("pagerank_graph")
 def _pr_graph_cached(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PR_GRAPH_CACHE.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        host = F.concat(F.lit("host"), (F.col("doc_id") % 10).cast("string"), F.lit(".example.com"))
-        site = F.concat(F.lit("site"), (F.col("doc_id") % 20).cast("string"), F.lit(".example.org"))
-        cdn = F.concat(F.lit("cdn"), (F.col("doc_id") % 7).cast("string"), F.lit(".example.net"))
-        raw = (
-            docs.filter(F.col("doc_id") % 6 == 0).select(host.alias("src"), site.alias("dst"))
-            .unionAll(
-                docs.filter(F.col("doc_id") % 11 == 0).select(host.alias("src"), cdn.alias("dst"))
-            )
-            .unionAll(
-                docs.filter(F.col("doc_id") % 4 == 0).select(site.alias("src"), host.alias("dst"))
-            )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    host = F.concat(F.lit("host"), (F.col("doc_id") % 10).cast("string"), F.lit(".example.com"))
+    site = F.concat(F.lit("site"), (F.col("doc_id") % 20).cast("string"), F.lit(".example.org"))
+    cdn = F.concat(F.lit("cdn"), (F.col("doc_id") % 7).cast("string"), F.lit(".example.net"))
+    raw = (
+        docs.filter(F.col("doc_id") % 6 == 0).select(host.alias("src"), site.alias("dst"))
+        .unionAll(
+            docs.filter(F.col("doc_id") % 11 == 0).select(host.alias("src"), cdn.alias("dst"))
         )
-        edges = raw.groupBy("src", "dst").agg(F.count("*").cast("bigint").alias("w")).persist()
-        outdeg = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("od")).persist()
-        nodes = (
-            edges.select(F.col("src").alias("domain"))
-            .union(edges.select(F.col("dst").alias("domain")))
-            .distinct()
-            .persist()
+        .unionAll(
+            docs.filter(F.col("doc_id") % 4 == 0).select(site.alias("src"), host.alias("dst"))
         )
-        cached = (edges, outdeg, nodes)
-        _PR_GRAPH_CACHE[key] = cached
-    return cached
+    )
+    edges = raw.groupBy("src", "dst").agg(F.count("*").cast("bigint").alias("w")).persist()
+    outdeg = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("od")).persist()
+    nodes = (
+        edges.select(F.col("src").alias("domain"))
+        .union(edges.select(F.col("dst").alias("domain")))
+        .distinct()
+        .persist()
+    )
+    return edges, outdeg, nodes
 
 
 @register_query(

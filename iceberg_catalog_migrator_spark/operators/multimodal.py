@@ -309,6 +309,30 @@ WAV_SAMPLES = 64
 WAV_RATE = 16000
 
 
+def _docs_at_least(spark: SparkSession, sf_dir: str, n_chars: int) -> DataFrame:
+    """(doc_id, text) of the documents long enough to synthesize from."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.filter(F.length("text") >= n_chars)
+
+
+def _pixel_stats_oracle(width: int, height: int, n_bytes: int) -> str:
+    """The oracle of every lossless decode-stats query: pixel codes are
+    the text's first ``n_bytes`` characters."""
+    return f"""
+    SELECT doc_id,
+           {width} AS width, {height} AS height,
+           CAST(LIST_SUM(codes) AS BIGINT) AS px_sum,
+           CAST(LIST_MIN(codes) AS INT) AS px_min,
+           CAST(LIST_MAX(codes) AS INT) AS px_max
+    FROM (
+      SELECT doc_id,
+             LIST_TRANSFORM(GENERATE_SERIES(1, {n_bytes}),
+                            i -> UNICODE(SUBSTR(text, i, 1))) AS codes
+      FROM documents WHERE LEN(text) >= {n_bytes}
+    )
+    """
+
+
 def synthesize_ppm(text: str) -> bytes:
     """A real binary PPM (P6) payload: ASCII header (with a comment, to
     exercise the parser) + raw RGB bytes = the doc's first 36 bytes."""
@@ -445,25 +469,11 @@ def decode_image_stats(blobs: DataFrame, decoder=decode_ppm) -> DataFrame:
 
 @register_query(
     "multimodal_image_decode_stats",
-    oracle=f"""
-    SELECT doc_id,
-           {IMG_W} AS width, {IMG_H} AS height,
-           CAST(LIST_SUM(codes) AS BIGINT) AS px_sum,
-           CAST(LIST_MIN(codes) AS INT) AS px_min,
-           CAST(LIST_MAX(codes) AS INT) AS px_max
-    FROM (
-      SELECT doc_id,
-             LIST_TRANSFORM(GENERATE_SERIES(1, {IMG_PIXEL_BYTES}),
-                            i -> UNICODE(SUBSTR(text, i, 1))) AS codes
-      FROM documents WHERE LEN(text) >= {IMG_PIXEL_BYTES}
-    )
-    """,
+    oracle=_pixel_stats_oracle(IMG_W, IMG_H, IMG_PIXEL_BYTES),
     description="REAL image decode: synthesized binary P6 PPM parsed by a pure-numpy decoder via the injectable decode seam; exact integer pixel stats",
 )
 def multimodal_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= IMG_PIXEL_BYTES
-    )
+    docs = _docs_at_least(spark, sf_dir, IMG_PIXEL_BYTES)
     return decode_image_stats(attach_ppm_content(docs), decoder=decode_ppm)
 
 
@@ -551,25 +561,11 @@ def attach_bmp_content(docs: DataFrame) -> DataFrame:
 
 @register_query(
     "multimodal_bmp_decode_stats",
-    oracle=f"""
-    SELECT doc_id,
-           {BMP_W} AS width, {BMP_H} AS height,
-           CAST(LIST_SUM(codes) AS BIGINT) AS px_sum,
-           CAST(LIST_MIN(codes) AS INT) AS px_min,
-           CAST(LIST_MAX(codes) AS INT) AS px_max
-    FROM (
-      SELECT doc_id,
-             LIST_TRANSFORM(GENERATE_SERIES(1, {BMP_PIXEL_BYTES}),
-                            i -> UNICODE(SUBSTR(text, i, 1))) AS codes
-      FROM documents WHERE LEN(text) >= {BMP_PIXEL_BYTES}
-    )
-    """,
+    oracle=_pixel_stats_oracle(BMP_W, BMP_H, BMP_PIXEL_BYTES),
     description="REAL image decode #2: synthesized 24-bit BMP (bottom-up, BGR, padded rows) parsed by a pure-numpy decoder via the injectable seam",
 )
 def multimodal_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= BMP_PIXEL_BYTES
-    )
+    docs = _docs_at_least(spark, sf_dir, BMP_PIXEL_BYTES)
     return decode_image_stats(attach_bmp_content(docs), decoder=decode_bmp)
 
 
@@ -622,9 +618,7 @@ def decode_audio_stats(blobs: DataFrame) -> DataFrame:
     description="REAL audio decode: synthesized RIFF/WAVE 16-bit PCM parsed by a pure-numpy chunk-walking decoder; exact integer amplitude stats",
 )
 def multimodal_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= WAV_SAMPLES
-    )
+    docs = _docs_at_least(spark, sf_dir, WAV_SAMPLES)
     return decode_audio_stats(attach_wav_content(docs))
 
 
@@ -717,9 +711,7 @@ def multimodal_phash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by 2^bits, with map-side partial aggregation. At 100 TB the
     hash would widen to 64 bits and the census becomes a bucket join —
     the same plan, a bigger key space."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= IMG_PIXEL_BYTES
-    )
+    docs = _docs_at_least(spark, sf_dir, IMG_PIXEL_BYTES)
     hashed = phash_images(attach_ppm_content(docs), decoder=decode_ppm)
     return hashed.groupBy("phash").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -779,9 +771,7 @@ def multimodal_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-patch numpy reduce) is exactly what a real patch-embedding
     stage needs, with the embedding matmul swapped for a checksummable
     reduce."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= IMG_PIXEL_BYTES
-    )
+    docs = _docs_at_least(spark, sf_dir, IMG_PIXEL_BYTES)
     blobs = attach_ppm_content(docs)
 
     def patches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
@@ -874,9 +864,7 @@ def decode_video_frames(content: bytes, stride: int = VIDEO_STRIDE):
     description=f"REAL video-container decode: VID0 wrapper over {VIDEO_FRAMES} BMP frames, every {VIDEO_STRIDE}nd frame decoded to exact integer stats",
 )
 def multimodal_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= VIDEO_TEXT_BYTES
-    )
+    docs = _docs_at_least(spark, sf_dir, VIDEO_TEXT_BYTES)
 
     def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import pandas as pd
@@ -1064,19 +1052,7 @@ def synthesize_qoi(text: str) -> bytes:
 
 @register_query(
     "multimodal_qoi_decode_stats",
-    oracle=f"""
-    SELECT doc_id,
-           {IMG_W} AS width, {IMG_H} AS height,
-           CAST(LIST_SUM(codes) AS BIGINT) AS px_sum,
-           CAST(LIST_MIN(codes) AS INT) AS px_min,
-           CAST(LIST_MAX(codes) AS INT) AS px_max
-    FROM (
-      SELECT doc_id,
-             LIST_TRANSFORM(GENERATE_SERIES(1, {IMG_PIXEL_BYTES}),
-                            i -> UNICODE(SUBSTR(text, i, 1))) AS codes
-      FROM documents WHERE LEN(text) >= {IMG_PIXEL_BYTES}
-    )
-    """,
+    oracle=_pixel_stats_oracle(IMG_W, IMG_H, IMG_PIXEL_BYTES),
     description=(
         "REAL compressed-codec decode: text-derived images QOI-encoded "
         "(run/index/diff/luma/literal ops) and decoded by the pure-Python "
@@ -1084,9 +1060,7 @@ def synthesize_qoi(text: str) -> bytes:
     ),
 )
 def multimodal_qoi_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= IMG_PIXEL_BYTES
-    )
+    docs = _docs_at_least(spark, sf_dir, IMG_PIXEL_BYTES)
 
     def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import pandas as pd
@@ -1218,9 +1192,7 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows["px_max"].append(int(levels.max()))
             yield pd.DataFrame(rows)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= JPEG_BLOCKS
-    )
+    docs = _docs_at_least(spark, sf_dir, JPEG_BLOCKS)
     return attach_jpeg_content(docs).mapInPandas(stats, schema=IMAGE_STATS_SCHEMA)
 
 
@@ -1305,9 +1277,7 @@ def multimodal_mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rows["px_max"].append(int(levels.max()))
             yield pd.DataFrame(rows)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= MP4_TEXT_CHARS
-    )
+    docs = _docs_at_least(spark, sf_dir, MP4_TEXT_CHARS)
     return docs.mapInPandas(
         stats, schema="doc_id bigint, frame_idx int, px_sum bigint, px_min int, px_max int"
     )
@@ -1336,19 +1306,7 @@ def synthesize_png(text: str) -> bytes:
 
 @register_query(
     "multimodal_png_decode_stats",
-    oracle=f"""
-    SELECT doc_id,
-           {PNG_W} AS width, {PNG_H} AS height,
-           CAST(LIST_SUM(codes) AS BIGINT) AS px_sum,
-           CAST(LIST_MIN(codes) AS INT) AS px_min,
-           CAST(LIST_MAX(codes) AS INT) AS px_max
-    FROM (
-      SELECT doc_id,
-             LIST_TRANSFORM(GENERATE_SERIES(1, {PNG_PIXEL_BYTES}),
-                            i -> UNICODE(SUBSTR(text, i, 1))) AS codes
-      FROM documents WHERE LEN(text) >= {PNG_PIXEL_BYTES}
-    )
-    """,
+    oracle=_pixel_stats_oracle(PNG_W, PNG_H, PNG_PIXEL_BYTES),
     description=(
         "REAL compressed-codec decode #3: PNG (DEFLATE via stdlib zlib + "
         "scanline unfiltering, pure Python/numpy) synthesized per doc, "
@@ -1365,9 +1323,7 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"doc_id": pdf["doc_id"], "content": pdf["text"].map(synthesize_png)}
             )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.length("text") >= PNG_PIXEL_BYTES
-    )
+    docs = _docs_at_least(spark, sf_dir, PNG_PIXEL_BYTES)
     blobs = docs.mapInPandas(synth, schema="doc_id bigint, content binary")
     # decoder=None: the magic-byte router finds the PNG decoder itself
     return decode_image_stats(blobs, decoder=None)
@@ -1495,19 +1451,7 @@ def synthesize_webp(text: str) -> bytes:
 
 @register_query(
     "multimodal_webp_decode_stats",
-    oracle=f"""
-    SELECT doc_id,
-           {WEBP_W} AS width, {WEBP_H} AS height,
-           CAST(LIST_SUM(codes) AS BIGINT) AS px_sum,
-           CAST(LIST_MIN(codes) AS INT) AS px_min,
-           CAST(LIST_MAX(codes) AS INT) AS px_max
-    FROM (
-      SELECT doc_id,
-             LIST_TRANSFORM(GENERATE_SERIES(1, {WEBP_PIXEL_BYTES}),
-                            i -> UNICODE(SUBSTR(text, i, 1))) AS codes
-      FROM documents WHERE LEN(text) >= {WEBP_PIXEL_BYTES}
-    )
-    """,
+    oracle=_pixel_stats_oracle(WEBP_W, WEBP_H, WEBP_PIXEL_BYTES),
     description=(
         "REAL compressed-codec decode #5: lossless WebP (VP8L canonical "
         "Huffman; decoder carries LZ77 + color cache + all 4 spec "

@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..queries.registry import register_query
+from ..queries.registry import register_query, register_stage
 from ..sources import load_table
 
 TOP_K = 5
@@ -214,87 +214,110 @@ def _finish_cosine(triples: DataFrame, out_pair: tuple[str, str]) -> DataFrame:
     )
 
 
-# fitted-model cache: the K*D centroid matrix is a model artifact a
-# real pipeline trains once and reuses; keyed by applicationId so a
-# restarted session refits
-_IVF_MODEL_CACHE: dict[tuple[str, str], tuple] = {}
+def _lloyd_fit(spark: SparkSession, sf_dir: str, k: int, iters: int, m: int) -> list:
+    """Fit ``m`` quantizers in lock-step, one per equal slice of the
+    quantized embeddings, distributedly; return the trained models as
+    ``[(cell_ids, centroids)]`` — per slice an int64 vector of cell ids
+    (ascending) and the matching (K, D/m) int64 centroid matrix.
 
-
-def _ivf_fit(spark: SparkSession, sf_dir: str):
-    """Fit the IVF coarse quantizer distributedly; return the trained
-    model as ``(cell_ids, centroids)`` — an int64 vector of cell ids
-    (ascending) and the matching (K, D) int64 centroid matrix.
-
-    Seeding is deterministic (the IVF_K smallest vec_ids define cells
-    0..K-1). Each Lloyd round is the canonical distributed shape: one
+    Seeding is deterministic (the ``k`` smallest vec_ids define cells
+    0..k-1). Each Lloyd round is the canonical distributed shape: ONE
     Arrow-batched corpus pass computes exact-int64 nearest-centroid
-    assignments AND per-cell partial sums map-side (numpy, the K×D
-    model rides in the closure), then a (cell, pos)-keyed aggregation
-    over K*D-sized partials — never corpus rows — reaches the driver.
-    The centroid update divides the exact int64 sum by the count in
-    one IEEE double op and floors, the same two-operand computation
-    the DuckDB oracle runs, so cells match bit-for-bit. At extreme
-    corpus sizes the int64 partial sums bound overflow per PARTITION
-    (|x| <= 1e7, rows/partition << 2^40), which is why partials — not
-    a global SUM — are the aggregation unit.
+    assignments AND per-cell partial sums map-side for every slice
+    (numpy, the models ride in the closure), then a (slice, cell,
+    pos)-keyed aggregation over K*D-sized partials — never corpus rows —
+    reaches the driver; m fits never cost m scans. The centroid update
+    divides the exact int64 sum by the count in one IEEE double op and
+    floors, the same two-operand computation the DuckDB oracle runs, so
+    cells match bit-for-bit. At extreme corpus sizes the int64 partial
+    sums bound overflow per PARTITION (|x| <= 1e7, rows/partition <<
+    2^40), which is why partials — not a global SUM — are the
+    aggregation unit.
     """
     import numpy as np
     import pandas as pd
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVF_MODEL_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = _quantized(spark, sf_dir)
-    seed_rows = emb.orderBy("vec_id").limit(IVF_K).collect()
+    seed_rows = emb.orderBy("vec_id").limit(k).collect()
     if not seed_rows:
-        raise ValueError("cannot fit IVF quantizer: embeddings table is empty")
-    cell_ids = np.arange(len(seed_rows), dtype=np.int64)
-    cmat = np.array([r.q for r in seed_rows], dtype=np.int64)
-    dim = cmat.shape[1]
-    for _ in range(IVF_ITERS - 1):
-        ids_now, cmat_now = cell_ids, cmat  # closure snapshot for this round
+        raise ValueError("cannot fit a quantizer: embeddings table is empty")
+    full = np.array([r.q for r in seed_rows], dtype=np.int64)
+    dim = full.shape[1]
+    if dim % m:
+        raise ValueError(f"embedding dim {dim} not divisible into {m} sub-spaces")
+    dim_per = dim // m
+    models = [
+        (np.arange(len(seed_rows), dtype=np.int64), full[:, s * dim_per : (s + 1) * dim_per].copy())
+        for s in range(m)
+    ]
+    for _ in range(iters - 1):
+        models_now = list(models)  # closure snapshot for this round
 
         def partials(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 X = np.array(pdf["q"].tolist(), dtype=np.int64)
-                cells = _assign_cells(X, ids_now, cmat_now)
-                rows = np.searchsorted(ids_now, cells)
-                psum = np.zeros((len(ids_now), dim), dtype=np.int64)
-                np.add.at(psum, rows, X)
-                pcnt = np.bincount(rows, minlength=len(ids_now)).astype(np.int64)
-                present = pcnt > 0
-                k_idx, p_idx = np.nonzero(present[:, None] & np.ones(dim, dtype=bool))
-                yield pd.DataFrame(
-                    {
-                        "cell": ids_now[k_idx],
-                        "pos": p_idx.astype(np.int32),
-                        "psum": psum[k_idx, p_idx],
-                        "pcnt": pcnt[k_idx],
-                    }
-                )
+                frames = []
+                for s, (ids_now, cmat_now) in enumerate(models_now):
+                    Xs = X[:, s * dim_per : (s + 1) * dim_per]
+                    rows = np.searchsorted(
+                        ids_now, _assign_cells(Xs, ids_now, cmat_now)
+                    )
+                    psum = np.zeros((len(ids_now), dim_per), dtype=np.int64)
+                    np.add.at(psum, rows, Xs)
+                    pcnt = np.bincount(rows, minlength=len(ids_now)).astype(np.int64)
+                    k_idx, p_idx = np.nonzero(
+                        (pcnt > 0)[:, None] & np.ones(dim_per, dtype=bool)
+                    )
+                    frames.append(
+                        pd.DataFrame(
+                            {
+                                "sub": np.full(len(k_idx), s, dtype=np.int32),
+                                "cell": ids_now[k_idx],
+                                "pos": p_idx.astype(np.int32),
+                                "psum": psum[k_idx, p_idx],
+                                "pcnt": pcnt[k_idx],
+                            }
+                        )
+                    )
+                yield pd.concat(frames, ignore_index=True)
 
         agg = (
-            emb.mapInPandas(partials, "cell long, pos int, psum long, pcnt long")
-            .groupBy("cell", "pos")
+            emb.mapInPandas(
+                partials, "sub int, cell long, pos int, psum long, pcnt long"
+            )
+            .groupBy("sub", "cell", "pos")
             .agg(F.sum("psum").alias("s"), F.sum("pcnt").alias("n"))
             .collect()
         )
-        by_cell: dict[int, dict[int, int]] = {}
+        by_sub: dict[int, dict[int, dict[int, int]]] = {}
         for r in agg:
             # same IEEE double divide + floor as the oracle's
             # FLOOR(CAST(SUM(x) AS DOUBLE) / COUNT(*)): identical
             # operand bits -> identical quotient -> identical floor
-            by_cell.setdefault(r.cell, {})[r.pos] = int(np.floor(np.float64(r.s) / r.n))
-        cell_ids = np.array(sorted(by_cell), dtype=np.int64)
-        cmat = np.array(
-            [[by_cell[c][p] for p in range(dim)] for c in cell_ids], dtype=np.int64
-        )
-    model = (cell_ids, cmat)
-    _IVF_MODEL_CACHE[key] = model
-    return model
+            by_sub.setdefault(r.sub, {}).setdefault(r.cell, {})[r.pos] = int(
+                np.floor(np.float64(r.s) / r.n)
+            )
+        models = []
+        for s in range(m):
+            by_cell = by_sub[s]
+            cell_ids = np.array(sorted(by_cell), dtype=np.int64)
+            cmat = np.array(
+                [[by_cell[c][p] for p in range(dim_per)] for c in cell_ids],
+                dtype=np.int64,
+            )
+            models.append((cell_ids, cmat))
+    return models
+
+
+# a registered stage: the K*D centroid matrix is a model artifact a
+# real pipeline trains once and reuses
+@register_stage("ivf_model")
+def _ivf_fit(spark: SparkSession, sf_dir: str):
+    """The IVF coarse quantizer, ``(cell_ids, centroids)``: one
+    :func:`_lloyd_fit` over the whole vector, IVF_K cells."""
+    return _lloyd_fit(spark, sf_dir, IVF_K, IVF_ITERS, 1)[0]
 
 
 def _cell_distances(X, cmat):
@@ -342,6 +365,22 @@ def _query_topk(spark: SparkSession, sf_dir: str, ivf: bool, n_probe: int = 1) -
     ``n_probe`` > 1 widens each query's search to its n nearest cells
     (classic multi-probe recall/cost dial; candidates keep their single
     assigned cell)."""
+    if not ivf:
+        return _closure_topk(spark, sf_dir)
+    cell_ids, cmat = _ivf_fit(spark, sf_dir)
+    return _closure_topk(
+        spark,
+        sf_dir,
+        lambda qmat: _probe_cells(qmat, cell_ids, cmat, n_probe),  # (Q, P)
+        lambda X: _assign_cells(X, cell_ids, cmat),
+    )
+
+
+def _closure_topk(spark: SparkSession, sf_dir: str, probes_of=None, bucket_of=None) -> DataFrame:
+    """The one-pass closure kernel of :func:`_query_topk`. With
+    ``probes_of`` (query matrix -> (Q, P) bucket ids) and ``bucket_of``
+    (batch matrix -> one bucket id per row), a candidate is kept only
+    for queries probing its bucket."""
     import numpy as np
     import pandas as pd
 
@@ -351,11 +390,7 @@ def _query_topk(spark: SparkSession, sf_dir: str, ivf: bool, n_probe: int = 1) -
     qmat = np.array(qpdf["q"].tolist(), dtype=np.int64)
     q_ids = qpdf["vec_id"].to_numpy()
     q_norms = (qmat * qmat).sum(axis=1)  # exact int64
-    if ivf:
-        cell_ids, cmat = _ivf_fit(spark, sf_dir)
-        q_probes = _probe_cells(qmat, cell_ids, cmat, n_probe)  # (Q, P)
-    else:
-        cell_ids = cmat = q_probes = None
+    q_probes = probes_of(qmat) if probes_of is not None else None
 
     def score(batches):
         for pdf in batches:
@@ -369,9 +404,8 @@ def _query_topk(spark: SparkSession, sf_dir: str, ivf: bool, n_probe: int = 1) -
             ci, qi = np.indices((n, len(q_ids)))
             ci, qi = ci.ravel(), qi.ravel()
             keep = c_ids[ci] != q_ids[qi]
-            if ivf:
-                batch_cells = _assign_cells(X, cell_ids, cmat)
-                keep &= (q_probes[qi] == batch_cells[ci][:, None]).any(axis=1)
+            if q_probes is not None:
+                keep &= (q_probes[qi] == bucket_of(X)[ci][:, None]).any(axis=1)
             ci, qi = ci[keep], qi[keep]
             yield pd.DataFrame(
                 {
@@ -579,10 +613,11 @@ def dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cosine_pairs_within(_ivf_tagged(spark, sf_dir), "cell")
 
 
-def _ivf_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, q, cell): every embedding tagged with its fitted IVF
+def _ivf_tagged(spark: SparkSession, sf_dir: str, with_q: bool = True) -> DataFrame:
+    """(vec_id, [q,] cell): every embedding tagged with its fitted IVF
     cell, map-side from the K×D closure model — no join, no shuffle."""
     cell_ids, cmat = _ivf_fit(spark, sf_dir)
+    cols = ["vec_id", "q"] if with_q else ["vec_id"]
 
     def tag(batches):
         import numpy as np
@@ -591,13 +626,12 @@ def _ivf_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             X = np.array(pdf["q"].tolist(), dtype=np.int64)
-            out = pdf[["vec_id", "q"]].copy()
+            out = pdf[cols].copy()
             out["cell"] = _assign_cells(X, cell_ids, cmat)
             yield out
 
-    return _quantized(spark, sf_dir).mapInPandas(
-        tag, "vec_id long, q array<long>, cell long"
-    )
+    q = "q array<long>, " if with_q else ""
+    return _quantized(spark, sf_dir).mapInPandas(tag, f"vec_id long, {q}cell long")
 
 
 @register_query(
@@ -740,7 +774,6 @@ def similarity_hyperplane_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFram
     the corpus is still scanned exactly once with no shuffle before the
     per-query top-k window."""
     import numpy as np
-    import pandas as pd
 
     H = np.array(
         [[_hp_sign(b, p) for p in range(1, EMB_DIM + 1)] for b in range(LSH_NBITS)],
@@ -748,45 +781,10 @@ def similarity_hyperplane_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFram
     )
     W = (np.int64(1) << np.arange(LSH_NBITS, dtype=np.int64))
 
-    emb = _quantized(spark, sf_dir)
-    _check_query_closure_size(N_QUERIES)
-    qpdf = emb.filter(F.col("vec_id") < N_QUERIES).toPandas()
-    qmat = np.array(qpdf["q"].tolist(), dtype=np.int64)
-    q_ids = qpdf["vec_id"].to_numpy()
-    q_norms = (qmat * qmat).sum(axis=1)
-    q_buckets = ((qmat @ H.T) >= 0) @ W
+    def bucket_of(X):
+        return ((X @ H.T) >= 0) @ W
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["q"].tolist(), dtype=np.int64)
-            c_ids = pdf["vec_id"].to_numpy()
-            c_norms = (X * X).sum(axis=1)
-            c_buckets = ((X @ H.T) >= 0) @ W
-            G = X @ qmat.T
-            ci, qi = np.indices((len(pdf), len(q_ids)))
-            ci, qi = ci.ravel(), qi.ravel()
-            keep = (c_ids[ci] != q_ids[qi]) & (c_buckets[ci] == q_buckets[qi])
-            ci, qi = ci[keep], qi[keep]
-            yield pd.DataFrame(
-                {
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[ci],
-                    "dotq": G[ci, qi],
-                    "d1": q_norms[qi],
-                    "d2": c_norms[ci],
-                }
-            )
-
-    triples = emb.mapInPandas(score, "q_id long, c_id long, dotq long, d1 long, d2 long")
-    pairs = _finish_cosine(triples, ("q_id", "c_id"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "c_id")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "c_id", "cosine", "rk")
-    )
+    return _closure_topk(spark, sf_dir, lambda qmat: bucket_of(qmat)[:, None], bucket_of)
 
 
 # ------------------------------------------ bucket-keyed join ANN tier
@@ -903,21 +901,7 @@ def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass assigns cells from the closure model, one groupBy aggregates.
     Same fit, same exact-integer assignment as the ANN tiers — the
     oracle re-derives it through the unrolled k-means CTEs."""
-    import numpy as np
-    import pandas as pd
-
-    cell_ids, cmat = _ivf_fit(spark, sf_dir)
-
-    def tag(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["q"].tolist(), dtype=np.int64)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": _assign_cells(X, cell_ids, cmat)}
-            )
-
-    tagged = _quantized(spark, sf_dir).mapInPandas(tag, "vec_id long, cell long")
+    tagged = _ivf_tagged(spark, sf_dir, with_q=False)
     return tagged.groupBy("cell").agg(
         F.count("*").alias("n_vectors"),
         F.min("vec_id").cast("bigint").alias("min_vec_id"),
@@ -956,21 +940,7 @@ def sample_n_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart of ``sample_n_per_language`` with the engine's OWN
     clustering as the stratum. Map-side cell assignment (closure
     model); one window shuffle on the cluster key."""
-    import numpy as np
-    import pandas as pd
-
-    cell_ids, cmat = _ivf_fit(spark, sf_dir)
-
-    def tag(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["q"].tolist(), dtype=np.int64)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": _assign_cells(X, cell_ids, cmat)}
-            )
-
-    tagged = _quantized(spark, sf_dir).mapInPandas(tag, "vec_id long, cell long")
+    tagged = _ivf_tagged(spark, sf_dir, with_q=False)
     w = Window.partitionBy("cell").orderBy(F.expr(_VEC_SPARK_U), "vec_id")
     return (
         tagged.withColumn("rk", F.row_number().over(w))
@@ -979,15 +949,14 @@ def sample_n_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- IVF recall evaluation
-@register_query(
-    "similarity_ivf_recall_report",
-    oracle=f"""
+# --------------------------------------------- recall evaluation
+def _recall_oracle(approx_sql: str) -> str:
+    return f"""
     WITH brute AS (SELECT * FROM ({_topk_oracle(same_cell_only=False)}) b0),
-    ivf AS (SELECT * FROM ({_topk_oracle(same_cell_only=True)}) i0),
+    approx AS (SELECT * FROM ({approx_sql}) a0),
     hits AS (
-      SELECT b.q_id, COUNT(i.c_id) AS n_hit
-      FROM brute b LEFT JOIN ivf i ON b.q_id = i.q_id AND b.c_id = i.c_id
+      SELECT b.q_id, COUNT(a.c_id) AS n_hit
+      FROM brute b LEFT JOIN approx a ON b.q_id = a.q_id AND b.c_id = a.c_id
       GROUP BY b.q_id
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
@@ -996,28 +965,20 @@ def sample_n_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS mean_recall_bp,
            CAST(MIN(n_hit) * 10000 // {TOP_K} AS BIGINT) AS min_recall_bp
     FROM hits
-    """,
-    description=f"ANN evaluation: single-probe IVF recall@{TOP_K} against the brute-force ground truth, mean and worst query",
-)
-def similarity_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index evaluation AS a query: the recall a user would measure
-    before trusting the IVF tier, computed inside the engine. Joins the
-    two top-k results on (q_id, c_id) — both are N_QUERIES x TOP_K
-    rows, so the evaluation costs nothing beyond the searches it
-    grades. Single-probe recall is the pessimistic floor; the
-    multiprobe tier exists precisely to buy it back."""
+    """
+
+
+def _recall_report(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
+    """recall@TOP_K of an ANN tier's (q_id, c_id) top-k against the
+    brute-force ground truth, mean and worst query. Both sides are
+    N_QUERIES x TOP_K rows, so the evaluation costs nothing beyond the
+    searches it grades."""
     brute = similarity_bruteforce_topk(spark, sf_dir)
-    ivf = similarity_ivf_topk(spark, sf_dir).select(
-        F.col("q_id").alias("i_q"), F.col("c_id").alias("i_c")
-    )
+    got = approx.select(F.col("q_id").alias("a_q"), F.col("c_id").alias("a_c"))
     hits = (
-        brute.join(
-            ivf,
-            (brute.q_id == F.col("i_q")) & (brute.c_id == F.col("i_c")),
-            "left",
-        )
+        brute.join(got, (brute.q_id == F.col("a_q")) & (brute.c_id == F.col("a_c")), "left")
         .groupBy("q_id")
-        .agg(F.count("i_c").alias("n_hit"))
+        .agg(F.count("a_c").alias("n_hit"))
     )
     return hits.agg(
         F.count("*").cast("bigint").alias("n_queries"),
@@ -1029,6 +990,19 @@ def similarity_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_recall_bp"
         ),
     )
+
+
+@register_query(
+    "similarity_ivf_recall_report",
+    oracle=_recall_oracle(_topk_oracle(same_cell_only=True)),
+    description=f"ANN evaluation: single-probe IVF recall@{TOP_K} against the brute-force ground truth, mean and worst query",
+)
+def similarity_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Index evaluation AS a query: the recall a user would measure
+    before trusting the IVF tier, computed inside the engine.
+    Single-probe recall is the pessimistic floor; the multiprobe tier
+    exists precisely to buy it back."""
+    return _recall_report(spark, sf_dir, similarity_ivf_topk(spark, sf_dir))
 
 
 # ------------------------------------------- product quantization (PQ/ADC)
@@ -1046,8 +1020,6 @@ def similarity_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_M = 2  # sub-spaces; D must divide evenly
 PQ_K = 4  # codewords per sub-space
 PQ_ITERS = 2  # assignment rounds, centroids updated between (oracle-unrolled)
-
-_PQ_MODEL_CACHE: dict[tuple[str, str], list] = {}
 
 
 def _pq_subspace_ctes(s: int, lo: int, hi: int) -> str:
@@ -1131,91 +1103,11 @@ def _pq_oracle() -> str:
     """
 
 
+@register_stage("pq_model")
 def _pq_fit(spark: SparkSession, sf_dir: str) -> list:
-    """Per-sub-space codebooks [(code_ids, codebook (K, D/M))] fitted with
-    the same distributed Lloyd shape as :func:`_ivf_fit` — map-side
-    assignment + K*(D/M)-sized partial sums, floor-mean update —
-    restricted to each sub-space's slice."""
-    import numpy as np
-    import pandas as pd
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PQ_MODEL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = _quantized(spark, sf_dir)
-    seed_rows = emb.orderBy("vec_id").limit(PQ_K).collect()
-    if not seed_rows:
-        raise ValueError("cannot fit PQ codebooks: embeddings table is empty")
-    full = np.array([r.q for r in seed_rows], dtype=np.int64)
-    dim = full.shape[1]
-    if dim % PQ_M:
-        raise ValueError(f"embedding dim {dim} not divisible by PQ_M={PQ_M}")
-    dim_per = dim // PQ_M
-    # all sub-spaces fit in lock-step: ONE corpus pass per Lloyd round
-    # emits (sub, cell, pos)-keyed partials for every sub-space — M
-    # independent fits never cost M scans
-    models = [
-        (np.arange(len(seed_rows), dtype=np.int64), full[:, s * dim_per : (s + 1) * dim_per].copy())
-        for s in range(PQ_M)
-    ]
-    for _ in range(PQ_ITERS - 1):
-        models_now = [(ids.copy(), cm.copy()) for ids, cm in models]
-
-        def partials(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(pdf["q"].tolist(), dtype=np.int64)
-                frames = []
-                for s, (ids_now, cmat_now) in enumerate(models_now):
-                    Xs = X[:, s * dim_per : (s + 1) * dim_per]
-                    rows = np.searchsorted(
-                        ids_now, _assign_cells(Xs, ids_now, cmat_now)
-                    )
-                    psum = np.zeros((len(ids_now), dim_per), dtype=np.int64)
-                    np.add.at(psum, rows, Xs)
-                    pcnt = np.bincount(rows, minlength=len(ids_now)).astype(np.int64)
-                    k_idx, p_idx = np.nonzero(
-                        (pcnt > 0)[:, None] & np.ones(dim_per, dtype=bool)
-                    )
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "sub": np.full(len(k_idx), s, dtype=np.int32),
-                                "cell": ids_now[k_idx],
-                                "pos": p_idx.astype(np.int32),
-                                "psum": psum[k_idx, p_idx],
-                                "pcnt": pcnt[k_idx],
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
-
-        agg = (
-            emb.mapInPandas(
-                partials, "sub int, cell long, pos int, psum long, pcnt long"
-            )
-            .groupBy("sub", "cell", "pos")
-            .agg(F.sum("psum").alias("s"), F.sum("pcnt").alias("n"))
-            .collect()
-        )
-        by_sub: dict[int, dict[int, dict[int, int]]] = {}
-        for r in agg:
-            by_sub.setdefault(r.sub, {}).setdefault(r.cell, {})[r.pos] = int(
-                np.floor(np.float64(r.s) / r.n)
-            )
-        models = []
-        for s in range(PQ_M):
-            by_cell = by_sub[s]
-            code_ids = np.array(sorted(by_cell), dtype=np.int64)
-            cmat = np.array(
-                [[by_cell[c][p] for p in range(dim_per)] for c in code_ids],
-                dtype=np.int64,
-            )
-            models.append((code_ids, cmat))
-    _PQ_MODEL_CACHE[key] = models
-    return models
+    """Per-sub-space codebooks [(code_ids, codebook (K, D/M))]: one
+    :func:`_lloyd_fit` over PQ_M slices, PQ_K codewords each."""
+    return _lloyd_fit(spark, sf_dir, PQ_K, PQ_ITERS, PQ_M)
 
 
 @register_query(
@@ -1285,21 +1177,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- PQ recall evaluation
 @register_query(
     "similarity_pq_recall_report",
-    oracle=f"""
-    WITH brute AS (SELECT * FROM ({_topk_oracle(same_cell_only=False)}) b0),
-    pq AS (SELECT * FROM ({_pq_oracle()}) p0),
-    hits AS (
-      SELECT b.q_id, COUNT(p.c_id) AS n_hit
-      FROM brute b LEFT JOIN pq p ON b.q_id = p.q_id AND b.c_id = p.c_id
-      GROUP BY b.q_id
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-           CAST(SUM(n_hit) AS BIGINT) AS total_hits,
-           CAST(SUM(n_hit) * 10000 // (COUNT(*) * {TOP_K}) AS BIGINT)
-             AS mean_recall_bp,
-           CAST(MIN(n_hit) * 10000 // {TOP_K} AS BIGINT) AS min_recall_bp
-    FROM hits
-    """,
+    oracle=_recall_oracle(_pq_oracle()),
     description=f"ANN evaluation: PQ/ADC recall@{TOP_K} against the brute-force ground truth — what {PQ_M}x{PQ_K}-codeword compression costs in ranking fidelity",
 )
 def similarity_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1308,26 +1186,4 @@ def similarity_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ approximates the DISTANCE ITSELF (quantization error), IVF only
     prunes candidates — so this measures end-to-end ranking fidelity
     of the codes a 100 TB deployment would actually store."""
-    brute = similarity_bruteforce_topk(spark, sf_dir)
-    pq = similarity_pq_adc_topk(spark, sf_dir).select(
-        F.col("q_id").alias("p_q"), F.col("c_id").alias("p_c")
-    )
-    hits = (
-        brute.join(
-            pq,
-            (brute.q_id == F.col("p_q")) & (brute.c_id == F.col("p_c")),
-            "left",
-        )
-        .groupBy("q_id")
-        .agg(F.count("p_c").alias("n_hit"))
-    )
-    return hits.agg(
-        F.count("*").cast("bigint").alias("n_queries"),
-        F.sum("n_hit").cast("bigint").alias("total_hits"),
-        F.expr(f"CAST(sum(n_hit) * 10000 div (count(*) * {TOP_K}) AS BIGINT)").alias(
-            "mean_recall_bp"
-        ),
-        F.expr(f"CAST(min(n_hit) * 10000 div {TOP_K} AS BIGINT)").alias(
-            "min_recall_bp"
-        ),
-    )
+    return _recall_report(spark, sf_dir, similarity_pq_adc_topk(spark, sf_dir))

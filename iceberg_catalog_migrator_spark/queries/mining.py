@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum, dsum_expr
 from ..sources import load_table, register_temp_views
-from .registry import register_query
+from .registry import register_query, register_stage
 
 # -- market basket ----------------------------------------------------------
 # A-priori pruning bound: an item below MIN_ITEM_SUPPORT baskets cannot
@@ -108,25 +108,12 @@ def _basket_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The pair census feeds two queries (basket listing, triangle census);
-# like the dedup candidate stage, a production pipeline materializes
-# that boundary once — the in-process analogue is one persisted
-# DataFrame per (application, sf_dir), keyed by applicationId so a
-# restarted session never reuses dropped cache blocks.
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
 # The basket-set stage feeds the pair census TWICE (support census +
 # pruned re-explode) and the basket count once; persisted, the
 # collect_set shuffle over lineitem runs once instead of three times.
-_SETS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@register_stage("basket_sets")
 def _basket_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SETS_CACHE.get(key)
-    if cached is None:
-        cached = _basket_sets(spark, sf_dir).persist()
-        _SETS_CACHE[key] = cached
-    return cached
+    return _basket_sets(spark, sf_dir).persist()
 
 
 def pair_supports_from_sets(
@@ -189,16 +176,11 @@ def pair_supports_from_sets(
     )
 
 
+# The pair census feeds two queries (basket listing, triangle census);
+# like the dedup candidate stage, it is materialized once.
+@register_stage("frequent_pair_supports")
 def _frequent_pair_supports(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared by the basket listing and the co-purchase triangle census
-    (persisted stage boundary)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = pair_supports_from_sets(_basket_sets_cached(spark, sf_dir)).persist()
-    _PAIR_CACHE[key] = pairs
-    return pairs
+    return pair_supports_from_sets(_basket_sets_cached(spark, sf_dir)).persist()
 
 
 # -- fuzzy record linkage ---------------------------------------------------

@@ -9,7 +9,6 @@ names must match exactly (alias everything on both sides).
 from __future__ import annotations
 
 import fcntl
-import glob
 import hashlib
 import importlib
 import inspect
@@ -17,6 +16,9 @@ import json
 import os
 import re
 import shutil
+import time
+import types
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
@@ -70,31 +72,60 @@ def register_query(name: str, oracle: str | None = None, description: str = ""):
     return deco
 
 
+# ONE KEY RULE for on-disk fixtures and in-session stages: the name,
+# the builder's own source (hashed once per code object), the values of
+# the immutable module-level constants it names, the input dataset
+# (absolute sf_dir plus name, size and mtime of its parquet files) and
+# the builder's extra arguments. An edited builder, a patched constant
+# or a regenerated dataset rebuilds instead of serving the old result.
+# Helpers a builder calls are not part of its source; keep what decides
+# a result inside the builder. CACHE_STATS counts hits, misses and build
+# seconds (nested builds included) per fixture and stage name.
+CACHE_STATS: dict[str, dict[str, float]] = {}
+_CODE_INFO: dict[int, tuple] = {}  # id(code) -> (code, source digest, names)
+
+
+def _key(name: str, build: Callable, sf_dir: str, args: tuple = ()) -> tuple:
+    code = build.__code__
+    info = _CODE_INFO.get(id(code))
+    if info is None or info[0] is not code:
+        names, todo = set(), [code]
+        while todo:
+            c = todo.pop()
+            names.update(c.co_names)
+            todo.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
+        digest = hashlib.sha256(inspect.getsource(build).encode()).hexdigest()
+        info = _CODE_INFO[id(code)] = (code, digest, sorted(names))
+    env = build.__globals__
+    consts = [(n, env[n]) for n in info[2] if isinstance(env.get(n), (int, float, str, tuple))]
+    sf = os.path.abspath(sf_dir)
+    inputs = sorted(
+        (e.name, st.st_size, st.st_mtime_ns)
+        for e in (os.scandir(sf) if os.path.isdir(sf) else ())
+        if e.name.endswith(".parquet")
+        for st in (e.stat(),)
+    )
+    return (name, info[1], tuple(consts), sf, tuple(inputs), args)
+
+
+def _count(name: str, hit: bool, build_s: float = 0.0) -> None:
+    stats = CACHE_STATS.setdefault(name, {"hits": 0, "misses": 0, "build_s": 0.0})
+    stats["hits" if hit else "misses"] += 1
+    stats["build_s"] += build_s
+
+
 # ON-DISK QUERY FIXTURES. A builder ``(spark, sf_dir, root) -> None``
 # fills the empty directory ``root`` once; the registered fixture
 # ``(spark, sf_dir) -> root`` returns ``FIXTURE_ROOT/<name>/<key>``,
 # building it first when its marker is missing or holds another key.
-# The key covers the name, the builder's own source and the input
-# dataset (absolute sf_dir plus size and mtime of its parquet inputs),
-# so an edited builder or a regenerated dataset rebuilds instead of
-# silently serving the old tree. Fixtures are immutable: a query reads
-# its fixture and writes nothing into it. Builds happen in place, not
-# in a temp dir renamed afterwards, because the trees record absolute
-# paths (Iceberg ``location``, catalog metadata pointers).
+# Fixtures are immutable: a query reads its fixture and writes nothing
+# into it. Builds happen in place, not in a temp dir renamed afterwards,
+# because the trees record absolute paths (Iceberg ``location``, catalog
+# metadata pointers).
 FixtureFn = Callable[[SparkSession, str], str]
 FIXTURES: dict[str, FixtureFn] = {}
 FIXTURE_ROOT = "/tmp/spark_graft_fixtures"
 _MARKER = ".fixture-key"
-
-
-def _fixture_key(name: str, build: Callable, sf_dir: str) -> str:
-    h = hashlib.sha256(f"{name}\0{inspect.getsource(build)}\0".encode())
-    sf = os.path.abspath(sf_dir)
-    h.update(sf.encode())
-    for path in sorted(glob.glob(os.path.join(sf, "*.parquet"))):
-        st = os.stat(path)
-        h.update(f"\0{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
 
 
 def _marker_key(root: str) -> str | None:
@@ -111,21 +142,24 @@ def ensure_fixture(name: str, build: Callable, spark: SparkSession, sf_dir: str)
     file and ``os.replace``, so a build that dies midway leaves none
     and the next call starts again from an empty directory. A file
     lock serializes concurrent builders of the same key."""
-    key = _fixture_key(name, build, sf_dir)
+    key = hashlib.sha256(repr(_key(name, build, sf_dir)).encode()).hexdigest()[:16]
     root = os.path.join(FIXTURE_ROOT, name, key)
-    if _marker_key(root) == key:
-        return root
-    os.makedirs(os.path.dirname(root), exist_ok=True)
-    with open(root + ".lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        if _marker_key(root) != key:
-            shutil.rmtree(root, ignore_errors=True)
-            os.makedirs(root)
-            build(spark, sf_dir, root)
-            tmp = os.path.join(root, f"{_MARKER}.tmp.{os.getpid()}")
-            with open(tmp, "w") as f:
-                f.write(key)
-            os.replace(tmp, os.path.join(root, _MARKER))
+    if _marker_key(root) != key:
+        os.makedirs(os.path.dirname(root), exist_ok=True)
+        with open(root + ".lock", "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            if _marker_key(root) != key:
+                t0 = time.perf_counter()
+                shutil.rmtree(root, ignore_errors=True)
+                os.makedirs(root)
+                build(spark, sf_dir, root)
+                tmp = os.path.join(root, f"{_MARKER}.tmp.{os.getpid()}")
+                with open(tmp, "w") as f:
+                    f.write(key)
+                os.replace(tmp, os.path.join(root, _MARKER))
+                _count(name, hit=False, build_s=time.perf_counter() - t0)
+                return root
+    _count(name, hit=True)
     return root
 
 
@@ -141,6 +175,70 @@ def register_fixture(name: str):
         return fixture
 
     return deco
+
+
+# IN-SESSION STAGES. A builder ``(spark, sf_dir, *args) -> value``
+# returns a shared intermediate (a persisted DataFrame, a tuple of them,
+# a fitted model). The registered stage holds one value per
+# ``(name, abspath(sf_dir), args)`` while its key plus the session's
+# applicationId is unchanged; on a new key the old value is unpersisted
+# (if its session is the live one) and rebuilt. Keyword arguments reach
+# the builder on a miss and are not part of the key: frames the caller
+# already derived from the same inputs, for the miss to build on.
+STAGES: dict[tuple, tuple] = {}  # (name, sf, args) -> (key, value)
+_STAGE_NAMES: set[str] = set()
+_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()  # SparkContext -> id
+
+
+def _app_id(sc) -> str:
+    if sc not in _APP_IDS:
+        _APP_IDS[sc] = sc.applicationId
+    return _APP_IDS[sc]
+
+
+def _unpersist(value) -> None:
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            v.unpersist()
+
+
+def register_stage(name: str):
+    def deco(build: Callable) -> Callable:
+        if name in _STAGE_NAMES:
+            raise ValueError(f"duplicate stage name: {name}")
+        _STAGE_NAMES.add(name)
+
+        def stage(spark: SparkSession, sf_dir: str, *args, **given):
+            app = _app_id(spark.sparkContext)
+            key = (*_key(name, build, sf_dir, args), app)
+            slot = (name, key[3], args)  # key[3] is abspath(sf_dir)
+            held = STAGES.get(slot)
+            if held is not None and held[0] == key:
+                _count(name, hit=True)
+                return held[1]
+            if held is not None and held[0][-1] == app:
+                _unpersist(held[1])
+            t0 = time.perf_counter()
+            value = build(spark, sf_dir, *args, **given)
+            STAGES[slot] = (key, value)
+            _count(name, hit=False, build_s=time.perf_counter() - t0)
+            return value
+
+        return stage
+
+    return deco
+
+
+def clear_stages() -> None:
+    """Drop every held stage, unpersisting those of the live session."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    live = sc and _app_id(sc)
+    for key, value in STAGES.values():
+        if key[-1] == live:
+            _unpersist(value)
+    STAGES.clear()
 
 
 # COVERAGE SCHEDULER (documented so the verifier owner can opt out).

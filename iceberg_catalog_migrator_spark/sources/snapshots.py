@@ -64,7 +64,7 @@ from .mor import (
     _hide_sequenced,
     _keys_table,
 )
-from .pruning import overlaps, plan_files, transform_col
+from .pruning import _file_schema, overlaps, plan_files, transform_col
 
 
 class SnapshotError(RuntimeError):
@@ -2526,6 +2526,7 @@ def merge_upsert(
         table._commit(new, "merge-insert-only", parent, ref=ref)
         return MergeResult(rewritten=0, carried=0, inserted=delta.count())
     snap = table._load_snap(parent)
+    delta = _at_table_types(table, snap, delta)
 
     key0 = key_cols[0]
     bounds = delta.agg(
@@ -2632,6 +2633,29 @@ def merge_upsert(
     return MergeResult(
         rewritten=len(touched), carried=len(carried), new_files=len(rewritten)
     )
+
+
+def _at_table_types(table: SnapshotTable, snap: dict, delta: DataFrame) -> DataFrame:
+    """``delta`` with each column the table has cast to the table's type
+    (the current schema when tracked, else a data file's), so no merge
+    writes a file typed otherwise than the table: an untracked table
+    cannot read back files whose types differ."""
+    from pyspark.sql import functions as F
+
+    if snap.get("schemas"):
+        cur = _schema_by_id(snap["schemas"], snap["current_schema_id"])
+        types = {f["name"]: f["type"] for f in cur["fields"]}
+    elif snap["files"]:
+        schema = _file_schema(table, snap["files"][0])
+        types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    else:
+        return delta
+    casts = {
+        f.name: F.col(f.name).cast(types[f.name])
+        for f in delta.schema.fields
+        if f.name in types and f.dataType.simpleString() != types[f.name]
+    }
+    return delta.withColumns(casts) if casts else delta
 
 
 class MergeClause:

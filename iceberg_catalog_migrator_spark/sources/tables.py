@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..queries.registry import register_stage
+
 TABLES = (
     "region",
     "nation",
@@ -68,7 +70,8 @@ def _ingested_path(sf_dir: str, name: str) -> str:
         return src
     if md.num_rows < INGEST_MIN_ROWS or md.num_row_groups >= TARGET_SPLITS:
         return src
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    # the copy's layout follows TARGET_SPLITS, so it is part of the key
+    key = hashlib.md5(f"{os.path.abspath(sf_dir)}\0{TARGET_SPLITS}".encode()).hexdigest()[:12]
     dst = os.path.join(INGEST_CACHE_DIR, key, f"{name}.parquet")
     if os.path.exists(dst) and os.path.getmtime(dst) >= os.path.getmtime(src):
         return dst
@@ -80,28 +83,22 @@ def _ingested_path(sf_dir: str, name: str) -> str:
     return dst
 
 
-# Unresolved-DataFrame memo: `spark.read.parquet` pays a driver-side
-# file listing + footer schema read per call, and a bench/oracle run
-# issues hundreds of load_table calls for the same ten paths. The memo
-# returns the SAME DataFrame object (an immutable logical plan — no
-# data or results are cached; every action still scans the parquet),
-# keyed by applicationId so a new session never reuses a stopped
-# session's plan.
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# A registered stage: `spark.read.parquet` pays a driver-side file
+# listing + footer schema read per call, and a bench/oracle run issues
+# hundreds of load_table calls for the same ten paths. The stage holds
+# the SAME DataFrame object (an immutable logical plan; every action
+# still scans the parquet) until the session or the input files change.
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    cached = _DF_CACHE.get(key)
-    if cached is None:
-        if name == "events":
-            cached = _load_events(spark, sf_dir)
-        else:
-            cached = spark.read.parquet(_ingested_path(sf_dir, name))
-        _DF_CACHE[key] = cached
-    return cached
+    return _table(spark, sf_dir, name)
+
+
+@register_stage("table")
+def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name == "events":
+        return _load_events(spark, sf_dir)
+    return spark.read.parquet(_ingested_path(sf_dir, name))
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,19 +44,22 @@ def prepare_stream_input(spark: SparkSession, sf_dir: str, out_dir: str, chunks:
     file source replays them like a real stream (event-time roughly
     monotone across micro-batches — random chunking would make almost
     everything late and watermark-dropped)."""
+    from ..sources import load_table
+
+    return _write_chunks(load_table(spark, sf_dir, "events"), ["ts", "event_id"], chunks, out_dir)
+
+
+def _write_chunks(df: DataFrame, order: list[str], chunks: int, out_dir: str) -> str:
+    """Write ``df`` as ``chunks`` parquet files in ``order``, one file per
+    chunk, named and mod-timed in chunk order."""
     import glob
     import shutil
 
     from pyspark.sql import Window
 
-    from ..sources import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")
-    total = ev.count()
-    chunked = ev.withColumn(
-        "_chunk", ((F.row_number().over(w) - 1) * chunks / total).cast("int")
-    )
+    total = df.count()
+    rank = F.row_number().over(Window.orderBy(*order)) - 1
+    chunked = df.withColumn("_chunk", (rank * chunks / total).cast("int"))
     os.makedirs(out_dir, exist_ok=True)
     for i in range(chunks):
         tmp = os.path.join(out_dir, f"_tmp_{i}")
@@ -251,9 +254,6 @@ def prepare_documents_stream_input(
     every doc_id % 5 == 0 arrives a second time 30s later (same text,
     offset id) — the duplicate-submission shape a live ingest pipeline
     sees. Event time is synthesized deterministically from doc_id."""
-    import glob
-    import shutil
-
     from ..sources import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
@@ -268,26 +268,7 @@ def prepare_documents_stream_input(
             "lang",
         )
     )
-    allrows = originals.unionByName(copies)
-    total = allrows.count()
-    from pyspark.sql import Window
-
-    w = Window.orderBy("ts", "doc_id")
-    chunked = allrows.withColumn(
-        "_chunk", ((F.row_number().over(w) - 1) * chunks / total).cast("int")
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(chunks):
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        chunked.filter(F.col("_chunk") == i).drop("_chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(out_dir, f"{i:03d}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(tmp)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-    return out_dir
+    return _write_chunks(originals.unionByName(copies), ["ts", "doc_id"], chunks, out_dir)
 
 
 def documents_stream(spark: SparkSession, input_dir: str) -> DataFrame:

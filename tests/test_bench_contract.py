@@ -50,6 +50,15 @@ def test_emit_writes_full_detail_locally(monkeypatch, tmp_path):
     assert len(full["queries"]) == 100  # nothing omitted in the local copy
 
 
+def test_emit_writes_cache_counters_locally_only(monkeypatch, tmp_path):
+    stats = {f"stage_{i:03d}": {"hits": i, "misses": 1, "build_s": 0.1234} for i in range(200)}
+    monkeypatch.setattr(bench, "CACHE_STATS", stats)
+    line = _emit_line(monkeypatch, tmp_path, {"q1": 1.0})
+    assert "caches" not in json.loads(line)
+    full = json.loads((tmp_path / "BENCH.local.json").read_text())
+    assert full["caches"]["stage_007"] == {"hits": 7, "misses": 1, "build_s": 0.123}
+
+
 def test_emit_fail_soft_errors_surface_in_both_outputs(monkeypatch, tmp_path):
     # fail-soft contract (BENCH_r04 lesson): broken queries must never
     # zero the bench — the stdout line carries the error COUNT (byte

@@ -6,6 +6,8 @@ parameterized over register/migrate (``delete_source`` bool), against
 local catalogs — no services needed.
 """
 
+import time
+
 import pytest
 
 from iceberg_catalog_migrator_spark.catalog import (
@@ -166,6 +168,31 @@ def test_parallel_register_matches_sequential(tmp_path):
     result = m.result()
     assert set(result.registered_table_identifiers) == set(ids)
     assert result.failed_to_register_table_identifiers == []
+
+
+def test_parallel_register_creates_each_namespace_prefix_once(tmp_path):
+    src = SqlCatalog("source", str(tmp_path / "src.db"))
+    for depth in range(1, 4):
+        src.create_namespace(tuple("abc"[:depth]))
+    ids = []
+    for i in range(40):
+        tid = TableIdentifier.of("a", "b", "c", f"t{i}")
+        src.register_table(tid, write_table_metadata(str(tmp_path / f"t{i}"), ID_SCHEMA, version=1))
+        ids.append(tid)
+    tgt = make_target(tmp_path)
+    created = []
+    create = tgt.create_namespace
+
+    def slow_create(ns, *args, **kwargs):
+        created.append(ns)
+        time.sleep(0.005)  # widen the check-then-create window
+        return create(ns, *args, **kwargs)
+
+    tgt.create_namespace = slow_create
+    m = CatalogMigrator(src, tgt)
+    m.register_tables(ids, parallelism=8)
+    assert len(m.result().registered_table_identifiers) == 40
+    assert sorted(created) == [("a",), ("a", "b"), ("a", "b", "c")]
 
 
 def test_hadoop_source_migrate_forbidden(tmp_path):

@@ -195,19 +195,18 @@ def test_star_contract_matches_min_label_on_random_graph(spark):
 def test_cc_round_bound_falls_back_not_raises(spark, sf_dir, monkeypatch):
     # with the propagation bound forced to zero rounds, the query must
     # come out of the star-contraction fallback with identical labels
-    D._LABELS_CACHE.clear()
+    # (the bound is part of the labels stage's key, so patching it
+    # rebuilds the stage)
     expected = {
         (r.doc_id, r.component)
         for r in D.dedup_connected_components(spark, sf_dir).collect()
     }
     assert expected
-    D._LABELS_CACHE.clear()
     monkeypatch.setattr(D, "CC_MAX_ROUNDS", 0)
     got = {
         (r.doc_id, r.component)
         for r in D.dedup_connected_components(spark, sf_dir).collect()
     }
-    D._LABELS_CACHE.clear()
     assert got == expected
 
 

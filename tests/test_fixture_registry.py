@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import sys
 import threading
 import time
 
@@ -152,6 +153,97 @@ def test_concurrent_callers_build_once(fixture_root, dataset):
     assert not any(t.is_alive() for t in threads)
     assert len(roots) == 8 and len(set(roots)) == 1
     assert calls == roots[:1]
+
+
+# --------------------------------------------------------------- stages
+_ROUNDS = 3
+
+
+class _Context:
+    def __init__(self, app: str):
+        self.applicationId = app
+
+
+class _Session:
+    def __init__(self, app: str):
+        self.sparkContext = _Context(app)
+
+
+@pytest.fixture
+def stages(monkeypatch):
+    monkeypatch.setattr(registry, "STAGES", {})
+    monkeypatch.setattr(registry, "_STAGE_NAMES", set())
+    monkeypatch.setattr(registry, "CACHE_STATS", {})
+
+
+def test_stage_counts_a_miss_a_hit_and_a_rebuild(stages, dataset):
+    stage = registry.register_stage("toy")(lambda spark, sf_dir, n: n * _ROUNDS)
+    session = _Session("app-1")
+    assert stage(session, str(dataset), 2) == 6
+    assert stage(session, str(dataset), 2) == 6
+    (dataset / "orders.parquet").write_bytes(b"regenerated, longer input")
+    assert stage(session, str(dataset), 2) == 6
+    stats = registry.CACHE_STATS["toy"]
+    assert (stats["hits"], stats["misses"]) == (1, 2)
+    assert stats["build_s"] >= 0.0
+
+
+def test_stage_rebuilds_on_a_patched_constant_and_a_new_session(stages, dataset, monkeypatch):
+    calls: list[int] = []
+
+    def build(spark, sf_dir):
+        calls.append(_ROUNDS)
+        return _ROUNDS
+
+    stage = registry.register_stage("toy")(build)
+    first = _Session("app-1")
+    assert stage(first, str(dataset)) == 3
+    monkeypatch.setattr(sys.modules[__name__], "_ROUNDS", 0)
+    assert stage(first, str(dataset)) == 0
+    assert stage(first, str(dataset)) == 0
+    assert stage(_Session("app-2"), str(dataset)) == 0
+    assert calls == [3, 0, 0]
+    with pytest.raises(ValueError, match="duplicate stage name"):
+        registry.register_stage("toy")(build)
+
+
+def test_replaced_stage_frame_is_unpersisted(spark, stages, monkeypatch):
+    stage = registry.register_stage("toy")(
+        lambda spark, sf_dir: spark.range(_ROUNDS).persist()
+    )
+    old = stage(spark, "/nonexistent")
+    assert old.count() == 3 and old.is_cached
+    monkeypatch.setattr(sys.modules[__name__], "_ROUNDS", 5)
+    new = stage(spark, "/nonexistent")
+    assert new.count() == 5 and new.is_cached
+    assert not old.is_cached
+    registry.clear_stages()
+    assert not new.is_cached and registry.STAGES == {}
+
+
+def test_regenerated_input_serves_new_rows(spark, stages, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_catalog_migrator_spark.sources import load_table
+
+    def write_docs(n: int) -> None:
+        ids = list(range(n))
+        pq.write_table(
+            pa.table({"doc_id": ids, "text": [f"doc {i}" for i in ids]}),
+            str(tmp_path / "documents.parquet"),
+        )
+
+    stage = registry.register_stage("toy")(
+        lambda spark, sf_dir: load_table(spark, sf_dir, "documents").persist()
+    )
+    write_docs(20)
+    assert load_table(spark, str(tmp_path), "documents").count() == 20
+    assert stage(spark, str(tmp_path)).count() == 20
+    write_docs(200)
+    assert load_table(spark, str(tmp_path), "documents").count() == 200
+    assert stage(spark, str(tmp_path)).count() == 200
+    registry.clear_stages()
 
 
 # ---------------------------------------------------------------- order

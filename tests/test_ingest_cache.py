@@ -45,6 +45,15 @@ def test_cache_reused_not_rewritten(cache_dir):
     assert os.path.getmtime(p2) == mtime
 
 
+def test_copy_follows_target_splits(cache_dir, sf_dir, monkeypatch):
+    # a copy chunked for fewer cores must not be served to more
+    monkeypatch.setattr(T, "TARGET_SPLITS", 4)
+    T._ingested_path(sf_dir, "orders")
+    monkeypatch.setattr(T, "TARGET_SPLITS", 8)
+    p = T._ingested_path(sf_dir, "orders")
+    assert pq.ParquetFile(p).metadata.num_row_groups == 8
+
+
 def test_kill_switch(cache_dir, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_NO_INGEST_CACHE", "1")
     sf = "/root/testdata/sf0.1"

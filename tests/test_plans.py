@@ -369,15 +369,12 @@ def test_basket_pairs_no_self_join_shuffle(spark, queries):
     # expression), never via a second exchange of the item stream; the
     # support keep-list broadcasts, and the basket-set shuffle is reused
     # for every orderkey-keyed step
-    # r16: the basket-set and pair stages are application-scoped
-    # persisted caches; clear them so the audited plan is the BUILD
-    # shape regardless of which test ran first
-    from iceberg_catalog_migrator_spark.queries import mining as M
+    # the basket-set and pair stages are persisted registered stages;
+    # clear them so the audited plan is the BUILD shape regardless of
+    # which test ran first
+    from iceberg_catalog_migrator_spark.queries.registry import clear_stages
 
-    for df in list(M._PAIR_CACHE.values()) + list(M._SETS_CACHE.values()):
-        df.unpersist()  # drop from the CacheManager, not just the memo
-    M._PAIR_CACHE.clear()
-    M._SETS_CACHE.clear()
+    clear_stages()
     a = audit(queries, spark, "basket_frequent_part_pairs")
     assert a.n_shuffles <= 6
     assert a.n_broadcasts >= 2  # support keep-list + n_baskets scalar

@@ -11,8 +11,8 @@ table's. For every plan:
   read file by file with pyarrow;
 - the columnar plan keeps exactly what the manifest dict loop keeps on
   the same value sets;
-- a ``merge_upsert`` (source cast to the table's key type) leaves the
-  visible rows equal to a Python model.
+- a ``merge_upsert`` of that source leaves the visible rows equal to a
+  Python model.
 """
 
 from __future__ import annotations
@@ -199,11 +199,7 @@ def test_planner_keeps_every_matching_file(
         touched, _, _ = _merge_prune(tb.t, snap, src, [key], bounds)
         assert set(touched) >= tb.matching_files(snap, lambda r: r[key] in keys)
 
-        # the write checks run at the table's key type: merge_upsert
-        # writes a source that touches no file as given, and a narrower
-        # key would leave mixed-type files an untracked table cannot read
-        # back (an open ROADMAP item outside the planner)
-        merge_upsert(tb.t, src.withColumn(key, F.col(key).cast(tb.ktype)), [key])
+        merge_upsert(tb.t, src, [key])
         want = sorted([r for r in tb.rows if r[0] not in keys] + src_rows)
         got = tb.t.read().select(key, "s", "d", "v").collect()
         assert sorted(tuple(r) for r in got) == want

@@ -2173,6 +2173,24 @@ def test_merge_prunes_on_partition_buckets(spark, table, key_type):
     assert table.read().count() == 4000
 
 
+@pytest.mark.parametrize("tracked", [False, True])
+def test_merge_writes_a_narrower_source_at_the_table_types(spark, table, tracked):
+    """A source that touches no file is written as a new file; typed
+    narrower than the table (int into bigint), that file must still be
+    bigint, or an untracked table cannot read its files back."""
+    from iceberg_catalog_migrator_spark.sources.snapshots import merge_upsert, track_schema
+
+    table.append(spark.range(0, 10).select(F.col("id").alias("k"), F.lit(1).alias("v")))
+    if tracked:
+        track_schema(table)
+    delta = spark.createDataFrame([(100, 7)], "k int, v int")
+    res = merge_upsert(table, delta, ["k"])
+    assert res["rewritten"] == 0
+    got = table.read()
+    assert [f.dataType.simpleString() for f in got.schema.fields] == ["bigint", "int"]
+    assert sorted(tuple(r) for r in got.collect()) == [(k, 1) for k in range(10)] + [(100, 7)]
+
+
 def test_merge_empty_source_is_noop(spark, table):
     """An empty source fires no clause: head unchanged, no commit — an
     empty CDC micro-batch used to rewrite the WHOLE table (bounds.lo
