@@ -26,7 +26,6 @@ from pyspark.sql import SparkSession
 
 from .base import (
     Catalog,
-    CatalogError,
     Namespace,
     NamespaceAlreadyExistsError,
     NoSuchTableError,

@@ -29,7 +29,6 @@ from pyspark.sql.window import Window
 
 from ..queries.registry import register_query, register_stage
 from ..sources import load_table
-from .hashing import TOKEN_SPLIT_REGEX
 from .text import _tok, _TOK_SQL
 
 MIN_DF = 3  # drop hapax-ish terms from the index listing

@@ -9,7 +9,6 @@ queries pin the plumbing (and its determinism) with oracles.
 import pandas as pd  # noqa: F401 (pandas_udf resolves type hints at def time)
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..queries.registry import register_query

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dsum, dsum_expr
+from ..functions.numeric import dsum_expr
 from ..sources import load_table, register_temp_views
 from .registry import register_query, register_stage
 
@@ -117,18 +117,23 @@ def _basket_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pair_supports_from_sets(
-    sets: DataFrame, max_items: int = MAX_BASKET_FREQUENT_ITEMS
+    sets: DataFrame,
+    max_items: int = MAX_BASKET_FREQUENT_ITEMS,
+    min_item: int = MIN_ITEM_SUPPORT,
+    min_pair: int = MIN_PAIR_SUPPORT,
 ) -> DataFrame:
     """(part1, part2, pair_support, support1, support2) for frequent
     co-occurring part pairs from a (l_orderkey, items) basket-set
-    DataFrame. The per-basket pair expansion is quadratic in the
-    basket's frequent-item count; any basket past ``max_items`` raises
-    executor-side with the remedy rather than materializing the array."""
+    DataFrame: items in at least ``min_item`` baskets, pairs in at
+    least ``min_pair``. The per-basket pair expansion is quadratic in
+    the basket's frequent-item count; any basket past ``max_items``
+    raises executor-side with the remedy rather than materializing the
+    array."""
     exploded = sets.select("l_orderkey", F.explode("items").alias("l_partkey"))
     support = (
         exploded.groupBy("l_partkey")
         .agg(F.count("*").alias("item_support"))
-        .filter(F.col("item_support") >= MIN_ITEM_SUPPORT)
+        .filter(F.col("item_support") >= min_item)
     )
     pruned = exploded.join(F.broadcast(support), "l_partkey")
     freq_sets = pruned.groupBy("l_orderkey").agg(
@@ -172,15 +177,21 @@ def pair_supports_from_sets(
             F.min("support1").alias("support1"),
             F.min("support2").alias("support2"),
         )
-        .filter(F.col("pair_support") >= MIN_PAIR_SUPPORT)
+        .filter(F.col("pair_support") >= min_pair)
     )
 
 
 # The pair census feeds two queries (basket listing, triangle census);
-# like the dedup candidate stage, it is materialized once.
+# like the dedup candidate stage, it is materialized once. The builder
+# names the three bounds, so patching one of them changes the stage key.
 @register_stage("frequent_pair_supports")
 def _frequent_pair_supports(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pair_supports_from_sets(_basket_sets_cached(spark, sf_dir)).persist()
+    return pair_supports_from_sets(
+        _basket_sets_cached(spark, sf_dir),
+        MAX_BASKET_FREQUENT_ITEMS,
+        MIN_ITEM_SUPPORT,
+        MIN_PAIR_SUPPORT,
+    ).persist()
 
 
 # -- fuzzy record linkage ---------------------------------------------------

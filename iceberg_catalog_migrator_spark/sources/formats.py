@@ -20,7 +20,7 @@ carries arrays natively; ORC and parquet carry everything.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 SUPPORTED_FORMATS = ("parquet", "orc", "json", "csv")
 

@@ -53,6 +53,7 @@ import struct
 import time
 import uuid
 
+from .mor import _coords_table, _key_type
 from .snapshots import MAIN, SnapshotError, SnapshotTable
 
 # ------------------------------------------------------------ avro write
@@ -217,6 +218,32 @@ def _content_fingerprint(records: list) -> str:
     return hashlib.md5(
         json.dumps(records, sort_keys=True, default=repr).encode()
     ).hexdigest()[:16]
+
+
+def _delete_entry(
+    sid: int, seq: int, content: int, path: str, fmt: str, rows: int, **more
+) -> dict:
+    """An ADDED delete-manifest entry: ``content`` 1 for position
+    deletes (a parquet file or one DV blob of a puffin file), 2 for
+    equality deletes; ``more`` holds the kind's own ``data_file``
+    fields."""
+    return {
+        "status": _ADDED,
+        "snapshot_id": sid,
+        "sequence_number": seq,
+        "file_sequence_number": seq,
+        "data_file": {
+            "content": content,
+            "file_path": path,
+            "file_format": fmt,
+            "partition": {},
+            "record_count": rows,
+            "file_size_in_bytes": os.path.getsize(path),
+            "lower_bounds": None,
+            "upper_bounds": None,
+            **more,
+        },
+    }
 
 
 # ------------------------------------------------- iceberg schemas
@@ -1163,15 +1190,7 @@ def export_iceberg_metadata(
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        t = pq.read_table(
-            os.path.join(table.path, rel), columns=["_file", "_pos"]
-        )
-        fps = [
-            os.path.join(table.path, f)
-            for f in t.column("_file").to_pylist()
-        ]
-        poss = t.column("_pos").to_pylist()
-        order = sorted(range(len(fps)), key=lambda i: (fps[i], poss[i]))
+        t = _coords_table([os.path.join(table.path, rel)])
         name = (
             "delete-" + hashlib.md5(rel.encode()).hexdigest()[:16] + ".parquet"
         )
@@ -1180,19 +1199,15 @@ def export_iceberg_metadata(
         # conversion (a prior export's) is byte-equivalent: reuse it
         # rather than rewrite a file prior metadata versions reference
         if not os.path.exists(cpath):
+            fps = [os.path.join(table.path, f) for f in t["_file"].to_pylist()]
             out = pa.table(
-                {
-                    "file_path": pa.array(
-                        [fps[i] for i in order], pa.string()
-                    ),
-                    "pos": pa.array([poss[i] for i in order], pa.int64()),
-                }
+                {"file_path": pa.array(fps, pa.string()), "pos": t["_pos"]}
             )
             tmp = f"{cpath}.tmp.{os.getpid()}"
             pq.write_table(out, tmp)
             os.replace(tmp, cpath)
             created_deletes.add(cpath)
-        converted[rel] = (cpath, len(fps))
+        converted[rel] = (cpath, len(t))
         return converted[rel]
 
     # v3: a snapshot's pending vectors merge into ONE puffin file —
@@ -1212,20 +1227,14 @@ def export_iceberg_metadata(
         if key in converted_dv:
             return converted_dv[key]
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from .puffin import DV_BLOB_TYPE, dv_blob, write_puffin
 
-        # vectorized grouping: concat + sort arrow-side, slice per-file
-        # numpy position arrays — never a per-position Python loop (a
-        # v3 table's pending vectors may hold 10^8+ positions)
-        t = pa.concat_tables(
-            pq.read_table(
-                os.path.join(table.path, rel), columns=["_file", "_pos"]
-            )
-            for rel in key
-        ).sort_by([("_file", "ascending"), ("_pos", "ascending")])
+        # vectorized grouping: the loader's sorted distinct coordinates
+        # slice into per-file numpy position arrays, in referenced-file
+        # order — never a per-position Python loop (a v3 table's
+        # pending vectors may hold 10^8+ positions)
+        t = _coords_table([os.path.join(table.path, rel) for rel in key])
         fnames = t.column("_file").to_numpy()
         poss = t.column("_pos").to_numpy()
         uniq, starts = np.unique(fnames, return_index=True)
@@ -1242,11 +1251,10 @@ def export_iceberg_metadata(
                     "payload": dv_blob(positions),
                     "properties": {
                         "referenced-data-file": fp,
-                        "cardinality": str(len(np.unique(positions))),
+                        "cardinality": str(len(positions)),
                     },
                 }
             )
-        blobs.sort(key=lambda b: b["properties"]["referenced-data-file"])
         token = hashlib.md5("\x00".join(key).encode()).hexdigest()[:16]
         ppath = os.path.join(out_dir, f"dv-{token}.puffin")
         descs = []
@@ -1293,8 +1301,6 @@ def export_iceberg_metadata(
             return converted[rel]
         import pyarrow as pa
         import pyarrow.parquet as pq
-
-        from .mor import _key_type
 
         t = pq.read_table(os.path.join(table.path, rel), columns=key_cols)
         # Iceberg timestamps are microseconds; a Spark-written key
@@ -1568,50 +1574,21 @@ def export_iceberg_metadata(
                 ppath, descs = _convert_vectors_dv(
                     snap["pos_deletes"], sid, seq
                 )
-                psize = os.path.getsize(ppath)
                 for d in descs:
                     del_rows += d["cardinality"]
                     del_entries.append(
-                        {
-                            "status": _ADDED,
-                            "snapshot_id": sid,
-                            "sequence_number": seq,
-                            "file_sequence_number": seq,
-                            "data_file": {
-                                "content": 1,  # position deletes (spec)
-                                "file_path": ppath,
-                                "file_format": "PUFFIN",
-                                "partition": {},
-                                "record_count": d["cardinality"],
-                                "file_size_in_bytes": psize,
-                                "lower_bounds": None,
-                                "upper_bounds": None,
-                                "referenced_data_file": d["referenced"],
-                                "content_offset": d["offset"],
-                                "content_size_in_bytes": d["length"],
-                            },
-                        }
+                        _delete_entry(
+                            sid, seq, 1, ppath, "PUFFIN", d["cardinality"],
+                            referenced_data_file=d["referenced"],
+                            content_offset=d["offset"],
+                            content_size_in_bytes=d["length"],
+                        )
                     )
             for rel in [] if v3 else snap.get("pos_deletes", []):
                 cpath, nrows = _convert_vector(rel)
                 del_rows += nrows
                 del_entries.append(
-                    {
-                        "status": _ADDED,
-                        "snapshot_id": sid,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": {
-                            "content": 1,  # position deletes (spec)
-                            "file_path": cpath,
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": nrows,
-                            "file_size_in_bytes": os.path.getsize(cpath),
-                            "lower_bounds": None,
-                            "upper_bounds": None,
-                        },
-                    }
+                    _delete_entry(sid, seq, 1, cpath, "PARQUET", nrows)
                 )
             dseqs = snap.get("delete_seqs", {})
             eq_ids = [id_by_name[k] for k in snap.get("delete_keys", [])]
@@ -1620,26 +1597,13 @@ def export_iceberg_metadata(
                     rel, snap["delete_keys"]
                 )
                 del_rows += nrows
+                # the delete's OWN stamp scopes it: it applies only to
+                # files sequenced strictly before it
                 del_entries.append(
-                    {
-                        "status": _ADDED,
-                        "snapshot_id": sid,
-                        # the delete's OWN stamp scopes it: it applies
-                        # only to files sequenced strictly before it
-                        "sequence_number": int(dseqs[rel]),
-                        "file_sequence_number": int(dseqs[rel]),
-                        "data_file": {
-                            "content": 2,  # equality deletes (spec)
-                            "file_path": cpath,
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": nrows,
-                            "file_size_in_bytes": os.path.getsize(cpath),
-                            "lower_bounds": None,
-                            "upper_bounds": None,
-                            "equality_ids": eq_ids,
-                        },
-                    }
+                    _delete_entry(
+                        sid, int(dseqs[rel]), 2, cpath, "PARQUET", nrows,
+                        equality_ids=eq_ids,
+                    )
                 )
             dfp = _content_fingerprint(
                 [_manifest_entry_schema([], v3=v3, dv=v3), del_entries]

@@ -51,6 +51,14 @@ import re
 import struct
 
 from .iceberg_format import read_avro
+from .mor import (
+    _basename,
+    _by_coords,
+    _coords_df,
+    _coords_table,
+    _hide_sequenced,
+    _row_identity,
+)
 from .pruning import overlaps, render_sets
 from .snapshots import SnapshotError
 
@@ -239,16 +247,9 @@ def value_from_bytes(iceberg_type: str, b: bytes):
     return None
 
 
-def _basename_col(c):
-    """The last path segment, percent-decoded when URI-escaped.
-    _metadata.file_path percent-escapes specials (space → %20) while
-    manifest paths are raw; decoding only when a '%' is present keeps
-    literal '+' in raw names intact (url_decode would turn it into a
-    space)."""
-    from pyspark.sql import functions as F
-
-    b = F.element_at(F.split(c, "/"), -1)
-    return F.when(b.contains("%"), F.url_decode(b)).otherwise(b)
+# the foreign reader's row coordinates: prefixed, so they can never
+# collide with a user column of the table being read
+_ICB_COORDS = ["__icb_fp", "__icb_pos"]
 
 
 def _check_basename_unique(kept: list[dict], action: str) -> None:
@@ -263,44 +264,6 @@ def _check_basename_unique(kept: list[dict], action: str) -> None:
                 f"duplicate data file basename {b!r}: cannot {action}"
             )
         seen_base[b] = e["file_path"]
-
-
-def _dv_coordinates_df(spark, dvs: list[dict]):
-    """The (data-file basename, position) delete coordinates of v3
-    deletion-vector entries as a DISTRIBUTED frame: the driver ships
-    only the metadata-sized (puffin, offset, length, referenced-file)
-    rows; each roaring bitmap decodes EXECUTOR-side in one
-    ``mapInPandas`` pass — a table whose DVs hold 10^9 deleted
-    positions costs one shuffle-side expansion, never driver memory."""
-    rows = [
-        (
-            os.path.basename(d["referenced"]),
-            d["puffin"],
-            int(d["offset"]),
-            int(d["length"]),
-        )
-        for d in dvs
-    ]
-    meta = spark.createDataFrame(
-        rows, "__icb_fp string, __dv_p string, __dv_o bigint, __dv_l bigint"
-    )
-    if len(rows) > 1:  # one task per blob: expansion parallelizes
-        meta = meta.repartition(min(len(rows), 64))
-
-    def expand(batches):
-        import pandas as pd
-
-        from .puffin import dv_positions, read_blob
-
-        for pdf in batches:
-            for fp, p, o, ln in pdf.itertuples(index=False):
-                pos = dv_positions(read_blob(p, int(o), int(ln)))
-                if len(pos):
-                    yield pd.DataFrame(
-                        {"__icb_fp": fp, "__icb_pos": pos}
-                    )
-
-    return meta.mapInPandas(expand, "__icb_fp string, __icb_pos bigint")
 
 
 class IcebergTable:
@@ -927,34 +890,18 @@ class IcebergTable:
             _check_basename_unique(
                 kept, "apply per-file corrections by coordinate"
             )
-            base = _basename_col
             cols = df.columns
-            df = df.select(
-                "*",
-                base(F.col("_metadata.file_path")).alias("__icb_fp"),
-                F.col("_metadata.row_index").alias("__icb_pos"),
-            )
+            df = df.select("*", *_row_identity(names=_ICB_COORDS))
             # v3 initial-defaults fill BEFORE deletes apply: equality
             # deletes compare key VALUES, so a pre-addition file's rows
             # must already read as the declared default when keys match
             if defaults:
                 df = self._apply_initial_defaults(df, kept, defaults)
-            if pos_deletes:
-                dd = (
-                    self.spark.read.parquet(*pos_deletes)
-                    .select(
-                        base(F.col("file_path")).alias("__icb_fp"),
-                        F.col("pos").alias("__icb_pos"),
-                    )
-                    .distinct()
+            if pos_deletes or dvs:
+                coords = _coords_df(
+                    self.spark, pos_deletes + dvs, _basename, _ICB_COORDS
                 )
-                df = df.join(dd, ["__icb_fp", "__icb_pos"], "left_anti")
-            if dvs:
-                df = df.join(
-                    _dv_coordinates_df(self.spark, dvs),
-                    ["__icb_fp", "__icb_pos"],
-                    "left_anti",
-                )
+                df = _by_coords(df, coords, keep_matching=False)
             if eq_deletes:
                 df = self._apply_equality_deletes(df, snap, kept, eq_deletes)
             if with_row_ids:
@@ -1224,8 +1171,6 @@ class IcebergTable:
         planner (AQE)."""
         from pyspark.sql import functions as F
 
-        from .mor import _hide_sequenced
-
         name_by_id = {f["id"]: f["name"] for f in self.schema_fields(snap)}
         fmap = self.spark.createDataFrame(
             [
@@ -1417,8 +1362,9 @@ def adopt_iceberg_table(
     convertible in BOTH directions.
 
     PENDING DELETE FILES CARRY (metadata-only, like the data files):
-    position deletes convert into the engine's vector parquet with the
-    source coordinates re-keyed to the adopted file names, and
+    position-delete files and deletion vectors convert into one engine
+    vector file with the source coordinates re-keyed to the adopted
+    file names, and
     equality deletes link in at their recorded sequence numbers next
     to the data files' own stamps — so revive semantics (a key
     re-appended after its deletion) survive adoption exactly. The one
@@ -1504,6 +1450,7 @@ def adopt_iceberg_table(
         return t
 
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     # same guard add_files applies on the no-delete path: one adopted
@@ -1541,54 +1488,23 @@ def adopt_iceberg_table(
         fseqs[rel] = int(e["sequence"])
     extra: dict = {"file_seqs": fseqs}
     max_seq = max(fseqs.values(), default=0)
-    pos_rel: list[str] = []
-    for j, p in enumerate(pos_deletes):
-        tbl = pq.read_table(p, columns=["file_path", "pos"])
-        pairs = sorted(
-            (relmap[ap], int(q))
-            for s, q in zip(
-                tbl.column("file_path").to_pylist(),
-                tbl.column("pos").to_pylist(),
-            )
-            # a coordinate naming a file outside this snapshot (the
-            # delete file outlived a rewrite) cannot match any adopted
-            # row: dropping it is exact
-            if (ap := os.path.realpath(s)) in relmap
+    if pos_deletes or dvs:
+        # position-delete files and v3 deletion vectors adopt as ONE
+        # engine vector file, each coordinate re-keyed to its adopted
+        # file name. A coordinate naming a file outside this snapshot
+        # (the delete outlived a rewrite) cannot match any adopted row:
+        # dropping it is exact.
+        coords = _coords_table(pos_deletes + dvs)
+        srcs = pc.unique(coords["_file"])
+        rels = pa.array(
+            [relmap.get(os.path.realpath(f)) for f in srcs.to_pylist()], pa.string()
         )
-        out = pa.table(
-            {
-                "_file": pa.array([a for a, _ in pairs], pa.string()),
-                "_pos": pa.array([b for _, b in pairs], pa.int64()),
-            }
-        )
-        dest = os.path.join(t._data, f"{token}-posdel-{j:05d}.parquet")
-        pq.write_table(out, dest)
-        pos_rel.append(os.path.relpath(dest, t.path))
-    for j, dv in enumerate(dvs):
-        # v3 deletion vectors adopt as the engine's vector parquet —
-        # the bitmap IS the complete position set for its one
-        # referenced file, so the conversion is exact by construction
-        from .puffin import dv_positions, read_blob
-
-        rel = relmap.get(os.path.realpath(dv["referenced"]))
-        if rel is None:
-            # references a file outside this snapshot (the DV outlived
-            # a rewrite): no adopted row can match — dropping is exact
-            continue
-        positions = dv_positions(
-            read_blob(dv["puffin"], dv["offset"], dv["length"])
-        )
-        out = pa.table(
-            {
-                "_file": pa.array([rel] * len(positions), pa.string()),
-                "_pos": pa.array(positions, pa.int64()),
-            }
-        )
-        dest = os.path.join(t._data, f"{token}-dvdel-{j:05d}.parquet")
-        pq.write_table(out, dest)
-        pos_rel.append(os.path.relpath(dest, t.path))
-    if pos_rel:
-        extra["pos_deletes"] = sorted(pos_rel)
+        renamed = rels.take(pc.index_in(coords["_file"], value_set=srcs))
+        coords = coords.set_column(0, "_file", renamed).filter(pc.is_valid(renamed))
+        if len(coords):
+            dest = os.path.join(t._data, f"{token}-posdel-00000.parquet")
+            pq.write_table(coords, dest)
+            extra["pos_deletes"] = [os.path.relpath(dest, t.path)]
     if eq_deletes:
         ids = next(iter(key_sets))
         missing = [fid for fid in ids if fid not in name_by_id]

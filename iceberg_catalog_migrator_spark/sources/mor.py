@@ -1,20 +1,36 @@
-"""Merge-on-read equality deletes: the one module that owns their rules.
+"""Merge-on-read deletes: the one module that owns their rules, for
+both delete kinds.
 
 An equality-delete file lists key tuples; it hides a data row iff the
 row's key tuple is listed AND the delete is sequenced after the row's
-data file (Iceberg's data-sequence-number rule). Every read path —
-the snapshot-table DataFrame reads (``snapshots.py``), the connector's
-per-file Arrow readers (``snapshot_stream.py``) and the foreign Iceberg
-reader (``iceberg_read.py``) — applies that rule through this module:
+data file (Iceberg's data-sequence-number rule). A positional delete
+names ``(file, pos)`` coordinates — a data file and a row ordinal in
+it — and hides exactly those physical rows. Every read path — the
+snapshot-table DataFrame reads (``snapshots.py``), the connector's
+per-file Arrow readers (``snapshot_stream.py``), the foreign Iceberg
+reader and adopter (``iceberg_read.py``) and the Iceberg exporter
+(``iceberg_format.py``) — applies those rules through this module:
 
 - :func:`_key_type` / :func:`_keys_table`: one key schema and one
-  driver- or executor-side Arrow loader for delete files, whichever
-  writer produced them;
+  driver- or executor-side Arrow loader for equality-delete files,
+  whichever writer produced them;
 - :func:`_filter_by_keys`: the Arrow semi/anti selection of data rows
   by a loaded key set;
 - :func:`_eq_applies` / :func:`_eq_exempt_files`: the sequence rule
   per (delete file, data file), for Arrow and Python planners;
-- :func:`_hide_sequenced`: the same rule as one DataFrame kernel.
+- :func:`_hide_sequenced`: the same rule as one DataFrame kernel;
+- :func:`_coords_table`: one Arrow loader of the distinct delete
+  coordinates of any mix of the three coordinate formats — the
+  engine's vector parquet (``_file`` / ``_pos``), spec position-delete
+  parquet (``file_path`` / ``pos``) and puffin deletion vectors (DVs)
+  — optionally scoped to some data files;
+- :func:`_coords_df`: the same coordinates as a DataFrame under a
+  declared schema (no schema-inference job), DVs decoded
+  executor-side;
+- :func:`_by_coords`: the DataFrame semi/anti selection of rows by a
+  coordinate frame;
+- :func:`_row_identity`: each data row's ``(file, pos)`` coordinates,
+  from Spark's parquet ``_metadata`` columns.
 
 Null keys never match, on every path (SQL equi-join semantics).
 """
@@ -153,3 +169,131 @@ def _hide_sequenced(
         .filter(F.col("_dseq").isNull() | (F.col("_dseq") <= F.col("_fseq")))
         .drop("_dseq", "_fseq")
     )
+
+
+# ------------------------------------------------------------ positional
+_COORDS = ["_file", "_pos"]
+_COORD_SCHEMA = pa.schema([("_file", pa.string()), ("_pos", pa.int64())])
+
+
+def _dv_coords(dv: dict) -> pa.Table:
+    """The coordinates one deletion vector holds: ``dv`` is a
+    ``{puffin, offset, length, referenced}`` descriptor, the blob the
+    COMPLETE position set of its one referenced data file."""
+    from .puffin import dv_positions, read_blob
+
+    blob = read_blob(dv["puffin"], int(dv["offset"]), int(dv["length"]))
+    pos = pa.array(dv_positions(blob), pa.int64())
+    return pa.table(
+        [pa.repeat(dv["referenced"], len(pos)), pos], schema=_COORD_SCHEMA
+    )
+
+
+def _coords_table(sources: list, files=None) -> pa.Table:
+    """Distinct ``(_file, _pos)`` delete coordinates of ``sources``,
+    sorted, loaded driver-side. A source is a parquet path — the
+    engine's vector file or a spec position-delete file, told apart by
+    its footer — or a DV descriptor (a dict, see :func:`_dv_coords`).
+    ``_file`` is the data file as the source names it (table-relative
+    for engine vectors, the manifest path otherwise). ``files`` keeps
+    only coordinates in those data files; a DV referencing none of
+    them is not decoded."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keep = None if files is None else pa.array(sorted(set(files)), pa.string())
+    parts = [_COORD_SCHEMA.empty_table()]
+    for s in sources:
+        if isinstance(s, dict):
+            if files is not None and s["referenced"] not in files:
+                continue
+            t = _dv_coords(s)
+        else:
+            with pq.ParquetFile(s) as pf:
+                engine = "_file" in pf.schema_arrow.names
+                t = pf.read(columns=_COORDS if engine else ["file_path", "pos"])
+            t = t.rename_columns(_COORDS).cast(_COORD_SCHEMA)
+        if keep is not None:
+            t = t.filter(pc.is_in(t["_file"], value_set=keep))
+        parts.append(t)
+    t = pa.concat_tables(parts).group_by(_COORDS).aggregate([])
+    return t.sort_by([(c, "ascending") for c in _COORDS])
+
+
+def _basename(c):
+    """The last path segment of string Column ``c``."""
+    from pyspark.sql import functions as F
+
+    return F.element_at(F.split(c, "/"), -1)
+
+
+def _coords_df(spark, sources: list, file_key=None, names=_COORDS):
+    """:func:`_coords_table`'s coordinates as a distributed, distinct
+    DataFrame with columns ``names``. Both parquet layouts are read in
+    one scan under one declared schema — each file fills the pair of
+    columns it has — so no schema-inference job runs. DV bitmaps decode
+    EXECUTOR-side, one task per blob: the driver ships only the
+    metadata-sized descriptors, so 10^9 deleted positions never reach
+    driver memory. ``file_key`` (a Column function) rewrites the file
+    column, e.g. to :func:`_basename` to meet :func:`_row_identity`."""
+    from pyspark.sql import functions as F
+
+    paths = [s for s in sources if not isinstance(s, dict)]
+    dvs = [s for s in sources if isinstance(s, dict)]
+    parts = []
+    if paths:
+        raw = spark.read.schema(
+            "_file string, _pos bigint, file_path string, pos bigint"
+        ).parquet(*paths)
+        parts.append(
+            raw.select(
+                F.coalesce("_file", "file_path").alias("_file"),
+                F.coalesce("_pos", "pos").alias("_pos"),
+            )
+        )
+    if dvs:
+        meta = spark.createDataFrame(
+            [(d["referenced"], d["puffin"], d["offset"], d["length"]) for d in dvs],
+            "referenced string, puffin string, offset bigint, length bigint",
+        )
+        if len(dvs) > 1:  # one task per blob: expansion parallelizes
+            meta = meta.repartition(min(len(dvs), 64))
+
+        def expand(batches):
+            for pdf in batches:
+                for dv in pdf.to_dict("records"):
+                    yield _dv_coords(dv).to_pandas()
+
+        parts.append(meta.mapInPandas(expand, "_file string, _pos bigint"))
+    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    if file_key is not None:
+        out = out.withColumn("_file", file_key(F.col("_file")))
+    return out.distinct().toDF(*names)
+
+
+def _by_coords(df, coords, keep_matching: bool):
+    """Rows of ``df`` whose ``(file, pos)`` coordinates — the columns
+    ``coords`` carries, e.g. from :func:`_row_identity` — are (semi)
+    or are not (anti) listed in ``coords``."""
+    how = "left_semi" if keep_matching else "left_anti"
+    return df.join(coords, coords.columns, how)
+
+
+def _row_identity(prefix: str = "", names=_COORDS) -> list:
+    """Each raw row's ``(file, pos)`` coordinates as two Columns named
+    ``names``, from Spark's parquet ``_metadata`` (JVM-side, exact, no
+    extra scan): ``prefix`` + the data file's basename, and the row's
+    ordinal in it. The engine keys its vectors by ``data/<name>`` so a
+    table can move; a foreign reader keys by the basename alone.
+    ``_metadata.file_path`` percent-escapes specials (space -> %20)
+    while manifests and vectors hold raw names, so the basename is
+    decoded — only when a '%' is present, which keeps a literal '+'
+    intact (url_decode would turn it into a space)."""
+    from pyspark.sql import functions as F
+
+    b = _basename(F.col("_metadata.file_path"))
+    b = F.when(b.contains("%"), F.url_decode(b)).otherwise(b)
+    return [
+        F.concat(F.lit(prefix), b).alias(names[0]),
+        F.col("_metadata.row_index").alias(names[1]),
+    ]

@@ -74,7 +74,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .mor import _eq_applies, _filter_by_keys, _keys_table
+from .mor import _coords_table, _eq_applies, _filter_by_keys, _keys_table
 
 SNAPSHOT_STREAM_NAME = "snapshot_commits"
 
@@ -254,8 +254,6 @@ def _changelog_partitions(
     so a consumer can apply a multi-commit micro-batch in order —
     without the ordinal an insert-then-delete pair in one batch is
     unorderable."""
-    import pyarrow.parquet as _pq
-
     per_commit: list[list[dict]] = []
     sid = end_sid
     while sid is not None and sid > start_sid:
@@ -305,18 +303,12 @@ def _changelog_partitions(
         if snap["operation"] == "pos-delete":
             # newly-hidden rows = exactly the delta vectors' (file, pos)
             # coordinates, minus rows the parent already hid (by vector
-            # or by equality key). One driver-side keys-only read of the
-            # NEW vector files (metadata-sized) names the touched files;
-            # everything row-level stays executor-side per file.
+            # or by equality key). One driver-side coordinate read of
+            # the NEW vector files names the touched files; everything
+            # row-level stays executor-side per file.
             parent_vecs = set(pos_parent)
             new_vecs = [v for v in pos_now if v not in parent_vecs]
-            touched = set()
-            for v in new_vecs:
-                touched.update(
-                    _pq.read_table(
-                        os.path.join(path, v), columns=["_file"]
-                    )["_file"].to_pylist()
-                )
+            touched = set(_coords_table(_abs(path, new_vecs))["_file"].to_pylist())
             plans.extend(
                 _file_plan(
                     path, psnap, f, "delete", psnap.get("deletes", []),
@@ -383,28 +375,19 @@ def _rewrite_commit_plans(path: str, snap: dict, psnap: dict) -> list[dict]:
     files). Any other operation that changes delete state while
     keeping files (a rollback across a delete) still fails loudly —
     that visibility flip has no per-file attribution."""
-    import pyarrow.parquet as _pq
-
     sid = snap["snapshot_id"]
     snap_files, parent_files = set(snap["files"]), set(psnap["files"])
     carried = snap_files & parent_files
     pos_now = snap.get("pos_deletes", [])
     pos_parent = psnap.get("pos_deletes", [])
 
-    def _carried_coords(vecs):
-        out = set()
-        for v in vecs:
-            t = _pq.read_table(os.path.join(path, v), columns=["_file", "_pos"])
-            for f, p in zip(t["_file"].to_pylist(), t["_pos"].to_pylist()):
-                if f in carried:
-                    out.add((f, p))
-        return out
-
     if carried:
         if snap["operation"] == "merge":
-            if pos_now != pos_parent and _carried_coords(
-                pos_now
-            ) != _carried_coords(pos_parent):
+            # the merge's vector rewrite must leave the carried files'
+            # coordinates exactly as they were
+            if pos_now != pos_parent and not _coords_table(
+                _abs(path, pos_now), files=carried
+            ).equals(_coords_table(_abs(path, pos_parent), files=carried)):
                 raise RuntimeError(
                     f"snapshot {sid} (merge) changed positional-delete "
                     "coordinates on CARRIED files; the changelog stream "
@@ -455,6 +438,10 @@ def _align_to_schema(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
     return pa.Table.from_arrays(cols, schema=schema)
 
 
+def _abs(path: str, names) -> list[str]:
+    return [os.path.join(path, n) for n in names]
+
+
 def _file_plan(
     path: str,
     snap: dict,
@@ -473,19 +460,15 @@ def _file_plan(
     the delete / vector files whose matches ARE the emitted rows
     (``include`` / ``pos_include``, already scoped by the caller) and
     the commit ``sid`` stamped on every row."""
-
-    def _abs(names):
-        return [os.path.join(path, n) for n in names]
-
     return {
         "kind": kind,
         "file": os.path.join(path, f),
         # table-relative name: pos-delete vectors key on it
         "rel": f,
-        "exclude": _abs(d for d in deletes if _eq_applies(snap, d, f)),
-        "include": _abs(include),
-        "pos_exclude": _abs(vecs),
-        "pos_include": _abs(pos_include),
+        "exclude": _abs(path, (d for d in deletes if _eq_applies(snap, d, f))),
+        "include": _abs(path, include),
+        "pos_exclude": _abs(path, vecs),
+        "pos_include": _abs(path, pos_include),
         "keys": snap.get("delete_keys", []),
         "rename": _rename_map(snap, f),
         "sid": sid,
@@ -503,7 +486,6 @@ def _read_plan(plan: dict, schema: pa.Schema | None):
     file (keys-only, small by the merge-on-read write contract); row
     selection is vectorized arrow/numpy, not per-batch pandas merges."""
     import numpy as np
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     keys = plan.get("keys", [])
@@ -512,23 +494,13 @@ def _read_plan(plan: dict, schema: pa.Schema | None):
         _keys_table(plan["exclude"], keys) if plan.get("exclude") and keys else None
     )
 
-    def _ordinals(paths):
-        """This file's row ordinals named by the given vector files —
-        the per-file slice of the (file, pos) delete side."""
-        if not paths:
-            return None
-        out = []
-        for p in paths:
-            t = pq.read_table(p, columns=["_file", "_pos"])
-            out.append(
-                t.filter(pc.equal(t["_file"], plan["rel"]))["_pos"].to_numpy(
-                    zero_copy_only=False
-                )
-            )
-        return np.unique(np.concatenate(out))
-
-    pos_inc = _ordinals(plan.get("pos_include"))
-    pos_exc = _ordinals(plan.get("pos_exclude"))
+    # this file's row ordinals named by the include / exclude vectors
+    pos_inc, pos_exc = (
+        _coords_table(plan[side], files=[plan["rel"]])["_pos"].to_numpy()
+        if plan.get(side)
+        else None
+        for side in ("pos_include", "pos_exclude")
+    )
     rename = plan.get("rename")
     row_offset = 0
     for batch in pq.ParquetFile(plan["file"]).iter_batches():

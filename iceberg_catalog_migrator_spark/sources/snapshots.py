@@ -58,11 +58,15 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 from .mor import (
+    _by_coords,
+    _coords_df,
+    _coords_table,
     _delete_seq,
     _eq_exempt_files,
     _file_seq,
     _hide_sequenced,
     _keys_table,
+    _row_identity,
 )
 from .pruning import _file_schema, overlaps, plan_files, transform_col
 
@@ -1328,21 +1332,10 @@ class SnapshotTable:
             .parquet(*(os.path.join(self.path, f) for f in files))
         )
 
-    @staticmethod
-    def _pos_cols():
-        """``(_file, _pos)`` identity of each raw row, from Spark's
-        parquet ``_metadata`` columns (JVM-side, exact, no extra scan):
-        the coordinates positional delete files are keyed by. ``_file``
-        is table-relative (``data/<name>``) so the table can move."""
-        from pyspark.sql import functions as F
-
-        return [
-            F.concat(
-                F.lit("data/"),
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-            ).alias("_file"),
-            F.col("_metadata.row_index").alias("_pos"),
-        ]
+    def _coords(self, vectors: list[str]) -> DataFrame:
+        """The distinct ``(_file, _pos)`` coordinates of this table's
+        positional ``vectors`` (:func:`mor._coords_df`)."""
+        return _coords_df(self.spark, [os.path.join(self.path, v) for v in vectors])
 
     def _resolve_files(
         self, snap: dict, files: list[str], with_pos: bool = False
@@ -1360,7 +1353,7 @@ class SnapshotTable:
         schemas = snap.get("schemas")
         if not schemas:
             df = self._read_files(files)
-            return df.select("*", *self._pos_cols()) if with_pos else df
+            return df.select("*", *_row_identity("data/")) if with_pos else df
         if not files:
             raise SnapshotError("snapshot has no data files")
         cur = _schema_by_id(schemas, snap["current_schema_id"])
@@ -1387,7 +1380,7 @@ class SnapshotTable:
                         F.lit(dflt).cast(fld["type"]).alias(fld["name"])
                     )
             if with_pos:
-                cols.extend(self._pos_cols())
+                cols.extend(_row_identity("data/"))
             proj = df.select(*cols)
             out = proj if out is None else out.unionByName(proj)
         return out
@@ -1488,15 +1481,8 @@ class SnapshotTable:
         dels_b, dels_a = snap_b.get("deletes", []), snap_a.get("deletes", [])
         pos_b_files = snap_b.get("pos_deletes", [])
         pos_a_files = snap_a.get("pos_deletes", [])
-
-        def _pos_set(pos_files):
-            return (
-                self._read_files(pos_files).select("_file", "_pos").distinct()
-                if pos_files
-                else None
-            )
-
-        pos_b, pos_a = _pos_set(pos_b_files), _pos_set(pos_a_files)
+        pos_b = self._coords(pos_b_files) if pos_b_files else None
+        pos_a = self._coords(pos_a_files) if pos_a_files else None
 
         if with_lineage and not (
             snap_a.get("row_lineage") and snap_b.get("row_lineage")
@@ -1515,7 +1501,7 @@ class SnapshotTable:
             same content on both sides)."""
             if with_lineage:
                 return _attach_row_ids(self, snap, files)
-            return _rf(files).select("*", *self._pos_cols())
+            return _rf(files).select("*", *_row_identity("data/"))
 
         # carried-file candidates whose visibility may have flipped:
         # (a) equality-delete state differs -> rows matching either
@@ -1540,33 +1526,20 @@ class SnapshotTable:
                     _reader(carried, snap_a).join(keys, key_cols, "left_semi")
                 )
         if pos_b_files != pos_a_files and carried:
-            both = (
-                pos_b.unionByName(pos_a)
-                if pos_b is not None and pos_a is not None
-                else (pos_b if pos_b is not None else pos_a)
-            )
-            delta = (
-                both.groupBy("_file", "_pos")
-                .count()
-                .filter("count = 1")  # hidden on exactly one side
-                .select("_file", "_pos")
-                if pos_b is not None and pos_a is not None
-                else both
-            )
+            # coordinates hidden on exactly one side
+            if pos_b is None or pos_a is None:
+                delta = pos_b if pos_a is None else pos_a
+            else:
+                delta = _by_coords(pos_b, pos_a, keep_matching=False).unionByName(
+                    _by_coords(pos_a, pos_b, keep_matching=False)
+                )
             # metadata-sized collect: distinct FILE NAMES the delta
-            # vectors touch (bounded by the carried-file count), so the
-            # scan below opens only those files
-            carried_set = set(carried)
-            touched = [
-                r["_file"]
-                for r in delta.select("_file").distinct().collect()
-                if r["_file"] in carried_set
-            ]
+            # vectors touch, so the scan below opens only those files
+            named = {r["_file"] for r in delta.select("_file").distinct().collect()}
+            touched = [f for f in carried if f in named]
             if touched:
                 cands.append(
-                    _reader(touched, snap_a).join(
-                        delta, ["_file", "_pos"], "left_semi"
-                    )
+                    _by_coords(_reader(touched, snap_a), delta, keep_matching=True)
                 )
         flip = None
         if cands:
@@ -1582,7 +1555,7 @@ class SnapshotTable:
             # semi-join run once, not once per side
             flip = flip.localCheckpoint()
 
-        def _side(changed_files, snap, dels, pos):
+        def _side(changed_files, snap, pos):
             parts = []
             if changed_files:
                 parts.append(_reader(changed_files, snap))
@@ -1596,15 +1569,15 @@ class SnapshotTable:
                 else parts[0].unionByName(parts[1], allowMissingColumns=True)
             )
             if pos is not None:  # this side's vectors hide physical rows
-                rows = rows.join(pos, ["_file", "_pos"], "left_anti")
+                rows = _by_coords(rows, pos, keep_matching=False)
             # equality visibility is SEQUENCE-AWARE (a key re-appended
             # after its deletion is visible): applied while the rows
             # still carry their _file identity
             rows = _apply_eq_deletes(self, snap, rows, snap["files"])
             return rows.drop("_file", "_pos")
 
-        side_b = _side(removed, snap_b, dels_b, pos_b)
-        side_a = _side(added, snap_a, dels_a, pos_a)
+        side_b = _side(removed, snap_b, pos_b)
+        side_a = _side(added, snap_a, pos_a)
         if side_a is None and side_b is None:
             empty = (
                 _attach_row_ids(self, snap_a, snap_a["files"]).drop("_file", "_pos")
@@ -2423,19 +2396,12 @@ def _carry_deletes_after_merge(
     """
     import pyarrow as pa
     import pyarrow.compute as pc
+    from pyspark.sql import functions as F
 
     out = {}
     pos = snap.get("pos_deletes", [])
     if pos:
-        carried_df = table.spark.createDataFrame(
-            [(f,) for f in carried] or [(None,)], "_file string"
-        )
-        surviving = (
-            table._read_files(pos)
-            .select("_file", "_pos")
-            .distinct()
-            .join(carried_df, "_file", "left_semi")
-        )
+        surviving = table._coords(pos).filter(F.col("_file").isin(carried))
         if surviving.limit(1).count():
             out["pos_deletes"] = table._write_data_files(surviving)
     dels = snap.get("deletes", [])
@@ -3194,8 +3160,7 @@ def _resolve_visible(
         if snap.get("row_lineage"):
             df = df.drop("_row_id")  # surfaced by read_with_lineage only
     if pos_deletes:
-        pos = table._read_files(pos_deletes).select("_file", "_pos").distinct()
-        df = df.join(pos, ["_file", "_pos"], "left_anti")
+        df = _by_coords(df, table._coords(pos_deletes), keep_matching=False)
     df = _apply_eq_deletes(table, snap, df, files)
     return df.drop("_file", "_pos") if (need_id and not keep_pos) else df
 
@@ -3257,7 +3222,7 @@ def _attach_row_ids(table: SnapshotTable, snap: dict, files: list[str]) -> DataF
     derived = [f for f in files if f not in flags]
     parts = []
     if derived:
-        base = table._read_files(derived).select("*", *table._pos_cols())
+        base = table._read_files(derived).select("*", *_row_identity("data/"))
         fmap = table.spark.createDataFrame(
             [(f, first[f]) for f in derived], "_file string, _first bigint"
         )
@@ -3267,7 +3232,7 @@ def _attach_row_ids(table: SnapshotTable, snap: dict, files: list[str]) -> DataF
             ).drop("_first")
         )
     if mat:
-        parts.append(table._read_files(mat).select("*", *table._pos_cols()))
+        parts.append(table._read_files(mat).select("*", *_row_identity("data/")))
     if not parts:
         # a head snapshot can legitimately own zero data files (an
         # overwrite/merge emptied the table); there is no parquet file
@@ -4233,22 +4198,10 @@ def metadata_count(
         if n is None:  # legacy file: one footer read
             n = pq.ParquetFile(os.path.join(table.path, f)).metadata.num_rows
         total += n
-    if snap.get("pos_deletes"):
-        # ONE distinct (file, pos) set across ALL vector files — stacked
-        # vectors may repeat coordinates, which must subtract once
-        live = set(snap["files"])
-        seen: set = set()
-        for v in snap["pos_deletes"]:
-            t = pq.read_table(
-                os.path.join(table.path, v), columns=["_file", "_pos"]
-            )
-            seen.update(
-                (f, p)
-                for f, p in zip(t["_file"].to_pylist(), t["_pos"].to_pylist())
-                if f in live
-            )
-        total -= len(seen)
-    return total
+    # minus ONE distinct (file, pos) set across ALL vector files —
+    # stacked vectors may repeat coordinates, which must subtract once
+    vectors = [os.path.join(table.path, v) for v in snap.get("pos_deletes", [])]
+    return total - len(_coords_table(vectors, files=snap["files"]))
 
 
 # ------------------------------------------------------------ metadata tables

@@ -207,6 +207,20 @@ def test_stage_rebuilds_on_a_patched_constant_and_a_new_session(stages, dataset,
         registry.register_stage("toy")(build)
 
 
+@pytest.mark.parametrize(
+    "bound", ["MIN_ITEM_SUPPORT", "MIN_PAIR_SUPPORT", "MAX_BASKET_FREQUENT_ITEMS"]
+)
+def test_pair_stage_key_sees_each_support_bound(dataset, monkeypatch, bound):
+    import inspect
+
+    from iceberg_catalog_migrator_spark.queries import mining
+
+    build = inspect.getclosurevars(mining._frequent_pair_supports).nonlocals["build"]
+    before = registry._key("frequent_pair_supports", build, str(dataset))
+    monkeypatch.setattr(mining, bound, getattr(mining, bound) + 1)
+    assert registry._key("frequent_pair_supports", build, str(dataset)) != before
+
+
 def test_replaced_stage_frame_is_unpersisted(spark, stages, monkeypatch):
     stage = registry.register_stage("toy")(
         lambda spark, sf_dir: spark.range(_ROUNDS).persist()

@@ -1,6 +1,8 @@
-"""The merge-on-read equality-delete key set: one driver-side Arrow
-loader feeds every read path, whichever writer produced the delete
-files, and its cost in Spark jobs does not grow with their number."""
+"""The merge-on-read delete sides: one driver-side Arrow loader of
+equality-delete keys feeds every read path, whichever writer produced
+the delete files, and its cost in Spark jobs does not grow with their
+number; positional coordinates load under a declared schema, so no
+read over pending vectors pays a schema-inference job for them."""
 
 from __future__ import annotations
 
@@ -24,6 +26,8 @@ from iceberg_catalog_migrator_spark.sources.snapshot_stream import (
 from iceberg_catalog_migrator_spark.sources.snapshots import (
     SnapshotTable,
     delete_where,
+    delete_where_positional,
+    merge_upsert,
     read_with_deletes,
 )
 
@@ -86,8 +90,10 @@ def test_spark_and_arrow_written_delete_files_read_identically(
     assert _canon(read_iceberg_table(spark, out["metadata_location"])) == expected
 
 
-def _jobs(spark, fn):
-    """(result, exact number of Spark jobs ``fn`` ran)."""
+def _jobs(spark, fn, name=""):
+    """(result, exact number of Spark jobs ``fn`` ran whose name starts
+    with ``name``; ``"parquet at"`` counts the schema-inference jobs of
+    ``spark.read.parquet`` calls)."""
     sc = spark.sparkContext
     group = f"probe-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
@@ -96,7 +102,9 @@ def _jobs(spark, fn):
     finally:
         sc.setJobGroup("tests", "tests")
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    return out, sum(1 for i in ids if store.job(i).name().startswith(name))
 
 
 def test_sequence_aware_read_jobs_do_not_grow_with_delete_files(spark, tmp_path):
@@ -174,3 +182,42 @@ def test_null_delete_key_hides_no_row_on_any_read_path(spark, tmp_path, key_cols
     )
     out = export_iceberg_metadata(t)
     assert bag(read_iceberg_table(spark, out["metadata_location"])) == expected
+
+
+def test_positional_paths_pay_no_schema_inference(spark, tmp_path):
+    """2,000 rows in 4 files under two pending positional vectors: the
+    job counts of building each read, and of a merge over the vectors.
+    What remains is data-side work: the data files' mergeSchema footer
+    merge, the changelog's touched-file collect (two jobs under AQE),
+    its broadcast stages and its flip checkpoint. A merge's total
+    varies with AQE's broadcast timing; its one inference job is the
+    touched data file's."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(
+        spark.range(0, 2000, numPartitions=4).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        )
+    )
+    first = t.current_snapshot_id()
+    delete_where_positional(t, "k % 10 = 0")
+    delete_where_positional(t, "k % 7 = 0")
+    head = t.current_snapshot_id()
+    assert len(S.load_manifest(t.path, first)["files"]) == 4
+    visible = 2000 - (200 + 286 - 29)  # k % 10 = 0 or k % 7 = 0 is hidden
+
+    df, jobs = _jobs(spark, lambda: read_with_deletes(t))
+    assert (jobs, df.count()) == (1, visible)
+    changes, jobs = _jobs(spark, lambda: t.read_changelog(first, head))
+    assert (jobs, changes.count()) == (6, 2000 - visible)
+    out = export_iceberg_metadata(t, format_version=2)
+    loc = out["metadata_location"]
+    df, jobs = _jobs(spark, lambda: read_iceberg_table(spark, loc))
+    assert (jobs, df.count()) == (0, visible)
+
+    # keys 0-39 upsert; 9 of them were hidden
+    src = spark.range(0, 40).select(
+        F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
+    )
+    _, jobs = _jobs(spark, lambda: merge_upsert(t, src, ["k"]), name="parquet at")
+    assert jobs == 1
+    assert read_with_deletes(t).count() == visible + 9
