@@ -396,22 +396,6 @@ def _avg2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return (a.astype(np.int32) + b.astype(np.int32)) // 2
 
 
-def _split(px: int) -> np.ndarray:
-    return np.array(
-        [(px >> 24) & 0xFF, (px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF],
-        dtype=np.int32,
-    )
-
-
-def _join(c) -> int:
-    return (
-        (int(c[0]) & 0xFF) << 24
-        | (int(c[1]) & 0xFF) << 16
-        | (int(c[2]) & 0xFF) << 8
-        | (int(c[3]) & 0xFF)
-    )
-
-
 def _predict(mode: int, L, T, TL) -> np.ndarray:
     if mode == 0:
         return np.array([0xFF, 0, 0, 0], dtype=np.int32)

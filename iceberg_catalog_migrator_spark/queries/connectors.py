@@ -1708,7 +1708,7 @@ def snapshot_rest_transaction_orders(
         "zstd-compressed Iceberg export (round-15): "
         "export_iceberg_metadata(compression='zstd') writes every "
         "manifest/manifest-list as a zstandard Avro container "
-        "(pure-Python RFC 8878 encoder, sources/zstd_encode.py), the "
+        "(pyarrow's libzstd through sources/codecs.py), the "
         "container headers are verified to carry the codec, and the "
         "import path decodes them back — head aggregates and "
         "snapshot-1 time travel recomputed by DuckDB"
@@ -1718,10 +1718,9 @@ def snapshot_iceberg_zstd_export_orders(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Write-side zstd (VERDICT round-14 ask #3-adjacent: decode-only
-    was half the interop story): the engine's own RFC 8878 encoder
-    emits the most common modern manifest codec, and the engine's own
-    RFC 8878 decoder — independently pinned against libzstd — reads
-    it back through the standard import plane."""
+    was half the interop story): the export writes the most common
+    modern manifest codec with pyarrow's libzstd, and the standard
+    import plane reads it back through the same library."""
     from ..sources.iceberg_format import export_iceberg_metadata
     from ..sources.iceberg_read import IcebergTable
 

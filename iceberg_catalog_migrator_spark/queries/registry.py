@@ -73,31 +73,61 @@ def register_query(name: str, oracle: str | None = None, description: str = ""):
 
 
 # ONE KEY RULE for on-disk fixtures and in-session stages: the name,
-# the builder's own source (hashed once per code object), the values of
-# the immutable module-level constants it names, the input dataset
-# (absolute sf_dir plus name, size and mtime of its parquet files) and
-# the builder's extra arguments. An edited builder, a patched constant
-# or a regenerated dataset rebuilds instead of serving the old result.
-# Helpers a builder calls are not part of its source; keep what decides
-# a result inside the builder. CACHE_STATS counts hits, misses and build
-# seconds (nested builds included) per fixture and stage name.
+# the sources of the builder and of every plain package function it
+# names (transitively, closures included; hashed once per builder), the
+# values of the immutable module-level constants each of them names in
+# its own module, the input dataset (absolute sf_dir plus name, size
+# and mtime of its parquet files) and the builder's extra arguments. An
+# edited builder or helper, a patched constant or a regenerated dataset
+# rebuilds instead of serving the old result. CACHE_STATS counts hits,
+# misses and build seconds (nested builds included) per fixture and
+# stage name.
 CACHE_STATS: dict[str, dict[str, float]] = {}
-_CODE_INFO: dict[int, tuple] = {}  # id(code) -> (code, source digest, names)
+_CODE_INFO: dict[int, tuple] = {}  # id(code) -> (code, source digest, scopes)
+_PACKAGE = __name__.split(".")[0] + "."
+
+
+def _names(code: types.CodeType) -> set[str]:
+    names, todo = set(), [code]
+    while todo:
+        c = todo.pop()
+        names.update(c.co_names)
+        todo.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
+    return names
+
+
+def _walk(build: Callable) -> tuple[str, tuple]:
+    """Source digest of ``build`` and of the package functions it
+    reaches, plus one ``(module globals, names)`` scope per function."""
+    digest = hashlib.sha256()
+    scopes, seen, todo = [], set(), [build]
+    while todo:
+        fn = todo.pop()
+        if fn.__code__ in seen:
+            continue
+        seen.add(fn.__code__)
+        digest.update(inspect.getsource(fn).encode())
+        names = sorted(_names(fn.__code__))
+        env = fn.__globals__
+        scopes.append((env, tuple(names)))
+        cells = [c.cell_contents for c in fn.__closure__ or ()]
+        for v in reversed([env.get(n) for n in names] + cells):
+            if isinstance(v, types.FunctionType) and v.__module__.startswith(_PACKAGE):
+                todo.append(v)
+    return digest.hexdigest(), tuple(scopes)
 
 
 def _key(name: str, build: Callable, sf_dir: str, args: tuple = ()) -> tuple:
     code = build.__code__
     info = _CODE_INFO.get(id(code))
     if info is None or info[0] is not code:
-        names, todo = set(), [code]
-        while todo:
-            c = todo.pop()
-            names.update(c.co_names)
-            todo.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
-        digest = hashlib.sha256(inspect.getsource(build).encode()).hexdigest()
-        info = _CODE_INFO[id(code)] = (code, digest, sorted(names))
-    env = build.__globals__
-    consts = [(n, env[n]) for n in info[2] if isinstance(env.get(n), (int, float, str, tuple))]
+        info = _CODE_INFO[id(code)] = (code, *_walk(build))
+    consts = [
+        (env["__name__"], n, env[n])
+        for env, names in info[2]
+        for n in names
+        if isinstance(env.get(n), (int, float, str, tuple))
+    ]
     sf = os.path.abspath(sf_dir)
     inputs = sorted(
         (e.name, st.st_size, st.st_mtime_ns)

@@ -22,8 +22,9 @@ Iceberg-shaped metadata:
   field-id-keyed ``lower_bounds``/``upper_bounds`` from the
   manifest-recorded stats (Iceberg single-value binary encoding).
 - The Avro container writer below implements the Avro 1.x spec from
-  scratch (magic, null + deflate codecs, zigzag varints, blocks,
-  sync markers) — no Avro library exists in this environment.
+  scratch (magic, zigzag varints, blocks, sync markers; block codecs
+  from the :mod:`.codecs` table) — no Avro library exists in this
+  environment.
   Manifest files are written via write-then-rename so readers never
   see a torn container.
 - ``tests/test_iceberg_export.py`` round-trips the export through an
@@ -52,7 +53,10 @@ import os
 import struct
 import time
 import uuid
+import zlib
 
+from . import codecs
+from .codecs import CODECS, compress, decompress
 from .mor import _coords_table, _key_type
 from .snapshots import MAIN, SnapshotError, SnapshotTable
 
@@ -132,45 +136,22 @@ def _encode_value(schema, value) -> bytes:
 def write_avro(
     path: str, schema: dict, records: list[dict], codec: str = "null"
 ) -> None:
-    """One-block Avro object container file. Codecs: ``null`` /
-    ``deflate`` (what real engines default manifest Avro to) plus the
-    Avro spec's ``snappy`` (pure-Python block format + the spec's
-    big-endian CRC32 of the uncompressed data), ``bzip2`` and ``xz``
-    (stdlib), and ``zstandard`` (pure-Python RFC 8878 both directions:
-    :mod:`.zstd` reads, :mod:`.zstd_encode` writes)."""
-    if codec not in ("null", "deflate", "snappy", "bzip2", "xz", "zstandard"):
+    """One-block Avro object container file, its block compressed by
+    any codec of :data:`.codecs.CODECS`: ``null``, ``deflate`` (what
+    real engines default manifest Avro to), ``bzip2`` and ``xz``
+    (stdlib), and ``snappy`` and ``zstandard`` (pyarrow's libsnappy
+    and libzstd). A snappy block carries the Avro spec's big-endian
+    CRC32 of the uncompressed data."""
+    if codec not in CODECS:
         raise ValueError(f"unsupported avro codec {codec!r}")
     sync = uuid.uuid4().bytes
     meta = {
         "avro.schema": json.dumps(schema).encode(),
-        "avro.codec": codec.encode(),
+        "avro.codec": CODECS[codec].name.encode(),
     }
     body = b"".join(_encode_value(schema, r) for r in records)
-    if codec == "deflate":
-        import zlib
-
-        body = zlib.compress(body)[2:-4]  # raw deflate: no header/adler
-    elif codec == "snappy":
-        import struct as _struct
-        import zlib as _zlib
-
-        from .snappy import compress as _snappy_compress
-
-        body = _snappy_compress(body) + _struct.pack(
-            ">I", _zlib.crc32(body) & 0xFFFFFFFF
-        )
-    elif codec == "bzip2":
-        import bz2
-
-        body = bz2.compress(body)
-    elif codec == "xz":
-        import lzma
-
-        body = lzma.compress(body, format=lzma.FORMAT_XZ)
-    elif codec == "zstandard":
-        from .zstd_encode import compress as _zstd_compress
-
-        body = _zstd_compress(body)
+    crc = struct.pack(">I", zlib.crc32(body)) if codec == "snappy" else b""
+    body = compress(codec, body) + crc
     with open(path, "wb") as f:
         f.write(_MAGIC)
         f.write(_enc_long(len(meta)))
@@ -725,23 +706,20 @@ _CODEC_PROPERTY_NAMES = {
 
 
 def _exporter_fingerprint() -> str:
-    """A hash of the source that SHAPES exported bytes — this module
-    plus the codec modules its write path can route through
-    (zstd_encode, snappy): any exporter OR encoder code change
-    invalidates reuse caches automatically, so a stale /tmp fixture
-    can never keep serving bytes the current code would not write."""
-    import hashlib
+    """A hash of what SHAPES exported bytes: this module, the codec
+    table its write path compresses through, and the pyarrow release
+    whose libzstd and libsnappy do the compressing. Any change to one
+    of them invalidates reuse caches, so a stale /tmp fixture can never
+    keep serving bytes the current code would not write."""
+    import pyarrow
 
     global _EXPORTER_FP
     if _EXPORTER_FP is None:
         h = hashlib.md5()
-        here = os.path.dirname(os.path.abspath(__file__))
-        for fname in (__file__, "zstd_encode.py", "snappy.py"):
-            try:
-                with open(os.path.join(here, fname), "rb") as f:
-                    h.update(f.read())
-            except OSError:
-                h.update(b"missing:" + fname.encode())
+        for fname in (__file__, codecs.__file__):
+            with open(fname, "rb") as f:
+                h.update(f.read())
+        h.update(pyarrow.__version__.encode())
         _EXPORTER_FP = h.hexdigest()
     return _EXPORTER_FP
 
@@ -907,8 +885,8 @@ def export_iceberg_metadata(
 
     ``compression``: Avro codec for the manifests and manifest lists —
     ``null`` (default), ``deflate``/``snappy``/``bzip2``/``xz``, or
-    ``zstd``/``zstandard`` (pure-Python RFC 8878 encoder,
-    :mod:`.zstd_encode`). The codec rides the doc's
+    ``zstd``/``zstandard`` (libzstd through pyarrow; see
+    :mod:`.codecs`). The codec rides the doc's
     ``write.avro.compression-codec`` property and tags the minted file
     names; ``reuse`` matches on it, so codec switches never serve a
     prior export's differently-coded files and same-codec re-exports
@@ -927,15 +905,15 @@ def export_iceberg_metadata(
     if head is None:
         raise SnapshotError(f"no committed snapshot at {table.path}")
     # manifest/manifest-list Avro codec. 'zstd' is the Avro spec's
-    # 'zstandard' (accept both spellings; pure-Python both directions).
+    # 'zstandard' (the codec table accepts both spellings).
     # Non-null codecs tag the content fingerprint so switching codec
     # mints new files instead of silently reusing old-codec ones, while
     # default exports keep their historical file names byte-stable.
-    codec = {"zstd": "zstandard"}.get(compression, compression)
-    if codec not in ("null", "deflate", "snappy", "bzip2", "xz", "zstandard"):
+    if compression not in CODECS:
         raise SnapshotError(
             f"unsupported manifest compression {compression!r}"
         )
+    codec = CODECS[compression].name
     # tag from the NORMALIZED property spelling: 'zstd' and 'zstandard'
     # are the same codec and must mint the same file-name family, or
     # alternating spellings hand back docs whose files carry the other
@@ -2156,11 +2134,10 @@ def _compile_decoder(schema):
 
 
 def read_avro(path: str) -> tuple[dict, list]:
-    """Decode an Avro object container: ``null`` / ``deflate`` (the
-    codecs real engines default manifest Avro to) plus ``snappy``
-    (pure-Python block-format decoder, CRC32-verified per the Avro
-    spec), ``bzip2`` and ``xz`` (stdlib), and ``zstandard``
-    (pure-Python RFC 8878 frame decoder, see :mod:`.zstd`)."""
+    """Decode an Avro object container whose codec is any of
+    :data:`.codecs.CODECS` (``snappy`` and ``zstandard`` on pyarrow's
+    libsnappy and libzstd); a snappy block's CRC32 is verified per the
+    Avro spec."""
     r = _AvroReader(open(path, "rb").read())
     if r._take(4) != _MAGIC:
         raise ValueError("not an avro object container")
@@ -2177,7 +2154,7 @@ def read_avro(path: str) -> tuple[dict, list]:
             meta[k] = r._take(r._long())
     schema = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode() or "null"
-    if codec not in ("null", "deflate", "snappy", "bzip2", "xz", "zstandard"):
+    if codec not in CODECS:
         raise ValueError(f"unsupported avro codec {codec!r}")
     sync = r._take(16)
     decode = _compile_decoder(schema)
@@ -2185,42 +2162,13 @@ def read_avro(path: str) -> tuple[dict, list]:
     while r.pos < len(r.data):
         cnt = r._long()
         body = r._take(r._long())
-        if codec == "deflate":
-            import zlib
-
-            body = zlib.decompress(body, -15)  # raw deflate per spec
-        elif codec == "snappy":
-            import zlib as _zlib
-
-            from .snappy import SnappyError, decompress as _snappy
-
-            if len(body) < 4:
-                raise ValueError("snappy avro block: missing CRC32")
-            crc = int.from_bytes(body[-4:], "big")  # spec: big-endian
-            try:
-                body = _snappy(body[:-4])
-            except SnappyError as exc:
-                raise ValueError(f"snappy avro block: {exc}") from exc
-            if _zlib.crc32(body) & 0xFFFFFFFF != crc:
-                raise ValueError(
-                    "snappy avro block: CRC32 mismatch on "
-                    "uncompressed data"
-                )
-        elif codec == "bzip2":
-            import bz2
-
-            body = bz2.decompress(body)
-        elif codec == "xz":
-            import lzma
-
-            body = lzma.decompress(body)
-        elif codec == "zstandard":
-            from .zstd import ZstdError, decompress as _zstd
-
-            try:
-                body = _zstd(body)
-            except ZstdError as exc:
-                raise ValueError(f"zstandard avro block: {exc}") from exc
+        if codec == "snappy":  # Avro's big-endian CRC32 trails the block
+            body, crc = body[:-4], body[-4:]
+        body = decompress(codec, body)
+        if codec == "snappy" and struct.pack(">I", zlib.crc32(body)) != crc:
+            raise ValueError(
+                "snappy avro block: CRC32 mismatch on uncompressed data"
+            )
         br = _AvroReader(body)
         for _ in range(cnt):
             records.append(decode(br))

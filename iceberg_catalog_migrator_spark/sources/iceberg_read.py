@@ -1168,10 +1168,12 @@ class IcebergTable:
         call per equality-id group. The per-key max-delete-sequence
         frame is built with Spark — O(deleted rows), so it never loads
         into driver memory and its join strategy is left to the
-        planner (AQE)."""
+        planner (AQE). Delete files are read under the key columns'
+        table-schema types, as the data files are, so building the read
+        runs no schema-inference job."""
         from pyspark.sql import functions as F
 
-        name_by_id = {f["id"]: f["name"] for f in self.schema_fields(snap)}
+        field_by_id = {f["id"]: f for f in self.schema_fields(snap)}
         fmap = self.spark.createDataFrame(
             [
                 (os.path.basename(e["file_path"]), e["sequence"])
@@ -1183,17 +1185,21 @@ class IcebergTable:
         for d in eq_deletes:
             groups.setdefault(d["equality_ids"], []).append(d)
         for ids, dels in groups.items():
-            missing = [i for i in ids if i not in name_by_id]
+            missing = [i for i in ids if i not in field_by_id]
             if missing:
                 raise SnapshotError(
                     f"equality_ids {missing} not in the table schema"
                 )
-            key_cols = [name_by_id[i] for i in ids]
+            key_cols = [field_by_id[i]["name"] for i in ids]
+            key_ddl = ", ".join(
+                f"{field_by_id[i]['name']} {_spark_type(field_by_id[i]['type'])}"
+                for i in ids
+            )
             keys = None
             for d in dels:
                 part = (
-                    self.spark.read.parquet(d["file_path"])
-                    .select(*key_cols)
+                    self.spark.read.schema(key_ddl)
+                    .parquet(d["file_path"])
                     .withColumn("_dseq", F.lit(d["sequence"]))
                 )
                 keys = part if keys is None else keys.unionByName(part)

@@ -38,6 +38,8 @@ import zlib
 
 import numpy as np
 
+from .codecs import CodecError, compress, decompress
+
 PUFFIN_MAGIC = b"PFA1"
 DV_MAGIC = b"\xd1\xd3\x39\x64"
 DV_BLOB_TYPE = "deletion-vector-v1"
@@ -249,7 +251,7 @@ def write_puffin(
     ``payload`` (bytes) plus footer metadata (``type``, optional
     ``fields``/``snapshot-id``/``sequence-number``/``properties``,
     and optional ``compression-codec`` — ``zstd`` compresses the
-    payload via :mod:`.zstd_encode` and records the codec in the
+    payload with libzstd (:mod:`.codecs`) and records the codec in the
     descriptor; the v3 spec forbids compressing deletion vectors, so
     DV callers never pass one). Returns the footer's blob descriptors
     (with assigned offset/length), in order."""
@@ -260,9 +262,7 @@ def write_puffin(
         payload = b["payload"]
         codec = b.get("compression-codec")
         if codec == "zstd":
-            from .zstd_encode import compress as _zstd_compress
-
-            payload = _zstd_compress(payload)
+            payload = compress(codec, payload)
         elif codec is not None:
             raise PuffinError(
                 f"unsupported blob compression-codec {codec!r} on "
@@ -336,8 +336,9 @@ def read_puffin_footer(path: str) -> dict:
 
 def read_blob_decoded(path: str, descriptor: dict) -> bytes:
     """A footer-described blob's UNCOMPRESSED bytes: honors the spec's
-    per-blob ``compression-codec`` (absent = raw; ``zstd`` decoded via
-    :mod:`.zstd`; ``lz4`` refuses loudly — no implementation here).
+    per-blob ``compression-codec`` (absent = raw; ``zstd`` decoded by
+    libzstd through :mod:`.codecs`; ``lz4`` refuses loudly — not
+    served here).
     Deletion-vector blobs never route through this (the v3 spec forbids
     compressing them, and DV entries locate blobs WITHOUT the footer)."""
     raw = read_blob(
@@ -347,11 +348,9 @@ def read_blob_decoded(path: str, descriptor: dict) -> bytes:
     if codec is None:
         return raw
     if codec == "zstd":
-        from .zstd import ZstdError, decompress
-
         try:
-            return decompress(raw)
-        except ZstdError as e:
+            return decompress(codec, raw)
+        except CodecError as e:
             raise PuffinError(
                 f"{path}: zstd blob at {descriptor['offset']} failed to "
                 f"decode: {e}"

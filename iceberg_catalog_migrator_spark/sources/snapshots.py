@@ -2396,14 +2396,26 @@ def _carry_deletes_after_merge(
     """
     import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     out = {}
     pos = snap.get("pos_deletes", [])
     if pos:
+        # one plan run: write the survivors, then drop the staged output
+        # when its footers hold no row (an empty write leaves one such
+        # file), instead of counting them first in a job of their own
         surviving = table._coords(pos).filter(F.col("_file").isin(carried))
-        if surviving.limit(1).count():
-            out["pos_deletes"] = table._write_data_files(surviving)
+        written = table._write_data_files(surviving)
+        kept = [
+            f
+            for f in written
+            if pq.read_metadata(os.path.join(table.path, f)).num_rows
+        ]
+        for f in set(written) - set(kept):
+            os.unlink(os.path.join(table.path, f))
+        if kept:
+            out["pos_deletes"] = kept
     dels = snap.get("deletes", [])
     if not dels:
         return out

@@ -1,7 +1,7 @@
 """Pins for the four ADVICE r15 fixes taken in the r16 round.
 
-1. zstd compress() refuses payloads past the 128 MiB default window
-   limit stock decoders enforce on single-segment frames.
+1. a large zstd payload is written under a bounded window, well inside
+   the 128 MiB default window limit stock decoders enforce.
 2. codec_tag normalizes 'zstandard' to the historical 'zstd-' family.
 3. _latest_reusable skips a torn newest candidate instead of
    disabling reuse.
@@ -16,19 +16,36 @@ import os
 
 import pytest
 
-from iceberg_catalog_migrator_spark.sources.zstd_encode import (
-    MAX_SINGLE_SEGMENT_INPUT,
-    compress,
-)
+from iceberg_catalog_migrator_spark.sources.codecs import compress, decompress
 
 SF = "/root/testdata/sf0.01"
 
 
-def test_compress_refuses_over_window_limit():
-    with pytest.raises(ValueError, match="128 MiB default window"):
-        compress(bytes(MAX_SINGLE_SEGMENT_INPUT + 1))
-    # boundary stays accepted (RLE-compresses instantly)
-    assert compress(b"a" * 1024)
+def _zstd_window_size(frame: bytes) -> int:
+    """Window_Size a zstd frame header declares (RFC 8878 3.1.1.1.2):
+    the content size of a single-segment frame, else the window
+    descriptor's exponent and mantissa."""
+    fhd = frame[4]
+    if fhd & 0x20:  # Single_Segment_flag
+        fcs_len = {0: 1, 1: 2, 2: 4, 3: 8}[fhd >> 6]
+        did_len = {0: 0, 1: 1, 2: 2, 3: 4}[fhd & 3]
+        at = 5 + did_len
+        fcs = int.from_bytes(frame[at : at + fcs_len], "little")
+        return fcs + 256 if fcs_len == 2 else fcs
+    wd = frame[5]
+    base = 1 << (10 + (wd >> 3))
+    return base + (base // 8) * (wd & 7)
+
+
+def test_compress_bounds_window_for_large_payloads():
+    # a 16 MiB payload: libzstd picks its window from the level, not
+    # from the content size, so no payload outgrows stock decoders
+    data = bytes(range(251)) * (16 * 1024 * 1024 // 251)
+    z = compress("zstd", data)
+    assert _zstd_window_size(z) <= 8 << 20
+    assert decompress("zstd", z) == data
+    # a small payload stays one single-segment frame
+    assert _zstd_window_size(compress("zstd", b"a" * 1024)) == 1024
 
 
 def test_codec_tag_zstandard_aliases_to_zstd_family(spark, tmp_path):

@@ -207,18 +207,39 @@ def test_stage_rebuilds_on_a_patched_constant_and_a_new_session(stages, dataset,
         registry.register_stage("toy")(build)
 
 
+_STAGE_INPUTS = [
+    # (module, registered stage, a result-deciding constant it reaches)
+    ("queries.mining", "_frequent_pair_supports", "MIN_ITEM_SUPPORT"),
+    ("queries.mining", "_frequent_pair_supports", "MIN_PAIR_SUPPORT"),
+    ("queries.mining", "_frequent_pair_supports", "MAX_BASKET_FREQUENT_ITEMS"),
+    ("operators.dedup", "_shingles_cached", "SHINGLE_SIZE"),
+    ("operators.dedup", "_candidates", "NUM_HASHES"),
+    ("operators.dedup", "_snap_delta_candidates", "LSH_BANDS"),
+    ("operators.bpe", "corpus_merges", "BPE_WORD_SPLIT"),
+    ("operators.similarity", "_ivf_fit", "QUANT_SCALE"),
+    ("operators.similarity", "_pq_fit", "QUANT_SCALE"),
+]
+
+
 @pytest.mark.parametrize(
-    "bound", ["MIN_ITEM_SUPPORT", "MIN_PAIR_SUPPORT", "MAX_BASKET_FREQUENT_ITEMS"]
+    "module, stage, bound",
+    _STAGE_INPUTS,
+    ids=[
+        b if m == "queries.mining" else f"{st}-{b}" for m, st, b in _STAGE_INPUTS
+    ],
 )
-def test_pair_stage_key_sees_each_support_bound(dataset, monkeypatch, bound):
+def test_pair_stage_key_sees_each_support_bound(dataset, monkeypatch, module, stage, bound):
+    """A stage's key sees the constants of the helpers its builder
+    calls, not only its own: patching one rebuilds the stage."""
+    import importlib
     import inspect
 
-    from iceberg_catalog_migrator_spark.queries import mining
-
-    build = inspect.getclosurevars(mining._frequent_pair_supports).nonlocals["build"]
-    before = registry._key("frequent_pair_supports", build, str(dataset))
-    monkeypatch.setattr(mining, bound, getattr(mining, bound) + 1)
-    assert registry._key("frequent_pair_supports", build, str(dataset)) != before
+    mod = importlib.import_module(f"iceberg_catalog_migrator_spark.{module}")
+    build = inspect.getclosurevars(getattr(mod, stage)).nonlocals["build"]
+    before = registry._key(stage, build, str(dataset))
+    value = getattr(mod, bound)
+    monkeypatch.setattr(mod, bound, value + (1 if isinstance(value, int) else "x"))
+    assert registry._key(stage, build, str(dataset)) != before
 
 
 def test_replaced_stage_frame_is_unpersisted(spark, stages, monkeypatch):

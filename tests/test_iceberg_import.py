@@ -162,7 +162,7 @@ def test_deflate_avro_round_trip(tmp_path):
     # deflate actually compressed the repetitive payload
     write_avro(str(tmp_path / "n.avro"), schema, recs)
     assert os.path.getsize(p) < os.path.getsize(str(tmp_path / "n.avro"))
-    # zstandard writes since round 15 (sources/zstd_encode.py); a
+    # zstandard writes through the codec table (libzstd); a
     # codec outside the table still refuses by name
     write_avro(p, schema, recs, codec="zstandard")
     got_schema, got = read_avro(p)

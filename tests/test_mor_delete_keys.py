@@ -39,6 +39,10 @@ def _rows(keys):
     return [(i, f"s{i}", T0 + timedelta(seconds=i), 10 * i) for i in keys]
 
 
+def _rows_in(root, f):
+    return pq.read_metadata(os.path.join(root, f)).num_rows
+
+
 def _canon(df):
     return sorted(
         df.select("k", "s", F.col("t").cast("string"), "v").collect()
@@ -221,3 +225,72 @@ def test_positional_paths_pay_no_schema_inference(spark, tmp_path):
     _, jobs = _jobs(spark, lambda: merge_upsert(t, src, ["k"]), name="parquet at")
     assert jobs == 1
     assert read_with_deletes(t).count() == visible + 9
+
+
+@pytest.mark.parametrize(
+    "keys, carried_rows, want_jobs",
+    [(range(0, 40), 343, 2), ([0, 500, 1000, 1500], 0, 1)],
+)
+def test_merge_carries_vectors_in_one_write(
+    spark, tmp_path, monkeypatch, keys, carried_rows, want_jobs
+):
+    """A merge over pending vectors runs the surviving-coordinate plan
+    once: it writes the coordinates of the files it carries (the
+    distinct's shuffle stage and the write) and drops an output with
+    no row by its footers. Upserting keys 0-39 touches one of the 4
+    files; the other three keep their 343 hidden rows. Touching all 4
+    leaves no coordinate to carry, and the empty plan is one job."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(
+        spark.range(0, 2000, numPartitions=4).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        )
+    )
+    delete_where_positional(t, "k % 10 = 0")
+    delete_where_positional(t, "k % 7 = 0")
+    seen = []
+    real = S._carry_deletes_after_merge
+
+    def probe(*args):
+        out, jobs = _jobs(spark, lambda: real(*args))
+        seen.append((jobs, out))
+        return out
+
+    monkeypatch.setattr(S, "_carry_deletes_after_merge", probe)
+    src = spark.createDataFrame([(k, -1) for k in keys], "k bigint, v bigint")
+    merge_upsert(t, src, ["k"])
+    [(jobs, out)] = seen
+    assert jobs == want_jobs
+    vectors = out.get("pos_deletes", [])
+    assert bool(vectors) == bool(carried_rows)
+    assert sum(_rows_in(t.path, f) for f in vectors) == carried_rows
+    data = os.path.join(t.path, "data")
+    assert all(_rows_in(data, f) for f in os.listdir(data))
+    visible = 2000 - (200 + 286 - 29)
+    hidden_in_keys = sum(1 for k in keys if k % 10 == 0 or k % 7 == 0)
+    assert read_with_deletes(t).count() == visible + hidden_in_keys
+
+
+@pytest.mark.parametrize("n_deletes", [2, 4])
+def test_foreign_equality_deletes_pay_no_schema_inference(spark, tmp_path, n_deletes):
+    """Building a read of an exported table over 2 or 4 equality-delete
+    files reads each under the key's declared type: no inference job,
+    whatever the number of delete files."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(
+        spark.range(0, 200, numPartitions=2).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        )
+    )
+    for i in range(n_deletes):
+        doomed = spark.range(10 * i, 10 * i + 5).select(F.col("id").alias("k"))
+        delete_where(t, ["k"], doomed)
+    loc = export_iceberg_metadata(t)["metadata_location"]
+    df, jobs = _jobs(spark, lambda: read_iceberg_table(spark, loc), name="parquet at")
+    assert jobs == 0
+    assert _canon_kv(df) == _canon_kv(read_with_deletes(t))
+    assert df.count() == 200 - 5 * n_deletes
+
+
+def _canon_kv(df):
+    return sorted(df.select("k", "v").collect())

@@ -269,7 +269,7 @@ def _zstd_raw_frame(data: bytes) -> bytes:
     """A legal zstd frame of raw blocks around arbitrary bytes —
     spec-layout assembly (RFC 8878), no encoder involved."""
     out = bytearray(struct.pack("<I", 0xFD2FB528))
-    out += bytes([0x00, 0x00])  # fhd: no flags; window descriptor 1KiB
+    out += bytes([0x00, 0x30])  # fhd: no flags; window descriptor 64 KiB
     chunks = [data[i : i + 65536] for i in range(0, len(data), 65536)] or [
         b""
     ]
@@ -303,7 +303,7 @@ def _puffin_with_codec(path, payload, codec):
 
 def test_read_blob_decoded_codecs(tmp_path):
     """The spec's per-blob compression-codec: absent = raw bytes, zstd
-    decodes through sources/zstd.py, lz4 refuses loudly, corrupt zstd
+    decodes through libzstd, lz4 refuses loudly, corrupt zstd
     surfaces as PuffinError (round 14)."""
     from iceberg_catalog_migrator_spark.sources.puffin import (
         read_blob_decoded,

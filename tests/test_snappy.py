@@ -1,10 +1,11 @@
-"""Pure-Python snappy block format: HAND-CRAFTED byte fixtures
-assembled directly from the public format description (tag kinds,
-varint preamble, extended literal lengths, all three copy widths,
-overlapping copies) — never via compress() — so the encoder and the
-decoder cannot share a wrong layout assumption (the test_puffin.py
-rule). Plus round-trips, Avro container integration, and the foreign-
-tree import path with snappy-compressed manifests."""
+"""snappy through the codec table (libsnappy via pyarrow): HAND-CRAFTED
+byte fixtures assembled directly from the public format description
+(tag kinds, varint preamble, extended literal lengths, all three copy
+widths, overlapping copies) — never via compress() — each of which must
+decode, or be refused with :class:`CodecError` and libsnappy's reason
+(the test_puffin.py rule). Plus round-trips, Avro container
+integration, and the foreign-tree import path with snappy-compressed
+manifests."""
 
 import json
 import os
@@ -13,11 +14,16 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from iceberg_catalog_migrator_spark.sources.snappy import (
-    SnappyError,
-    compress,
-    decompress,
-)
+from iceberg_catalog_migrator_spark.sources import codecs
+from iceberg_catalog_migrator_spark.sources.codecs import CodecError
+
+
+def decompress(data: bytes) -> bytes:
+    return codecs.decompress("snappy", data)
+
+
+def compress(data: bytes) -> bytes:
+    return codecs.compress("snappy", data)
 
 
 def _lit(payload: bytes) -> bytes:
@@ -88,27 +94,27 @@ def test_overlapping_copy_repeats():
 
 def test_preamble_mismatch_refuses():
     raw = bytes([9]) + _lit(b"hello")
-    with pytest.raises(SnappyError, match="declared 9"):
+    with pytest.raises(CodecError, match="Corrupt snappy"):
         decompress(raw)
 
 
 def test_truncated_literal_refuses():
     raw = bytes([10]) + bytes([9 << 2]) + b"abc"
-    with pytest.raises(SnappyError, match="truncated literal"):
+    with pytest.raises(CodecError, match="Corrupt snappy"):
         decompress(raw)
 
 
 def test_copy_before_start_refuses():
     tag = ((4 - 1) << 2) | 2
     raw = bytes([8]) + _lit(b"ab") + bytes([tag]) + struct.pack("<H", 7)
-    with pytest.raises(SnappyError, match="outside window"):
+    with pytest.raises(CodecError, match="Corrupt snappy"):
         decompress(raw)
 
 
 def test_zero_offset_refuses():
     tag = ((4 - 1) << 2) | 2
     raw = bytes([8]) + _lit(b"abcd") + bytes([tag]) + struct.pack("<H", 0)
-    with pytest.raises(SnappyError, match="outside window"):
+    with pytest.raises(CodecError, match="Corrupt snappy"):
         decompress(raw)
 
 
@@ -153,8 +159,7 @@ def test_avro_container_snappy_roundtrip(tmp_path):
     # the container really declares the snappy codec (the decode above
     # travelled the snappy + CRC path, not a null-codec shortcut)...
     assert b"snappy" in open(p, "rb").read(200)
-    # ...and the hash-match encoder genuinely compresses the
-    # repetitive payload
+    # ...and libsnappy genuinely compresses the repetitive payload
     p0 = str(tmp_path / "m0.avro")
     write_avro(p0, schema, recs, codec="null")
     assert os.path.getsize(p) < os.path.getsize(p0)
@@ -200,8 +205,9 @@ def test_avro_snappy_crc_mismatch_refuses(tmp_path):
 
 
 def test_avro_zstandard_still_refuses_with_name(tmp_path):
-    """No stdlib zstandard exists: the refusal stays loud and NAMES
-    the codec, never a silent wrong decode."""
+    """A block that is no zstd frame under the zstandard codec: the
+    refusal stays loud and NAMES the codec, never a silent wrong
+    decode."""
     from iceberg_catalog_migrator_spark.sources.iceberg_format import (
         read_avro,
         write_avro,

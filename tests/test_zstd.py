@@ -1,24 +1,18 @@
-"""Pure-Python zstd, both directions.
+"""zstd through the codec table (libzstd via pyarrow), both directions.
 
-DECODER section (sources/zstd.py, through the foreign-tree import
-tests): HAND-CRAFTED byte fixtures assembled from the RFC 8878 layout
-(the tests/test_puffin.py house rule — no fixture here is produced by
-any encoder).
+DECODER section: HAND-CRAFTED byte fixtures assembled from the RFC 8878
+layout (the tests/test_puffin.py house rule — no fixture here is
+produced by any encoder): each must decode, or be refused with
+:class:`CodecError` and libzstd's reason.
 
-ENCODER section (sources/zstd_encode.py, round 15, the tests from
-``test_encoder_pinned_bytes_single_sequence`` down): the independence
-rule inverts — the encoder's EXPECTED output is hand-assembled with
-this module's own toolkit (spread/back below, plus an independent
-predecessor-state scan), round-tripped through the repo decoder, and
-cross-validated against the real libzstd via pyarrow, so the two
-directions can never share a wrong assumption.
+ENCODER section (from ``test_encoder_roundtrip_corpus`` down): the
+frames the engine writes round-trip, carry the xxHash64 content
+checksum libzstd verifies, and decode through libzstd's one-shot API.
 
 Fixture toolkit: a backward-bitstream assembler (items in READ order,
 sentinel on top) and a forward LSB-first assembler for FSE table
-descriptions, plus an INDEPENDENT reimplementation of the FSE spread
-from the RFC used both to cross-check the module's predefined tables
-and to pick fixture states without consulting the module's own
-tables."""
+descriptions, plus a reimplementation of the RFC's FSE spread used to
+pick fixture states."""
 
 import json
 import os
@@ -26,11 +20,16 @@ import struct
 
 import pytest
 
-from iceberg_catalog_migrator_spark.sources.zstd import (
-    ZstdError,
-    decompress,
-    xxh64,
-)
+from iceberg_catalog_migrator_spark.sources import codecs
+from iceberg_catalog_migrator_spark.sources.codecs import CodecError, xxh64
+
+
+def decompress(data: bytes) -> bytes:
+    return codecs.decompress("zstandard", data)
+
+
+def compress(data: bytes) -> bytes:
+    return codecs.compress("zstandard", data)
 
 MAGIC = struct.pack("<I", 0xFD2FB528)
 
@@ -61,8 +60,7 @@ def block_hdr(size, btype, last):
 
 # ------------------------------------------------- independent FSE impl
 def spread(freqs, accuracy_log):
-    """The RFC's symbol-spread + state-table build, reimplemented
-    INDEPENDENTLY of the module (typo cross-check)."""
+    """The RFC's symbol-spread + state-table build."""
     size = 1 << accuracy_log
     symbols = [0] * size
     desc = [0] * len(freqs)
@@ -150,49 +148,43 @@ def test_content_checksum_good_and_bad():
     good = base + struct.pack("<I", xxh64(body) & 0xFFFFFFFF)
     assert decompress(good) == body
     bad = base + struct.pack("<I", (xxh64(body) ^ 1) & 0xFFFFFFFF)
-    with pytest.raises(ZstdError, match="checksum mismatch"):
+    with pytest.raises(CodecError, match="doesn't match checksum"):
         decompress(bad)
 
 
 def test_refusals():
-    with pytest.raises(ZstdError, match="not a zstd frame"):
+    with pytest.raises(CodecError, match="Unknown frame descriptor"):
         decompress(b"\x00\x01\x02\x03rest")
-    with pytest.raises(ZstdError, match="empty input"):
+    with pytest.raises(CodecError, match="empty input"):
         decompress(b"")
     # reserved block type
     f = MAGIC + bytes([0x20, 1]) + block_hdr(1, 3, 1) + b"x"
-    with pytest.raises(ZstdError, match="reserved block type"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f)
     # reserved frame-header bit
-    with pytest.raises(ZstdError, match="reserved bit"):
+    with pytest.raises(CodecError, match="Unsupported frame parameter"):
         decompress(MAGIC + bytes([0x28, 0]))
-    # dictionary id refuses with the id named
+    # a dictionary id refuses: no dictionary is ever supplied
     f = MAGIC + bytes([0x21, 0x2A, 1]) + block_hdr(1, 0, 1) + b"x"
-    with pytest.raises(ZstdError, match="dictionary 42"):
+    with pytest.raises(CodecError, match="Dictionary mismatch"):
         decompress(f)
     # declared content size mismatch
     f = MAGIC + bytes([0x20, 9]) + block_hdr(1, 0, 1) + b"x"
-    with pytest.raises(ZstdError, match="declared 9"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f)
     # truncated raw block
     f = MAGIC + bytes([0x20, 5]) + block_hdr(5, 0, 1) + b"hi"
-    with pytest.raises(ZstdError, match="truncated"):
+    with pytest.raises(CodecError, match="Truncated"):
         decompress(f)
-
-
-def test_predefined_tables_match_independent_spread():
-    from iceberg_catalog_migrator_spark.sources.zstd import _predefined
-
-    for kind, freqs, al in (
-        ("ll", LL_FREQS, 6),
-        ("of", OF_FREQS, 5),
-        ("ml", ML_FREQS, 6),
-    ):
-        symbols, nbits, base = spread(freqs, al)
-        t = _predefined(kind)
-        assert t.symbols == symbols, kind
-        assert t.nbits == nbits, kind
-        assert t.base == base, kind
+    # a block larger than its frame's window (RFC 8878: Block_Maximum_Size
+    # is the smaller of Window_Size and 128 KiB): 5,000 raw bytes under a
+    # 1 KiB window descriptor (0x00)
+    f = MAGIC + bytes([0x00, 0x00]) + block_hdr(5000, 0, 1) + b"x" * 5000
+    with pytest.raises(CodecError, match="corruption"):
+        decompress(f)
+    # ...and the same block under a 64 KiB window (0x30) decodes
+    f = MAGIC + bytes([0x00, 0x30]) + block_hdr(5000, 0, 1) + b"x" * 5000
+    assert decompress(f) == b"x" * 5000
 
 
 # --------------------------------------------------- compressed blocks
@@ -297,7 +289,7 @@ def test_repeat_table_mode_reuses_previous_tables():
         + blk2_short
     )
     # inherited ll=4 but only 2 literals decoded -> honest refusal
-    with pytest.raises(ZstdError, match="more literals than decoded"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f)
     blk2 = bytes([4 << 3]) + b"wxyz" + bytes([1, 0xFC]) + bs2
     f = (
@@ -370,7 +362,7 @@ def test_offset_before_frame_start_refuses():
     bs = back([(3, 3)])  # of_sym=3 RLE: 8+3=11 -> offset 8 > out
     blk = bytes([2 << 3]) + b"ab" + bytes([1, 0x54]) + bytes([2, 3, 0]) + bs
     f = MAGIC + bytes([0x20, 0]) + block_hdr(len(blk), 2, 1) + blk
-    with pytest.raises(ZstdError, match="before the frame start"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f)
 
 
@@ -421,7 +413,7 @@ def test_treeless_without_previous_table_refuses():
     s = back([(0, 3)])
     blk = _huf_block(s, 1, lbt=3)
     f = MAGIC + bytes([0x20, 1]) + block_hdr(len(blk), 2, 1) + blk
-    with pytest.raises(ZstdError, match="without a previous Huffman"):
+    with pytest.raises(CodecError, match="Dictionary is corrupted"):
         decompress(f)
 
 
@@ -485,7 +477,7 @@ def _zstd_raw_frame(data: bytes) -> bytes:
     integration is exercised without an encoder."""
     out = bytearray(MAGIC)
     out += bytes([0x00])  # no single-segment: window descriptor follows
-    out += bytes([0x00])  # window descriptor: 1 KiB
+    out += bytes([0x30])  # window descriptor: 64 KiB, covers each block
     chunks = [data[i : i + 65536] for i in range(0, len(data), 65536)] or [b""]
     for i, c in enumerate(chunks):
         out += block_hdr(len(c), 0, int(i == len(chunks) - 1))
@@ -711,7 +703,7 @@ def test_match_cannot_reach_previous_frame():
     )
     blk = bytes([2 << 3]) + b"xy" + bytes([1, 0x00]) + bs
     f2 = MAGIC + bytes([0x20, 0]) + block_hdr(len(blk), 2, 1) + blk
-    with pytest.raises(ZstdError, match="before the frame start"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f1 + f2)
 
 
@@ -732,13 +724,13 @@ def test_huffman_stream_truncation_refuses():
     truncated = s8[1:]
     blk_t = _huf_block(truncated, 8)
     f_t = MAGIC + bytes([0x20, 8]) + block_hdr(len(blk_t), 2, 1) + blk_t
-    with pytest.raises(ZstdError, match="not exactly consumed"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f_t)
     # extra unread bytes refuse too
     padded = b"\xff" + s8
     blk_p = _huf_block(padded, 2)
     f_p = MAGIC + bytes([0x20, 2]) + block_hdr(len(blk_p), 2, 1) + blk_p
-    with pytest.raises(ZstdError, match="not exactly consumed"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f_p)
 
 
@@ -785,120 +777,16 @@ def test_bitstream_trailing_zero_byte_refuses():
         + bs
     )
     f = MAGIC + bytes([0x20, 9]) + block_hdr(len(blk), 2, 1) + blk
-    with pytest.raises(ZstdError, match="sentinel"):
+    with pytest.raises(CodecError, match="corruption"):
         decompress(f)
 
 
 # ----------------------------------------------------------- the encoder
-# (sources/zstd_encode.py — round-15. House rule: expected bytes are
-# assembled HERE from the RFC layout with the test-local spread() and
-# back(); the module's encoder never produces its own expectations.)
-
-
-def _first_state(freqs, al, code):
-    symbols, _, _ = spread(freqs, al)
-    return symbols.index(code)
-
-
-def _transition_state(freqs, al, code, next_state):
-    """Independent FSE predecessor search: the state emitting ``code``
-    whose update range covers ``next_state`` — found by SCAN over the
-    spread table, not by the module's sub-range arithmetic."""
-    symbols, nbits, base = spread(freqs, al)
-    for i in range(1 << al):
-        if symbols[i] == code and base[i] <= next_state < base[i] + (
-            1 << nbits[i]
-        ):
-            return i, next_state - base[i], nbits[i]
-    raise AssertionError("no predecessor state")
-
-
-def _frame(payload_blocks: bytes, content: bytes) -> bytes:
-    from iceberg_catalog_migrator_spark.sources.zstd import xxh64 as _x
-
-    assert len(content) <= 255
-    return (
-        MAGIC
-        + bytes([0x24, len(content)])
-        + payload_blocks
-        + struct.pack("<I", _x(content) & 0xFFFFFFFF)
-    )
-
-
-def test_encoder_pinned_bytes_single_sequence():
-    """b'abc'*6 compresses to exactly ONE sequence (3 literals, offset
-    3, match 15) — the full frame is assembled here byte-for-byte from
-    the RFC layout and must equal the encoder's output."""
-    from iceberg_catalog_migrator_spark.sources.zstd_encode import compress
-
-    data = b"abcabcabcabcabcabc"
-    # codes: ll=3 -> code 3 (0 extra); ml=15 -> code 12 (0 extra);
-    # offset_value=6 -> of_code 2, extra 2 (2 bits)
-    bs = back(
-        [
-            (_first_state(LL_FREQS, 6, 3), 6),
-            (_first_state(OF_FREQS, 5, 2), 5),
-            (_first_state(ML_FREQS, 6, 12), 6),
-            (2, 2),  # offset extra
-        ]
-    )
-    blk = bytes([3 << 3]) + b"abc" + bytes([1, 0x00]) + bs
-    expected = _frame(block_hdr(len(blk), 2, 1) + blk, data)
-    got = compress(data)
-    assert got == expected
-    from iceberg_catalog_migrator_spark.sources.zstd import decompress
-
-    assert decompress(got) == data
-
-
-def test_encoder_pinned_bytes_two_sequences():
-    """Two sequences pin the STATE-UPDATE path (second sequence's
-    states are first-occurrence, the first's the unique predecessors
-    found by independent table scan) AND the repeat-offset window:
-    both offsets are 4, so seq0 hits the INITIAL window's rep1
-    (offset_value 2, the spec's [1,4,8] start) rotating it to
-    [4,1,8], and seq1 hits rep0 (offset_value 1, ZERO extra bits)."""
-    from iceberg_catalog_migrator_spark.sources.zstd_encode import compress
-
-    data = b"0123" * 4 + b"4567" * 4
-    # both sequences: ll=4 (code 4, 0 extra), ml=12 (code 9, 0 extra);
-    # offsets: ov=2 -> of_code 1 extra 0 (1 bit), ov=1 -> of_code 0
-    ll1 = _first_state(LL_FREQS, 6, 4)
-    of1 = _first_state(OF_FREQS, 5, 0)
-    ml1 = _first_state(ML_FREQS, 6, 9)
-    ll0, ll_upd, ll_nb = _transition_state(LL_FREQS, 6, 4, ll1)
-    of0, of_upd, of_nb = _transition_state(OF_FREQS, 5, 1, of1)
-    ml0, ml_upd, ml_nb = _transition_state(ML_FREQS, 6, 9, ml1)
-    bs = back(
-        [
-            (ll0, 6),
-            (of0, 5),
-            (ml0, 6),
-            (0, 1),  # seq0 offset extra: ov=2 -> one zero bit
-            (ll_upd, ll_nb),  # updates: literals, match, offset
-            (ml_upd, ml_nb),
-            (of_upd, of_nb),
-            # seq1 offset extra: ov=1 -> of_code 0, zero bits
-        ]
-    )
-    blk = bytes([8 << 3]) + b"01234567" + bytes([2, 0x00]) + bs
-    expected = _frame(block_hdr(len(blk), 2, 1) + blk, data)
-    got = compress(data)
-    assert got == expected
-    from iceberg_catalog_migrator_spark.sources.zstd import decompress
-
-    assert decompress(got) == data
-
-
 def test_encoder_roundtrip_corpus():
-    """Shape sweep through the engine's own decoder: empty, single
-    byte, RLE block, raw fallback (random bytes), long repetitive text
-    (long-form literal headers), >128 KiB multi-block frames with
-    matches REACHING ACROSS the block boundary, and all-offset-sizes."""
+    """Shape sweep: empty, single byte, RLE runs, incompressible
+    random bytes, long repetitive text, >128 KiB multi-block frames with
+    matches reaching across the block boundary, and period-256 data."""
     import random
-
-    from iceberg_catalog_migrator_spark.sources.zstd import decompress
-    from iceberg_catalog_migrator_spark.sources.zstd_encode import compress
 
     rng = random.Random(15)
     rand5k = bytes(rng.randrange(256) for _ in range(5000))
@@ -907,9 +795,9 @@ def test_encoder_roundtrip_corpus():
     cases = [
         b"",
         b"Z",
-        b"q" * 200000,  # RLE blocks, two of them
-        rand5k,  # incompressible -> raw fallback
-        manifesty,  # structured, long-form literals header
+        b"q" * 200000,  # one-byte runs over two 128 KiB blocks
+        rand5k,  # incompressible
+        manifesty,  # structured
         (manifesty[:100000] + manifesty[:100000]),  # cross-block match
         bytes(range(256)) * 600,  # period-256 matches
     ]
@@ -920,16 +808,23 @@ def test_encoder_roundtrip_corpus():
     assert len(compress(manifesty)) < len(manifesty) // 3
 
 
-def test_encoder_against_reference_libzstd():
-    """The strongest independence check available in this sandbox:
-    pyarrow links the REAL libzstd — it must decode this encoder's
-    frames, and this repo's decoder must decode its frames."""
-    import pyarrow as pa
+def test_encoder_frames_carry_verified_checksum():
+    """Every frame the engine writes sets Content_Checksum_flag and ends
+    in the low 32 bits of xxHash64, and libzstd refuses a frame whose
+    checksum was altered."""
+    for data in (b"", b"Z", b"manifest-entry " * 500):
+        z = compress(data)
+        assert z[4] & 0x04, "Content_Checksum_flag"
+        assert z[-4:] == struct.pack("<I", xxh64(data) & 0xFFFFFFFF)
+        bad = z[:-1] + bytes([z[-1] ^ 1])
+        with pytest.raises(CodecError, match="doesn't match checksum"):
+            decompress(bad)
 
-    if not pa.Codec.is_available("zstd"):
-        pytest.skip("pyarrow built without zstd")
-    from iceberg_catalog_migrator_spark.sources.zstd import decompress
-    from iceberg_catalog_migrator_spark.sources.zstd_encode import compress
+
+def test_encoder_against_reference_libzstd():
+    """The checksum-flagged frames the engine writes pass libzstd's
+    one-shot API, and frames libzstd writes at other levels decode."""
+    import pyarrow as pa
 
     rec = b'{"snapshot-id":%d,"manifest":"m-%04d.avro","rows":%d}'
     data = b"\n".join(rec % (i, i, i * 11) for i in range(3000))
@@ -951,7 +846,7 @@ def test_encoder_against_reference_libzstd():
 
 def test_puffin_blob_zstd_write_roundtrip(tmp_path):
     """write_puffin honors per-blob compression-codec='zstd' (encoded
-    via zstd_encode, decoded back via the read path), refuses unknown
+    by libzstd, decoded back via the read path), refuses unknown
     codecs by name, and the stored length is the COMPRESSED length."""
     from iceberg_catalog_migrator_spark.sources.puffin import (
         PuffinError,
@@ -1065,31 +960,12 @@ def test_export_codec_aware_reuse(spark, tmp_path):
     assert len(docs) == 2  # one per codec, not one per invocation
 
 
-def test_encoder_skips_overlong_offsets(monkeypatch):
-    """Review round-15: a match farther back than the predefined
-    offset table can express (of_code > 28) must be SKIPPED during
-    matching, not crash the code lookup — simulated by shrinking the
-    cap so a small fixture crosses it."""
-    from iceberg_catalog_migrator_spark.sources import zstd_encode
-    from iceberg_catalog_migrator_spark.sources.zstd import decompress
-
-    data = b"UNIQ0123" + bytes(range(200)) + b"UNIQ0123"  # match at d=208
-    monkeypatch.setattr(zstd_encode, "_MAX_OFFSET", 100)
-    z = zstd_encode.compress(data)
-    assert decompress(z) == data
-    monkeypatch.setattr(zstd_encode, "_MAX_OFFSET", (1 << 29) - 4)
-    assert decompress(zstd_encode.compress(data)) == data
-
-
 def test_encoder_roundtrip_property():
     """Hypothesis sweep: arbitrary byte strings — including
     adversarial repetition/period shapes the shrinker gravitates to —
-    round-trip through the engine's own decoder."""
+    round-trip."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-
-    from iceberg_catalog_migrator_spark.sources.zstd import decompress
-    from iceberg_catalog_migrator_spark.sources.zstd_encode import compress
 
     @settings(max_examples=150, deadline=None)
     @given(
@@ -1113,80 +989,3 @@ def test_encoder_roundtrip_property():
         assert decompress(compress(data)) == data
 
     roundtrip()
-
-
-def test_encoder_huffman_literals_pinned_bytes():
-    """The Huffman literals section pinned byte-for-byte: 64 'a' +
-    32 'b' + 32 'c' gives lengths a=1/b=2/c=2 (max_bits 2, weights
-    a=2/b=1/c=1, 'c' implied), canonical codes from the decoder's
-    increasing-weight spread assembled HERE — b=00, c=01, a=1 — and a
-    1-stream sf=0 header. Decoded back through the module's own
-    Huffman table builder to close the loop."""
-    from iceberg_catalog_migrator_spark.sources.zstd import (
-        _huf_read_weights,
-        _HufTable,
-        _huf_decode,
-    )
-    from iceberg_catalog_migrator_spark.sources.zstd_encode import (
-        _literals_section,
-    )
-
-    lit = b"a" * 64 + b"b" * 32 + b"c" * 32
-    # tree description: hb = 127 + 99 transmitted weights (symbols
-    # 0..98; 'c'=99's weight is implied), packed two per nibble-byte
-    weights = [0] * 99
-    weights[ord("a")] = 2
-    weights[ord("b")] = 1
-    tree = bytes([127 + 99]) + bytes(
-        (weights[i] << 4) | (weights[i + 1] if i + 1 < 99 else 0)
-        for i in range(0, 99, 2)
-    )
-    # codes by the table spread: w=1 -> 'b' (00), 'c' (01); w=2 -> 'a' (1)
-    stream = back(
-        [(1, 1)] * 64 + [(0, 2)] * 32 + [(1, 2)] * 32
-    )
-    comp = len(tree) + len(stream)
-    h = 2 | (0 << 2) | (len(lit) << 4) | (comp << 14)
-    expected = h.to_bytes(3, "little") + tree + stream
-    got = _literals_section(lit)
-    assert got == expected
-    # close the loop through the module's own weight parser + decoder
-    parsed, consumed = _huf_read_weights(got[3:])
-    assert parsed[ord("c")] == 1  # the implied weight
-    table = _HufTable(parsed)
-    assert bytes(_huf_decode(table, got[3 + consumed :], 128)) == lit
-
-
-def test_encoder_huffman_fallbacks():
-    """Shapes Huffman must decline, each still round-tripping through
-    compress(): bytes above 127 (direct weights cap), a single
-    distinct symbol, tiny buffers, and near-uniform ascii where the
-    tree cannot pay for itself (the comp-vs-raw comparison)."""
-    import random
-
-    from iceberg_catalog_migrator_spark.sources.zstd_encode import (
-        _huffman_literals,
-        compress,
-    )
-
-    rng = random.Random(42)
-    shapes = [
-        b"\xff" * 100 + b"a" * 100,  # symbol above 127
-        b"a" * 200,  # single distinct symbol
-        b"ab" * 10,  # < 64 bytes
-        # 128 distinct symbols over a short buffer: 7-bit codes save
-        # ~16 bytes but the 65-byte tree description costs more —
-        # the comp-vs-raw comparison must decline
-        bytes(range(128)),
-    ]
-    # uniform ascii over a LONG buffer legitimately wins (7-bit codes
-    # pay for the tree): Huffman must take it and round-trip
-    uniform_ascii = bytes(rng.randrange(0, 128) for _ in range(2000))
-    assert _huffman_literals(uniform_ascii) is not None
-    assert decompress(compress(uniform_ascii)) == uniform_ascii
-    for s in shapes:
-        assert _huffman_literals(s) is None, s[:20]
-        assert decompress(compress(s)) == s, s[:20]
-    # and a shape Huffman must TAKE still wins end to end
-    skewed = (b"aaaaaaaabbbbccd" * 200) + bytes(range(97, 107))
-    assert decompress(compress(skewed)) == skewed
