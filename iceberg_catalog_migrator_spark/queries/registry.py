@@ -11,8 +11,9 @@ from __future__ import annotations
 import fcntl
 import hashlib
 import importlib
-import inspect
+import importlib.util
 import json
+import linecache
 import os
 import re
 import shutil
@@ -74,26 +75,78 @@ def register_query(name: str, oracle: str | None = None, description: str = ""):
 
 # ONE KEY RULE for on-disk fixtures and in-session stages: the name,
 # the sources of the builder and of every plain package function it
-# names (transitively, closures included; hashed once per builder), the
-# values of the immutable module-level constants each of them names in
-# its own module, the input dataset (absolute sf_dir plus name, size
-# and mtime of its parquet files) and the builder's extra arguments. An
-# edited builder or helper, a patched constant or a regenerated dataset
-# rebuilds instead of serving the old result. CACHE_STATS counts hits,
-# misses and build seconds (nested builds included) per fixture and
-# stage name.
+# names or imports in its body (transitively, closures included;
+# hashed once per builder), the values of the immutable module-level
+# constants each of them names in its own module, the input dataset
+# (absolute sf_dir plus name, size and mtime of its parquet files) and
+# the builder's extra arguments. An edited builder or helper, a patched
+# constant or a regenerated dataset rebuilds instead of serving the old
+# result. CACHE_STATS counts hits, misses and build seconds (nested
+# builds included) per fixture and stage name.
 CACHE_STATS: dict[str, dict[str, float]] = {}
 _CODE_INFO: dict[int, tuple] = {}  # id(code) -> (code, source digest, scopes)
+_FN_INFO: dict[int, tuple] = {}  # id(code) -> (code, source, names, imports)
 _PACKAGE = __name__.split(".")[0] + "."
 
 
-def _names(code: types.CodeType) -> set[str]:
-    names, todo = set(), [code]
+def _codes(code: types.CodeType):
+    todo = [code]
     while todo:
         c = todo.pop()
-        names.update(c.co_names)
+        yield c
         todo.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
-    return names
+
+
+def _names(code: types.CodeType) -> set[str]:
+    return {n for c in _codes(code) for n in c.co_names}
+
+
+# a ``from <package module> import ...`` statement in a function body
+_IMPORT = re.compile(
+    r"^\s*from\s+(\.+[\w.]*|" + _PACKAGE[:-1] + r"[\w.]*)"
+    r"\s+import\s+(\([^)]*\)|[^\n]*)",
+    re.M,
+)
+
+
+def _imports(source: str, package: str | None) -> list[tuple[str, str]]:
+    """``(module, name)`` for each name a function imports from a
+    package module inside its own body (``from ..sources.snapshots
+    import merge_upsert``): such names are locals, so no lookup in the
+    module's globals finds them."""
+    found = []
+    for module, names in _IMPORT.findall(source):
+        module = importlib.util.resolve_name(module, package)
+        for name in re.sub(r"#[^\n]*", "", names).strip("()").split(","):
+            if name.strip():
+                found.append((module, name.split()[0]))
+    return found
+
+
+def _source(code: types.CodeType) -> str:
+    """A function's source lines, from its first line (decorators
+    included) through the last line any of its instructions spans: the
+    file's cached lines and the code's positions, with no tokenizing."""
+    last = max(
+        (end for c in _codes(code) for _, end, _, _ in c.co_positions() if end),
+        default=code.co_firstlineno,
+    )
+    linecache.checkcache(code.co_filename)
+    lines = linecache.getlines(code.co_filename)
+    return "".join(lines[code.co_firstlineno - 1 : last])
+
+
+def _fn_info(fn: types.FunctionType) -> tuple:
+    """``(source, names, imports)`` of one function, computed once per
+    code object: builders share most of the library they reach."""
+    code = fn.__code__
+    info = _FN_INFO.get(id(code))
+    if info is None or info[0] is not code:
+        source = _source(code)
+        names = tuple(sorted(_names(code)))
+        imports = tuple(_imports(source, fn.__globals__.get("__package__")))
+        info = _FN_INFO[id(code)] = (code, source, names, imports)
+    return info[1:]
 
 
 def _walk(build: Callable) -> tuple[str, tuple]:
@@ -106,12 +159,13 @@ def _walk(build: Callable) -> tuple[str, tuple]:
         if fn.__code__ in seen:
             continue
         seen.add(fn.__code__)
-        digest.update(inspect.getsource(fn).encode())
-        names = sorted(_names(fn.__code__))
+        source, names, imports = _fn_info(fn)
+        digest.update(source.encode())
         env = fn.__globals__
-        scopes.append((env, tuple(names)))
+        scopes.append((env, names))
         cells = [c.cell_contents for c in fn.__closure__ or ()]
-        for v in reversed([env.get(n) for n in names] + cells):
+        imported = [getattr(importlib.import_module(m), n, None) for m, n in imports]
+        for v in reversed([env.get(n) for n in names] + cells + imported):
             if isinstance(v, types.FunctionType) and v.__module__.startswith(_PACKAGE):
                 todo.append(v)
     return digest.hexdigest(), tuple(scopes)

@@ -53,6 +53,7 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2469,6 +2470,171 @@ def _carry_deletes_after_merge(
     return out
 
 
+def _cow_merge(
+    table: SnapshotTable,
+    source: DataFrame,
+    key_cols: list[str],
+    kernel: Callable,
+    ref: str,
+    extra: dict | None,
+    check_unique: bool,
+) -> MergeResult:
+    """The one copy-on-write MERGE frame of :func:`merge_upsert` and
+    :func:`merge_into`; only the row ``kernel`` differs between them.
+
+    The scale property is FILE-GRANULAR copy-on-write: recorded stats
+    (or parquet footer min/max) on the first key column prune the
+    current file list to the files whose key range intersects the
+    source's — only those are read and rewritten (one shuffle,
+    source-bounded); every other file carries over BY NAME into the new
+    snapshot, untouched. At 100 TB a point-update rewrites one file,
+    not the table. Footerless files (no stats) conservatively count as
+    matchable.
+
+    ``kernel(target, source, columns)`` gets the touched files' VISIBLE
+    rows (pending vectors and equality keys applied, so a MOR-hidden
+    row is NOT MATCHED and the consumed delete entries drop in the
+    commit; ``_row_id`` attached on a lineage table; None when no file
+    is touched or the table has no parent), the source cast to the
+    table's types and the table's columns (the source's when the table
+    has none yet). It returns the rows to write, ``_row_id`` NULL for
+    the inserts that take fresh consecutive ids, or None when there is
+    nothing to write. ``check_unique`` refuses a source that is not
+    key-unique (SQL MERGE's cardinality rule; null keys group
+    together). A table without a parent commits ``merge-insert-only``
+    (Iceberg's ``append``). ``extra`` rides on the commit manifest."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    table._check_writable_ref(ref)
+    parent = table.head(ref)
+    snap = table._load_snap(parent) if parent is not None else {"files": []}
+    # the table's types (the current schema when tracked, else a data
+    # file's), so no merge writes a file typed otherwise than the
+    # table: an untracked table cannot read back files whose types differ
+    if snap.get("schemas"):
+        cur = _schema_by_id(snap["schemas"], snap["current_schema_id"])
+        types = {f["name"]: f["type"] for f in cur["fields"]}
+    elif snap["files"]:
+        types = {
+            f.name: f.dataType.simpleString()
+            for f in _file_schema(table, snap["files"][0]).fields
+            if f.name != "_row_id"  # a lineage rewrite's id column
+        }
+    else:
+        types = {}
+    casts = {
+        f.name: F.col(f.name).cast(types[f.name])
+        for f in source.schema.fields
+        if f.name in types and f.dataType.simpleString() != types[f.name]
+    }
+    source = source.withColumns(casts) if casts else source
+    columns = list(types) or source.columns
+
+    key0 = key_cols[0]
+    touched, carried, discovered = [], [], {}
+    if parent is not None or check_unique:
+        # one aggregate: the first key's bounds, the row count and, over
+        # the rows grouped by the keys, the largest per-key count — the
+        # uniqueness check runs in the bounds' own 2 Spark jobs
+        rows_per_key = (
+            source.groupBy(*key_cols).count()
+            if check_unique
+            else source.select(key0, F.lit(1).alias("count"))
+        )
+        bounds = rows_per_key.agg(
+            F.min(key0).alias("lo"),
+            F.max(key0).alias("hi"),
+            F.sum("count").alias("n"),
+            F.max("count").alias("most"),
+        ).first()
+        if (bounds.most or 0) > 1:
+            raise SnapshotError(
+                f"merge source is not key-unique on {key_cols}: "
+                "SQL MERGE refuses multiple matches per target row"
+            )
+    if parent is not None:
+        if not bounds.n:
+            # empty source: no row can change — a no-op, not a commit
+            # (with bounds.lo None every file used to count as touched,
+            # turning an empty CDC micro-batch into a FULL-TABLE rewrite)
+            return MergeResult(
+                rewritten=0, carried=len(snap["files"]), new_files=0, snapshot_id=parent
+            )
+        touched, carried, discovered = _merge_prune(
+            table, snap, source, key_cols, bounds
+        )
+    lineage = bool(snap.get("row_lineage"))
+    target = visible = vis_obs = None
+    if touched:
+        target = visible = _resolve_visible(
+            table, snap, touched, with_row_ids=lineage
+        )
+        if snap.get("visible_rows") is not None:
+            # visible-count maintenance: the touched files' visible rows
+            # are exactly what this rewrite replaces; observe() counts
+            # them on the SAME job that writes the merge output
+            vis_obs = Observation()
+            target = target.observe(vis_obs, F.count(F.lit(1)).alias("n"))
+    rows = kernel(target, source, columns)
+    if rows is None:
+        # nothing touched and no row to insert: nothing changes
+        return MergeResult(
+            rewritten=0, carried=len(carried), new_files=0, snapshot_id=parent
+        )
+    if lineage:
+        if "_row_id" not in rows.columns:
+            rows = rows.withColumn("_row_id", F.lit(None).cast("bigint"))
+        rows = _assign_new_row_ids(rows, snap["next_row_id"], key_cols)
+    rewritten = table._write_data_files(rows)
+    commit_extra: dict = {}
+    if lineage:
+        # kept and updated rows hold ids below the counter and inserts
+        # took consecutive ids from it, so the written footers' largest
+        # _row_id advances the counter without a count job
+        next_row_id = snap["next_row_id"]
+        for f in rewritten:
+            rng = _footer_key_range(os.path.join(table.path, f), "_row_id")
+            if rng is not None:
+                next_row_id = max(next_row_id, rng[1] + 1)
+        commit_extra["next_row_id"] = next_row_id
+        commit_extra["lineage_files"] = {f: True for f in rewritten}
+    if snap.get("visible_rows") is not None:
+        removed = 0  # no touched files: nothing replaced
+        if vis_obs is not None:
+            # AQE's empty-relation propagation can drop the observed
+            # branch when it turns out empty at runtime, leaving the
+            # metrics row unfilled; that plan is cheap to count instead
+            try:
+                removed = int(vis_obs.get["n"])
+            except Exception:  # noqa: BLE001 - unfilled metrics row
+                removed = visible.count()
+        commit_extra["visible_rows_mode"] = "replace_delta"
+        commit_extra["visible_rows_removed"] = removed
+    table._commit(
+        carried + rewritten,
+        "merge" if parent is not None else "merge-insert-only",
+        parent,
+        extra={
+            **_merge_stats_extra(table, snap, carried, discovered, rewritten, key0),
+            **_carry_deletes_after_merge(table, snap, source, key_cols, carried),
+            **commit_extra,
+            **(extra or {}),
+        },
+        ref=ref,
+    )
+    result = MergeResult(
+        rewritten=len(touched), carried=len(carried), new_files=len(rewritten)
+    )
+    if parent is None:
+        # every written row is an insert: the footers count them
+        result["inserted"] = sum(
+            pq.read_metadata(os.path.join(table.path, f)).num_rows for f in rewritten
+        )
+    return result
+
+
 def merge_upsert(
     table: SnapshotTable,
     delta: DataFrame,
@@ -2485,155 +2651,34 @@ def merge_upsert(
     Semantics: rows in ``delta`` REPLACE current rows with the same key;
     unmatched delta rows are inserted. Equivalent to
     ``MERGE INTO t USING delta ON keys WHEN MATCHED THEN UPDATE *
-    WHEN NOT MATCHED THEN INSERT *``.
-
-    The scale property is FILE-GRANULAR copy-on-write: parquet footer
-    min/max on the first key column prunes the current file list to the
-    files whose key range intersects the delta's — only those are
-    rewritten (their unmatched rows anti-joined and re-written together
-    with the delta); every other file carries over BY NAME into the new
-    snapshot, untouched. At 100 TB a point-update rewrites one file,
-    not the table. Footerless files (no stats) conservatively count as
-    matchable."""
+    WHEN NOT MATCHED THEN INSERT *``, except that neither side must be
+    key-unique: every target row of a delta key gives way, so
+    duplicate-keyed target rows collapse to the delta's rows. The
+    kernel is one anti-join and a union inside :func:`_cow_merge`'s
+    file-granular copy-on-write frame."""
     from pyspark.sql import functions as F
 
-    table._check_writable_ref(ref)
-    parent = table.head(ref)
-    if parent is None:
-        new = table._write_data_files(delta)
-        table._commit(new, "merge-insert-only", parent, ref=ref)
-        return MergeResult(rewritten=0, carried=0, inserted=delta.count())
-    snap = table._load_snap(parent)
-    delta = _at_table_types(table, snap, delta)
-
-    key0 = key_cols[0]
-    bounds = delta.agg(
-        F.min(key0).alias("lo"),
-        F.max(key0).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    if bounds.n == 0:
-        # empty delta: a no-op — committing would rewrite nothing but
-        # still spend a snapshot; with bounds.lo None every file used
-        # to count as touched, turning an empty CDC micro-batch into a
-        # FULL-TABLE rewrite
-        return MergeResult(
-            rewritten=0, carried=len(snap["files"]), new_files=0, snapshot_id=parent
+    def upsert(target, source, columns):
+        if target is None:
+            return source
+        keep = target.join(source.select(*key_cols), key_cols, "left_anti")
+        if "_row_id" not in target.columns:
+            return keep.unionByName(source)
+        # an updated row KEEPS its _row_id (matched mapping); unmatched
+        # delta rows get NULL here, fresh ids in the frame. min() per
+        # key: duplicate-keyed TARGET rows collapse to ONE delta row
+        # either way — without it the left join would multiply the
+        # delta by the duplicate count, diverging from the non-lineage
+        # path
+        matched_ids = (
+            target.select(*key_cols, "_row_id")
+            .join(source.select(*key_cols), key_cols, "left_semi")
+            .groupBy(*key_cols)
+            .agg(F.min("_row_id").alias("_row_id"))
         )
-    touched, carried, discovered = _merge_prune(table, snap, delta, key_cols, bounds)
-    lineage = bool(snap.get("row_lineage"))
-    lineage_extra: dict = {}
-    vis_obs = None
-    vis_fallback = None
+        return keep.unionByName(source.join(matched_ids, key_cols, "left"))
 
-    def _observe_visible(df):
-        # visible-count maintenance: count the replaced files' visible
-        # rows on the same job that writes the rewrite (no extra scan)
-        nonlocal vis_obs, vis_fallback
-        if snap.get("visible_rows") is None:
-            return df
-        from pyspark.sql import Observation
-
-        vis_obs = Observation()
-        vis_fallback = df
-        return df.observe(vis_obs, F.count(F.lit(1)).alias("n"))
-
-    if touched:
-        # VISIBLE rows only: pending MOR deletes (vectors + equality
-        # keys) are applied during the touched-file read — the rewrite
-        # materializes them, and the commit below drops the consumed
-        # delete entries
-        if lineage:
-            current = _observe_visible(
-                _resolve_visible(table, snap, touched, with_row_ids=True)
-            )
-            keep = current.join(delta.select(*key_cols), key_cols, "left_anti")
-            # an updated row KEEPS its _row_id (matched mapping);
-            # unmatched delta rows get NULL here, fresh ids below.
-            # min() per key: duplicate-keyed TARGET rows (merge_upsert
-            # never requires target uniqueness) collapse to ONE delta
-            # row either way — without it the left join would multiply
-            # the delta by the duplicate count, diverging from the
-            # non-lineage path
-            matched_ids = (
-                current.select(*key_cols, "_row_id")
-                .join(delta.select(*key_cols), key_cols, "left_semi")
-                .groupBy(*key_cols)
-                .agg(F.min("_row_id").alias("_row_id"))
-            )
-            delta_ids = delta.join(matched_ids, key_cols, "left")
-            n_new = delta_ids.filter(F.col("_row_id").isNull()).count()
-            merged = _assign_new_row_ids(
-                keep.unionByName(delta_ids), snap["next_row_id"], key_cols
-            )
-            rewritten = table._write_data_files(merged)
-        else:
-            current = _observe_visible(_resolve_visible(table, snap, touched))
-            keep = current.join(delta.select(*key_cols), key_cols, "left_anti")
-            rewritten = table._write_data_files(keep.unionByName(delta))
-    else:
-        if lineage:
-            n_new = bounds.n
-            merged = _assign_new_row_ids(
-                delta.withColumn("_row_id", F.lit(None).cast("bigint")),
-                snap["next_row_id"],
-                key_cols,
-            )
-            rewritten = table._write_data_files(merged)
-        else:
-            rewritten = table._write_data_files(delta)
-    if lineage:
-        lineage_extra = {
-            "next_row_id": snap["next_row_id"] + n_new,
-            "lineage_files": {f: True for f in rewritten},
-        }
-    vis_extra = {}
-    if snap.get("visible_rows") is not None:
-        # no touched files → nothing replaced; else the observed count
-        vis_extra = {
-            "visible_rows_mode": "replace_delta",
-            "visible_rows_removed": (
-                _observed_or_counted(vis_obs, vis_fallback) if vis_obs else 0
-            ),
-        }
-    table._commit(
-        carried + rewritten,
-        "merge",
-        parent,
-        extra={
-            **_merge_stats_extra(table, snap, carried, discovered, rewritten, key0),
-            **_carry_deletes_after_merge(table, snap, delta, key_cols, carried),
-            **lineage_extra,
-            **vis_extra,
-        },
-        ref=ref,
-    )
-    return MergeResult(
-        rewritten=len(touched), carried=len(carried), new_files=len(rewritten)
-    )
-
-
-def _at_table_types(table: SnapshotTable, snap: dict, delta: DataFrame) -> DataFrame:
-    """``delta`` with each column the table has cast to the table's type
-    (the current schema when tracked, else a data file's), so no merge
-    writes a file typed otherwise than the table: an untracked table
-    cannot read back files whose types differ."""
-    from pyspark.sql import functions as F
-
-    if snap.get("schemas"):
-        cur = _schema_by_id(snap["schemas"], snap["current_schema_id"])
-        types = {f["name"]: f["type"] for f in cur["fields"]}
-    elif snap["files"]:
-        schema = _file_schema(table, snap["files"][0])
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
-    else:
-        return delta
-    casts = {
-        f.name: F.col(f.name).cast(types[f.name])
-        for f in delta.schema.fields
-        if f.name in types and f.dataType.simpleString() != types[f.name]
-    }
-    return delta.withColumns(casts) if casts else delta
+    return _cow_merge(table, delta, key_cols, upsert, ref, None, check_unique=False)
 
 
 class MergeClause:
@@ -2677,246 +2722,94 @@ def merge_into(
     → the row is kept unchanged); each unmatched source row takes the
     first not-matched clause whose condition holds (none → dropped);
     target rows without a source match are always kept. The source must
-    be key-unique (checked — SQL MERGE's cardinality rule).
+    be key-unique (checked — SQL MERGE's cardinality rule — unless
+    ``check_unique=False`` says the caller guarantees it).
 
-    Scale shape is :func:`merge_upsert`'s FILE-GRANULAR copy-on-write:
-    footer min/max on the first key column prunes the file list to the
-    files whose key range intersects the source's; only those join the
-    source (one shuffle, delta-bounded) and get rewritten; every other
-    file carries over by name. The clause logic itself is a single
-    JVM-side CASE chain over one full-outer join — no per-clause scans,
-    no Python in the row path. ``extra`` rides on the commit manifest
-    (e.g. a streaming epoch marker, letting a CDC apply be ONE commit)."""
+    The kernel is a single JVM-side CASE chain over one full-outer join
+    of the touched files' visible rows and the source — no per-clause
+    scans, no Python in the row path — inside :func:`_cow_merge`'s
+    file-granular copy-on-write frame. ``extra`` rides on the commit
+    manifest (e.g. a streaming epoch marker, letting a CDC apply be ONE
+    commit)."""
     from pyspark.sql import functions as F
 
-    table._check_writable_ref(ref)
     matched = [c for c in clauses if c.kind in ("update", "delete")]
     unmatched = [c for c in clauses if c.kind == "insert"]
-    parent = table.head(ref)
 
-    def _dup_check():
-        if not check_unique:  # caller already guarantees it (e.g. the
-            return  # CDC apply's last-action-per-key window)
-        dups = (
-            source.groupBy(*key_cols).count().filter(F.col("count") > 1).limit(1)
+    def case_chain(target, source, columns):
+        src = source.select(
+            [F.col(c).alias(f"src_{c}") for c in source.columns]
+            + [F.lit(1).alias("_s_m")]
         )
-        if dups.count():
-            raise SnapshotError(
-                "merge_into source is not key-unique on "
-                f"{key_cols}: SQL MERGE refuses multiple matches per target row"
+        if target is None:
+            # no target row to match: only NOT MATCHED clauses can fire,
+            # writing the columns they assign ("*": the table's)
+            if not unmatched:
+                return None
+            when_matched, target_cols = [], []
+            for c in unmatched:
+                for n in columns if c.assignments == "*" else c.assignments:
+                    if n not in target_cols:
+                        target_cols.append(n)
+            joined = src.withColumn("_t_m", F.lit(None))
+        else:
+            when_matched = matched
+            cur = target.withColumn("_t_m", F.lit(1))
+            target_cols = [c for c in target.columns if c != "_row_id"]
+            join_cond = None
+            for k in key_cols:
+                c = cur[k] == src[f"src_{k}"]  # SQL MERGE ON: nulls never match
+                join_cond = c if join_cond is None else (join_cond & c)
+            joined = cur.join(src, join_cond, "full_outer")
+        is_matched = F.col("_t_m").isNotNull() & F.col("_s_m").isNotNull()
+        is_t_only = F.col("_t_m").isNotNull() & F.col("_s_m").isNull()
+        is_s_only = F.col("_t_m").isNull() & F.col("_s_m").isNotNull()
+
+        def _cond(c: MergeClause):
+            return F.expr(c.condition) if c.condition is not None else F.lit(True)
+
+        # one CASE chain decides each joined row's fate — first clause wins
+        action = F.when(is_t_only, F.lit("keep"))
+        for i, c in enumerate(when_matched):
+            action = action.when(
+                is_matched & _cond(c),
+                F.lit("delete" if c.kind == "delete" else f"update:{i}"),
             )
-
-    if parent is None:
-        # empty table: only NOT MATCHED clauses can fire
-        _dup_check()
-        src = source
-        ins = _apply_insert_clauses(src, unmatched, prefix_applied=False)
-        if ins is None:
-            return MergeResult(rewritten=0, carried=0, new_files=0, inserted=0)
-        new = table._write_data_files(ins)
-        table._commit(
-            new,
-            "merge",
-            parent,
-            extra={"visible_rows_mode": "fresh_full", **(extra or {})},
-            ref=ref,
-        )
-        return MergeResult(rewritten=0, carried=0, new_files=len(new))
-    psnap = table._load_snap(parent)
-    _dup_check()
-    if not psnap["files"]:  # committed-but-empty table: inserts only
-        ins = _apply_insert_clauses(source, unmatched, prefix_applied=False)
-        new = table._write_data_files(ins) if ins is not None else []
-        table._commit(
-            new,
-            "merge",
-            parent,
-            extra={"visible_rows_mode": "append", **(extra or {})},
-            ref=ref,
-        )
-        return MergeResult(rewritten=0, carried=0, new_files=len(new))
-
-    key0 = key_cols[0]
-    bounds = source.agg(
-        F.min(key0).alias("lo"),
-        F.max(key0).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    if bounds.n == 0:
-        # empty source: no clause can fire — a no-op, not a full-table
-        # rewrite (bounds.lo=None used to mark EVERY file as touched,
-        # so an empty CDC micro-batch rewrote the whole table and spent
-        # a spurious commit)
-        return MergeResult(
-            rewritten=0, carried=len(psnap["files"]), new_files=0, snapshot_id=parent
-        )
-    touched, carried, discovered = _merge_prune(
-        table, psnap, source, key_cols, bounds
-    )
-
-    src = source.select(
-        [F.col(c).alias(f"src_{c}") for c in source.columns]
-        + [F.lit(1).alias("_s_m")]
-    )
-    # touched files read VISIBLE (pending vectors + equality keys
-    # applied; a MOR-hidden row is NOT MATCHED, exactly like SQL MERGE
-    # over an Iceberg v2 table); lineage tables attach _row_id so
-    # updates keep their ids. No file's key range intersects → empty
-    # (correctly-typed) target side: every source row lands in the
-    # NOT MATCHED clauses
-    lineage = bool(psnap.get("row_lineage"))
-    cur = _resolve_visible(
-        table, psnap, touched or psnap["files"], with_row_ids=lineage
-    )
-    if not touched:
-        cur = cur.limit(0)
-    # visible-count maintenance: the touched files' visible rows are
-    # exactly what this COW rewrite replaces; observe() counts them on
-    # the SAME job that writes the merge output — no extra scan
-    vis_obs = None
-    vis_fallback = cur
-    if psnap.get("visible_rows") is not None:
-        from pyspark.sql import Observation
-
-        vis_obs = Observation()
-        cur = cur.observe(vis_obs, F.count(F.lit(1)).alias("n"))
-    cur = cur.withColumn("_t_m", F.lit(1))
-    target_cols = [c for c in cur.columns if c not in ("_t_m", "_row_id")]
-    join_cond = None
-    for k in key_cols:
-        c = cur[k] == src[f"src_{k}"]  # SQL MERGE ON: nulls never match
-        join_cond = c if join_cond is None else (join_cond & c)
-    joined = cur.join(src, join_cond, "full_outer")
-    is_matched = F.col("_t_m").isNotNull() & F.col("_s_m").isNotNull()
-    is_t_only = F.col("_t_m").isNotNull() & F.col("_s_m").isNull()
-    is_s_only = F.col("_t_m").isNull() & F.col("_s_m").isNotNull()
-
-    def _cond(c: MergeClause):
-        return F.expr(c.condition) if c.condition is not None else F.lit(True)
-
-    # one CASE chain decides each joined row's fate — first clause wins
-    action = F.when(is_t_only, F.lit("keep"))
-    for i, c in enumerate(matched):
-        action = action.when(
-            is_matched & _cond(c),
-            F.lit("delete" if c.kind == "delete" else f"update:{i}"),
-        )
-    action = action.when(is_matched, F.lit("keep"))
-    for j, c in enumerate(unmatched):
-        action = action.when(is_s_only & _cond(c), F.lit(f"insert:{j}"))
-    joined = joined.withColumn("_action", action)  # null action = drop
-
-    def _value(col: str, clause: MergeClause):
-        if clause.assignments == "*":
-            return F.col(f"src_{col}")
-        a = clause.assignments.get(col)
-        return F.expr(a) if a is not None else F.col(col)
-
-    out_cols = []
-    for col in target_cols:
-        v = F.col(col)
-        for i, c in enumerate(matched):
-            if c.kind == "update":
-                v = F.when(F.col("_action") == f"update:{i}", _value(col, c)).otherwise(v)
+        action = action.when(is_matched, F.lit("keep"))
         for j, c in enumerate(unmatched):
-            ins_v = (
-                F.col(f"src_{col}")
-                if c.assignments == "*"
-                else (
-                    F.expr(c.assignments[col])
-                    if col in c.assignments
-                    else F.lit(None)
-                )
-            )
-            v = F.when(F.col("_action") == f"insert:{j}", ins_v).otherwise(v)
-        # keep the target column's resolved type even when an insert
-        # expression widened it (e.g. a literal)
-        out_cols.append(v.alias(col))
-    if lineage:
-        # kept/updated rows carry their target _row_id; insert rows are
-        # target-null here and get fresh counter ids below
-        out_cols.append(F.col("_row_id"))
-    result = (
-        joined.filter(
+            action = action.when(is_s_only & _cond(c), F.lit(f"insert:{j}"))
+        joined = joined.withColumn("_action", action)  # null action = drop
+
+        def _value(col: str, clause: MergeClause, unassigned):
+            if clause.assignments == "*":
+                return F.col(f"src_{col}")
+            a = clause.assignments.get(col)
+            return F.expr(a) if a is not None else unassigned
+
+        out_cols = []
+        for col in target_cols:
+            v = F.col(col) if target is not None else F.lit(None)
+            for i, c in enumerate(when_matched):
+                if c.kind == "update":
+                    # an update leaves a column it does not assign as is
+                    upd_v = _value(col, c, F.col(col))
+                    v = F.when(F.col("_action") == f"update:{i}", upd_v).otherwise(v)
+            for j, c in enumerate(unmatched):
+                # an insert leaves a column it does not assign NULL
+                ins_v = _value(col, c, F.lit(None))
+                v = F.when(F.col("_action") == f"insert:{j}", ins_v).otherwise(v)
+            # keep the target column's resolved type even when an insert
+            # expression widened it (e.g. a literal)
+            out_cols.append(v.alias(col))
+        if target is not None and "_row_id" in target.columns:
+            # kept/updated rows carry their target _row_id; insert rows
+            # are target-null here and get fresh counter ids
+            out_cols.append(F.col("_row_id"))
+        return joined.filter(
             F.col("_action").isNotNull() & (F.col("_action") != "delete")
         ).select(*out_cols)
-    )
-    lineage_extra: dict = {}
-    if lineage:
-        n_new = result.filter(F.col("_row_id").isNull()).count()
-        result = _assign_new_row_ids(result, psnap["next_row_id"], key_cols)
-        lineage_extra = {"next_row_id": psnap["next_row_id"] + n_new}
-    rewritten = table._write_data_files(result)
-    if lineage:
-        lineage_extra["lineage_files"] = {f: True for f in rewritten}
-    vis_extra = (
-        {
-            "visible_rows_mode": "replace_delta",
-            "visible_rows_removed": _observed_or_counted(vis_obs, vis_fallback),
-        }
-        if vis_obs is not None
-        else {}
-    )
-    table._commit(
-        carried + rewritten,
-        "merge",
-        parent,
-        extra={
-            **_merge_stats_extra(table, psnap, carried, discovered, rewritten, key0),
-            **_carry_deletes_after_merge(table, psnap, source, key_cols, carried),
-            **lineage_extra,
-            **vis_extra,
-            **(extra or {}),
-        },
-        ref=ref,
-    )
-    return MergeResult(
-        rewritten=len(touched), carried=len(carried), new_files=len(rewritten)
-    )
 
-
-def _apply_insert_clauses(
-    source: DataFrame, clauses: list[MergeClause], prefix_applied: bool
-) -> DataFrame | None:
-    """Insert-only fast path (empty target): first insert clause whose
-    condition holds wins, rows matching none are dropped."""
-    from pyspark.sql import functions as F
-
-    if not clauses:
-        return None
-    src = source
-    if not prefix_applied:
-        # conditions/assignments use the src_ prefix convention
-        src = source.select(
-            *[F.col(c).alias(f"src_{c}") for c in source.columns]
-        )
-    chain = F.when(F.lit(False), F.lit(0))
-    for j, c in enumerate(clauses):
-        cond = F.expr(c.condition) if c.condition is not None else F.lit(True)
-        chain = chain.when(cond, F.lit(j))
-    src = src.withColumn("_clause", chain).filter(F.col("_clause").isNotNull())
-    # output schema: the union of assigned columns ("*" = all source cols)
-    out_names = []
-    for c in clauses:
-        names = (
-            [n for n in source.columns]
-            if c.assignments == "*"
-            else list(c.assignments)
-        )
-        for n in names:
-            if n not in out_names:
-                out_names.append(n)
-    cols = []
-    for n in out_names:
-        v = F.lit(None)
-        for j, c in enumerate(clauses):
-            if c.assignments == "*":
-                ins_v = F.col(f"src_{n}") if n in source.columns else F.lit(None)
-            else:
-                ins_v = F.expr(c.assignments[n]) if n in c.assignments else F.lit(None)
-            v = F.when(F.col("_clause") == j, ins_v).otherwise(v)
-        cols.append(v.alias(n))
-    return src.select(*cols)
+    return _cow_merge(table, source, key_cols, case_chain, ref, extra, check_unique)
 
 
 def delete_where(
@@ -3128,19 +3021,6 @@ def _apply_eq_deletes(
     return _hide_sequenced(
         df, create(fmap), create(keys), key_cols, "_file", broadcast_keys=True
     )
-
-
-def _observed_or_counted(obs, df: DataFrame) -> int:
-    """An Observation's count metric, with a counting fallback: AQE's
-    empty-relation propagation can eliminate the CollectMetrics node
-    when the observed branch turns out empty at runtime, leaving the
-    metrics row unfilled (Observation.get then fails converting it).
-    Those plans are exactly the cheap-to-count ones, so the fallback
-    job is trivial."""
-    try:
-        return int(obs.get["n"])
-    except Exception:  # noqa: BLE001 - unfilled metrics row
-        return int(df.count())
 
 
 def _resolve_visible(

@@ -242,6 +242,24 @@ def test_pair_stage_key_sees_each_support_bound(dataset, monkeypatch, module, st
     assert registry._key(stage, build, str(dataset)) != before
 
 
+def test_fixture_key_follows_function_local_imports(dataset, monkeypatch):
+    """A builder that imports its library function inside its body
+    (``from ..sources.snapshots import merge_upsert``) keys on that
+    function's source too: replacing it changes the fixture's key."""
+    import inspect
+
+    from iceberg_catalog_migrator_spark.queries import connectors
+    from iceberg_catalog_migrator_spark.sources import snapshots
+
+    fixture = connectors._merged_over_mor_orders  # the registered fixture
+    build = inspect.getclosurevars(fixture).nonlocals["build"]
+    monkeypatch.setattr(registry, "_CODE_INFO", {})
+    before = registry._key("orders_merge_over_mor", build, str(dataset))
+    monkeypatch.setattr(snapshots, "merge_upsert", snapshots.merge_into)
+    monkeypatch.setattr(registry, "_CODE_INFO", {})
+    assert registry._key("orders_merge_over_mor", build, str(dataset)) != before
+
+
 def test_replaced_stage_frame_is_unpersisted(spark, stages, monkeypatch):
     stage = registry.register_stage("toy")(
         lambda spark, sf_dir: spark.range(_ROUNDS).persist()

@@ -24,9 +24,12 @@ from iceberg_catalog_migrator_spark.sources.snapshot_stream import (
     register_snapshot_stream_source,
 )
 from iceberg_catalog_migrator_spark.sources.snapshots import (
+    MergeClause,
     SnapshotTable,
     delete_where,
     delete_where_positional,
+    enable_row_lineage,
+    merge_into,
     merge_upsert,
     read_with_deletes,
 )
@@ -269,6 +272,53 @@ def test_merge_carries_vectors_in_one_write(
     visible = 2000 - (200 + 286 - 29)
     hidden_in_keys = sum(1 for k in keys if k % 10 == 0 or k % 7 == 0)
     assert read_with_deletes(t).count() == visible + hidden_in_keys
+
+
+def test_merge_entry_points_share_one_frame_job_budget(spark, tmp_path):
+    """Both merge entry points run one frame: 4 files x 500 rows and a
+    40-key source over keys 480-519, which touches 2 files. The
+    key-uniqueness check rides the bounds aggregate (measured: no job
+    over ``check_unique=False``, where a separate check cost 2), so
+    ``update *`` + ``insert *`` through ``merge_into`` runs at most 7
+    jobs (measured 6, 8 before the shared frame). Lineage merges (17
+    and 16 before, measured 10 and 9) read the id counter's advance
+    from the written footers, and a merge into a table without a
+    parent runs no more jobs than its one write plus the check. Totals
+    move with AQE's timing, so the other ceilings are the counts before
+    the shared frame."""
+    src = spark.range(480, 520).select(
+        F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
+    )
+    star = [MergeClause("update"), MergeClause("insert")]
+
+    def jobs(entry, check_unique=True, lineage=False, parent=True):
+        t = SnapshotTable(spark, str(tmp_path / uuid.uuid4().hex))
+        if parent:
+            t.append(
+                spark.range(0, 2000, numPartitions=4).select(
+                    F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+                )
+            )
+        if lineage:
+            enable_row_lineage(t)
+        if entry == "upsert":
+            res, n = _jobs(spark, lambda: merge_upsert(t, src, ["k"]))
+        else:
+            res, n = _jobs(
+                spark,
+                lambda: merge_into(t, src, ["k"], star, check_unique=check_unique),
+            )
+        assert res["rewritten"] == (2 if parent else 0)
+        return n
+
+    checked = jobs("into")
+    assert checked <= 7
+    assert checked - jobs("into", check_unique=False) <= 1
+    assert jobs("upsert", lineage=True) <= 17
+    assert jobs("into", lineage=True) <= 16
+    assert jobs("upsert", parent=False) <= 3
+    assert jobs("into", parent=False) <= 3
+    assert jobs("into", check_unique=False, parent=False) <= 1
 
 
 @pytest.mark.parametrize("n_deletes", [2, 4])

@@ -24,12 +24,23 @@ CARTESIAN_ALLOWED: set[str] = set()
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
+def built(spark):
+    """Each query's DataFrame built once: its executed-plan string for
+    the plan-string rules and its ``plan_audit`` for the shuffle
+    ceiling."""
+    from iceberg_catalog_migrator_spark.plans import plan_audit
+
     out = {}
     for name, qd in all_queries().items():
         df = qd.fn(spark, SF)
-        out[name] = df._jdf.queryExecution().executedPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        out[name] = (plan, plan_audit(df))
     return out
+
+
+@pytest.fixture(scope="module")
+def plans(built):
+    return {name: plan for name, (plan, _) in built.items()}
 
 
 def test_no_row_at_a_time_python_udfs(plans):
@@ -67,12 +78,9 @@ GLOBAL_SHUFFLE_CEILING = 8
 SHUFFLE_BUDGETS = {"dedup_snapshot_commit_delta": 13}
 
 
-def test_global_shuffle_ceiling(spark):
-    from iceberg_catalog_migrator_spark.plans import plan_audit
-
+def test_global_shuffle_ceiling(built):
     offenders = {}
-    for name, qd in all_queries().items():
-        a = plan_audit(qd.fn(spark, SF))
+    for name, (_, a) in built.items():
         if a.n_shuffles > SHUFFLE_BUDGETS.get(name, GLOBAL_SHUFFLE_CEILING):
             offenders[name] = a.n_shuffles
     assert offenders == {}, f"queries above the shuffle ceiling: {offenders}"
