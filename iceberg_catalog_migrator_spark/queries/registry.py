@@ -8,12 +8,13 @@ names must match exactly (alias everything on both sides).
 
 from __future__ import annotations
 
+import dis
 import fcntl
 import hashlib
 import importlib
 import importlib.util
+import inspect
 import json
-import linecache
 import os
 import re
 import shutil
@@ -75,18 +76,20 @@ def register_query(name: str, oracle: str | None = None, description: str = ""):
 
 # ONE KEY RULE for on-disk fixtures and in-session stages: the name,
 # the sources of the builder and of every plain package function it
-# names or imports in its body (transitively, closures included;
-# hashed once per builder), the values of the immutable module-level
-# constants each of them names in its own module, the input dataset
-# (absolute sf_dir plus name, size and mtime of its parquet files) and
-# the builder's extra arguments. An edited builder or helper, a patched
-# constant or a regenerated dataset rebuilds instead of serving the old
-# result. CACHE_STATS counts hits, misses and build seconds (nested
-# builds included) per fixture and stage name.
+# names or imports in its body (transitively, closures included), the
+# values of the immutable module-level constants each of them names in
+# its own module, the input dataset (absolute sf_dir plus name, size
+# and mtime of its parquet files) and the builder's extra arguments. An
+# edited builder or helper, a patched function or constant or a
+# regenerated dataset rebuilds instead of serving the old result. Each
+# function's source, names and imports are read once per code object
+# (builders share most of the library they reach); the walk over them
+# runs on every key. CACHE_STATS counts hits, misses and build seconds
+# (nested builds included) per fixture and stage name.
 CACHE_STATS: dict[str, dict[str, float]] = {}
-_CODE_INFO: dict[int, tuple] = {}  # id(code) -> (code, source digest, scopes)
-_FN_INFO: dict[int, tuple] = {}  # id(code) -> (code, source, names, imports)
+_CODE_INFO: dict[int, tuple] = {}  # id(code) -> (code, source, names, imports)
 _PACKAGE = __name__.split(".")[0] + "."
+_IMPORT_NAME = dis.opmap["IMPORT_NAME"]
 
 
 def _codes(code: types.CodeType):
@@ -97,55 +100,37 @@ def _codes(code: types.CodeType):
         todo.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
 
 
-def _names(code: types.CodeType) -> set[str]:
-    return {n for c in _codes(code) for n in c.co_names}
-
-
-# a ``from <package module> import ...`` statement in a function body
-_IMPORT = re.compile(
-    r"^\s*from\s+(\.+[\w.]*|" + _PACKAGE[:-1] + r"[\w.]*)"
-    r"\s+import\s+(\([^)]*\)|[^\n]*)",
-    re.M,
-)
-
-
-def _imports(source: str, package: str | None) -> list[tuple[str, str]]:
-    """``(module, name)`` for each name a function imports from a
-    package module inside its own body (``from ..sources.snapshots
-    import merge_upsert``): such names are locals, so no lookup in the
-    module's globals finds them."""
+def _imports(code: types.CodeType, package: str | None) -> tuple:
+    """``(module, name)`` for each name a function binds with ``from
+    <package module> import ...`` in its own body (``from
+    ..sources.snapshots import merge_upsert``): such names are locals,
+    so no lookup in the module's globals finds them. Read from the
+    bytecode, where each IMPORT_NAME follows the loads of its level and
+    its ``from`` list."""
     found = []
-    for module, names in _IMPORT.findall(source):
-        module = importlib.util.resolve_name(module, package)
-        for name in re.sub(r"#[^\n]*", "", names).strip("()").split(","):
-            if name.strip():
-                found.append((module, name.split()[0]))
-    return found
+    for c in _codes(code):
+        if _IMPORT_NAME not in c.co_code[::2]:  # opcodes sit at even offsets
+            continue
+        level = fromlist = None
+        for op in dis.get_instructions(c):
+            if op.opname == "EXTENDED_ARG":
+                continue  # its argument is folded into the next op's
+            if op.opname == "IMPORT_NAME" and isinstance(fromlist, tuple):
+                module = importlib.util.resolve_name("." * level + op.argval, package)
+                if module.startswith(_PACKAGE):
+                    found.extend((module, n) for n in fromlist)
+            level, fromlist = fromlist, op.argval
+    return tuple(found)
 
 
-def _source(code: types.CodeType) -> str:
-    """A function's source lines, from its first line (decorators
-    included) through the last line any of its instructions spans: the
-    file's cached lines and the code's positions, with no tokenizing."""
-    last = max(
-        (end for c in _codes(code) for _, end, _, _ in c.co_positions() if end),
-        default=code.co_firstlineno,
-    )
-    linecache.checkcache(code.co_filename)
-    lines = linecache.getlines(code.co_filename)
-    return "".join(lines[code.co_firstlineno - 1 : last])
-
-
-def _fn_info(fn: types.FunctionType) -> tuple:
-    """``(source, names, imports)`` of one function, computed once per
-    code object: builders share most of the library they reach."""
+def _code_info(fn: types.FunctionType) -> tuple:
+    """``(source, names, imports)`` of one function."""
     code = fn.__code__
-    info = _FN_INFO.get(id(code))
+    info = _CODE_INFO.get(id(code))
     if info is None or info[0] is not code:
-        source = _source(code)
-        names = tuple(sorted(_names(code)))
-        imports = tuple(_imports(source, fn.__globals__.get("__package__")))
-        info = _FN_INFO[id(code)] = (code, source, names, imports)
+        names = tuple(sorted({n for c in _codes(code) for n in c.co_names}))
+        imports = _imports(code, fn.__globals__.get("__package__"))
+        info = _CODE_INFO[id(code)] = (code, inspect.getsource(fn), names, imports)
     return info[1:]
 
 
@@ -159,7 +144,7 @@ def _walk(build: Callable) -> tuple[str, tuple]:
         if fn.__code__ in seen:
             continue
         seen.add(fn.__code__)
-        source, names, imports = _fn_info(fn)
+        source, names, imports = _code_info(fn)
         digest.update(source.encode())
         env = fn.__globals__
         scopes.append((env, names))
@@ -172,13 +157,10 @@ def _walk(build: Callable) -> tuple[str, tuple]:
 
 
 def _key(name: str, build: Callable, sf_dir: str, args: tuple = ()) -> tuple:
-    code = build.__code__
-    info = _CODE_INFO.get(id(code))
-    if info is None or info[0] is not code:
-        info = _CODE_INFO[id(code)] = (code, *_walk(build))
+    digest, scopes = _walk(build)
     consts = [
         (env["__name__"], n, env[n])
-        for env, names in info[2]
+        for env, names in scopes
         for n in names
         if isinstance(env.get(n), (int, float, str, tuple))
     ]
@@ -189,7 +171,7 @@ def _key(name: str, build: Callable, sf_dir: str, args: tuple = ()) -> tuple:
         if e.name.endswith(".parquet")
         for st in (e.stat(),)
     )
-    return (name, info[1], tuple(consts), sf, tuple(inputs), args)
+    return (name, digest, tuple(consts), sf, tuple(inputs), args)
 
 
 def _count(name: str, hit: bool, build_s: float = 0.0) -> None:

@@ -2496,13 +2496,15 @@ def _cow_merge(
     row is NOT MATCHED and the consumed delete entries drop in the
     commit; ``_row_id`` attached on a lineage table; None when no file
     is touched or the table has no parent), the source cast to the
-    table's types and the table's columns (the source's when the table
-    has none yet). It returns the rows to write, ``_row_id`` NULL for
-    the inserts that take fresh consecutive ids, or None when there is
-    nothing to write. ``check_unique`` refuses a source that is not
-    key-unique (SQL MERGE's cardinality rule; null keys group
-    together). A table without a parent commits ``merge-insert-only``
-    (Iceberg's ``append``). ``extra`` rides on the commit manifest."""
+    table's types and the table's columns (empty when the table has
+    none yet). It returns the rows to write, ``_row_id`` NULL for the
+    inserts that take fresh consecutive ids, or None when there is
+    nothing to write; the frame casts them to the table's types.
+    ``check_unique`` refuses a source that is not key-unique (SQL
+    MERGE's cardinality rule; null keys group together). A table
+    without a parent commits ``merge-insert-only`` (Iceberg's
+    ``append``). ``extra`` rides on the commit manifest."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -2524,13 +2526,16 @@ def _cow_merge(
         }
     else:
         types = {}
-    casts = {
-        f.name: F.col(f.name).cast(types[f.name])
-        for f in source.schema.fields
-        if f.name in types and f.dataType.simpleString() != types[f.name]
-    }
-    source = source.withColumns(casts) if casts else source
-    columns = list(types) or source.columns
+
+    def at_table_types(df: DataFrame) -> DataFrame:
+        casts = {
+            f.name: F.col(f.name).cast(types[f.name])
+            for f in df.schema.fields
+            if f.name in types and f.dataType.simpleString() != types[f.name]
+        }
+        return df.withColumns(casts) if casts else df
+
+    source = at_table_types(source)
 
     key0 = key_cols[0]
     touched, carried, discovered = [], [], {}
@@ -2577,12 +2582,13 @@ def _cow_merge(
             # them on the SAME job that writes the merge output
             vis_obs = Observation()
             target = target.observe(vis_obs, F.count(F.lit(1)).alias("n"))
-    rows = kernel(target, source, columns)
+    rows = kernel(target, source, list(types))
     if rows is None:
         # nothing touched and no row to insert: nothing changes
         return MergeResult(
             rewritten=0, carried=len(carried), new_files=0, snapshot_id=parent
         )
+    rows = at_table_types(rows)
     if lineage:
         if "_row_id" not in rows.columns:
             rows = rows.withColumn("_row_id", F.lit(None).cast("bigint"))
@@ -2591,12 +2597,16 @@ def _cow_merge(
     commit_extra: dict = {}
     if lineage:
         # kept and updated rows hold ids below the counter and inserts
-        # took consecutive ids from it, so the written footers' largest
+        # took consecutive ids from it, so the written files' largest
         # _row_id advances the counter without a count job
         next_row_id = snap["next_row_id"]
         for f in rewritten:
-            rng = _footer_key_range(os.path.join(table.path, f), "_row_id")
-            if rng is not None:
+            path = os.path.join(table.path, f)
+            rng = _footer_key_range(path, "_row_id")
+            if rng is None:  # no footer stats: read the column itself
+                ids = pq.read_table(path, columns=["_row_id"])["_row_id"]
+                rng = (None, pc.max(ids).as_py())
+            if rng[1] is not None:  # None: a file without rows
                 next_row_id = max(next_row_id, rng[1] + 1)
         commit_extra["next_row_id"] = next_row_id
         commit_extra["lineage_files"] = {f: True for f in rewritten}
@@ -2691,7 +2701,8 @@ class MergeClause:
     is never ambiguous). ``assignments``: for update/insert, a dict of
     ``target_col -> SQL expression`` (same column-naming convention),
     or ``"*"`` meaning "every target column from the source's
-    same-named column" (UPDATE SET * / INSERT *)."""
+    same-named column" (UPDATE SET * / INSERT *; a column the source
+    lacks is unassigned)."""
 
     def __init__(self, kind: str, condition: str | None = None, assignments="*"):
         if kind not in ("update", "delete", "insert"):
@@ -2742,13 +2753,14 @@ def merge_into(
             + [F.lit(1).alias("_s_m")]
         )
         if target is None:
-            # no target row to match: only NOT MATCHED clauses can fire,
-            # writing the columns they assign ("*": the table's)
+            # no target row to match: only NOT MATCHED clauses can fire.
+            # They write the table's columns, or on a table without any
+            # yet the columns they assign ("*": the source's)
             if not unmatched:
                 return None
-            when_matched, target_cols = [], []
-            for c in unmatched:
-                for n in columns if c.assignments == "*" else c.assignments:
+            when_matched, target_cols = [], list(columns)
+            for c in unmatched if not columns else ():
+                for n in source.columns if c.assignments == "*" else c.assignments:
                     if n not in target_cols:
                         target_cols.append(n)
             joined = src.withColumn("_t_m", F.lit(None))
@@ -2782,7 +2794,8 @@ def merge_into(
 
         def _value(col: str, clause: MergeClause, unassigned):
             if clause.assignments == "*":
-                return F.col(f"src_{col}")
+                # a table column the source lacks is left unassigned
+                return F.col(f"src_{col}") if col in source.columns else unassigned
             a = clause.assignments.get(col)
             return F.expr(a) if a is not None else unassigned
 
@@ -2798,8 +2811,6 @@ def merge_into(
                 # an insert leaves a column it does not assign NULL
                 ins_v = _value(col, c, F.lit(None))
                 v = F.when(F.col("_action") == f"insert:{j}", ins_v).otherwise(v)
-            # keep the target column's resolved type even when an insert
-            # expression widened it (e.g. a literal)
             out_cols.append(v.alias(col))
         if target is not None and "_row_id" in target.columns:
             # kept/updated rows carry their target _row_id; insert rows

@@ -10,13 +10,17 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_CORRECT = os.path.join(TESTDATA, "sf0.01")
 
-# One switch for the property sweeps. A property test that leaves
-# max_examples to the loaded profile runs the tier-1 count by default
-# and the sweep count under SPARK_GRAFT_HYPOTHESIS=sweep; a test that
-# passes its own max_examples keeps it under either profile.
+# One switch for the property sweeps. A property test that runs at a
+# profile's count rather than its own takes
+# @settings(settings.get_profile("property")): the `tier1` profile by
+# default, `sweep` under SPARK_GRAFT_HYPOTHESIS=sweep. No profile is
+# loaded, so every other test keeps its own count or Hypothesis's.
 settings.register_profile("tier1", max_examples=12)
 settings.register_profile("sweep", max_examples=200)
-settings.load_profile(os.environ.get("SPARK_GRAFT_HYPOTHESIS", "tier1"))
+settings.register_profile(
+    "property",
+    settings.get_profile(os.environ.get("SPARK_GRAFT_HYPOTHESIS", "tier1")),
+)
 
 
 @pytest.fixture(scope="session")

@@ -16,8 +16,10 @@ pending equality deletes.
   upsert's parent snapshot).
 
 On a lineage table kept and updated rows keep their ``_row_id`` and
-inserts take fresh consecutive ids in key order. The per-example Spark
-round trips cap tier-1 at the ``tier1`` hypothesis profile's count;
+inserts take fresh consecutive ids in key order. Insert clauses assign
+``*``, a literal or the key alone, and every merged column must read
+back with the table's type. The per-example Spark round trips cap
+tier-1 at the ``tier1`` hypothesis profile's count;
 ``SPARK_GRAFT_HYPOTHESIS=sweep`` runs the sweep's (tests/conftest.py)."""
 
 from collections import Counter
@@ -62,6 +64,18 @@ _ASSIGN_SQL = {
     "bump": {"v": "src_v + 100"},
     "keep_v": {"v": "v + 1"},
 }
+# insert assignments: a literal is an int into the bigint table, and a
+# column an insert leaves unassigned is NULL
+_INS_ASSIGNS = {
+    "*": lambda k, sv: (k, sv),
+    "zero": lambda k, sv: (k, 0),
+    "key_only": lambda k, sv: (k, None),
+}
+_INS_ASSIGN_SQL = {
+    "*": "*",
+    "zero": {"k": "src_k", "v": "0"},
+    "key_only": {"k": "src_k"},
+}
 # pending deletion vectors: rows matching the predicate are hidden
 _POS = {
     None: lambda v: False,
@@ -83,7 +97,11 @@ matched_clauses = st.lists(
     max_size=3,
 )
 insert_clauses = st.lists(
-    st.tuples(st.just("insert"), st.sampled_from(sorted(_INS_CONDS, key=str))),
+    st.tuples(
+        st.just("insert"),
+        st.sampled_from(sorted(_INS_CONDS, key=str)),
+        st.sampled_from(sorted(_INS_ASSIGNS)),
+    ),
     max_size=2,
 )
 # about one key in eleven is null: nulls never match in MERGE ON
@@ -152,9 +170,8 @@ def _source(spark, source, narrow):
 
 def _read(t, lineage, ref=None):
     df = read_with_lineage(t, ref=ref) if lineage else read_with_deletes(t, ref=ref)
-    assert {f.name: f.dataType.simpleString() for f in df.schema.fields}.get(
-        "k"
-    ) == "bigint"  # a narrow source never narrows the table
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    assert (types["k"], types["v"]) == ("bigint", "bigint")  # never narrowed
     return [(r["k"], r["v"], r["_row_id"] if lineage else None) for r in df.collect()]
 
 
@@ -196,9 +213,9 @@ def _ansi_model(visible, source, matched, inserts):
     for k, sv in source.items():
         if k is not None and k in tkeys:
             continue
-        for _, cond in inserts:
+        for _, cond, assign in inserts:
             if _INS_CONDS[cond](sv):
-                out.append((k, sv, None))
+                out.append((*_INS_ASSIGNS[assign](k, sv), None))
                 break
     return out
 
@@ -216,7 +233,7 @@ def _upsert_model(visible, source):
 
 
 @pytest.mark.slow
-@settings(deadline=None)
+@settings(settings.get_profile("property"), deadline=None)
 @given(_states(target_rows), source_rows, matched_clauses, insert_clauses)
 def test_merge_into_matches_reference_executor(
     spark, tmp_path_factory, state, source, matched, inserts
@@ -226,14 +243,14 @@ def test_merge_into_matches_reference_executor(
     clauses = [
         MergeClause(kind, cond, _ASSIGN_SQL[assign] if assign else None)
         for kind, cond, assign in matched
-    ] + [MergeClause("insert", cond) for _, cond in inserts]
+    ] + [MergeClause("insert", cond, _INS_ASSIGN_SQL[a]) for _, cond, a in inserts]
     merge_into(t, _source(spark, source, state["narrow"]), ["k"], clauses)
     expected = _ansi_model(visible, source, matched, inserts)
     _assert_merged(t, _read(t, state["lineage"]), expected, next_id)
 
 
 @pytest.mark.slow
-@settings(deadline=None)
+@settings(settings.get_profile("property"), deadline=None)
 @given(_states(st.one_of(target_rows, unique_target_rows)), source_rows)
 def test_merge_upsert_matches_anti_join_model(spark, tmp_path_factory, state, source):
     """The upsert on main against its model; on a key-unique visible

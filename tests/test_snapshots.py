@@ -2191,6 +2191,26 @@ def test_merge_writes_a_narrower_source_at_the_table_types(spark, table, tracked
     assert sorted(tuple(r) for r in got.collect()) == [(k, 1) for k in range(10)] + [(100, 7)]
 
 
+@pytest.mark.parametrize("tracked", [False, True])
+def test_merge_into_touching_no_file_writes_every_table_column(spark, table, tracked):
+    """Inserts that touch no file write every table column at its type:
+    a literal assignment (an int) lands bigint and a column no clause
+    assigns lands NULL."""
+    from iceberg_catalog_migrator_spark.sources.snapshots import track_schema
+
+    MergeClause, merge_into = _merge_imports()
+    rows = [(1, 10, "a"), (2, 20, "b")]
+    table.append(spark.createDataFrame(rows, "k bigint, v bigint, w string").coalesce(1))
+    if tracked:
+        track_schema(table)
+    src = spark.createDataFrame([(100, 7)], "k int, v int")
+    res = merge_into(table, src, ["k"], [MergeClause("insert", None, {"k": "src_k", "v": "0"})])
+    assert res["rewritten"] == 0
+    got = table.read()
+    assert [f.dataType.simpleString() for f in got.schema.fields] == ["bigint", "bigint", "string"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 10, "a"), (2, 20, "b"), (100, 0, None)]
+
+
 def test_merge_empty_source_is_noop(spark, table):
     """An empty source fires no clause: head unchanged, no commit — an
     empty CDC micro-batch used to rewrite the WHOLE table (bounds.lo
@@ -2489,6 +2509,22 @@ def test_lineage_merge_upsert_duplicate_keyed_target(spark, table):
     rows = read_with_lineage(table).collect()
     assert sorted((r["k"], r["v"]) for r in rows) == [(1, 99), (2, 20)]
     assert len({r["_row_id"] for r in rows}) == 2
+
+
+def test_lineage_merge_advances_counter_without_footer_stats(spark, table, monkeypatch):
+    """The id counter advances past every written _row_id even when the
+    written files' footers carry no statistics."""
+    from iceberg_catalog_migrator_spark.sources import snapshots
+
+    table.append(spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"))
+    snapshots.enable_row_lineage(table)
+    monkeypatch.setattr(snapshots, "_footer_key_range", lambda path, col: None)
+    delta = spark.createDataFrame([(2, 21), (3, 30), (4, 40)], "k long, v long")
+    snapshots.merge_upsert(table, delta, ["k"])
+    snap = table._load_snap(table.current_snapshot_id())
+    ids = sorted(r["_row_id"] for r in snapshots.read_with_lineage(table).collect())
+    assert ids == [0, 1, 2, 3]
+    assert snap["next_row_id"] == 4
 
 
 def test_rollback_restores_lineage_state(spark, table):
