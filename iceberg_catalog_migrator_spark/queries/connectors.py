@@ -299,7 +299,6 @@ def snapshot_stream_drain_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_fixture("orders_bucket8")
 def _bucketed_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
     from ..sources import load_table
-    from ..sources.plan_index import ensure_plan_index
     from ..sources.snapshots import SnapshotTable, append_partitioned
 
     tbl = SnapshotTable(spark, root)
@@ -307,7 +306,6 @@ def _bucketed_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     append_partitioned(tbl, orders, [("o_custkey", "bucket[8]")])
-    ensure_plan_index(root, tbl.current_snapshot_id())  # the pruned scan's sidecar
 
 
 @register_query(
@@ -654,14 +652,12 @@ def _sorted_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
     rewrite_sorted on o_totalprice — one range shuffle, per-file stats
     recorded in the rewrite commit."""
     from ..sources import load_table
-    from ..sources.plan_index import ensure_plan_index
     from ..sources.snapshots import SnapshotTable, rewrite_sorted
 
     tbl = SnapshotTable(spark, root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     tbl.append(orders.repartition(8))
     rewrite_sorted(tbl, ["o_totalprice"], n_files=8)
-    ensure_plan_index(root, tbl.current_snapshot_id())  # the planned scan's sidecar
 
 
 @register_query(

@@ -76,19 +76,21 @@ def register_query(name: str, oracle: str | None = None, description: str = ""):
 
 # ONE KEY RULE for on-disk fixtures and in-session stages: the name,
 # the sources of the builder and of every plain package function it
-# names or imports in its body (transitively, closures included), the
-# values of the immutable module-level constants each of them names in
-# its own module, the input dataset (absolute sf_dir plus name, size
-# and mtime of its parquet files) and the builder's extra arguments. An
-# edited builder or helper, a patched function or constant or a
-# regenerated dataset rebuilds instead of serving the old result. Each
-# function's source, names and imports are read once per code object
+# names or imports in its body (transitively, closures included, and
+# every method of each package class so reached, with its package
+# bases), the values of the immutable module-level constants each of
+# them names in its own module, the input dataset (absolute sf_dir plus
+# name, size and mtime of its parquet files) and the builder's extra
+# arguments. An edited builder or helper, a patched function or constant
+# or a regenerated dataset rebuilds instead of serving the old result.
+# Each function's source, names and imports are read once per code object
 # (builders share most of the library they reach); the walk over them
 # runs on every key. CACHE_STATS counts hits, misses and build seconds
 # (nested builds included) per fixture and stage name.
 CACHE_STATS: dict[str, dict[str, float]] = {}
 _CODE_INFO: dict[int, tuple] = {}  # id(code) -> (code, source, names, imports)
 _PACKAGE = __name__.split(".")[0] + "."
+_PACKAGE_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__))) + os.sep
 _IMPORT_NAME = dis.opmap["IMPORT_NAME"]
 
 
@@ -134,9 +136,32 @@ def _code_info(fn: types.FunctionType) -> tuple:
     return info[1:]
 
 
+def _ours(v) -> bool:
+    """A plain function compiled from the package's own files: not a
+    library's, nor one a dataclass generates (it has no source)."""
+    return isinstance(v, types.FunctionType) and v.__code__.co_filename.startswith(_PACKAGE_DIR)
+
+
+def _methods(cls: type) -> list:
+    """The functions defined on ``cls`` and its package bases, with
+    static and class methods and property accessors unwrapped."""
+    out = []
+    for c in cls.__mro__:
+        if not c.__module__.startswith(_PACKAGE):
+            continue
+        for v in vars(c).values():
+            if isinstance(v, (staticmethod, classmethod)):
+                v = v.__func__
+            if callable(v):
+                v = inspect.unwrap(v)  # a @contextmanager's own body
+            out.extend((v.fget, v.fset, v.fdel) if isinstance(v, property) else (v,))
+    return [f for f in out if _ours(f)]
+
+
 def _walk(build: Callable) -> tuple[str, tuple]:
-    """Source digest of ``build`` and of the package functions it
-    reaches, plus one ``(module globals, names)`` scope per function."""
+    """Source digest of ``build`` and of the package functions and
+    class methods it reaches, plus one ``(module globals, names)``
+    scope per function."""
     digest = hashlib.sha256()
     scopes, seen, todo = [], set(), [build]
     while todo:
@@ -151,7 +176,10 @@ def _walk(build: Callable) -> tuple[str, tuple]:
         cells = [c.cell_contents for c in fn.__closure__ or ()]
         imported = [getattr(importlib.import_module(m), n, None) for m, n in imports]
         for v in reversed([env.get(n) for n in names] + cells + imported):
-            if isinstance(v, types.FunctionType) and v.__module__.startswith(_PACKAGE):
+            if isinstance(v, type) and v.__module__.startswith(_PACKAGE) and v not in seen:
+                seen.add(v)
+                todo.extend(reversed(_methods(v)))
+            elif _ours(v):
                 todo.append(v)
     return digest.hexdigest(), tuple(scopes)
 

@@ -713,18 +713,19 @@ def _exporter_fingerprint() -> str:
     keep serving bytes the current code would not write."""
     import pyarrow
 
-    global _EXPORTER_FP
-    if _EXPORTER_FP is None:
-        h = hashlib.md5()
-        for fname in (__file__, codecs.__file__):
-            with open(fname, "rb") as f:
-                h.update(f.read())
-        h.update(pyarrow.__version__.encode())
-        _EXPORTER_FP = h.hexdigest()
-    return _EXPORTER_FP
+    h = hashlib.md5()
+    for fname in (__file__, codecs.__file__):
+        with open(fname, "rb") as f:
+            h.update(f.read())
+    h.update(pyarrow.__version__.encode())
+    return h.hexdigest()
 
 
-_EXPORTER_FP: str | None = None
+# computed once at import, as a module constant: the key of every
+# fixture whose builder reaches the reuse check names it, so a new
+# fingerprint rebuilds those fixtures instead of minting a new metadata
+# version inside one
+_EXPORTER_FP = _exporter_fingerprint()
 
 
 def _latest_reusable(
@@ -782,7 +783,7 @@ def _latest_reusable(
         if doc.get("format-version") != want_version:
             continue  # same table state, different requested format
         props = doc.get("properties") or {}
-        if props.get("exporter-fingerprint") != _exporter_fingerprint():
+        if props.get("exporter-fingerprint") != _EXPORTER_FP:
             return None
         if (
             props.get("write.avro.compression-codec") or "uncompressed"
@@ -1852,7 +1853,7 @@ def export_iceberg_metadata(
             # engine's maintained visible count) — foreign writers'
             # is gross; readers key the distinction off this marker
             "written-by": "iceberg-catalog-migrator-spark",
-            "exporter-fingerprint": _exporter_fingerprint(),
+            "exporter-fingerprint": _EXPORTER_FP,
             # the stock property for manifest Avro compression, in the
             # stock VOCABULARY (uncompressed/gzip/zstd, not the Avro
             # container names): lets the reuse check know which codec

@@ -43,14 +43,17 @@ untracked table). Stats columns whose values cannot type consistently
 are listed in ``unindexed_cols`` and plans on them fall back to the
 dict path.
 
-Freshness: the index doc records the snapshot doc's stat fingerprint
-(mtime_ns:size). A stale or missing index advances from the nearest
-fresh ancestor index through the raw delta docs (O(total churn)), and
-only full-rebuilds from the resolved dict when no ancestor index
-exists or a structural change (spec/schema evolution, wholesale key
-clears) is simpler re-derived than patched. ``expire_snapshots``
-unlinks index docs with their snapshots and garbage-collects segments
-no retained index references.
+Freshness: every commit writes its snapshot's index doc
+(:func:`index_commit`, run by ``SnapshotTable._commit``), and the doc
+records the snapshot doc's stat fingerprint (mtime_ns:size). A delta
+commit advances from its parent's fresh doc (O(its delta)); a
+full-form doc, a parent without a fresh doc, a structural spec or
+schema change or a majority rewrite writes the full index from the
+resolved manifest. Planning only reads: a snapshot with no fresh doc
+(committed before commits wrote one, or its doc rewritten or lost)
+plans through the manifest dict until the next commit indexes its
+successor. ``expire_snapshots`` unlinks index docs with their
+snapshots and garbage-collects segments no retained index references.
 
 Reference anchor: the reference migrates a metadata POINTER
 (`CatalogMigrator.java:212-213`); this module keeps the pointer's
@@ -334,8 +337,8 @@ def _fresh_doc(table_path: str, snapshot_id: int) -> dict | None:
 
 def _heal(table_path: str, snapshot_id: int) -> None:
     """A segment read failed under a fresh doc (GC race, torn file):
-    drop the doc so the next plan rebuilds instead of permanently
-    falling back to the dict path."""
+    drop the doc, so the snapshot plans through the dict and the next
+    commit writes its successor's index in full."""
     try:
         os.unlink(sidecar_path(table_path, snapshot_id))
     except OSError:
@@ -445,22 +448,12 @@ def _fetch_current_rows(
     return {p: row for p, (_, row) in found.items()}
 
 
-def advance_plan_index(
-    table_path: str, snapshot_id: int, raw: dict | None = None
-) -> dict | None:
+def advance_plan_index(table_path: str, snapshot_id: int, raw: dict) -> dict | None:
     """Derive ``snapshot_id``'s index from its PARENT's index plus the
     commit's raw delta doc — O(changed files), never materializing the
     resolved dict. Returns the new doc, or None when incremental
     maintenance can't answer (no fresh parent index, full-form doc,
-    structural spec/schema change) and the caller should full-rebuild
-    (or leave it to the next plan's lazy build)."""
-    meta_dir = os.path.join(table_path, "metadata")
-    if raw is None:
-        try:
-            with open(os.path.join(meta_dir, f"snap-{snapshot_id}.json")) as f:
-                raw = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
+    structural spec/schema change) and the caller full-rebuilds."""
     if "delta_base" not in raw:
         return None
     pdoc = _fresh_doc(table_path, raw["delta_base"])
@@ -697,79 +690,26 @@ def _compact(table_path: str, snapshot_id: int, doc: dict) -> dict | None:
     }
 
 
-# ------------------------------------------------------------ freshness
-def ensure_plan_index(table_path: str, snapshot_id: int) -> dict | None:
-    """The index doc if fresh; otherwise built — incrementally from the
-    nearest fresh ancestor index through the raw delta docs (O(total
-    churn)), else fully from the resolved dict. Returns None only when
-    the snapshot is gone."""
-    if _doc_fingerprint(table_path, snapshot_id) is None:
-        return None
-    doc = _fresh_doc(table_path, snapshot_id)
-    if doc is not None:
-        return doc
-    meta_dir = os.path.join(table_path, "metadata")
-
-    def _raw(sid: int) -> dict | None:
-        try:
-            with open(os.path.join(meta_dir, f"snap-{sid}.json")) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
-
-    # walk the delta chain back toward a fresh ancestor index, then
-    # advance forward — each step O(that commit's churn)
-    chain: list[tuple[int, dict]] = []
-    sid, raw = snapshot_id, _raw(snapshot_id)
-    seen = {snapshot_id}
-    while raw is not None and "delta_base" in raw and len(chain) < _MAX_SEGMENTS:
-        chain.append((sid, raw))
-        base = raw["delta_base"]
-        if base in seen:
-            break  # corrupted chain: the dict resolver raises loudly
-        seen.add(base)
-        if _fresh_doc(table_path, base) is not None:
-            ok = True
-            for s, r in reversed(chain):
-                if advance_plan_index(table_path, s, raw=r) is None:
-                    ok = False
-                    break
-            if ok:
-                doc = _fresh_doc(table_path, snapshot_id)
-                if doc is not None:
-                    return doc
-            break
-        sid, raw = base, _raw(base)
-    from .snapshots import load_manifest
-
-    snap = load_manifest(table_path, snapshot_id)
-    if write_plan_index(table_path, snap) is None:
-        return None
-    return _fresh_doc(table_path, snapshot_id)
-
-
-def maybe_advance_plan_index(
-    table_path: str, snapshot_id: int, parent: int | None
-) -> None:
-    """Best-effort eager maintenance at commit time: advance ONLY when
-    the parent's index exists (tables opt in by their first columnar
-    plan; every later commit then pays O(its delta), so steady-state
-    commit→plan never re-materializes the dict). Full-form commits
-    (rebase points, first commits) refresh from their own doc — which
-    IS the resolved snapshot. Never raises: the index is a cache."""
+# ------------------------------------------------------------ commit
+def index_commit(table_path: str, snapshot_id: int) -> None:
+    """Write the index doc of the snapshot a commit just wrote. A delta
+    doc advances from its parent's fresh doc; a full-form doc (first
+    commits, rebase points), a parent without a fresh doc, a structural
+    spec or schema change or a majority rewrite writes the full index
+    from the resolved manifest. An I/O failure leaves the snapshot
+    without a doc — it plans through the dict — rather than failing a
+    commit that is already durable."""
     try:
-        if parent is None or not os.path.exists(
-            sidecar_path(table_path, parent)
-        ):
-            return
-        meta_dir = os.path.join(table_path, "metadata")
-        with open(os.path.join(meta_dir, f"snap-{snapshot_id}.json")) as f:
+        with open(os.path.join(table_path, "metadata", f"snap-{snapshot_id}.json")) as f:
             raw = json.load(f)
         if "delta_base" in raw:
-            advance_plan_index(table_path, snapshot_id, raw=raw)
-        else:
-            write_plan_index(table_path, raw)
-    except Exception:  # noqa: BLE001 - cache maintenance is best-effort
+            if advance_plan_index(table_path, snapshot_id, raw) is not None:
+                return
+            from .snapshots import load_manifest
+
+            raw = load_manifest(table_path, snapshot_id)
+        write_plan_index(table_path, raw)
+    except OSError:
         pass
 
 
@@ -859,8 +799,8 @@ def _live_paths(table_path: str, doc: dict, seg_filter) -> list[str] | None:
     """The live paths of the rows passing ``seg_filter(segment)`` — a
     pushdown predicate per segment, None keeping every row — across
     all of ``doc``'s segments. None when a segment read fails: a torn
-    segment (the doc is dropped so the next plan rebuilds) or a
-    predicate the segment cannot evaluate (an incomparable literal)."""
+    segment (the doc is dropped: see :func:`_heal`) or a predicate
+    the segment cannot evaluate (an incomparable literal)."""
     import pyarrow.dataset as ds
 
     kept: list[str] = []
@@ -886,21 +826,17 @@ def _live_paths(table_path: str, doc: dict, seg_filter) -> list[str] | None:
 
 
 def plan_paths(
-    table_path: str,
-    snapshot_id: int,
-    filters: list[tuple],
-    doc: dict | None = None,
+    table_path: str, doc: dict, filters: list[tuple]
 ) -> tuple[list[str], dict] | None:
-    """Columnar scan plan (``doc``, when the caller holds the fresh doc,
-    saves re-resolving it here and in the two plan reads below): the
-    table-relative paths surviving
-    ``filters`` (``[(col, op, literal), ...]`` with ops ``= < <= >
-    >=``, the range rule :func:`.pruning.keep_expr`), plus a summary
-    dict. Each segment's read pushes the keep-predicate into the
-    parquet scan (columns the segment never indexed conservatively
-    keep), then the churn-bounded ``cur`` map filters superseded rows
-    vectorized — driver memory is O(matching files + churn), never the
-    full file list as Python objects.
+    """Columnar scan plan over the fresh index ``doc``: the
+    table-relative paths surviving ``filters`` (``[(col, op, literal),
+    ...]`` with ops ``= < <= > >=``, the range rule
+    :func:`.pruning.keep_expr`), plus a summary dict. Each segment's
+    read pushes the keep-predicate into the parquet scan (columns the
+    segment never indexed conservatively keep), then the churn-bounded
+    ``cur`` map filters superseded rows vectorized — driver memory is
+    O(matching files + churn), never the full file list as Python
+    objects.
 
     Returns None when a columnar plan can't answer exactly — a
     filtered column recorded but unindexable, or a literal that won't
@@ -908,8 +844,7 @@ def plan_paths(
     the dict planner."""
     from .pruning import keep_expr
 
-    doc = doc or ensure_plan_index(table_path, snapshot_id)
-    if doc is None or any(c in doc["unindexed_cols"] for c, _, _ in filters):
+    if any(c in doc["unindexed_cols"] for c, _, _ in filters):
         return None
 
     def seg_filter(seg):
@@ -930,13 +865,11 @@ def plan_paths(
 
 
 def plan_partition_paths(
-    table_path: str,
-    snapshot_id: int,
-    wanted_by_spec: dict[int, dict[int, dict]],
-    doc: dict | None = None,
+    table_path: str, doc: dict, wanted_by_spec: dict[int, dict[int, dict]]
 ) -> tuple[list[str], int] | None:
-    """Columnar partition plan: the paths whose recorded tuple passes the
-    keep rule (:func:`.pruning.keep_tuple_expr`) under ``wanted_by_spec``
+    """Columnar partition plan over the fresh index ``doc``: the paths
+    whose recorded tuple passes the keep rule
+    (:func:`.pruning.keep_tuple_expr`) under ``wanted_by_spec``
     — value sets in their one form, ``{spec_id: {position: {vintage:
     frozenset | None}}}`` — plus the total file count. Tuple-less files,
     files under spec ids outside the map and files whose vintage the map
@@ -944,8 +877,7 @@ def plan_partition_paths(
     columns indexed, a torn segment)."""
     from .pruning import keep_tuple_expr
 
-    doc = doc or ensure_plan_index(table_path, snapshot_id)
-    if doc is None or not doc.get("partition_specs"):
+    if not doc.get("partition_specs"):
         return None
     # v4: a NULL part_spec_id means "no explicit entry" — the file's
     # effective spec is the doc's CURRENT one (the dict rule
@@ -964,18 +896,15 @@ def plan_partition_paths(
     return None if kept is None else (kept, doc["live_files"])
 
 
-def paths_missing_stat(
-    table_path: str, snapshot_id: int, col: str, doc: dict | None = None
-) -> list[str] | None:
-    """LIVE paths with NO recorded [min, max] for ``col`` (both bounds
+def paths_missing_stat(table_path: str, doc: dict, col: str) -> list[str] | None:
+    """LIVE paths of the fresh index ``doc`` with NO recorded [min, max] for ``col`` (both bounds
     null, or the file's segment never indexed the column) — the merge
     planner's footer-fallback set; each such file pays one footer read
     and gets its discovered range recorded. None when the index can't
     answer (unindexed column, torn segment)."""
     import pyarrow.compute as pc
 
-    doc = doc or ensure_plan_index(table_path, snapshot_id)
-    if doc is None or col in doc["unindexed_cols"]:
+    if col in doc["unindexed_cols"]:
         return None
     return _live_paths(
         table_path,
@@ -989,12 +918,13 @@ def paths_missing_stat(
 
 
 def current_rows_table(table_path: str, snapshot_id: int):
-    """All LIVE index rows as one Arrow table (schema-unified across
-    segments) — a test/inspection helper, not a planning path."""
+    """All LIVE rows of the snapshot's fresh index as one Arrow table
+    (schema-unified across segments), or None when it has no fresh
+    index — a test/inspection helper, not a planning path."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    doc = ensure_plan_index(table_path, snapshot_id)
+    doc = _fresh_doc(table_path, snapshot_id)
     if doc is None:
         return None
     tabs = []

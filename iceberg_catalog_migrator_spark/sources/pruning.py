@@ -24,10 +24,10 @@ vintage the map does not list (a file with no recorded vintage), keeps
 the file.
 
 :func:`plan_files` applies the rules: the columnar sidecar
-(:mod:`.plan_index`) answers when it can, the manifest dict loop
-answers the rest. Iceberg splits planning the same way: one manifest
-evaluator over partition summaries, one metrics evaluator over column
-bounds, no per-operation copies.
+(:mod:`.plan_index`), which every commit writes, answers when it can,
+and the manifest dict loop answers the rest. Iceberg splits planning
+the same way: one manifest evaluator over partition summaries, one
+metrics evaluator over column bounds, no per-operation copies.
 """
 
 from __future__ import annotations
@@ -386,7 +386,6 @@ def plan_files(
     cols=(),
     *,
     snap: dict | None = None,
-    build_index: bool = True,
     unstatted: str | None = None,
 ) -> FilePlan:
     """The one file planner: the files of snapshot ``sid`` that may hold
@@ -394,18 +393,24 @@ def plan_files(
     ``values`` is given — whose partition tuple may hold one of its
     ``cols`` values (see :func:`partition_sets`).
 
-    Scans build the sidecar (``build_index``). Merges and deletes use it
-    only when it already exists, so a table that never scans never
-    starts advancing one. ``snap`` saves loading the manifest when the
-    caller holds it; ``unstatted`` names the column whose bound-less
-    kept files the plan lists (the merge's footer fallback)."""
+    Planning only reads: the snapshot's sidecar doc, written by its
+    commit, answers when it is fresh, and nothing here writes one.
+    ``snap`` saves loading the manifest when the caller holds it;
+    ``unstatted`` names the column whose bound-less kept files the plan
+    lists (the merge's footer fallback)."""
     from . import plan_index as P
 
-    doc = (P.ensure_plan_index if build_index else P._fresh_doc)(table.path, sid)
+    doc = P._fresh_doc(table.path, sid)
     wanted = None
-    # the dict loop answers when no sidecar exists (a merge or delete
-    # never builds one), when a value set meets a sidecar without
-    # partition columns, and wherever _plan_sidecar gives up
+    # the dict loop answers where the sidecar cannot:
+    # - no fresh doc: the snapshot was committed before commits wrote
+    #   one, or its doc was rewritten in place (expiry's rebase) or
+    #   dropped after a torn segment read;
+    # - a value set on a sidecar without partition columns: its tuples
+    #   could not be typed as strings;
+    # - wherever _plan_sidecar gives up: an unindexed stat column, a
+    #   literal that does not compare with the indexed type, a torn
+    #   segment
     if doc is not None and (values is None or doc.get("partition_specs")):
         if values is not None:
 
@@ -415,7 +420,7 @@ def plan_files(
 
             specs = doc["partition_specs"]["specs"]
             wanted = partition_sets(table, values, cols, specs, doc, anchor_first())
-        plan = _plan_sidecar(table.path, sid, doc, ranges, wanted, unstatted)
+        plan = _plan_sidecar(table.path, doc, ranges, wanted, unstatted)
         if plan is not None:
             return plan
     if snap is None:
@@ -426,25 +431,25 @@ def plan_files(
     return _plan_dict(snap, ranges, wanted, parts, unstatted)
 
 
-def _plan_sidecar(table_path, sid, doc, ranges, wanted, unstatted) -> FilePlan | None:
+def _plan_sidecar(table_path, doc, ranges, wanted, unstatted) -> FilePlan | None:
     """The columnar plan, or None where the sidecar cannot answer."""
     from . import plan_index as P
 
     kept = None
     if ranges or wanted is None:
-        res = P.plan_paths(table_path, sid, list(ranges), doc)
+        res = P.plan_paths(table_path, doc, list(ranges))
         if res is None:  # unindexed stat column, incomparable literal, torn segment
             return None
         kept = res[0]
     if wanted is not None:
-        res = P.plan_partition_paths(table_path, sid, wanted, doc)
+        res = P.plan_partition_paths(table_path, doc, wanted)
         if res is None:  # torn segment
             return None
         hit = set(res[0])
         kept = res[0] if kept is None else [f for f in kept if f in hit]
     missing = set()
     if unstatted is not None:
-        missing = P.paths_missing_stat(table_path, sid, unstatted, doc)
+        missing = P.paths_missing_stat(table_path, doc, unstatted)
         if missing is None:  # unindexed stat column, torn segment
             return None
     return FilePlan(

@@ -810,13 +810,21 @@ class SnapshotTable:
 
     # ------------------------------------------------------------ writes
     def _write_data_files(self, df: DataFrame) -> list[str]:
-        """Materialize df into immutable uniquely-named files under data/."""
+        """Materialize df into immutable uniquely-named files under data/.
+        Spark writes partition 0 even when it is empty; such a zero-row
+        file is dropped whenever another output holds rows (it has no
+        stats, so every merge would count it touched and rewrite it)."""
+        import pyarrow.parquet as pq
+
         os.makedirs(self._data, exist_ok=True)
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.path, f"_stage_{token}")
         df.write.mode("overwrite").parquet(tmp)
+        parts = sorted(glob.glob(os.path.join(tmp, "part-*.parquet")))
+        if len(parts) > 1:
+            parts = [p for p in parts if pq.read_metadata(p).num_rows] or parts[:1]
         out = []
-        for i, part in enumerate(sorted(glob.glob(os.path.join(tmp, "part-*.parquet")))):
+        for i, part in enumerate(parts):
             dest = os.path.join(self._data, f"{token}-{i:05d}.parquet")
             shutil.move(part, dest)
             out.append(os.path.relpath(dest, self.path))
@@ -1110,14 +1118,12 @@ class SnapshotTable:
         # not be written into the manifest
         extra = {k: v for k, v in extra.items() if v is not None}
         sid = self._arbitrate_commit(files, operation, parent, extra, ref)
-        # eager O(delta) plan-index maintenance: once a table's first
-        # columnar plan built an index, every commit advances it from
-        # the parent index + this commit's delta doc — steady-state
-        # commit→plan never re-materializes the resolved dict. No-op
-        # (one stat call) for tables that never plan columnar.
-        from .plan_index import maybe_advance_plan_index
+        # every commit writes its snapshot's plan index, O(its delta)
+        # from the parent's (see plan_index.index_commit): planning
+        # only ever reads one
+        from .plan_index import index_commit
 
-        maybe_advance_plan_index(self.path, sid, parent)
+        index_commit(self.path, sid)
         return sid
 
     def _arbitrate_commit(
@@ -1834,9 +1840,7 @@ def _merge_prune(
        a spec written before those were recorded costs one footer read
        per merge on an untracked table).
 
-    The plan uses the sidecar only when the table already has one (it
-    opted in by a scan or ``record_file_stats``); a merge never builds
-    it. ``bounds`` has .lo/.hi of the first key column (nulls never
+    ``bounds`` has .lo/.hi of the first key column (nulls never
     match in MERGE ON, so an all-null-keyed source touches nothing)."""
     key0 = key_cols[0]
     files = snap["files"]
@@ -1851,7 +1855,6 @@ def _merge_prune(
         source if partitioned else None,
         key_cols,
         snap=snap,
-        build_index=False,
         unstatted=key0,
     )
     touched, discovered = set(), {}
@@ -2911,8 +2914,7 @@ def _key_range_candidates(
     """Files whose recorded bounds on ``key0`` may hold a key in
     ``[lo, hi]`` (``lo`` None: no non-null key, nothing can match) —
     files without recorded stats count, so a delete's commit-time
-    counting scan is delta-bounded, not table-bounded. Like a merge, it
-    uses the sidecar only when one already exists."""
+    counting scan is delta-bounded, not table-bounded."""
     if lo is None:
         return []
     return plan_files(
@@ -2920,7 +2922,6 @@ def _key_range_candidates(
         snap["snapshot_id"],
         [(key0, ">=", lo), (key0, "<=", hi)],
         snap=snap,
-        build_index=False,
     ).files
 
 
@@ -3215,27 +3216,12 @@ def record_file_stats(table: SnapshotTable, cols: list[str]) -> int:
     parent = table.current_snapshot_id()
     snap = table._load_snap(parent)
     stats = _harvest_stats(table, snap["files"], cols)
-    sid = table._commit(
+    return table._commit(
         snap["files"],
         "record-stats",
         parent,
         extra={"file_stats": stats, **table._pending_deletes(parent)},
     )
-    # the stats-defining moment is the cheapest time to build the
-    # columnar plan index: the resolved dict is hot, so the first
-    # planned_scan/pushFilters plan doesn't pay a lazy build — and
-    # every LATER commit then advances it incrementally (see
-    # maybe_advance_plan_index). Pure optimization — the commit above
-    # already durably succeeded, so an index failure must not surface
-    # as a record_file_stats failure (plans lazily rebuild or fall
-    # back to the dict path)
-    try:
-        from .plan_index import ensure_plan_index
-
-        ensure_plan_index(table.path, sid)
-    except Exception:  # noqa: BLE001 - best-effort cache build
-        pass
-    return sid
 
 
 def record_table_statistics(

@@ -31,6 +31,7 @@ import tracemalloc
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_catalog_migrator_spark.sources.plan_index import (  # noqa: E402
+    _fresh_doc,
     advance_plan_index,
     plan_paths,
     write_plan_index,
@@ -83,7 +84,7 @@ def columnar_plan(
     root: str, lo: int, hi: int, sid: int = 1
 ) -> tuple[list, float]:
     tracemalloc.start()
-    res = plan_paths(root, sid, [("k", ">=", lo), ("k", "<=", hi)])
+    res = plan_paths(root, _fresh_doc(root, sid), [("k", ">=", lo), ("k", "<=", hi)])
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     assert res is not None, "columnar plan unavailable"
@@ -169,7 +170,7 @@ def main() -> None:
 
         tracemalloc.start()
         t0 = time.time()
-        missing = paths_missing_stat(root, 2, "k")
+        missing = paths_missing_stat(root, _fresh_doc(root, 2), "k")
         merge_s = time.time() - t0
         _, merge_mb_peak = tracemalloc.get_traced_memory()
         tracemalloc.stop()

@@ -260,6 +260,52 @@ def test_fixture_key_follows_function_local_imports(dataset, monkeypatch):
     assert registry._key("orders_merge_over_mor", build, str(dataset)) != before
 
 
+def test_fixture_key_follows_package_class_methods(dataset, monkeypatch):
+    """A builder that reaches a package class (``SnapshotTable``) keys on
+    the source of its methods: replacing the method every commit runs
+    changes the key of a fixture that only appends."""
+    import inspect
+
+    from iceberg_catalog_migrator_spark.queries import connectors
+    from iceberg_catalog_migrator_spark.sources.snapshots import SnapshotTable
+
+    build = inspect.getclosurevars(connectors._even_odd_orders).nonlocals["build"]
+    monkeypatch.setattr(registry, "_CODE_INFO", {})
+    before = registry._key("orders_even_odd", build, str(dataset))
+    monkeypatch.setattr(SnapshotTable, "_commit", SnapshotTable.append)
+    monkeypatch.setattr(registry, "_CODE_INFO", {})
+    assert registry._key("orders_even_odd", build, str(dataset)) != before
+
+
+_EXPORTING_FIXTURES = (
+    ("orders_iceberg_export", "_exported_orders"),
+    ("orders_range_split", "_range_split_orders"),
+    ("orders_iceberg_mor", "_mor_exported_orders"),
+    ("orders_iceberg_v3_dv", "_dv_exported_orders"),
+    ("orders_iceberg_stats_ndv", "_ndv_exported_orders"),
+    ("orders_iceberg_partition_stats", "_priority_partitioned_orders"),
+    ("orders_v3_lineage", "_v3_lineage_orders"),
+)
+
+
+@pytest.mark.parametrize("name, fixture", _EXPORTING_FIXTURES, ids=[n for n, _ in _EXPORTING_FIXTURES])
+def test_exporting_fixture_key_sees_the_exporter_fingerprint(dataset, monkeypatch, name, fixture):
+    """The fixtures whose queries export with ``reuse=True`` pre-export in
+    their builder, so their key names the exporter fingerprint: a new
+    fingerprint rebuilds the fixture rather than minting a metadata
+    version inside it."""
+    import inspect
+
+    from iceberg_catalog_migrator_spark.queries import connectors
+    from iceberg_catalog_migrator_spark.sources import iceberg_format
+
+    build = inspect.getclosurevars(getattr(connectors, fixture)).nonlocals["build"]
+    before = registry._key(name, build, str(dataset))
+    assert (iceberg_format.__name__, "_EXPORTER_FP", iceberg_format._EXPORTER_FP) in before[2]
+    monkeypatch.setattr(iceberg_format, "_EXPORTER_FP", "0" * 32)
+    assert registry._key(name, build, str(dataset)) != before
+
+
 def test_replaced_stage_frame_is_unpersisted(spark, stages, monkeypatch):
     stage = registry.register_stage("toy")(
         lambda spark, sf_dir: spark.range(_ROUNDS).persist()

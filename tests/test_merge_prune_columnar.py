@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 import iceberg_catalog_migrator_spark.sources.snapshots as S
 from iceberg_catalog_migrator_spark.sources import pruning
 from iceberg_catalog_migrator_spark.sources.plan_index import (
-    ensure_plan_index,
+    _fresh_doc,
     write_plan_index,
 )
 from iceberg_catalog_migrator_spark.sources.snapshots import (
@@ -290,7 +290,7 @@ def test_merge_tracked_columnar_equals_dict(spark, tmp_path, monkeypatch):
     )
     record_file_stats(t, ["k"])
     sid = t.current_snapshot_id()
-    assert ensure_plan_index(t.path, sid) is not None
+    assert _fresh_doc(t.path, sid) is not None
     snap = t._load_snap(sid)
     src = spark.createDataFrame(
         [(5, 99.0), (2_500, 98.0)], "k bigint, v double"
@@ -366,7 +366,7 @@ def test_merge_tracked_evolution_matrix(spark, tmp_path, evolve, monkeypatch):
         .coalesce(1)
     )
     sid = t.current_snapshot_id()
-    assert ensure_plan_index(t.path, sid) is not None
+    assert _fresh_doc(t.path, sid) is not None
     snap = t._load_snap(sid)
     ktype = "bigint" if evolve == "widen_then_rename" else "int"
     src = spark.createDataFrame(

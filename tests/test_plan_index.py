@@ -1,5 +1,6 @@
 """Columnar plan-index sidecar: equivalence with the dict planner,
-lazy build + staleness rebuild, unindexable fallback, expiry cleanup.
+the index every commit writes, staleness and unindexable fallbacks,
+expiry cleanup.
 The 10^6-file RSS harness lives in scripts/scale_plan_index.py (too
 slow for the suite); this file pins the CORRECTNESS of the same code
 path at test scale."""
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from iceberg_catalog_migrator_spark.sources import load_table
 from iceberg_catalog_migrator_spark.sources.plan_index import (
-    ensure_plan_index,
+    _fresh_doc,
     plan_paths,
     sidecar_path,
     write_plan_index,
@@ -55,15 +56,16 @@ def test_columnar_plan_matches_dict_plan(stats_table):
     t = stats_table
     sid = t.current_snapshot_id()
     snap = load_manifest(t.path, sid)
+    doc = _fresh_doc(t.path, sid)
     for lo, hi in ((10_100, 10_200), (0, 50_000), (90_000, 99_000)):
-        res = plan_paths(t.path, sid, [("k", ">=", lo), ("k", "<=", hi)])
+        res = plan_paths(t.path, doc, [("k", ">=", lo), ("k", "<=", hi)])
         assert res is not None
         paths, summary = res
         assert sorted(paths) == _dict_plan(snap, "k", (lo, hi))
         assert summary["total_files"] == len(snap["files"])
         assert summary["columnar"] is True
     # a column with no recorded stats prunes nothing
-    res = plan_paths(t.path, sid, [("v", ">=", 100)])
+    res = plan_paths(t.path, doc, [("v", ">=", 100)])
     assert sorted(res[0]) == sorted(snap["files"])
 
 
@@ -80,18 +82,22 @@ def test_planned_scan_uses_sidecar_and_matches(stats_table):
     assert df2.columns == df.columns
 
 
-def test_sidecar_staleness_rebuilds_on_doc_rewrite(stats_table):
+def test_doc_rewrite_stales_the_index_until_the_next_commit(stats_table, spark):
+    """An in-place doc rewrite (rebase) changes the fingerprint: plans
+    stop serving the stale index and answer through the dict without
+    rebuilding it, and the next commit indexes its snapshot afresh."""
     t = stats_table
     sid = t.current_snapshot_id()
-    ensure_plan_index(t.path, sid)
     side = sidecar_path(t.path, sid)
     first = os.stat(side).st_mtime_ns
-    # an in-place doc rewrite (rebase) changes the fingerprint: the
-    # next plan must rebuild rather than serve the stale index
     t._rebase_to_full(sid)
-    res = plan_paths(t.path, sid, [("k", ">=", 0), ("k", "<=", 100)])
-    assert res is not None and len(res[0]) >= 1
-    assert os.stat(side).st_mtime_ns != first
+    assert _fresh_doc(t.path, sid) is None
+    df, plan = planned_scan(t, "k", 0, 100)
+    assert "columnar" not in plan and df.count() == 101
+    assert os.stat(side).st_mtime_ns == first
+    t.append(spark.range(40_000, 40_010).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v")))
+    df, plan = planned_scan(t, "k", 40_000, 40_004)
+    assert plan.get("columnar") is True and df.count() == 5
 
 
 def test_unindexable_stat_column_falls_back(stats_table, spark):
@@ -108,11 +114,11 @@ def test_unindexable_stat_column_falls_back(stats_table, spark):
     stats[any_file]["k"] = ["zzz", "zzz"]
     poisoned["file_stats"] = stats
     assert write_plan_index(t.path, poisoned) is not None
-    meta = ensure_plan_index(t.path, sid)
-    # the sidecar we just wrote matches the doc fingerprint, so ensure
-    # serves it verbatim with k unindexed
+    # the sidecar we just wrote matches the doc fingerprint, so it is
+    # served verbatim with k unindexed
+    meta = _fresh_doc(t.path, sid)
     assert "k" in meta["unindexed_cols"]
-    assert plan_paths(t.path, sid, [("k", ">=", 0)]) is None
+    assert plan_paths(t.path, meta, [("k", ">=", 0)]) is None
     # planned_scan still answers exactly through the dict path
     df, plan = planned_scan(t, "k", 10_100, 10_200)
     assert "columnar" not in plan
@@ -123,8 +129,7 @@ def test_expiry_unlinks_sidecars(stats_table):
     t = stats_table
     ids = t.history_ids()
     for sid in ids:
-        ensure_plan_index(t.path, sid)
-        assert os.path.exists(sidecar_path(t.path, sid))
+        assert _fresh_doc(t.path, sid) is not None
     from iceberg_catalog_migrator_spark.sources.snapshots import (
         rewrite_small_files,
     )
@@ -138,7 +143,6 @@ def test_expiry_unlinks_sidecars(stats_table):
 def test_rows_and_seq_columns_round_trip(stats_table):
     t = stats_table
     sid = t.current_snapshot_id()
-    ensure_plan_index(t.path, sid)
     from iceberg_catalog_migrator_spark.sources.plan_index import (
         current_rows_table,
     )
@@ -231,7 +235,8 @@ def test_columnar_plan_equals_reference_rule(ranges, op, lit):
         }
         json.dump(snap, open(os.path.join(meta_dir, "snap-1.json"), "w"))
         open(os.path.join(meta_dir, "snapshot-hint.text"), "w").write("1")
-        res = plan_paths(root, 1, [("k", op, lit)])
+        write_plan_index(root, snap)
+        res = plan_paths(root, _fresh_doc(root, 1), [("k", op, lit)])
         assert res is not None
         expected = sorted(
             f for f, r in zip(files, ranges) if keep(r)

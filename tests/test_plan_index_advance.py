@@ -1,7 +1,7 @@
-"""Incremental plan-index maintenance (round-12 verdict ask #1).
+"""Plan-index maintenance: every commit writes its snapshot's index.
 
-Pins the steady-state contract: once a table's index exists, every
-commit advances it from the parent index + the commit's raw delta doc
+Pins the steady-state contract: every commit advances the index from
+the parent index + the commit's raw delta doc
 — touching O(changed files) rows and materializing NO O(files)
 resolved dict — and the advanced index plans exactly like the dict
 planner at every snapshot. The 10^6-file wall-clock/memory numbers
@@ -14,19 +14,26 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from iceberg_catalog_migrator_spark.sources import plan_index
+from iceberg_catalog_migrator_spark.sources import plan_index, pruning
 from iceberg_catalog_migrator_spark.sources.plan_index import (
+    _fresh_doc,
     advance_plan_index,
-    ensure_plan_index,
+    current_rows_table,
     gc_plan_segments,
+    plan_partition_paths,
     plan_paths,
     sidecar_path,
     write_plan_index,
 )
 from iceberg_catalog_migrator_spark.sources.snapshots import (
+    CatalogArbitratedTable,
+    MergeClause,
     SnapshotTable,
+    compact_deletes,
     delete_where,
+    delete_where_positional,
     load_manifest,
+    merge_into,
     merge_upsert,
     planned_scan,
     record_file_stats,
@@ -44,7 +51,17 @@ def _dict_plan(snap, col, lo, hi):
 
 
 def _segments(table_path, sid):
-    return ensure_plan_index(table_path, sid)["segments"]
+    return _fresh_doc(table_path, sid)["segments"]
+
+
+def _plan(root, sid, filters):
+    """The range plan over ``sid``'s fresh index doc."""
+    return plan_paths(root, _fresh_doc(root, sid), filters)
+
+
+def _ppp(root, sid, wanted):
+    """The partition plan over ``sid``'s fresh index doc."""
+    return plan_partition_paths(root, _fresh_doc(root, sid), wanted)
 
 
 @pytest.fixture()
@@ -59,7 +76,7 @@ def indexed_table(spark, tmp_path):
         .select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
         .repartitionByRange(48, "k")
     )
-    record_file_stats(t, ["k"])  # opts the table into the index
+    record_file_stats(t, ["k"])
     return t
 
 
@@ -91,9 +108,7 @@ def test_commit_advances_index_without_dict_materialization(
     assert segs[-1]["rows"] == len(raw["files_added"])
     assert not raw.get("files_removed")
 
-    # the plan itself never re-materializes the resolved dict: the
-    # index layer's only dict entry point (ensure_plan_index's
-    # full-rebuild fallback) must not fire on a fresh index
+    # the plan itself never re-materializes the resolved dict
     import iceberg_catalog_migrator_spark.sources.snapshots as S
 
     calls = {"n": 0}
@@ -138,11 +153,131 @@ def test_advanced_index_plans_equal_dict_plans_across_commit_mix(
     for sid in t.history_ids():
         snap = load_manifest(t.path, sid)
         for lo, hi in ((0, 5_000), (10_050, 10_150), (20_400, 20_600), (90_000, 99_000)):
-            res = plan_paths(t.path, sid, [("k", ">=", lo), ("k", "<=", hi)])
+            res = _plan(t.path, sid, [("k", ">=", lo), ("k", "<=", hi)])
             assert res is not None
             paths, summary = res
             assert sorted(paths) == _dict_plan(snap, "k", lo, hi), (sid, lo, hi)
             assert summary["total_files"] == len(snap["files"])
+
+
+def _live_rows(table_path, sid):
+    """``sid``'s live index rows by path, null and false cells dropped:
+    a segment written before a column existed reads null there, where a
+    full build writes the column's empty value."""
+    tbl = current_rows_table(table_path, sid)
+    return {
+        r["path"]: {k: v for k, v in r.items() if v is not None and v is not False}
+        for r in tbl.to_pylist()
+    }
+
+
+def _assert_exact_index(table_path, sid, scratch):
+    """``sid`` has a fresh index doc whose live rows equal a full build
+    from the resolved manifest (written under ``scratch``)."""
+    assert _fresh_doc(table_path, sid) is not None, sid
+    snap = load_manifest(table_path, sid)
+    ref = os.path.join(scratch, str(sid))
+    os.makedirs(os.path.join(ref, "metadata"))
+    with open(os.path.join(ref, "metadata", f"snap-{sid}.json"), "w") as f:
+        json.dump(snap, f)
+    assert write_plan_index(ref, snap) is not None
+    assert _live_rows(table_path, sid) == _live_rows(ref, sid), sid
+
+
+def _rows(spark, lo, hi):
+    return (
+        spark.range(lo, hi)
+        .select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+        .repartition(1)
+    )
+
+
+def test_every_commit_kind_leaves_an_exact_index(spark, tmp_path):
+    """Every commit writes its snapshot's index, whether or not anything
+    ever planned on the table: after each commit kind the new snapshot
+    has a fresh doc, mostly advanced from its parent's, that holds the
+    rows a full build from the resolved manifest holds."""
+    t = SnapshotTable(spark, str(tmp_path / "kinds"))
+    t.append(_rows(spark, 0, 48_000).repartitionByRange(48, "k"))
+    scratch = str(tmp_path / "full")
+    _assert_exact_index(t.path, t.current_snapshot_id(), scratch)
+
+    def branch_commit():
+        t.create_branch("b")
+        t.append(_rows(spark, 60_000, 60_010), ref="b")
+
+    commits = [
+        ("append", lambda: t.append(_rows(spark, 50_000, 50_100))),
+        ("equality delete", lambda: delete_where(t, ["k"], _rows(spark, 20_000, 20_050).select("k"))),
+        ("positional delete", lambda: delete_where_positional(t, "k < 30")),
+        ("merge_upsert", lambda: merge_upsert(t, _rows(spark, 10_100, 10_200), ["k"])),
+        (
+            "merge_into",
+            lambda: merge_into(
+                t, _rows(spark, 30_000, 30_020), ["k"], [MergeClause("update"), MergeClause("insert")]
+            ),
+        ),
+        ("compact", lambda: compact_deletes(t)),
+        ("record_file_stats", lambda: record_file_stats(t, ["k", "v"])),
+        ("rollback", lambda: t.rollback(t.history_ids()[-3])),
+        ("branch", branch_commit),
+        ("overwrite", lambda: t.overwrite(_rows(spark, 0, 500))),
+    ]
+    advanced = []
+    for kind, commit in commits:
+        n = len(t.history_ids())
+        commit()
+        assert len(t.history_ids()) == n + 1, kind
+        sid = t.history_ids()[-1]
+        _assert_exact_index(t.path, sid, scratch)
+        if len(_segments(t.path, sid)) > 1:
+            advanced.append(kind)
+    # a delta commit advances its parent's index; a full-form doc (the
+    # stats commit, the compaction, the overwrite) and a delta clearing
+    # a per-file key (the branch append after the rollback) write in full
+    assert set(advanced) >= {"append", "equality delete", "positional delete", "merge_into"}
+
+
+def test_cas_commits_leave_an_exact_index(spark, tmp_path):
+    """A catalog-arbitrated commit indexes its snapshot like any other."""
+    from iceberg_catalog_migrator_spark.catalog import SqlCatalog, TableIdentifier
+
+    cat = SqlCatalog("arbiter", str(tmp_path / "cat.db"))
+    cat.create_namespace(("lake",))
+    try:
+        t = CatalogArbitratedTable.create(
+            spark, cat, TableIdentifier.of("lake", "t"), str(tmp_path / "cas")
+        )
+        t.append(_rows(spark, 0, 4_000).repartitionByRange(16, "k"))
+        t.append(_rows(spark, 5_000, 5_010))
+        merge_upsert(t, _rows(spark, 100, 110), ["k"])
+        for sid in t.history_ids():
+            _assert_exact_index(t.path, sid, str(tmp_path / "full"))
+    finally:
+        cat.close()
+
+
+def test_planning_without_a_doc_writes_nothing(indexed_table):
+    """A snapshot whose doc is gone plans through the dict, and the plan
+    leaves the table directory as it found it."""
+    t = indexed_table
+    sid = t.current_snapshot_id()
+    os.unlink(sidecar_path(t.path, sid))
+
+    def listing():
+        return sorted(
+            os.path.join(d, f) for d, _, files in os.walk(t.path) for f in files
+        )
+
+    before = listing()
+    ranges = [("k", ">=", 10_100), ("k", "<=", 10_200)]
+    plan = pruning.plan_files(t, sid, ranges)
+    df, summary = planned_scan(t, "k", 10_100, 10_200)
+    assert df.count() == 101 and "columnar" not in summary
+    assert listing() == before
+    snap = load_manifest(t.path, sid)
+    assert plan.doc is None
+    assert plan.files == pruning._plan_dict(snap, ranges, None, None, None).files
 
 
 def test_compaction_folds_segments_and_keeps_plans_exact(
@@ -157,13 +292,13 @@ def test_compaction_folds_segments_and_keeps_plans_exact(
             .repartition(1)
         )
     sid = t.current_snapshot_id()
-    doc = ensure_plan_index(t.path, sid)
+    doc = _fresh_doc(t.path, sid)
     assert len(doc["segments"]) <= 5, [s["rows"] for s in doc["segments"]]
     # at least one fold happened (7 delta commits over a 1-segment base)
     assert any(s["rows"] > 48 for s in doc["segments"])
     snap = load_manifest(t.path, sid)
     for lo, hi in ((60_250, 60_280), (0, 100)):
-        res = plan_paths(t.path, sid, [("k", ">=", lo), ("k", "<=", hi)])
+        res = _plan(t.path, sid, [("k", ">=", lo), ("k", "<=", hi)])
         assert sorted(res[0]) == _dict_plan(snap, "k", lo, hi)
         assert res[1]["total_files"] == len(snap["files"])
 
@@ -226,7 +361,7 @@ def test_dead_row_threshold_compacts(tmp_path, monkeypatch):
         assert dead <= max(doc["live_files"], 4), (step, dead)
     assert compacted_at is not None, "dead-row threshold never compacted"
     # plans stay exact after the fold
-    res = plan_paths(root, 5, [("k", ">=", 150), ("k", "<=", 260)])
+    res = _plan(root, 5, [("k", ">=", 150), ("k", "<=", 260)])
     assert sorted(res[0]) == sorted(
         f
         for f in files
@@ -362,25 +497,36 @@ def test_expiry_gcs_unreferenced_segments(indexed_table, spark):
         assert os.path.basename(seg) in referenced
     # and planning still works at the head
     snap = load_manifest(t.path, head)
-    res = plan_paths(t.path, head, [("k", ">=", 0), ("k", "<=", 100)])
+    res = _plan(t.path, head, [("k", ">=", 0), ("k", "<=", 100)])
     assert res is not None and sorted(res[0]) == _dict_plan(snap, "k", 0, 100)
 
 
-def test_segment_loss_self_heals(indexed_table, spark):
-    """A GC race or torn segment must not permanently demote the table
-    to the dict path: the failing plan drops the doc; the next plan
-    rebuilds."""
+def test_segment_loss_plans_through_the_dict_until_the_next_commit(
+    indexed_table, spark
+):
+    """A GC race or torn segment must not leave a doc that keeps
+    failing: the failing plan drops the doc, planning answers through
+    the dict and writes nothing, and the next commit writes its
+    successor's index in full."""
     t = indexed_table
     sid = t.current_snapshot_id()
-    doc = ensure_plan_index(t.path, sid)
-    os.unlink(
-        os.path.join(t.path, "metadata", doc["segments"][0]["name"])
+    doc = _fresh_doc(t.path, sid)
+    os.unlink(os.path.join(t.path, "metadata", doc["segments"][0]["name"]))
+    assert plan_paths(t.path, doc, [("k", ">=", 0)]) is None  # drops the doc
+    assert _fresh_doc(t.path, sid) is None
+    ranges = [("k", ">=", 0), ("k", "<=", 100)]
+    plan = pruning.plan_files(t, sid, ranges)
+    assert plan.doc is None and _fresh_doc(t.path, sid) is None
+    assert sorted(plan.files) == _dict_plan(load_manifest(t.path, sid), "k", 0, 100)
+    t.append(
+        spark.range(50_000, 50_010)
+        .select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+        .repartition(1)
     )
-    assert plan_paths(t.path, sid, [("k", ">=", 0)]) is None  # heals
-    res = plan_paths(t.path, sid, [("k", ">=", 0), ("k", "<=", 100)])
-    assert res is not None
-    snap = load_manifest(t.path, sid)
-    assert sorted(res[0]) == _dict_plan(snap, "k", 0, 100)
+    head = t.current_snapshot_id()
+    assert len(_segments(t.path, head)) == 1  # the full build
+    res = _plan(t.path, head, ranges)
+    assert sorted(res[0]) == _dict_plan(load_manifest(t.path, head), "k", 0, 100)
 
 
 def test_advance_memory_order_under_full_build(tmp_path):
@@ -409,7 +555,7 @@ def test_advance_memory_order_under_full_build(tmp_path):
     tracemalloc.stop()
     assert adv_peak * 10 < full_peak, (adv_peak, full_peak)
     # and the advanced index is exact
-    res = plan_paths(root, 2, [("k", ">=", 300), ("k", "<=", 310)])
+    res = _plan(root, 2, [("k", ">=", 300), ("k", "<=", 310)])
     assert sorted(res[0]) == ["data/part-0000003.parquet"]
 
 
@@ -430,9 +576,6 @@ def test_advance_chain_equals_full_rebuild(data):
 
     from iceberg_catalog_migrator_spark.sources.plan_index import (
         advance_plan_index as _advance,
-    )
-    from iceberg_catalog_migrator_spark.sources.plan_index import (
-        plan_paths as _plan,
     )
     from iceberg_catalog_migrator_spark.sources.plan_index import (
         write_plan_index as _full,
@@ -553,10 +696,6 @@ def test_advance_widens_part_k_for_longer_tuples(tmp_path):
     widen the new segment's partition columns — a frozen max_k would
     truncate them and plan_partition_paths would silently prune files
     whose tuples DO match (code-review round-12 finding #1)."""
-    from iceberg_catalog_migrator_spark.sources.plan_index import (
-        plan_partition_paths,
-    )
-
     root = str(tmp_path / "widen")
     meta = os.path.join(root, "metadata")
     os.makedirs(meta, exist_ok=True)
@@ -604,11 +743,11 @@ def test_advance_widens_part_k_for_longer_tuples(tmp_path):
     assert doc is not None
     assert doc["partition_specs"]["max_k"] >= 2
     # the 2-tuple file matches the spec-7 probe and MUST be kept
-    res = plan_partition_paths(root, 2, {7: {0: {None: {"x"}}, 1: {None: {"z"}}}})
+    res = _ppp(root, 2, {7: {0: {None: {"x"}}, 1: {None: {"z"}}}})
     assert res is not None
     assert "data/f3.parquet" in res[0]
     # and a non-matching probe still prunes it
-    res2 = plan_partition_paths(root, 2, {7: {0: {None: {"x"}}, 1: {None: {"QQ"}}}})
+    res2 = _ppp(root, 2, {7: {0: {None: {"x"}}, 1: {None: {"QQ"}}}})
     assert "data/f3.parquet" not in res2[0]
 
 
@@ -627,12 +766,6 @@ def test_advance_chain_with_evolution_equals_full_rebuild(data):
 
     from iceberg_catalog_migrator_spark.sources.plan_index import (
         advance_plan_index as _advance,
-    )
-    from iceberg_catalog_migrator_spark.sources.plan_index import (
-        plan_partition_paths as _ppp,
-    )
-    from iceberg_catalog_migrator_spark.sources.plan_index import (
-        plan_paths as _plan,
     )
     from iceberg_catalog_migrator_spark.sources.plan_index import (
         write_plan_index as _full,
@@ -981,11 +1114,11 @@ def test_rename_shaped_delta_advances_and_rekeys_stat_plans(tmp_path):
     assert doc is not None
     assert doc["current_schema_id"] == 1
     assert doc["schema_tracked"] is True
-    res = plan_paths(root, 2, [("j", ">=", 150), ("j", "<=", 210)])
+    res = _plan(root, 2, [("j", ">=", 150), ("j", "<=", 210)])
     assert sorted(res[0]) == ["data/f0001.parquet", "data/f0002.parquet"]
     # retired name: no file records it any more -> conservative keep-all
-    res_old = plan_paths(root, 2, [("k", ">=", 150), ("k", "<=", 210)])
+    res_old = _plan(root, 2, [("k", ">=", 150), ("k", "<=", 210)])
     assert sorted(res_old[0]) == files
     # snapshot 1 still answers under the OLD name
-    res1 = plan_paths(root, 1, [("k", ">=", 150), ("k", "<=", 210)])
+    res1 = _plan(root, 1, [("k", ">=", 150), ("k", "<=", 210)])
     assert sorted(res1[0]) == ["data/f0001.parquet", "data/f0002.parquet"]

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_catalog_migrator_spark.sources import pruning
+from iceberg_catalog_migrator_spark.sources.plan_index import write_plan_index
 from iceberg_catalog_migrator_spark.sources.snapshots import (
     SnapshotTable,
     _merge_prune,
@@ -140,10 +141,13 @@ def test_untracked_partition_probes_read_no_data_file(spark, tmp_path, monkeypat
     }
     reads = []
     real = pruning._file_schema
+    # the older metadata is what the snapshot's index was written from too
+    write_plan_index(t.path, older)
     with monkeypatch.context() as m:
         m.setattr(pruning, "_file_schema", lambda *a: reads.append(a) or real(*a))
         from_footer = _merge_prune(t, older, src, ["k", "tag"], bounds)
     assert reads
+    write_plan_index(t.path, snap)
 
     def no_footer(*a, **k):
         raise AssertionError("data file read at plan time")

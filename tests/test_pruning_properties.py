@@ -134,8 +134,8 @@ class _Table:
         return out
 
 
-def _check_plan(table, sid, snap, ranges, values, cols, match, **kw):
-    plan = pruning.plan_files(table.t, sid, ranges, values, cols, snap=snap, **kw)
+def _check_plan(table, sid, snap, ranges, values, cols, match):
+    plan = pruning.plan_files(table.t, sid, ranges, values, cols, snap=snap)
     assert set(plan.files) >= table.matching_files(snap, match)
     if plan.doc is not None:
         dict_plan = pruning._plan_dict(
@@ -172,7 +172,7 @@ def test_planner_keeps_every_matching_file(
         sid = tb.t.current_snapshot_id()
         snap = tb.t._load_snap(sid)
 
-        # point sets (a scan builds the sidecar)
+        # point sets
         values = {key: [point], **({other[0]: [other[1]]} if other else {})}
         _check_plan(
             tb, sid, snap, (), values, list(values),
@@ -191,10 +191,7 @@ def test_planner_keeps_every_matching_file(
         src = tb.frame(src_rows, src_type)
         keys = set(src_keys)
         ranges = [(key, ">=", min(keys)), (key, "<=", max(keys))]
-        _check_plan(
-            tb, sid, snap, ranges, src, [key], lambda r: r[key] in keys,
-            build_index=False,
-        )
+        _check_plan(tb, sid, snap, ranges, src, [key], lambda r: r[key] in keys)
         bounds = src.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
         touched, _, _ = _merge_prune(tb.t, snap, src, [key], bounds)
         assert set(touched) >= tb.matching_files(snap, lambda r: r[key] in keys)
