@@ -15,6 +15,7 @@ import importlib
 import importlib.util
 import inspect
 import json
+import linecache
 import os
 import re
 import shutil
@@ -125,6 +126,18 @@ def _imports(code: types.CodeType, package: str | None) -> tuple:
     return tuple(found)
 
 
+def _source(code: types.CodeType) -> str:
+    """The lines of ``code``'s function in its file, from its first
+    (decorator) line to the last line an instruction of it spans:
+    ``inspect.getsource`` short of trailing comments and of a body that
+    compiles to no instruction (an abstract method's docstring),
+    without tokenizing the file once per function."""
+    last = max(p[1] or 0 for c in _codes(code) for p in c.co_positions())
+    linecache.checkcache(code.co_filename)  # the file may be newer
+    lines = linecache.getlines(code.co_filename)
+    return "".join(lines[code.co_firstlineno - 1 : last])
+
+
 def _code_info(fn: types.FunctionType) -> tuple:
     """``(source, names, imports)`` of one function."""
     code = fn.__code__
@@ -132,7 +145,7 @@ def _code_info(fn: types.FunctionType) -> tuple:
     if info is None or info[0] is not code:
         names = tuple(sorted({n for c in _codes(code) for n in c.co_names}))
         imports = _imports(code, fn.__globals__.get("__package__"))
-        info = _CODE_INFO[id(code)] = (code, inspect.getsource(fn), names, imports)
+        info = _CODE_INFO[id(code)] = (code, _source(code), names, imports)
     return info[1:]
 
 

@@ -1340,7 +1340,6 @@ def _carry_adopted_statistics(
                     "path": os.path.relpath(dest, t.path),
                     "ndv": {c: int(v) for c, v in ndv.items()},
                 },
-                **t._pending_deletes(parent),
             },
         )
     except Exception as exc:  # noqa: BLE001 - advisory, never block

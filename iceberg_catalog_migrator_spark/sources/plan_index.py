@@ -49,11 +49,14 @@ records the snapshot doc's stat fingerprint (mtime_ns:size). A delta
 commit advances from its parent's fresh doc (O(its delta)); a
 full-form doc, a parent without a fresh doc, a structural spec or
 schema change or a majority rewrite writes the full index from the
-resolved manifest. Planning only reads: a snapshot with no fresh doc
-(committed before commits wrote one, or its doc rewritten or lost)
-plans through the manifest dict until the next commit indexes its
-successor. ``expire_snapshots`` unlinks index docs with their
-snapshots and garbage-collects segments no retained index references.
+resolved manifest. A content-identical rewrite of a snapshot doc (the
+rebase to full form of expiry and ``rewrite_manifests``) re-stamps an
+index doc that was fresh (:func:`restamp`). Planning only reads: a
+snapshot with no fresh doc (committed before commits wrote one, or its
+doc rewritten with other content or lost) plans through the manifest
+dict until the next commit indexes its successor.
+``expire_snapshots`` unlinks index docs with their snapshots and
+garbage-collects segments no retained index references.
 
 Reference anchor: the reference migrates a metadata POINTER
 (`CatalogMigrator.java:212-213`); this module keeps the pointer's
@@ -333,6 +336,20 @@ def _fresh_doc(table_path: str, snapshot_id: int) -> dict | None:
     if want is None or doc["fingerprint"] != want:
         return None
     return doc
+
+
+def restamp(table_path: str, snapshot_id: int, doc: dict | None) -> None:
+    """Keep ``doc`` — the snapshot's index doc, read fresh before its
+    snapshot doc was rewritten in place with identical content (a
+    rebase to full form) — fresh by stamping the rewritten snapshot
+    doc's fingerprint. Nothing happens when there was no fresh doc;
+    an I/O failure leaves the doc stale (the dict planner answers)."""
+    if doc is None:
+        return
+    try:
+        _write_doc(table_path, snapshot_id, {k: v for k, v in doc.items() if k != "fingerprint"})
+    except OSError:
+        pass
 
 
 def _heal(table_path: str, snapshot_id: int) -> None:

@@ -404,8 +404,8 @@ def plan_files(
     wanted = None
     # the dict loop answers where the sidecar cannot:
     # - no fresh doc: the snapshot was committed before commits wrote
-    #   one, or its doc was rewritten in place (expiry's rebase) or
-    #   dropped after a torn segment read;
+    #   one, or its doc was rewritten with other content or dropped
+    #   after a torn segment read;
     # - a value set on a sidecar without partition columns: its tuples
     #   could not be typed as strings;
     # - wherever _plan_sidecar gives up: an unindexed stat column, a

@@ -987,21 +987,16 @@ class _SnapshotTableWriter(DataSourceArrowWriter):
                 # table moved and the base file list must be rebuilt
                 parent = tbl.head(self.ref)
                 psnap = tbl._load_snap(parent) if parent else {}
+                extra = (
+                    _schema_extra_for_append(psnap, self.spark_schema, new)
+                    if psnap.get("schemas")
+                    else {}
+                )
                 if self.overwrite:
-                    extra = (
-                        _schema_extra_for_append(psnap, self.spark_schema, [], new)
-                        if psnap.get("schemas")
-                        else {}
-                    )
                     return tbl._commit(
                         new, "overwrite", parent, extra=extra, ref=self.ref
                     )
                 base = psnap.get("files", [])
-                extra = dict(tbl._pending_deletes(parent))
-                if psnap.get("schemas"):
-                    extra.update(
-                        _schema_extra_for_append(psnap, self.spark_schema, base, new)
-                    )
                 return tbl._commit(
                     base + new, "append", parent, extra=extra, ref=self.ref
                 )
@@ -1119,16 +1114,12 @@ class _SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
                 ):
                     self.abort(messages, batchId)
                     return None
-                base = psnap.get("files", [])
-                extra = {
-                    **tbl._pending_deletes(parent),
-                    "epoch": int(batchId),
-                    "stream_id": self.stream_id,
-                }
+                extra = {"epoch": int(batchId), "stream_id": self.stream_id}
                 if psnap.get("schemas"):
                     extra.update(
-                        _schema_extra_for_append(psnap, self.spark_schema, base, new)
+                        _schema_extra_for_append(psnap, self.spark_schema, new)
                     )
+                base = psnap.get("files", [])
                 return tbl._commit(
                     base + new, "append", parent, extra=extra, ref=self.ref
                 )

@@ -95,10 +95,11 @@ _REFS = "refs.json"
 MAIN = "main"
 
 # Default visible-row maintenance per commit operation (see _commit):
-# "append" ops only add fully-visible rows, "fresh_full" ops leave no
-# pending deletes so the footer row counts ARE the visible count,
-# "preserve" ops are row-preserving metadata commits. Data-dependent
-# ops (delete/pos-delete/merge/rollback) pass explicit values instead.
+# "append" ops only add fully-visible rows, "fresh_full" ops replace
+# every file and inherit no pending deletes, so the footer row counts
+# ARE the visible count, "preserve" ops are row-preserving metadata
+# commits. Data-dependent ops (delete/pos-delete/merge/rollback) pass
+# explicit values instead.
 _VIS_MODE_BY_OP = {
     "append": "append",
     "merge-insert-only": "append",
@@ -183,6 +184,43 @@ _INHERITED_SCALAR_KEYS = (
     # retained file was written under (rewrite_sorted mints them)
     "sort_orders",
 )
+# The same keys drive what a COMMIT inherits (SnapshotTable._commit):
+# a commit names only what it changes and takes everything else from
+# its base — the parent, or for a rollback its target in the groups
+# the rollback restores. Keys move in the groups below; every key of
+# the two lists above is in exactly one.
+# - A caller that sets a table-level key of a group owns the group's
+#   table-level keys: none of them is inherited, and an explicit None
+#   drops one.
+# - A per-file map is always the base's entries for the commit's files,
+#   overlaid with the caller's entries (an explicit None drops it).
+# - The counters are not inherited: they advance from the parent.
+# - The "fresh_full" operations (_VIS_MODE_BY_OP) replace every file,
+#   so they inherit no delete state.
+_INHERITED_GROUPS = {
+    "partition": (
+        "partition_spec",
+        "partition_specs",
+        "current_spec_id",
+        "file_partitions",
+        "file_spec_ids",
+    ),
+    "schema": ("schemas", "current_schema_id", "next_field_id", "file_schema_ids"),
+    "delete": ("deletes", "delete_keys", "delete_seqs", "pos_deletes"),
+    "sort": ("sort_orders", "file_sort_ids"),
+    "lineage": ("row_lineage", "lineage_files", "file_first_row_ids", "next_row_id"),
+    "file_stats": ("file_stats",),
+    "file_rows": ("file_rows",),
+    "file_seqs": ("file_seqs",),
+    "table_stats": ("table_stats",),
+    "partition_stats": ("partition_stats",),
+    "sequence_number": ("sequence_number",),
+}
+_COUNTERS = ("sequence_number", "next_row_id")
+# restoring a snapshot restores the state its files are read under;
+# partition tuples, stats, row counts and the counters stay the head's,
+# and so do the sort orders when the target has none
+_RESTORED_BY_ROLLBACK = ("delete", "schema", "sort", "lineage", "file_seqs")
 # delta bookkeeping keys — never part of a resolved snapshot
 _DELTA_DOC_KEYS = frozenset(
     {
@@ -503,13 +541,18 @@ class SnapshotTable:
         — content-identical (one of the two legal in-place manifest
         mutations; concurrent resolved-cache entries stay valid, the
         stat fingerprint refreshes cold ones). Callers hold the commit
-        lock."""
+        lock. A plan index that was fresh stays fresh: the content it
+        indexes did not change."""
+        from .plan_index import _fresh_doc, restamp
+
+        doc = _fresh_doc(self.path, snapshot_id)
         full = self._load_snap(snapshot_id)
         tmp = self._snap_path(snapshot_id) + f".rebase.{os.getpid()}"
         with open(tmp, "w") as f:
             json.dump(full, f, indent=1)
         os.replace(tmp, self._snap_path(snapshot_id))
         _DEPTH_CACHE[(os.path.abspath(self._meta), snapshot_id)] = (0, 0)
+        restamp(self.path, snapshot_id, doc)
 
     def _snap_path(self, snapshot_id: int) -> str:
         return os.path.join(self._meta, f"snap-{snapshot_id}.json")
@@ -872,84 +915,50 @@ class SnapshotTable:
         extra: dict | None = None,
         ref: str = MAIN,
     ) -> int:
+        """Commit ``files`` as ``ref``'s snapshot after ``parent``.
+
+        ``extra`` names what the commit changes. Every other piece of
+        table state comes from the commit's base by the one rule stated
+        beside ``_INHERITED_GROUPS``. The base is the parent; for a
+        rollback (operation ``rollback-to-<id>``) it is the target in
+        the groups ``_RESTORED_BY_ROLLBACK`` names. A caller that sets a
+        table-level key of a group owns the group (an explicit None
+        drops a key), per-file maps carry the base's entries for
+        ``files`` under the caller's, and the fresh_full operations
+        inherit no delete state. What stays here are the rules for NEW
+        files (sequence stamp, footer row count, schema id,
+        first_row_id range), the two counters and the visible-row
+        count."""
         os.makedirs(self._meta, exist_ok=True)
         extra = dict(extra or {})
         psnap = self._load_snap(parent) if parent is not None else {}
-        # partition metadata is a property of the FILES, so it survives
-        # any commit that carries files forward: inherit the spec and
-        # the tuples of surviving files unless the caller wrote its own
-        # (append_partitioned). Rewritten/dropped files lose their
-        # tuples and are conservatively scanned from then on.
-        if parent is not None and "partition_spec" not in extra:
-            if psnap.get("partition_spec"):
-                surviving = set(files)
-                extra["partition_spec"] = psnap["partition_spec"]
-                extra["file_partitions"] = {
-                    f: t
-                    for f, t in psnap.get("file_partitions", {}).items()
-                    if f in surviving
-                }
-                if psnap.get("partition_specs"):
-                    extra["partition_specs"] = psnap["partition_specs"]
-                    extra["current_spec_id"] = psnap["current_spec_id"]
-                    extra["file_spec_ids"] = {
-                        f: s
-                        for f, s in psnap.get("file_spec_ids", {}).items()
-                        if f in surviving
-                    }
-        # schema-tracking metadata survives every commit the same way:
-        # carry the schema log and the surviving files' schema ids;
-        # files new in this commit default to the current schema
-        # (rewrite paths read RESOLVED, so their output is current-shaped)
-        if parent is not None and "schemas" not in extra:
-            if psnap.get("schemas"):
-                surviving = set(files)
-                extra["schemas"] = psnap["schemas"]
-                extra["current_schema_id"] = psnap["current_schema_id"]
-                extra["next_field_id"] = psnap["next_field_id"]
-                fsi = {
-                    f: s
-                    for f, s in psnap.get("file_schema_ids", {}).items()
-                    if f in surviving
-                }
-                for f in files:
-                    fsi.setdefault(f, psnap["current_schema_id"])
-                extra["file_schema_ids"] = fsi
-        # recorded per-file [min, max] stats are a property of the
-        # IMMUTABLE files, so they survive any commit that carries the
-        # files forward — without this, one append after
-        # record_file_stats would silently turn every stats-served
-        # planner (planned_scan, the connector's pushFilters pruning,
-        # merge pruning) back into footer reads
-        if parent is not None and "file_stats" not in extra:
-            if psnap.get("file_stats"):
-                surviving = set(files)
-                extra["file_stats"] = {
-                    f: s
-                    for f, s in psnap["file_stats"].items()
-                    if f in surviving
-                }
-        # recorded TABLE statistics ride along until replaced: the doc
-        # names the snapshot its sketches were computed over, so
-        # consumers (and update_table_statistics) judge staleness from
-        # it rather than losing the stats on the first append
-        if parent is not None and "table_stats" not in extra:
-            if psnap.get("table_stats"):
-                extra["table_stats"] = psnap["table_stats"]
-        if parent is not None and "partition_stats" not in extra:
-            if psnap.get("partition_stats"):
-                extra["partition_stats"] = psnap["partition_stats"]
-        # sort orders are a property of the FILES rewrite_sorted wrote:
-        # carry the definitions and the surviving files' order ids
-        if parent is not None and "sort_orders" not in extra:
-            if psnap.get("sort_orders"):
-                surviving = set(files)
-                extra["sort_orders"] = psnap["sort_orders"]
-                extra["file_sort_ids"] = {
-                    f: o
-                    for f, o in psnap.get("file_sort_ids", {}).items()
-                    if f in surviving
-                }
+        restore = (
+            self._load_snap(int(operation[len("rollback-to-") :]))
+            if operation.startswith("rollback-to-")
+            else psnap
+        )
+        fset = set(files)
+        fresh = _VIS_MODE_BY_OP.get(operation) == "fresh_full"
+        for group, keys in _INHERITED_GROUPS.items():
+            if group == "delete" and fresh:
+                continue
+            base = restore if group in _RESTORED_BY_ROLLBACK else psnap
+            if group == "sort" and "sort_orders" not in base:
+                # a target older than every sort order keeps the head's:
+                # the retained history its export covers names them
+                base = psnap
+            owned = any(k in extra for k in keys if k not in _PER_FILE_KEYS + _COUNTERS)
+            for k in keys:
+                if k not in base or k in _COUNTERS:
+                    continue
+                if k in _PER_FILE_KEYS:
+                    if extra.get(k, {}) is not None:
+                        extra[k] = {
+                            **{f: v for f, v in base[k].items() if f in fset},
+                            **extra.get(k, {}),
+                        }
+                elif not owned:
+                    extra[k] = base[k]
         # SEQUENCE NUMBERS (Iceberg's data-sequence-number model): every
         # commit gets parent's + 1, every NEW data file is stamped with
         # it, and equality-delete files carry the sequence of their
@@ -959,55 +968,40 @@ class SnapshotTable:
         # delete entries the merge read through). Legacy defaults keep
         # old tables exact: an unstamped file reads as seq 0, an
         # unstamped delete file as +infinity (applies to everything).
-        seq = int(psnap.get("sequence_number", 0)) + 1 if parent is not None else 1
-        extra.setdefault("sequence_number", seq)
-        file_set = set(files)
-        fseqs = (
-            {
-                f: s
-                for f, s in psnap.get("file_seqs", {}).items()
-                if f in file_set
-            }
-            if parent is not None
-            else {}
-        )
-        carried_legacy = set(psnap.get("files", [])) if parent is not None else set()
+        extra.setdefault("sequence_number", int(psnap.get("sequence_number", 0)) + 1)
+        fseqs = extra.setdefault("file_seqs", {})
+        carried = set(restore.get("files", ()))
         for f in files:
             # only files NEW in this commit get stamped — a legacy file
-            # carried from a pre-seq parent stays unstamped (reads as
+            # carried from a pre-seq base stays unstamped (reads as
             # seq 0, so existing deletes keep applying to it)
-            if f not in fseqs and f not in carried_legacy:
+            if f not in fseqs and f not in carried:
                 fseqs[f] = extra["sequence_number"]
-        extra.setdefault("file_seqs", fseqs)
         # per-file ROW COUNTS (Iceberg's record_count manifest field):
-        # carried like the other per-file state, recorded for new files
-        # from the just-written (page-cached) footers — O(new files)
-        # per commit, and COUNT(*) becomes metadata-only
-        # (metadata_count) instead of a table scan. Synthetic commits
-        # naming files that don't exist (tests, external registration)
-        # simply skip the recording.
-        if "file_rows" not in extra:
-            import pyarrow.parquet as _pq
+        # recorded for new files from the just-written (page-cached)
+        # footers — O(new files) per commit, and COUNT(*) becomes
+        # metadata-only (metadata_count) instead of a table scan.
+        # Synthetic commits naming files that don't exist (tests,
+        # external registration) simply skip the recording.
+        import pyarrow.parquet as _pq
 
-            rows = (
-                {
-                    f: n
-                    for f, n in psnap.get("file_rows", {}).items()
-                    if f in file_set
-                }
-                if parent is not None
-                else {}
-            )
+        rows = dict(extra.get("file_rows") or {})
+        for f in files:
+            if f not in rows:
+                try:
+                    rows[f] = _pq.ParquetFile(os.path.join(self.path, f)).metadata.num_rows
+                except Exception:  # noqa: BLE001 - absent/foreign file
+                    pass
+        if rows:
+            extra["file_rows"] = rows
+        # a file without a recorded schema id was written under the
+        # current schema (rewrite paths read RESOLVED, so their output
+        # is current-shaped)
+        if extra.get("schemas"):
+            fsi = dict(extra.get("file_schema_ids") or {})
             for f in files:
-                if f not in rows:
-                    try:
-                        rows[f] = _pq.ParquetFile(
-                            os.path.join(self.path, f)
-                        ).metadata.num_rows
-                    except Exception:  # noqa: BLE001 - absent/foreign file
-                        pass
-            if rows:
-                extra["file_rows"] = rows
+                fsi.setdefault(f, extra["current_schema_id"])
+            extra["file_schema_ids"] = fsi
         # VISIBLE-ROW COUNT (Iceberg's snapshot-summary total-records,
         # but NET of merge-on-read deletes): every row-changing commit
         # records the table's visible COUNT(*) so metadata_count is
@@ -1070,52 +1064,33 @@ class SnapshotTable:
             if vis is not None:
                 extra["visible_rows"] = int(vis)
         # row-lineage bookkeeping (Iceberg v3's row-id model): every
-        # commit on a lineage-enabled table carries the table-level id
-        # counter and assigns each NEW file a first_row_id range from
-        # it (footer row counts of the just-written, page-cached files
-        # — no data read). Files flagged in ``lineage_files`` carry a
-        # PHYSICAL _row_id column instead (rewrites materialize ids)
-        # and get no range. A row's id is first_row_id + ordinal, so an
-        # append costs O(new files) id bookkeeping, never a scan.
-        if (
-            parent is not None
-            and psnap.get("row_lineage")
-            # an explicit None is the rollback-to-pre-lineage opt-out
-            and extra.get("row_lineage", True) is not None
-        ):
-            import pyarrow.parquet as _pq
-
-            surviving = set(files)
-            extra.setdefault("row_lineage", True)
-            flags = {
-                f: True
-                for f in psnap.get("lineage_files", {})
-                if f in surviving
-            }
-            flags.update(extra.get("lineage_files", {}))
-            first = {
-                f: b
-                for f, b in psnap.get("file_first_row_ids", {}).items()
-                if f in surviving
-            }
-            first.update(extra.get("file_first_row_ids", {}))
-            nxt = extra.get("next_row_id", psnap["next_row_id"])
-            recorded_rows = extra.get("file_rows", {})
+        # commit on a lineage-enabled table assigns each NEW file a
+        # first_row_id range from the table-level id counter (footer
+        # row counts of the just-written, page-cached files — no data
+        # read). Files flagged in ``lineage_files`` carry a PHYSICAL
+        # _row_id column instead (rewrites materialize ids) and get no
+        # range. A row's id is first_row_id + ordinal, so an append
+        # costs O(new files) id bookkeeping, never a scan. The counter
+        # never moves back: a rollback keeps the larger of head's and
+        # target's, so ids handed out by rolled-away commits are never
+        # reused.
+        if extra.get("row_lineage"):
+            first = dict(extra.get("file_first_row_ids") or {})
+            flags = extra.get("lineage_files") or {}
+            nxt = extra.get(
+                "next_row_id",
+                max(psnap.get("next_row_id", 0), restore.get("next_row_id", 0)),
+            )
             for f in files:
                 if f not in first and f not in flags:
-                    n = recorded_rows.get(f)  # just harvested above
+                    n = rows.get(f)  # just harvested above
                     if n is None:
-                        n = _pq.ParquetFile(
-                            os.path.join(self.path, f)
-                        ).metadata.num_rows
+                        n = _pq.ParquetFile(os.path.join(self.path, f)).metadata.num_rows
                     first[f] = nxt
                     nxt += n
             extra["file_first_row_ids"] = first
             extra["next_row_id"] = nxt
-            extra["lineage_files"] = flags
-        # a None value is an explicit opt-out marker (e.g. rollback to a
-        # pre-tracking snapshot): it blocked the carry above, and must
-        # not be written into the manifest
+        # an explicit None drops a key: it is never written
         extra = {k: v for k, v in extra.items() if v is not None}
         sid = self._arbitrate_commit(files, operation, parent, extra, ref)
         # every commit writes its snapshot's plan index, O(its delta)
@@ -1192,46 +1167,20 @@ class SnapshotTable:
             self._set_branch_head(ref, snapshot_id)
         return snapshot_id
 
-    def _pending_deletes(self, parent: int | None) -> dict:
-        """Delete state (equality AND positional) that MUST survive
-        unrelated commits: an append after a delete would otherwise drop
-        the delete list from the new manifest and resurrect every
-        deleted row."""
-        if not parent:
-            return {}
-        snap = self._load_snap(parent)
-        out = {}
-        if snap.get("deletes"):
-            out["deletes"] = snap["deletes"]
-            out["delete_keys"] = snap["delete_keys"]
-            live_dels = set(snap["deletes"])
-            dseqs = {
-                d: s
-                for d, s in snap.get("delete_seqs", {}).items()
-                if d in live_dels
-            }
-            if dseqs:
-                out["delete_seqs"] = dseqs
-        if snap.get("pos_deletes"):
-            out["pos_deletes"] = snap["pos_deletes"]
-        return out
-
     def append(self, df: DataFrame, extra: dict | None = None, ref: str = MAIN) -> int:
         self._check_writable_ref(ref)
         parent = self.head(ref)
         psnap = self._load_snap(parent) if parent else {}
         base = psnap.get("files", [])
+        extra = dict(extra or {})
         if psnap.get("schemas"):
             # v3 write-defaults: a writer omitting a defaulted column
             # still produces files that CONTAIN it (spec writer rule)
             df = _fill_write_defaults(psnap, df)
         new = self._write_data_files(df)
-        merged_extra = {**self._pending_deletes(parent), **(extra or {})}
-        if psnap.get("schemas") and "schemas" not in merged_extra:
-            merged_extra.update(
-                _schema_extra_for_append(psnap, df.schema, base, new)
-            )
-        return self._commit(base + new, "append", parent, extra=merged_extra, ref=ref)
+        if psnap.get("schemas") and "schemas" not in extra:
+            extra.update(_schema_extra_for_append(psnap, df.schema, new))
+        return self._commit(base + new, "append", parent, extra=extra, ref=ref)
 
     def overwrite(self, df: DataFrame, ref: str = MAIN) -> int:
         # overwrite REPLACES table content: pending deletes die with the
@@ -1243,84 +1192,24 @@ class SnapshotTable:
             df = _fill_write_defaults(psnap, df)
         new = self._write_data_files(df)
         extra = (
-            _schema_extra_for_append(psnap, df.schema, [], new)
+            _schema_extra_for_append(psnap, df.schema, new)
             if psnap.get("schemas")
             else {}
         )
         return self._commit(new, "overwrite", parent, extra=extra, ref=ref)
 
     def rollback(self, snapshot_id: int, ref: str = MAIN) -> int:
-        """New snapshot re-pointing at an old file list (history kept);
-        the TARGET snapshot's delete state comes along — rolling back to
+        """New snapshot re-pointing at an old file list (history kept).
+        The commit restores the TARGET's state its files are read under
+        (``_RESTORED_BY_ROLLBACK``): its delete state — rolling back to
         a pre-delete snapshot undoes the delete, to a post-delete one
-        keeps it."""
+        keeps it — its sequence stamps (re-stamping restored files at
+        the head's sequence would put them past the restored deletes),
+        its schema, sort and lineage state, and its visible count."""
         self._check_writable_ref(ref)
         parent = self.head(ref)
         target = self._load_snap(snapshot_id)
-        extra = (
-            {"deletes": target["deletes"], "delete_keys": target["delete_keys"]}
-            if target.get("deletes")
-            else {}
-        )
-        if target.get("deletes") and target.get("delete_seqs"):
-            extra["delete_seqs"] = target["delete_seqs"]
-        if target.get("pos_deletes"):
-            extra["pos_deletes"] = target["pos_deletes"]
-        # restore the TARGET's sequence stamps for its files: freshly
-        # re-stamping restored files at the new head sequence would put
-        # them PAST the restored delete files and silently resurrect
-        # every deleted row
-        extra["file_seqs"] = target.get("file_seqs", {})
-        # the target's sort bookkeeping comes along too — the head's
-        # carry filters to ITS surviving files, which may no longer
-        # cover files a rolled-away rewrite replaced
-        if target.get("sort_orders"):
-            extra["sort_orders"] = target["sort_orders"]
-            extra["file_sort_ids"] = target.get("file_sort_ids", {})
-        # the TARGET state's visible count comes along (absent targets
-        # stay absent — metadata_count falls back)
-        if target.get("visible_rows") is not None:
-            extra["visible_rows"] = target["visible_rows"]
-        if target.get("schemas"):
-            # the target's files carry the TARGET's schema state —
-            # defaulting them to the head's current schema would
-            # mis-resolve pre-evolution files
-            extra.update(
-                {
-                    "schemas": target["schemas"],
-                    "current_schema_id": target["current_schema_id"],
-                    "next_field_id": target["next_field_id"],
-                    "file_schema_ids": target.get("file_schema_ids", {}),
-                }
-            )
-        else:
-            # rolling back to a PRE-tracking snapshot restores the
-            # untracked state: block _commit's carry of the head's
-            # schema log (None keys are stripped before writing), or
-            # read() would keep resolving through post-rollback renames
-            extra["schemas"] = None
-        if target.get("row_lineage"):
-            # the TARGET's id derivation state comes along — the head's
-            # carry may no longer cover the restored files (a rewrite
-            # dropped them from its maps), and _commit's fallback would
-            # silently RE-MINT their supposedly stable ids. The counter
-            # stays monotonic (max of head and target) so ids handed
-            # out by rolled-away commits are never reused.
-            head_next = (
-                self._load_snap(parent).get("next_row_id", 0) if parent else 0
-            )
-            extra.update(
-                {
-                    "row_lineage": True,
-                    "file_first_row_ids": target.get("file_first_row_ids", {}),
-                    "lineage_files": target.get("lineage_files", {}),
-                    "next_row_id": max(target["next_row_id"], head_next),
-                }
-            )
-        else:
-            # pre-lineage target: restore the untracked state (the
-            # explicit None blocks _commit's lineage carry, then strips)
-            extra["row_lineage"] = None
+        extra = {"visible_rows": target.get("visible_rows")}
         return self._commit(
             target["files"], f"rollback-to-{snapshot_id}", parent, extra=extra, ref=ref
         )
@@ -1901,9 +1790,7 @@ def _schema_by_id(schemas: list[dict], schema_id: int) -> dict:
     raise SnapshotError(f"schema id {schema_id} not in manifest schema log")
 
 
-def _schema_extra_for_append(
-    psnap: dict, df_schema, base_files: list[str], new_files: list[str]
-) -> dict:
+def _schema_extra_for_append(psnap: dict, df_schema, new_files: list[str]) -> dict:
     """Schema-tracking manifest keys for an append onto a tracked
     table: columns match the CURRENT schema by name (keeping ids), new
     names mint new ids, and the current schema advances only when the
@@ -1998,18 +1885,12 @@ def _schema_extra_for_append(
             "so the table schema cannot advance with it; include every "
             "current column or widen_column first"
         )
-    current_id = sid if advance else psnap["current_schema_id"]
-    fsi = {
-        f: s
-        for f, s in psnap.get("file_schema_ids", {}).items()
-        if f in set(base_files)
-    }
-    fsi.update({f: sid for f in new_files})
+    # the new files' ids only: the carried ones keep theirs (_commit)
     return {
         "schemas": new_schemas,
-        "current_schema_id": current_id,
+        "current_schema_id": sid if advance else psnap["current_schema_id"],
         "next_field_id": next_id,
-        "file_schema_ids": fsi,
+        "file_schema_ids": {f: sid for f in new_files},
     }
 
 
@@ -2056,7 +1937,6 @@ def track_schema(table: SnapshotTable, ref: str = MAIN) -> int:
         "current_schema_id": 0,
         "next_field_id": len(fields) + 1,
         "file_schema_ids": {f: 0 for f in snap["files"]},
-        **table._pending_deletes(parent),
     }
     return table._commit(snap["files"], "track-schema", parent, extra=extra, ref=ref)
 
@@ -2099,7 +1979,6 @@ def rename_column(table: SnapshotTable, old: str, new: str, ref: str = MAIN) -> 
         "schemas": schemas + [{"schema_id": sid, "fields": fields}],
         "current_schema_id": sid,
         "next_field_id": snap["next_field_id"],
-        "file_schema_ids": snap.get("file_schema_ids", {}),
     }
     # recorded stats are keyed by CURRENT column name (record_file_stats
     # and merge discovery both write current names): re-key them with
@@ -2137,7 +2016,6 @@ def rename_column(table: SnapshotTable, old: str, new: str, ref: str = MAIN) -> 
             }
             for o in orders
         ]
-        extra["file_sort_ids"] = snap.get("file_sort_ids", {})
     return table._commit(
         snap["files"], f"rename-{old}-to-{new}", parent, extra=extra, ref=ref
     )
@@ -2180,7 +2058,6 @@ def widen_column(table: SnapshotTable, col: str, to_type: str, ref: str = MAIN) 
         "schemas": schemas + [{"schema_id": sid, "fields": fields}],
         "current_schema_id": sid,
         "next_field_id": snap["next_field_id"],
-        "file_schema_ids": snap.get("file_schema_ids", {}),
     }
     return table._commit(
         snap["files"], f"widen-{col}-to-{to_type}", parent, extra=extra, ref=ref
@@ -2317,7 +2194,6 @@ def add_column(
         "schemas": schemas + [{"schema_id": sid, "fields": cur["fields"] + [fld]}],
         "current_schema_id": sid,
         "next_field_id": snap["next_field_id"] + 1,
-        "file_schema_ids": snap.get("file_schema_ids", {}),
     }
     return table._commit(
         snap["files"], f"add-column-{name}", parent, extra=extra, ref=ref
@@ -2346,21 +2222,18 @@ class MergeResult(dict):
 
 def _merge_stats_extra(
     table: SnapshotTable,
-    snap: dict,
     carried: list[str],
     discovered: dict,
     rewritten: list[str],
     key0: str,
 ) -> dict:
-    """The merge commit's ``file_stats``: the parent's recorded stats
-    for carried files, any footer ranges the pruning pass had to
-    discover, and freshly-harvested key stats for the merge's OWN
-    rewritten files — so the NEXT merge plans entirely from the
+    """The merge commit's new ``file_stats`` entries (the carried files'
+    recorded stats are inherited): any footer ranges the pruning pass
+    had to discover, and freshly-harvested key stats for the merge's
+    OWN rewritten files — so the NEXT merge plans entirely from the
     manifest (zero storage reads in steady state)."""
-    parent_stats = snap.get("file_stats", {})
     keep = set(carried)
-    out = {f: parent_stats[f] for f in carried if f in parent_stats}
-    out.update({f: v for f, v in discovered.items() if f in keep})
+    out = {f: v for f, v in discovered.items() if f in keep}
     for f, per_col in _harvest_stats(table, rewritten, [key0]).items():
         if per_col:
             out[f] = per_col
@@ -2375,7 +2248,9 @@ def _carry_deletes_after_merge(
     carried: list[str],
 ) -> dict:
     """Delete state for a merge commit over pending MOR deletes — the
-    consumed entries are DROPPED in the same commit.
+    consumed entries are DROPPED in the same commit: the merge commit
+    owns the delete group, so a key missing here is dropped, never
+    inherited from the parent.
 
     A merge over pending deletes of any kind is safe, whatever their
     key columns: positional vectors are file-bound, and equality
@@ -2423,8 +2298,7 @@ def _carry_deletes_after_merge(
     dels = snap.get("deletes", [])
     if not dels:
         return out
-    pending = table._pending_deletes(snap["snapshot_id"])
-    dseqs = pending.get("delete_seqs", {})
+    dseqs = snap.get("delete_seqs", {})
     if snap["delete_keys"] != key_cols:
         # differently-keyed deletes: carry verbatim, sequences keep
         # them exact (one rewritten delete-file set would lose the
@@ -2435,8 +2309,8 @@ def _carry_deletes_after_merge(
         # keeps hiding every pre-merge file (all sequenced before)
         # while the merge's output — and future appends — escape.
         adopt_seq = int(snap.get("sequence_number", 0)) + 1
-        out["deletes"] = pending["deletes"]
-        out["delete_keys"] = pending["delete_keys"]
+        out["deletes"] = dels
+        out["delete_keys"] = snap["delete_keys"]
         out["delete_seqs"] = {d: dseqs.get(d, adopt_seq) for d in dels}
         return out
     # same-keyed: consume the source's keys as hygiene VINTAGE BY
@@ -2630,7 +2504,10 @@ def _cow_merge(
         "merge" if parent is not None else "merge-insert-only",
         parent,
         extra={
-            **_merge_stats_extra(table, snap, carried, discovered, rewritten, key0),
+            **_merge_stats_extra(table, carried, discovered, rewritten, key0),
+            # the merge owns the delete group: what the carry drops stays
+            # dropped (None), never inherited from the parent
+            **dict.fromkeys(_INHERITED_GROUPS["delete"]),
             **_carry_deletes_after_merge(table, snap, source, key_cols, carried),
             **commit_extra,
             **(extra or {}),
@@ -2858,23 +2735,18 @@ def delete_where(
         )
     akeys = keys.select(*key_cols).toArrow().group_by(key_cols).aggregate([])
     del_files = [table._write_arrow_file(akeys)]
-    # carry the parent's FULL delete state (notably pending positional
-    # vectors — dropping them here would resurrect every pos-deleted
-    # row); the explicit entries below override the carried equality
-    # ones with the stacked list. The new delete files are stamped with
-    # THIS commit's sequence so they apply only to files sequenced
-    # before them — a later re-append of a deleted key stays visible.
+    # the commit owns the whole delete group: the stacked equality
+    # list, and the pending positional vectors kept as they are
+    # (dropping them would resurrect every pos-deleted row). The new
+    # delete files are stamped with THIS commit's sequence so they
+    # apply only to files sequenced before them — a later re-append of
+    # a deleted key stays visible.
     seq = int(snap.get("sequence_number", 0)) + 1
-    carried = table._pending_deletes(parent)
     extra = {
-        **carried,
         "deletes": sorted(snap.get("deletes", []) + del_files),
         "delete_keys": key_cols,
-        "sequence_number": seq,
-        "delete_seqs": {
-            **carried.get("delete_seqs", {}),
-            **{d: seq for d in del_files},
-        },
+        "delete_seqs": {**snap.get("delete_seqs", {}), **{d: seq for d in del_files}},
+        "pos_deletes": snap.get("pos_deletes"),
     }
     # visible-count maintenance (metadata_count under equality deletes):
     # the rows this delete NEWLY hides are the currently-VISIBLE rows
@@ -2966,8 +2838,10 @@ def delete_where_positional(
         .select("_file", "_pos")
     )
     del_files = table._write_data_files(doomed)
+    # the commit owns the whole delete group: the pending equality
+    # deletes stay as they are
     extra = {
-        **table._pending_deletes(parent),
+        **{k: snap.get(k) for k in ("deletes", "delete_keys", "delete_seqs")},
         "pos_deletes": sorted(snap.get("pos_deletes", []) + del_files),
     }
     if snap.get("visible_rows") is not None:
@@ -3108,7 +2982,6 @@ def enable_row_lineage(table: SnapshotTable, ref: str = MAIN) -> int:
         "next_row_id": nxt,
         "file_first_row_ids": first,
         "lineage_files": {},
-        **table._pending_deletes(parent),
     }
     return table._commit(snap["files"], "enable-lineage", parent, extra=extra, ref=ref)
 
@@ -3220,7 +3093,7 @@ def record_file_stats(table: SnapshotTable, cols: list[str]) -> int:
         snap["files"],
         "record-stats",
         parent,
-        extra={"file_stats": stats, **table._pending_deletes(parent)},
+        extra={"file_stats": stats},
     )
 
 
@@ -3291,7 +3164,6 @@ def record_table_statistics(
         parent,
         extra={
             "table_stats": {"snapshot_id": parent, "path": rel, "ndv": ndv},
-            **table._pending_deletes(parent),
         },
         ref=ref,
     )
@@ -3415,7 +3287,6 @@ def update_table_statistics(
                 "path": os.path.relpath(new_ppath, table.path),
                 "ndv": ndv,
             },
-            **table._pending_deletes(head),
         },
         ref=ref,
     )
@@ -3489,7 +3360,6 @@ def record_partition_statistics(table: SnapshotTable, ref: str = MAIN) -> int:
                 "path": os.path.relpath(pspath, table.path),
                 "has_unpart": any(k[0] == unpart for k in agg),
             },
-            **table._pending_deletes(head),
         },
         ref=ref,
     )
@@ -3603,7 +3473,6 @@ def update_partition_statistics(table: SnapshotTable, ref: str = MAIN) -> int:
                 "path": os.path.relpath(pspath, table.path),
                 "has_unpart": any(k[0] == unpart for k in merged),
             },
-            **table._pending_deletes(head),
         },
         ref=ref,
     )
@@ -4321,27 +4190,21 @@ def append_partitioned(
     shutil.rmtree(stage)
 
     parent = table.head(ref)
-    base_files, base_parts = [], {}
-    specs, base_spec_ids = [], {}
-    if parent:
-        snap = table._load_snap(parent)
-        base_files = snap["files"]
-        base_parts = snap.get("file_partitions", {})
-        # spec evolution: the snapshot carries EVERY spec ever used,
-        # each file tagged with the spec its tuple was computed under —
-        # mixed-spec tables stay scannable and pruning matches each
-        # file against ITS OWN spec (Iceberg's spec-id model)
-        specs = [
-            {**s, "spec": [list(p) for p in s["spec"]]}
-            for s in snap.get("partition_specs", [])
-        ]
-        if not specs and snap.get("partition_spec"):
-            specs = [{"spec_id": 0, "spec": [list(p) for p in snap["partition_spec"]]}]
-            base_spec_ids = {f: 0 for f in base_parts}
-        else:
-            base_spec_ids = {
-                f: s for f, s in snap.get("file_spec_ids", {}).items() if f in base_parts
-            }
+    snap = table._load_snap(parent) if parent else {}
+    # spec evolution: the snapshot carries EVERY spec ever used, each
+    # file tagged with the spec its tuple was computed under — mixed-
+    # spec tables stay scannable and pruning matches each file against
+    # ITS OWN spec (Iceberg's spec-id model). The carried files keep
+    # their tuples and spec ids (_commit); a table from before spec ids
+    # has its tuples' spec, 0, recorded now.
+    specs = [
+        {**s, "spec": [list(p) for p in s["spec"]]}
+        for s in snap.get("partition_specs", [])
+    ]
+    base_spec_ids = {}
+    if not specs and snap.get("partition_spec"):
+        specs = [{"spec_id": 0, "spec": [list(p) for p in snap["partition_spec"]]}]
+        base_spec_ids = dict.fromkeys(snap.get("file_partitions", {}), 0)
     new_spec = [list(s) for s in spec]
     match = next((s["spec_id"] for s in specs if s["spec"] == new_spec), None)
     if match is None:
@@ -4354,11 +4217,11 @@ def append_partitioned(
         "partition_spec": new_spec,
         "partition_specs": specs,
         "current_spec_id": match,
-        "file_partitions": {**base_parts, **file_partitions},
-        "file_spec_ids": {**base_spec_ids, **{f: match for f in file_partitions}},
-        **table._pending_deletes(parent),
+        "file_partitions": file_partitions,
+        "file_spec_ids": {**base_spec_ids, **dict.fromkeys(file_partitions, match)},
     }
-    return table._commit(base_files + new_files, "append", parent, extra=extra, ref=ref)
+    files = snap.get("files", []) + new_files
+    return table._commit(files, "append", parent, extra=extra, ref=ref)
 
 
 def partition_pruned_scan(
@@ -4857,8 +4720,7 @@ def add_files(table: SnapshotTable, paths: list[str], ref: str = MAIN) -> dict:
         except OSError:
             shutil.copy2(p, dest)
         new.append(os.path.relpath(dest, table.path))
-    extra = dict(table._pending_deletes(parent))
-    sid = table._commit(base + new, "append", parent, extra=extra, ref=ref)
+    sid = table._commit(base + new, "append", parent, ref=ref)
     return {"added_files": len(new), "snapshot_id": sid}
 
 

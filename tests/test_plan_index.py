@@ -83,14 +83,19 @@ def test_planned_scan_uses_sidecar_and_matches(stats_table):
 
 
 def test_doc_rewrite_stales_the_index_until_the_next_commit(stats_table, spark):
-    """An in-place doc rewrite (rebase) changes the fingerprint: plans
-    stop serving the stale index and answer through the dict without
-    rebuilding it, and the next commit indexes its snapshot afresh."""
+    """A snapshot doc rewritten in place with OTHER content changes the
+    fingerprint: plans stop serving the stale index and answer through
+    the dict without rebuilding it, and the next commit indexes its
+    snapshot afresh."""
     t = stats_table
     sid = t.current_snapshot_id()
     side = sidecar_path(t.path, sid)
     first = os.stat(side).st_mtime_ns
-    t._rebase_to_full(sid)
+    snap_doc = os.path.join(t.path, "metadata", f"snap-{sid}.json")
+    with open(snap_doc) as f:
+        raw = json.load(f)
+    with open(snap_doc, "w") as f:
+        json.dump({**raw, "note": "edited"}, f)
     assert _fresh_doc(t.path, sid) is None
     df, plan = planned_scan(t, "k", 0, 100)
     assert "columnar" not in plan and df.count() == 101
@@ -98,6 +103,31 @@ def test_doc_rewrite_stales_the_index_until_the_next_commit(stats_table, spark):
     t.append(spark.range(40_000, 40_010).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v")))
     df, plan = planned_scan(t, "k", 40_000, 40_004)
     assert plan.get("columnar") is True and df.count() == 5
+
+
+def test_rebase_keeps_the_index_fresh(spark, tmp_path):
+    """A content-identical rewrite of the head's doc (rewrite_manifests'
+    rebase to full form, as expiry's) keeps its fresh index fresh: the
+    head plans columnar and its next commit advances from that index."""
+    from iceberg_catalog_migrator_spark.sources.snapshots import rewrite_manifests
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+
+    # 48 files, so a one-file append is delta-encoded
+    t = SnapshotTable(spark, str(tmp_path / "rebase"))
+    t.append(rows(0, 48_000).repartitionByRange(48, "k"))
+    record_file_stats(t, ["k"])
+    t.append(rows(50_000, 50_010).repartition(1))
+    sid = t.current_snapshot_id()
+    assert rewrite_manifests(t)["rebased"] is True
+    doc = _fresh_doc(t.path, sid)
+    assert doc is not None
+    df, plan = planned_scan(t, "k", 50_000, 50_004)
+    assert plan.get("columnar") is True and df.count() == 5
+    t.append(rows(60_000, 60_010).repartition(1))
+    nxt = _fresh_doc(t.path, t.current_snapshot_id())
+    assert len(nxt["segments"]) == len(doc["segments"]) + 1
 
 
 def test_unindexable_stat_column_falls_back(stats_table, spark):

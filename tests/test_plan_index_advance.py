@@ -232,10 +232,12 @@ def test_every_commit_kind_leaves_an_exact_index(spark, tmp_path):
         _assert_exact_index(t.path, sid, scratch)
         if len(_segments(t.path, sid)) > 1:
             advanced.append(kind)
-    # a delta commit advances its parent's index; a full-form doc (the
-    # stats commit, the compaction, the overwrite) and a delta clearing
-    # a per-file key (the branch append after the rollback) write in full
-    assert set(advanced) >= {"append", "equality delete", "positional delete", "merge_into"}
+    # a delta commit advances its parent's index, the branch append
+    # after the rollback included (the rollback carried the stats map
+    # even with no entry left, so the append clears no per-file key);
+    # a full-form doc (the stats commit, the compaction, the overwrite)
+    # writes in full
+    assert set(advanced) >= {"append", "equality delete", "positional delete", "merge_into", "branch"}
 
 
 def test_cas_commits_leave_an_exact_index(spark, tmp_path):

@@ -387,6 +387,254 @@ def test_pending_deletes_survive_append_and_rollback(spark, table):
     assert got.filter("k >= 5 AND k < 50").count() == 0  # still deleted
 
 
+# ------------------------------------------------------------ inheritance
+# One test per _commit caller pins the rule it inherits by: starting
+# from a parent that holds a group, the child holds it unless the
+# caller replaces it. Two parents between them hold every group, since
+# rewrites and column DDL refuse pending deletes and schema tracking
+# refuses row lineage.
+def _inherit_rows(spark, lo, hi, parts=1):
+    return (
+        spark.range(lo, hi)
+        .select(
+            F.col("id").alias("k"),
+            (F.col("id") % 7).alias("v"),
+            (F.col("id") % 3).cast("string").alias("p"),
+        )
+        .repartition(parts)
+    )
+
+
+@pytest.fixture(scope="module")
+def inherit_parents(spark, tmp_path_factory):
+    """``{"L": (path, pre-lineage id), "S": (path, pre-schema id)}``:
+    L holds the partition, delete, sort, lineage and both statistics
+    groups; S the partition, schema, sort and table-statistics ones."""
+    from iceberg_catalog_migrator_spark.sources import snapshots as S
+
+    root = tmp_path_factory.mktemp("inherit")
+    out = {}
+    for name in ("L", "S"):
+        t = SnapshotTable(spark, str(root / name))
+        S.append_partitioned(t, _inherit_rows(spark, 0, 400, 2), [("p", "identity")])
+        t.append(_inherit_rows(spark, 400, 600, 2))
+        S.rewrite_sorted(t, ["k"], n_files=2)
+        S.append_partitioned(t, _inherit_rows(spark, 600, 800, 2), [("p", "identity")])
+        if name == "L":
+            S.record_file_stats(t, ["k"])
+            S.delete_where(t, ["k"], _inherit_rows(spark, 10, 20).select("k"))
+            S.delete_where_positional(t, "k >= 700 AND k < 705")
+            mark = t.current_snapshot_id()
+            S.enable_row_lineage(t)
+            S.record_table_statistics(t, ["k"])
+            S.record_partition_statistics(t)
+        else:
+            mark = t.current_snapshot_id()
+            S.track_schema(t)
+            S.record_file_stats(t, ["k"])
+            S.record_table_statistics(t, ["k"])
+        out[name] = (t.path, mark)
+    return out
+
+
+def _stream_append(spark, t, tmp_path, mark):
+    from iceberg_catalog_migrator_spark.sources.snapshot_stream import (
+        SNAPSHOT_STREAM_NAME,
+        register_snapshot_stream_source,
+    )
+
+    register_snapshot_stream_source(spark)
+    src = str(tmp_path / "stream_src")
+    _inherit_rows(spark, 5_000, 5_010).write.parquet(src)
+    q = (
+        spark.readStream.schema(_inherit_rows(spark, 0, 1).schema)
+        .parquet(src)
+        .writeStream.format(SNAPSHOT_STREAM_NAME)
+        .option("path", t.path)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+
+
+def _add_files(spark, t, tmp_path, mark):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_catalog_migrator_spark.sources.snapshots import add_files
+
+    src = tmp_path / "adds"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array([9_000], pa.int64()), "v": pa.array([1], pa.int64()), "p": ["0"]}),
+        str(src / "x.parquet"),
+    )
+    add_files(t, [str(src)])
+
+
+def _calls():
+    from iceberg_catalog_migrator_spark.sources import snapshots as S
+
+    return {
+        # (parent, caller, groups the caller replaces or drops, keys it drops)
+        "append": ("L", lambda spark, t, tmp, mark: t.append(_inherit_rows(spark, 1_000, 1_010)), set(), set()),
+        "append_partitioned": (
+            "L",
+            lambda spark, t, tmp, mark: S.append_partitioned(
+                t, _inherit_rows(spark, 1_000, 1_010), [("p", "identity")]
+            ),
+            set(),
+            set(),
+        ),
+        "add_files": ("L", _add_files, set(), set()),
+        "overwrite": ("L", lambda spark, t, tmp, mark: t.overwrite(_inherit_rows(spark, 0, 50)), {"delete"}, set()),
+        "delete_where": (
+            "L",
+            lambda spark, t, tmp, mark: S.delete_where(t, ["k"], _inherit_rows(spark, 30, 35).select("k")),
+            set(),
+            set(),
+        ),
+        "delete_where_positional": (
+            "L",
+            lambda spark, t, tmp, mark: S.delete_where_positional(t, "k >= 500 AND k < 503"),
+            set(),
+            set(),
+        ),
+        # its source holds every deleted key and position, so it
+        # consumes the whole delete state: none may come back from the
+        # parent
+        "merge_upsert": (
+            "L",
+            lambda spark, t, tmp, mark: S.merge_upsert(
+                t, _inherit_rows(spark, 10, 20).union(_inherit_rows(spark, 700, 705)), ["k"]
+            ),
+            {"delete"},
+            set(),
+        ),
+        # ... and this one keeps the vectors on the files it carries
+        "merge_upsert_keeps_vectors": (
+            "L",
+            lambda spark, t, tmp, mark: S.merge_upsert(t, _inherit_rows(spark, 10, 20), ["k"]),
+            set(),
+            {"deletes", "delete_keys", "delete_seqs"},
+        ),
+        "merge_into": (
+            "L",
+            lambda spark, t, tmp, mark: S.merge_into(
+                t,
+                _inherit_rows(spark, 700, 712),
+                ["k"],
+                [S.MergeClause("update"), S.MergeClause("insert")],
+            ),
+            set(),
+            set(),
+        ),
+        "compact_deletes": ("L", lambda spark, t, tmp, mark: S.compact_deletes(t), {"delete"}, set()),
+        "record_file_stats": ("L", lambda spark, t, tmp, mark: S.record_file_stats(t, ["k", "v"]), set(), set()),
+        "record_table_statistics": (
+            "L",
+            lambda spark, t, tmp, mark: S.record_table_statistics(t, ["k", "v"]),
+            set(),
+            set(),
+        ),
+        "record_partition_statistics": (
+            "L",
+            lambda spark, t, tmp, mark: S.record_partition_statistics(t),
+            set(),
+            set(),
+        ),
+        "rollback_pre_lineage": ("L", lambda spark, t, tmp, mark: t.rollback(mark), {"lineage"}, set()),
+        "enable_row_lineage": (
+            "L",
+            lambda spark, t, tmp, mark: (t.rollback(mark), S.enable_row_lineage(t)),
+            set(),
+            set(),
+        ),
+        "stream_sink_append": ("L", _stream_append, set(), set()),
+        "rewrite_small_files": (
+            "S",
+            lambda spark, t, tmp, mark: S.rewrite_small_files(t, target_bytes=1 << 30),
+            set(),
+            set(),
+        ),
+        "rewrite_sorted": ("S", lambda spark, t, tmp, mark: S.rewrite_sorted(t, ["v"], n_files=2), set(), set()),
+        "add_column": ("S", lambda spark, t, tmp, mark: S.add_column(t, "z", "bigint"), set(), set()),
+        "rollback_pre_schema": ("S", lambda spark, t, tmp, mark: t.rollback(mark), {"schema"}, set()),
+        "track_schema": (
+            "S",
+            lambda spark, t, tmp, mark: (t.rollback(mark), S.track_schema(t)),
+            set(),
+            set(),
+        ),
+    }
+
+
+def _held(snap):
+    from iceberg_catalog_migrator_spark.sources.snapshots import _INHERITED_GROUPS
+
+    return {g for g, keys in _INHERITED_GROUPS.items() if any(k in snap for k in keys)}
+
+
+def test_inherited_groups_cover_each_key_once():
+    from iceberg_catalog_migrator_spark.sources.snapshots import (
+        _INHERITED_GROUPS,
+        _INHERITED_SCALAR_KEYS,
+        _PER_FILE_KEYS,
+    )
+
+    keys = [k for g in _INHERITED_GROUPS.values() for k in g]
+    assert sorted(keys) == sorted(_INHERITED_SCALAR_KEYS + _PER_FILE_KEYS)
+
+
+@pytest.mark.parametrize("caller", sorted(_calls()))
+def test_every_commit_inherits_the_groups_it_does_not_set(spark, tmp_path, inherit_parents, caller):
+    import shutil
+
+    parent, call, replaced, dropped = _calls()[caller]
+    path, mark = inherit_parents[parent]
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    shutil.copytree(path, t.path)
+    head = t.current_snapshot_id()
+    want = _held(t._load_snap(head)) - replaced
+    n = len(t.history_ids())
+    call(spark, t, tmp_path, mark)
+    assert len(t.history_ids()) > n, "no commit"
+    child = t._load_snap(t.current_snapshot_id())
+    assert _held(child) == want
+    assert not dropped & set(child)
+    # a carried file keeps its per-file entries (record_file_stats
+    # re-records every file's stats)
+    maps = ("file_partitions", "file_sort_ids", "file_seqs", "file_rows")
+    if caller != "record_file_stats":
+        maps += ("file_stats",)
+    for k in maps:
+        before = t._load_snap(head).get(k, {})
+        kept = set(child["files"]) & set(before)
+        assert {f: child[k][f] for f in kept} == {f: before[f] for f in kept}, k
+
+
+def test_adopt_statistics_commit_keeps_the_adopted_deletes(spark, tmp_path):
+    """adopt_iceberg_table's statistics commit follows the adopt's
+    append, which carries the source's pending deletes: the table
+    statistics land beside them."""
+    from iceberg_catalog_migrator_spark.sources import snapshots as S
+    from iceberg_catalog_migrator_spark.sources.iceberg_format import export_iceberg_metadata
+    from iceberg_catalog_migrator_spark.sources.iceberg_read import adopt_iceberg_table
+
+    src = SnapshotTable(spark, str(tmp_path / "src"))
+    src.append(_inherit_rows(spark, 0, 300, 2))
+    S.delete_where_positional(src, "k % 10 = 3")
+    S.delete_where(src, ["k"], _inherit_rows(spark, 0, 300).filter("k % 10 = 6").select("k"))
+    S.record_table_statistics(src, ["k", "v"])
+    mpath = export_iceberg_metadata(src)["metadata_location"]
+    t = adopt_iceberg_table(spark, mpath, str(tmp_path / "dst"))
+    head = t._load_snap(t.current_snapshot_id())
+    assert head["operation"] == "set-statistics"
+    assert {"delete", "table_stats"} <= _held(head)
+    assert S.read_with_deletes(t).count() == S.read_with_deletes(src).count()
+
+
 # ------------------------------------------------------------ refs
 def test_branch_commits_leave_main_untouched(spark, table):
     even, odd = halves(spark)

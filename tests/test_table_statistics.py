@@ -954,7 +954,6 @@ def test_partition_stats_removal_only_goes_stale(spark, tmp_path):
         [f for f in snap["files"] if f != dropped],
         "remove-one",
         head,
-        extra=t._pending_deletes(head),
     )
     plan = plan_maintenance(t)
     assert plan["n_partition_stats_stale_files"] > 0
@@ -994,7 +993,7 @@ def test_rekeyed_retained_file_forces_full_partition_stats_pass(
         list(snap["files"]),
         "rekey-rows",
         head,
-        extra={"file_rows": rekeyed_rows, **t._pending_deletes(head)},
+        extra={"file_rows": rekeyed_rows},
     )
     base = t._load_snap(int(snap["partition_stats"]["snapshot_id"]))
     assert not _retained_file_stats_unchanged(
