@@ -203,20 +203,24 @@ VERSION_HINT = "version-hint.text"
 def write_table_metadata(
     table_location: str,
     schema_ddl: str,
-    version: int,
+    version: int | str,
     properties: dict | None = None,
     write_hint: bool = True,
     table_uuid: str | None = None,
 ) -> str:
-    """Write ``v<N>.metadata.json`` (+ version hint unless
-    ``write_hint=False``); returns its path.
+    """Write ``v<version>.metadata.json`` (+ version hint unless
+    ``write_hint=False``); returns its path. ``version`` is a number,
+    or a string such as ``"<snapshot-id>-<ref>"`` for a branch's doc.
 
     ``write_hint=False`` is for CANDIDATE docs staged before a catalog
-    compare-and-swap: the hint must only ever point at a doc that WON
-    its swap, or a losing racer's cleanup would leave it dangling at an
-    unlinked file. ``table_uuid`` carries a table's identity forward
-    across commits (Iceberg's stable table-uuid); omitted = a fresh
-    identity, i.e. table creation."""
+    register or compare-and-swap: the hint must only ever point at a
+    doc that WON, or a losing racer's cleanup would leave it dangling
+    at an unlinked file. A candidate is created exclusively — an
+    existing doc of that name raises ``FileExistsError`` and is left as
+    it is, so a writer never rewrites (nor, cleaning up, unlinks) a doc
+    another writer's pointer may name. ``table_uuid`` carries a table's
+    identity forward across commits (Iceberg's stable table-uuid);
+    omitted = a fresh identity, i.e. table creation."""
     meta_dir = os.path.join(table_location, METADATA_DIR)
     os.makedirs(meta_dir, exist_ok=True)
     doc = {
@@ -229,14 +233,24 @@ def write_table_metadata(
         "properties": properties or {},
     }
     metadata_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(metadata_path, "w", encoding="utf-8") as f:
-        json.dump(doc, f, indent=2)
     if write_hint:
+        with open(metadata_path, "w", encoding="utf-8") as f:
+            json.dump(doc, f, indent=2)
         write_version_hint(table_location, version)
+        return metadata_path
+    # a candidate is written under a private name and linked into place
+    # whole: exclusive, and a writer reusing it never reads a torn doc
+    tmp = metadata_path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(doc, f, indent=2)
+    try:
+        os.link(tmp, metadata_path)
+    finally:
+        os.unlink(tmp)
     return metadata_path
 
 
-def write_version_hint(table_location: str, version: int) -> None:
+def write_version_hint(table_location: str, version: int | str) -> None:
     """Point ``version-hint.text`` at doc ``version`` (atomic replace,
     so path-based readers never see a torn hint)."""
     meta_dir = os.path.join(table_location, METADATA_DIR)

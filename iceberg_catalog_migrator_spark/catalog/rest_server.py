@@ -12,21 +12,27 @@ client — and through it the migrator and CLI — speaks the actual
 protocol end-to-end instead of short-circuiting in process.
 
 Routes implemented (the subset a catalog client needs for listing,
-registration, resolution, drops, and commit arbitration):
+registration, creation, resolution, drops, renames and commits):
 
-======  =============================================  ==================
+======  =============================================  ===========================
 GET     /v1/config                                     CatalogConfig
 GET     /v1/namespaces[?parent=a%1Fb]                  ListNamespaces
 POST    /v1/namespaces                                 CreateNamespace
 GET     /v1/namespaces/{ns}                            LoadNamespace
 HEAD    /v1/namespaces/{ns}                            NamespaceExists
+DELETE  /v1/namespaces/{ns}                            DropNamespace (empty only)
+POST    /v1/namespaces/{ns}/properties                 UpdateNamespaceProperties
 GET     /v1/namespaces/{ns}/tables                     ListTables
+POST    /v1/namespaces/{ns}/tables                     CreateTable (+ stage-create)
 POST    /v1/namespaces/{ns}/register                   RegisterTable
-GET     /v1/namespaces/{ns}/tables/{tbl}               LoadTable
+GET     /v1/namespaces/{ns}/tables/{tbl}[?snapshots=]  LoadTable (all | refs)
 HEAD    /v1/namespaces/{ns}/tables/{tbl}               TableExists
-DELETE  /v1/namespaces/{ns}/tables/{tbl}               DropTable
+DELETE  /v1/namespaces/{ns}/tables/{tbl}               DropTable (no purge)
 POST    /v1/namespaces/{ns}/tables/{tbl}               CommitTable (CAS)
-======  =============================================  ==================
+POST    /v1/namespaces/{ns}/tables/{tbl}/metrics       ReportMetrics (accepted, discarded)
+POST    /v1/tables/rename                              RenameTable
+POST    /v1/transactions/commit                        CommitTransaction
+======  =============================================  ===========================
 
 Multi-level namespaces join on the spec's ``0x1F`` unit separator in
 URL paths and the ``parent`` query parameter. Errors return the spec's
@@ -37,14 +43,26 @@ message text passes through VERBATIM so the reference-pinned CLI
 phrasing survives the wire.
 
 Commit arbitration: the spec's ``POST .../tables/{tbl}`` commit
-envelope carries requirements + updates and leaves metadata persistence
-server-side. In this engine's pointer-table model the unit of commit IS
-the metadata location, so the envelope is honored with the
-pointer-model requirement/update pair ``assert-current-metadata-location``
-/ ``set-current-metadata-location``; a failed requirement returns the
-spec's 409 ``CommitFailedException``, which the client surfaces as a
-lost compare-and-swap — the same one-winner arbitration
+envelope carries requirements + updates. Each table change is resolved
+to one pointer swap (``_resolve_change``), in either of two
+vocabularies:
+
+- the engine's pointer-table model, where the unit of commit IS the
+  metadata location: the pair ``assert-current-metadata-location`` /
+  ``set-current-metadata-location`` names both ends of the swap, and
+  the client wrote the doc;
+- the spec's snapshot vocabulary (``assert-ref-snapshot-id``,
+  ``assert-table-uuid``, ``add-snapshot``, ``set-snapshot-ref``,
+  schema, spec, sort-order and property updates), which the server
+  applies to the current doc before writing the next one itself; an
+  ``assert-create`` commit mints a staged table's first doc instead.
+
+A lost swap or a failed requirement returns the spec's 409
+``CommitFailedException``, which the client surfaces as a lost
+compare-and-swap — the same one-winner arbitration
 ``SqlCatalog.swap_table_metadata_location`` provides locally.
+``transactions/commit`` resolves every change the same way and applies
+all swaps in one store transaction, all-or-nothing.
 """
 
 from __future__ import annotations
@@ -606,11 +624,7 @@ class _Handler(BaseHTTPRequestHandler):
         next metadata file, and swaps the pointer. Either way the
         store's atomic swap decides races, so a foreign commit and an
         engine commit arbitrate through the same CAS."""
-        from .rest_managed import (
-            apply_commit,
-            is_pointer_commit,
-            write_metadata_doc,
-        )
+        from .rest_managed import CommitConflictError, is_pointer_commit
 
         if not is_pointer_commit(body) and any(
             r.get("type") == "assert-create"
@@ -618,77 +632,59 @@ class _Handler(BaseHTTPRequestHandler):
         ):
             self._commit_staged_create(ident, body)
             return
-        if not is_pointer_commit(body):
-            current_loc = self.store.load_table_metadata_location(ident)
-            doc = read_table_metadata(current_loc)
-            new_doc = apply_commit(doc, body)
-            new_loc, new_doc = write_metadata_doc(
-                new_doc,
-                prior_location=current_loc,
-                prior_updated_ms=doc.get("last-updated-ms"),
-            )
-            if not self.store.swap_table_metadata_location(
-                ident, current_loc, new_loc
-            ):
-                # the losing candidate doc must not linger as an orphan
-                _unlink_quiet(new_loc)
-                self._send_json(
-                    409,
-                    {
-                        "error": {
-                            "message": (
-                                f"Commit failed: metadata for {ident} "
-                                "changed concurrently"
-                            ),
-                            "type": "CommitFailedException",
-                            "code": 409,
-                        }
-                    },
-                )
-                return
-            self._send_json(
-                200, {"metadata-location": new_loc, "metadata": new_doc}
-            )
-            return
-        reqs = body.get("requirements") or []
-        updates = body.get("updates") or []
-        expected = next(
-            (
-                r.get("metadata-location")
-                for r in reqs
-                if r.get("type") == "assert-current-metadata-location"
-            ),
-            None,
-        )
-        new = next(
-            (
-                u.get("metadata-location")
-                for u in updates
-                if u.get("action") == "set-current-metadata-location"
-            ),
-            None,
-        )
-        if expected is None or new is None:
-            raise CatalogError(
-                "commit requires assert-current-metadata-location and "
-                "set-current-metadata-location (pointer-table model)"
-            )
+        expected, new, doc, written = self._resolve_change(ident, body)
         if not self.store.swap_table_metadata_location(ident, expected, new):
-            self._send_json(
-                409,
-                {
-                    "error": {
-                        "message": (
-                            f"Commit failed: metadata location for {ident} "
-                            "changed concurrently"
-                        ),
-                        "type": "CommitFailedException",
-                        "code": 409,
-                    }
-                },
+            if written:
+                # the losing candidate doc must not linger as an orphan
+                _unlink_quiet(new)
+            raise CommitConflictError(
+                f"Commit failed: metadata for {ident} changed concurrently"
             )
-            return
-        self._send_json(200, {"metadata-location": new, "metadata": {}})
+        self._send_json(200, {"metadata-location": new, "metadata": doc})
+
+    def _resolve_change(
+        self, ident: TableIdentifier, change: dict
+    ) -> tuple[str, str, dict, bool]:
+        """One table change as the pointer swap it asks for:
+        ``(expected, new, doc, written)``. The pointer-model pair names
+        both locations (the client wrote the doc, so ``doc`` is empty);
+        spec updates are applied to the current doc and the next doc is
+        written here (``written``: the caller unlinks it when its swap
+        does not happen)."""
+        from .rest_managed import apply_commit, is_pointer_commit, write_metadata_doc
+
+        if is_pointer_commit(change):
+            expected = next(
+                (
+                    r.get("metadata-location")
+                    for r in change.get("requirements") or []
+                    if r.get("type") == "assert-current-metadata-location"
+                ),
+                None,
+            )
+            new = next(
+                (
+                    u.get("metadata-location")
+                    for u in change.get("updates") or []
+                    if u.get("action") == "set-current-metadata-location"
+                ),
+                None,
+            )
+            if expected is None or new is None:
+                raise CatalogError(
+                    "a pointer-model commit requires both "
+                    "assert-current-metadata-location and "
+                    "set-current-metadata-location"
+                )
+            return expected, new, {}, False
+        current = self.store.load_table_metadata_location(ident)
+        doc = read_table_metadata(current)
+        new, new_doc = write_metadata_doc(
+            apply_commit(doc, change),
+            prior_location=current,
+            prior_updated_ms=doc.get("last-updated-ms"),
+        )
+        return current, new, new_doc, True
 
     def _commit_transaction(self, body: dict) -> None:
         """Spec CommitTransaction (``POST /v1/transactions/commit``):
@@ -700,12 +696,7 @@ class _Handler(BaseHTTPRequestHandler):
         unreferenced candidate files, same as the single-table path),
         and the same CAS arbitration decides races with every other
         commit vocabulary."""
-        from .rest_managed import (
-            CommitConflictError,
-            apply_commit,
-            is_pointer_commit,
-            write_metadata_doc,
-        )
+        from .rest_managed import CommitConflictError, is_pointer_commit
 
         changes = body.get("table-changes")
         if not isinstance(changes, list) or not changes:
@@ -762,43 +753,10 @@ class _Handler(BaseHTTPRequestHandler):
                         "inside transactions/commit; commit the staged "
                         "table individually"
                     )
-                if pointer:
-                    expected = next(
-                        (
-                            r.get("metadata-location")
-                            for r in ch.get("requirements") or []
-                            if r.get("type")
-                            == "assert-current-metadata-location"
-                        ),
-                        None,
-                    )
-                    new = next(
-                        (
-                            u.get("metadata-location")
-                            for u in ch.get("updates") or []
-                            if u.get("action")
-                            == "set-current-metadata-location"
-                        ),
-                        None,
-                    )
-                    if expected is None or new is None:
-                        raise CatalogError(
-                            "pointer-model table-change requires both "
-                            "assert-current-metadata-location and "
-                            "set-current-metadata-location"
-                        )
-                    swaps.append((ident, expected, new))
-                    continue
-                current_loc = self.store.load_table_metadata_location(ident)
-                doc = read_table_metadata(current_loc)
-                new_doc = apply_commit(doc, ch)
-                new_loc, _ = write_metadata_doc(
-                    new_doc,
-                    prior_location=current_loc,
-                    prior_updated_ms=doc.get("last-updated-ms"),
-                )
-                written.append(new_loc)
-                swaps.append((ident, current_loc, new_loc))
+                expected, new, _, written_here = self._resolve_change(ident, ch)
+                if written_here:
+                    written.append(new)
+                swaps.append((ident, expected, new))
             if not multi_swap(swaps):
                 raise CommitConflictError(
                     "Commit failed: one or more tables in the "

@@ -54,7 +54,7 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -832,24 +832,67 @@ class SnapshotTable:
         snapshots without rewriting a byte. Divergent refs raise; a
         true merge is a data-level operation (merge_upsert).
 
-        Runs under the commit lock, heads re-read INSIDE it: a
-        fast-forward racing a just-won commit to the same ref would
-        otherwise os.replace the head pointer over the fresh snapshot
-        id and silently drop a successfully-committed snapshot."""
+        Both heads are re-read inside the arbiter's swap window and the
+        move is a swap against the head read: a fast-forward racing a
+        just-won commit to the same ref raises
+        :class:`CommitConflictError` instead of dropping that commit."""
         self._check_writable_ref(ref)
-        with self._commit_lock():
-            src = self.head(ref)
+        with self._commit_lock() if self._FLOCK_ARBITRATES else nullcontext():
+            src, token = self._read_head(ref)
             dst = self.head(to_ref)
             if dst is None:
                 raise SnapshotError(f"ref {to_ref!r} has no head")
+            if src == dst:
+                return dst
             if src is not None and not self.is_ancestor(src, dst):
                 raise SnapshotError(
                     f"{ref!r} (at {src}) is not a provable ancestor of {to_ref!r} "
                     f"(at {dst}): not a fast-forward (diverged, or the chain "
                     "between them expired); resolve with a data-level merge"
                 )
-            self._set_branch_head(ref, dst)
+            self._move_head(ref, token, self._load_snap(dst), staged=False)
         return dst
+
+    # ------------------------------------------------------------ arbitration
+    # An arbiter's hooks under the one protocol (``_arbitrate_commit``,
+    # ``fast_forward``): how a ref's head is read (``_read_head``) and
+    # swapped (``_swap_head``), and how the directory's own pointers
+    # follow a win (``_set_branch_head``). Here the commit flock spans
+    # read → swap, so the swap cannot lose and the hint or refs.json row
+    # IS the head. A catalog's swap must not hold the flock: a racing
+    # winner may commit from inside it, and flock is not re-entrant
+    # across file descriptors.
+    _FLOCK_ARBITRATES = True
+
+    def _read_head(self, ref: str) -> tuple[int | None, object]:
+        """``ref``'s head and the token its swap compares against."""
+        return self.head(ref), None
+
+    def _swap_head(self, ref: str, token, snap: dict) -> bool:
+        """Swap ``ref``'s head from ``token`` to ``snap``; whether it won."""
+        return True
+
+    def _move_head(self, ref: str, token, snap: dict, staged: bool) -> None:
+        """Move ``ref``'s head to ``snap``: a manifest this commit
+        ``staged``, or a committed one a fast-forward adopts. A lost
+        swap unlinks the staged manifest and raises
+        :class:`CommitConflictError`; a won one indexes a staged
+        snapshot and moves the directory's pointers, under the commit
+        lock (already held when the flock arbitrates)."""
+        sid = snap["snapshot_id"]
+        if not self._swap_head(ref, token, snap):
+            if staged:
+                os.unlink(self._snap_path(sid))
+            raise CommitConflictError(
+                f"a concurrent commit won the pointer swap on ref {ref!r} "
+                f"during {'commit' if staged else 'fast-forward'}; re-read and retry"
+            )
+        with nullcontext() if self._FLOCK_ARBITRATES else self._commit_lock():
+            if staged:
+                # one appended line: per-commit index cost is O(1) and
+                # index readers never pay a per-manifest open
+                self._append_index_entries([self._index_entry(snap)])
+            self._set_branch_head(ref, sid)
 
     # ------------------------------------------------------------ writes
     def _write_data_files(self, df: DataFrame) -> list[str]:
@@ -1109,16 +1152,15 @@ class SnapshotTable:
         extra: dict,
         ref: str,
     ) -> int:
-        """The commit's critical section: decide the winner among racing
-        writers and swap the head. This base implementation arbitrates
-        with POSIX primitives (flock + O_EXCL link);
-        :class:`CatalogArbitratedTable` overrides it to route the same
-        decision through a pointer catalog's compare-and-swap — the
-        reference's own model (`CatalogMigrator.java:208-224` delegates
-        commit atomicity to the catalog)."""
-        with self._commit_lock():
+        """The commit's critical section, one protocol for both
+        arbiters: the parent check, a snapshot id and its exclusively
+        linked manifest, then the head move (``_move_head``). A catalog
+        arbiter's move is its compare-and-swap — the reference's own
+        model (`CatalogMigrator.java:208-224`)."""
+        with self._commit_lock() if self._FLOCK_ARBITRATES else nullcontext():
+            head, token = self._read_head(ref)
             # fast path: refuse before creating anything if the ref moved
-            if self.head(ref) != parent:
+            if head != parent:
                 raise CommitConflictError(
                     f"ref {ref!r} advanced past snapshot {parent} during "
                     "commit; re-read and retry"
@@ -1144,9 +1186,11 @@ class SnapshotTable:
             # os.link it into place: link is BOTH atomic (readers — who
             # take no lock — and crash recovery never observe a partial
             # manifest; history_ids globs only complete files) AND
-            # exclusive (EEXIST if a competing committer bypassed the
-            # flock, e.g. another host on a shared FS — a manifest id
-            # can never be silently overwritten)
+            # exclusive (EEXIST if a competing committer staged the id
+            # first: one that bypassed the flock, e.g. another host on a
+            # shared FS, or any racer under a catalog arbiter, which
+            # takes no flock — a manifest id can never be silently
+            # overwritten, and the caller's retry re-reads)
             doc = self._encoded_doc(snap, parent)
             tmp = self._snap_path(snapshot_id) + f".tmp.{os.getpid()}"
             with open(tmp, "w") as f:
@@ -1160,11 +1204,7 @@ class SnapshotTable:
                 ) from None
             finally:
                 os.unlink(tmp)
-            # index the commit while still inside the lock: one
-            # appended line, so per-commit index cost is O(1) and
-            # index readers never pay a per-manifest open
-            self._append_index_entries([self._index_entry(snap)])
-            self._set_branch_head(ref, snapshot_id)
+            self._move_head(ref, token, snap, staged=True)
         return snapshot_id
 
     def append(self, df: DataFrame, extra: dict | None = None, ref: str = MAIN) -> int:
@@ -3583,36 +3623,27 @@ class CatalogArbitratedTable(SnapshotTable):
     stores (where neither flock nor O_EXCL exists server-side) arbitrate
     every commit exactly this way.
 
-    Protocol per commit:
-
-    1. read the catalog's metadata pointer; its recorded snapshot id
-       must still equal the commit's parent (early conflict exit),
-    2. stage the manifest under a locally-unique id (``O_EXCL`` link
-       here; on a real object store: Iceberg's random snapshot ids +
-       uuid manifest names — uniqueness by construction),
-    3. write a NEW metadata doc (named by the snapshot id, so racers
-       never collide on a doc file) recording the new snapshot id,
-    4. CAS the catalog pointer from the old doc to the new one. The
-       catalog's transactional store lets exactly one racer through;
-       losers unlink their staged manifest + doc and raise
-       :class:`CommitConflictError`.
-
-    The authoritative head is the CATALOG pointer
-    (``current_snapshot_id`` reads it); ``snapshot-hint.text`` is
-    refreshed after a win as a best-effort convenience so plain
-    :class:`SnapshotTable` readers of the same path see (possibly
-    slightly stale, always consistent) state.
+    The commit protocol and ``fast_forward`` are :class:`SnapshotTable`'s;
+    this class supplies only what differs. A ref's head is the snapshot
+    id its catalog entry's doc records (``_read_head``). A head moves by
+    one ``swap_table_metadata_location`` to a candidate doc named by the
+    new id (``_swap_head``): the catalog's store lets exactly one racer
+    through, and a loser unlinks its staged manifest and the doc if it
+    created it. After a win the directory's own pointers are refreshed
+    best-effort (``_set_branch_head``) for plain readers and path-based
+    catalogs; the catalog pointer stays authoritative.
 
     **Branches are catalog entries too** — the Nessie model: each ref
     gets its own scope-partitioned pointer row (registered as
     ``<table>@<ref>``) that CASes independently, so write-audit-publish
     staging gets the same object-store-safe arbitration as main.
-    ``create_branch`` registers the entry, branch commits CAS it,
-    ``fast_forward("main", ref)`` publishes by CASing MAIN's entry, and
-    ``drop_ref`` retires the entry. Tags stay in ``refs.json``
-    (immutable pointers need no arbitration). A branch created through
-    a plain :class:`SnapshotTable` on the same path (refs.json only) is
-    still refused here — its commits aren't CAS-arbitrated."""
+    ``create_branch`` registers the entry, branch commits and
+    fast-forwards CAS it, and ``drop_ref`` retires the entry. Tags stay
+    in ``refs.json`` (immutable pointers need no arbitration). A branch
+    created through a plain :class:`SnapshotTable` on the same path
+    (refs.json only) is refused here — its head is not CAS-arbitrated."""
+
+    _FLOCK_ARBITRATES = False
 
     def __init__(self, spark: SparkSession, catalog, identifier):
         from ..catalog.base import read_table_metadata
@@ -3629,28 +3660,37 @@ class CatalogArbitratedTable(SnapshotTable):
         cls, spark: SparkSession, catalog, identifier, path: str, schema_ddl: str = ""
     ) -> "CatalogArbitratedTable":
         """Register an empty table (snapshot id 0 = none) and return it;
-        the first append commits through the CAS like every other."""
-        from ..catalog.base import write_table_metadata
-
-        meta = write_table_metadata(
-            path,
-            schema_ddl,
-            version=0,
-            properties={"snapshot-id": "0", "table-kind": "snapshot-table"},
+        the first append commits through the CAS like every other. The
+        v0 doc is created exclusively and ``version-hint.text`` moves
+        only after the register succeeded, so a refused create leaves
+        the table already at ``path`` or under ``identifier`` as it
+        was."""
+        from ..catalog.base import (
+            TableAlreadyExistsError,
+            write_table_metadata,
+            write_version_hint,
         )
-        catalog.register_table(identifier, meta)
+
+        try:
+            meta = write_table_metadata(
+                path,
+                schema_ddl,
+                version=0,
+                properties={"snapshot-id": "0", "table-kind": "snapshot-table"},
+                write_hint=False,
+            )
+        except FileExistsError:
+            raise TableAlreadyExistsError(
+                f"a table's metadata already lives at {path}"
+            ) from None
+        try:
+            catalog.register_table(identifier, meta)
+        except Exception:
+            os.unlink(meta)
+            raise
+        write_version_hint(path, 0)
         return cls(spark, catalog, identifier)
 
-    def current_snapshot_id(self) -> int | None:
-        from ..catalog.base import read_table_metadata
-
-        doc = read_table_metadata(
-            self.catalog.load_table_metadata_location(self.identifier)
-        )
-        sid = int(doc.get("properties", {}).get("snapshot-id", "0"))
-        return sid or None
-
-    # ---------------------------------------------- per-ref catalog entries
     def _ref_ident(self, ref: str):
         """The scope-partitioned catalog identifier arbitrating ``ref``:
         main is the table's own registration; every branch is its own
@@ -3664,20 +3704,29 @@ class CatalogArbitratedTable(SnapshotTable):
             name=f"{self.identifier.name}@{ref}",
         )
 
-    def _ref_entry_head(self, ref: str) -> int | None:
-        """Snapshot id recorded by a ref's catalog entry, or a
-        ``SnapshotError`` if the entry does not exist."""
+    def _read_head(self, ref: str) -> tuple[int | None, tuple[str, dict]]:
+        """The snapshot id ``ref``'s catalog entry records (the one
+        parse of a pointer doc's ``snapshot-id``) and the
+        ``(location, doc)`` its swap compares against. A branch without
+        an entry raises :class:`SnapshotError`."""
         from ..catalog.base import CatalogError, read_table_metadata
 
         try:
             loc = self.catalog.load_table_metadata_location(self._ref_ident(ref))
         except CatalogError:
+            if ref == MAIN:
+                raise
             raise SnapshotError(
-                f"branch {ref!r} has no catalog entry on this "
-                "catalog-arbitrated table; create_branch here first"
+                f"branch {ref!r} has no catalog entry arbitrating it; "
+                "create_branch on this CatalogArbitratedTable first (a "
+                "refs.json-only branch from a plain SnapshotTable is not "
+                "CAS-protected)"
             ) from None
         doc = read_table_metadata(loc)
-        return int(doc.get("properties", {}).get("snapshot-id", "0")) or None
+        return int(doc.get("properties", {}).get("snapshot-id", "0")) or None, (loc, doc)
+
+    def current_snapshot_id(self) -> int | None:
+        return self._read_head(MAIN)[0]
 
     def head(self, ref: str = MAIN) -> int | None:
         if ref == MAIN:
@@ -3685,45 +3734,75 @@ class CatalogArbitratedTable(SnapshotTable):
         from ..catalog.base import CatalogError
 
         try:
-            return self._ref_entry_head(ref)
-        except SnapshotError:
-            pass
-        except CatalogError:
-            pass
-        return super().head(ref)  # tags / plain-table branches
+            return self._read_head(ref)[0]
+        except (SnapshotError, CatalogError):
+            return super().head(ref)  # tags / plain-table branches
 
-    def _ddl_for_snap(self, snap: dict, fallback_ddl: str) -> str:
-        schemas = snap.get("schemas")
-        if not schemas:
-            return fallback_ddl
-        cur = _schema_by_id(schemas, snap["current_schema_id"])
-        return (
-            "struct<"
-            + ",".join(f"{f['name']}:{f['type']}" for f in cur["fields"])
-            + ">"
-        )
+    def _pointer_doc(self, ref: str, snap: dict, like: dict) -> tuple[str, bool]:
+        """The doc naming ``ref`` at ``snap`` — ``v<id>`` for main,
+        ``v<id>-<ref>`` for a branch — with the snapshot's schema and
+        ``like``'s table uuid (Iceberg's metadata model: the uuid is the
+        table's identity, not the commit's). Created exclusively: a doc
+        of that name already records that snapshot of that ref, so it
+        is reused, never rewritten. Returns its path and whether this
+        writer created it (a writer unlinks only its own)."""
+        from ..catalog.base import write_table_metadata
+
+        sid = snap["snapshot_id"]
+        version = sid if ref == MAIN else f"{sid}-{ref}"
+        ddl = like.get("schema-ddl") or ""
+        if snap.get("schemas"):
+            cur = _schema_by_id(snap["schemas"], snap["current_schema_id"])
+            ddl = "struct<" + ",".join(f"{f['name']}:{f['type']}" for f in cur["fields"]) + ">"
+        try:
+            return write_table_metadata(
+                self.path,
+                ddl,
+                version=version,
+                properties={"snapshot-id": str(sid), "table-kind": "snapshot-table"},
+                write_hint=False,
+                table_uuid=like.get("table-uuid"),
+            ), True
+        except FileExistsError:
+            return os.path.join(self._meta, f"v{version}.metadata.json"), False
+
+    def _swap_head(self, ref: str, token: tuple[str, dict], snap: dict) -> bool:
+        """One compare-and-swap of ``ref``'s catalog entry from the doc
+        it was read at to the doc naming ``snap``."""
+        old_loc, old_doc = token
+        new_loc, created = self._pointer_doc(ref, snap, old_doc)
+        if self.catalog.swap_table_metadata_location(self._ref_ident(ref), old_loc, new_loc):
+            return True
+        if created:
+            os.unlink(new_loc)
+        return False
+
+    def _set_branch_head(self, ref: str, snapshot_id: int) -> None:
+        """Refresh the directory's own pointers after a won swap —
+        refs.json for a branch; snapshot-hint and version-hint for main
+        (the hint names the doc that won, so path-based readers never
+        resolve a loser's unlinked doc). Best-effort: the catalog entry
+        already moved and stays the source of truth."""
+        from ..catalog.base import write_version_hint
+
+        try:
+            super()._set_branch_head(ref, snapshot_id)
+            if ref == MAIN:
+                write_version_hint(self.path, snapshot_id)
+        except OSError:
+            pass
 
     def create_branch(self, name: str, at: int | None = None) -> int:
         """Branch = a new catalog entry CASing independently of main
         (plus the refs.json row, so tags/plain readers stay coherent)."""
-        from ..catalog.base import read_table_metadata, write_table_metadata
-
         at = super().create_branch(name, at)
-        main_doc = read_table_metadata(
-            self.catalog.load_table_metadata_location(self.identifier)
-        )
-        meta = write_table_metadata(
-            self.path,
-            self._ddl_for_snap(self._load_snap(at), main_doc.get("schema-ddl") or ""),
-            version=f"{at}-{name}",  # distinct doc file per (id, ref)
-            properties={"snapshot-id": str(at), "table-kind": "snapshot-table"},
-            write_hint=False,
-            table_uuid=main_doc.get("table-uuid"),
-        )
+        _, (_, main_doc) = self._read_head(MAIN)
+        meta, created = self._pointer_doc(name, self._load_snap(at), main_doc)
         try:
             self.catalog.register_table(self._ref_ident(name), meta)
         except Exception:
-            os.unlink(meta)
+            if created:
+                os.unlink(meta)
             super().drop_ref(name)
             raise
         return at
@@ -3736,170 +3815,6 @@ class CatalogArbitratedTable(SnapshotTable):
             self.catalog.drop_table(self._ref_ident(name), purge=False)
         except CatalogError:
             pass  # a tag, or a plain-table branch with no entry
-
-    def _arbitrate_commit(
-        self,
-        files: list[str],
-        operation: str,
-        parent: int | None,
-        extra: dict,
-        ref: str,
-    ) -> int:
-        from ..catalog.base import read_table_metadata, write_table_metadata
-
-        ident = self._ref_ident(ref)
-        if ref != MAIN and not self.catalog.table_exists(ident):
-            raise SnapshotError(
-                f"branch {ref!r} has no catalog entry arbitrating it; "
-                "create_branch on this CatalogArbitratedTable first (a "
-                "refs.json-only branch from a plain SnapshotTable is not "
-                "CAS-protected)"
-            )
-        os.makedirs(self._meta, exist_ok=True)
-        old_loc = self.catalog.load_table_metadata_location(ident)
-        old_doc = read_table_metadata(old_loc)
-        cat_head = int(old_doc.get("properties", {}).get("snapshot-id", "0")) or None
-        if cat_head != parent:
-            raise CommitConflictError(
-                f"catalog pointer advanced past snapshot {parent} during "
-                "commit; re-read and retry"
-            )
-        # stage a manifest under a locally-free id; a racer holding an
-        # id just moves us to the next one — the CAS below, not this
-        # allocation, decides who wins
-        snapshot_id = (self.history_ids() or [0])[-1] + 1
-        if parent is not None and snapshot_id <= parent:
-            snapshot_id = parent + 1
-        while True:
-            snap = {
-                "snapshot_id": snapshot_id,
-                "parent": parent,
-                "timestamp_ms": int(time.time() * 1000),
-                "operation": operation,
-                "files": sorted(files),
-                **extra,
-            }
-            tmp = self._snap_path(snapshot_id) + f".tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(self._encoded_doc(snap, parent), f, indent=1)
-            try:
-                os.link(tmp, self._snap_path(snapshot_id))
-                os.unlink(tmp)
-                break
-            except FileExistsError:
-                os.unlink(tmp)
-                snapshot_id += 1
-        ddl = self._ddl_for_snap(extra, old_doc.get("schema-ddl") or "")
-        # stage the CANDIDATE doc without touching version-hint.text (a
-        # loser's unlink must not leave the hint dangling at a deleted
-        # doc for path-based HadoopCatalog readers) and with the
-        # table's STABLE uuid carried forward (Iceberg's metadata model:
-        # the uuid is the table's identity, not the commit's)
-        new_loc = write_table_metadata(
-            self.path,
-            ddl,
-            # doc file named by the unique (id, ref): no doc races, and
-            # a branch's doc never collides with main's for the same id
-            version=snapshot_id if ref == MAIN else f"{snapshot_id}-{ref}",
-            properties={
-                "snapshot-id": str(snapshot_id),
-                "table-kind": "snapshot-table",
-            },
-            write_hint=False,
-            table_uuid=old_doc.get("table-uuid"),
-        )
-        if not self.catalog.swap_table_metadata_location(
-            ident, old_loc, new_loc
-        ):
-            os.unlink(self._snap_path(snapshot_id))
-            os.unlink(new_loc)
-            raise CommitConflictError(
-                f"a concurrent commit won the catalog pointer swap on "
-                f"ref {ref!r}; re-read and retry"
-            )
-        self._finish_won_swap(snap, ref=ref)
-        return snapshot_id
-
-    def _finish_won_swap(self, snap: dict, ref: str = MAIN) -> None:
-        """Post-CAS-win bookkeeping: index the commit and refresh the
-        convenience hint files (refs.json for a branch win, so plain
-        readers of the same path resolve the branch too). The index
-        append takes the commit lock — same contract as the base path
-        (`_append_index_entries` requires it), so a concurrent healer
-        never interleaves a partial view; the swap already decided the
-        winner, the lock only serializes the file append."""
-        from ..catalog.base import write_version_hint
-
-        snapshot_id = snap["snapshot_id"]
-        with self._commit_lock():
-            # fast_forward publishes an ALREADY-indexed snapshot — skip
-            # the duplicate line; fresh commits are never present yet
-            if snapshot_id not in self._read_index_raw():
-                self._append_index_entries([self._index_entry(snap)])
-            if ref != MAIN:
-                # mirror the branch head into refs.json (best-effort
-                # convenience — the catalog entry stays authoritative)
-                refs = self._load_refs()
-                refs["branches"][ref] = snapshot_id
-                self._store_refs(refs)
-                return
-        # best-effort hint refreshes for plain readers of the same path
-        # (snapshot-hint) and path-based catalog resolution
-        # (version-hint, deferred until after the win so it always
-        # points at a live doc); the catalog pointer stays the single
-        # source of truth
-        try:
-            self._set_branch_head(MAIN, snapshot_id)
-            write_version_hint(self.path, snapshot_id)
-        except OSError:
-            pass
-
-    def fast_forward(self, ref: str, to_ref: str) -> int:
-        """Publish through the catalog: a ref's head IS its catalog
-        entry here (main's registration, or a branch's ``@ref`` row),
-        so a fast-forward must move that entry via the same
-        compare-and-swap commits use — the base implementation's
-        hint/refs.json move would silently not take effect (``head()``
-        keeps reading the old id from the catalog) and the next CAS
-        commit off the stale head would drop the published state. A
-        refs.json-only branch (created through a plain table) still
-        rides the base path."""
-        from ..catalog.base import read_table_metadata, write_table_metadata
-
-        if ref != MAIN and not self.catalog.table_exists(self._ref_ident(ref)):
-            return super().fast_forward(ref, to_ref)
-        self._check_writable_ref(ref)
-        ident = self._ref_ident(ref)
-        old_loc = self.catalog.load_table_metadata_location(ident)
-        old_doc = read_table_metadata(old_loc)
-        src = int(old_doc.get("properties", {}).get("snapshot-id", "0")) or None
-        dst = self.head(to_ref)
-        if dst is None:
-            raise SnapshotError(f"ref {to_ref!r} has no head")
-        if src == dst:
-            return dst
-        if src is not None and not self.is_ancestor(src, dst):
-            raise SnapshotError(
-                f"{ref!r} (at {src}) is not a provable ancestor of "
-                f"{to_ref!r} (at {dst}): not a fast-forward"
-            )
-        dst_snap = self._load_snap(dst)
-        new_loc = write_table_metadata(
-            self.path,
-            self._ddl_for_snap(dst_snap, old_doc.get("schema-ddl") or ""),
-            version=dst if ref == MAIN else f"{dst}-{ref}",
-            properties={"snapshot-id": str(dst), "table-kind": "snapshot-table"},
-            write_hint=False,
-            table_uuid=old_doc.get("table-uuid"),
-        )
-        if not self.catalog.swap_table_metadata_location(ident, old_loc, new_loc):
-            os.unlink(new_loc)
-            raise CommitConflictError(
-                f"a concurrent commit moved the catalog pointer of "
-                f"{ref!r} during fast-forward; re-read and retry"
-            )
-        self._finish_won_swap(dst_snap, ref=ref)
-        return dst
 
 
 def snapshot_table_from_catalog(spark: SparkSession, catalog, identifier) -> SnapshotTable:

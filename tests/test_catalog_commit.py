@@ -59,11 +59,22 @@ def test_cas_commit_roundtrip(spark, catalog, tmp_path):
     assert plain.read().count() == tbl.read().count()
 
 
-def test_cas_commit_detects_stale_parent(spark, catalog, tmp_path):
+#: the two commit arbiters over the one commit protocol
+ARBITERS = pytest.mark.parametrize("arbiter", ["catalog", "file"])
+
+
+def _open(arbiter, spark, catalog, path):
+    """An empty table whose head moves through ``arbiter``: the
+    catalog's pointer swap, or the plain table's flock and hint file."""
+    if arbiter == "catalog":
+        return CatalogArbitratedTable.create(spark, catalog, IDENT, path)
+    return SnapshotTable(spark, path)
+
+
+@ARBITERS
+def test_cas_commit_detects_stale_parent(spark, catalog, tmp_path, arbiter):
     even, odd = halves(spark)
-    tbl = CatalogArbitratedTable.create(
-        spark, catalog, IDENT, str(tmp_path / "tbl")
-    )
+    tbl = _open(arbiter, spark, catalog, str(tmp_path / "tbl"))
     tbl.append(even)
     stale_parent = tbl.current_snapshot_id()
     tbl.append(odd)  # someone else advances the pointer
@@ -72,33 +83,60 @@ def test_cas_commit_detects_stale_parent(spark, catalog, tmp_path):
         tbl._commit(files, "append", stale_parent)
 
 
-def test_cas_loser_swap_leaves_no_trace(spark, catalog, tmp_path):
-    """Force the CAS itself to lose (pointer moves between the parent
-    check and the swap): the staged manifest and doc are cleaned up and
-    the winner's state is untouched."""
+@ARBITERS
+def test_cas_loser_swap_leaves_no_trace(spark, catalog, tmp_path, arbiter):
+    """Force the head move itself to lose (another writer commits
+    between the parent check and the swap): the staged manifest and doc
+    are cleaned up and the winner's state is untouched. Under the
+    catalog the winner commits from inside the swap; under the file
+    arbiter it is a writer on another host, whose flock does not
+    travel, linking the loser's manifest id first."""
+    import contextlib
+    import glob
+    import os
+
     even, odd = halves(spark)
-    tbl = CatalogArbitratedTable.create(
-        spark, catalog, IDENT, str(tmp_path / "tbl")
-    )
+    tbl = _open(arbiter, spark, catalog, str(tmp_path / "tbl"))
     tbl.append(even)
     parent = tbl.current_snapshot_id()
     files = tbl._load_snap(parent)["files"]
 
-    real_swap = catalog.swap_table_metadata_location
-    winner = CatalogArbitratedTable(spark, catalog, IDENT)
+    if arbiter == "catalog":
+        real_swap = catalog.swap_table_metadata_location
+        winner = CatalogArbitratedTable(spark, catalog, IDENT)
 
-    def hijack(identifier, expected, new):
-        # another writer wins right before our swap
-        catalog.swap_table_metadata_location = real_swap
-        winner.append(odd.limit(5))
-        return real_swap(identifier, expected, new)
+        def hijack(identifier, expected, new):
+            # another writer wins right before our swap
+            catalog.swap_table_metadata_location = real_swap
+            winner.append(odd.limit(5))
+            return real_swap(identifier, expected, new)
 
-    catalog.swap_table_metadata_location = hijack
-    with pytest.raises(CommitConflictError, match="pointer swap"):
+        catalog.swap_table_metadata_location = hijack
+        lost = "pointer swap"
+    else:
+        winner = SnapshotTable(spark, tbl.path)
+        winner._commit_lock = contextlib.nullcontext
+        real_encode = tbl._encoded_doc
+
+        def hijack(snap, base):
+            # another host commits right before our manifest link
+            tbl._encoded_doc = real_encode
+            winner.append(odd.limit(5))
+            return real_encode(snap, base)
+
+        tbl._encoded_doc = hijack
+        lost = "already exists"
+    docs = set(glob.glob(os.path.join(tbl.path, "metadata", "v*.metadata.json")))
+    with pytest.raises(CommitConflictError, match=lost):
         tbl._commit(files, "append", parent)
     # loser's staged manifest gone; history = [parent, winner's commit]
     assert tbl.history_ids() == [parent, winner.current_snapshot_id()]
     assert tbl.current_snapshot_id() == winner.current_snapshot_id()
+    assert not glob.glob(os.path.join(tbl.path, "metadata", "*.tmp.*"))
+    if arbiter == "catalog":
+        # the only new doc is the winner's
+        new_docs = set(glob.glob(os.path.join(tbl.path, "metadata", "v*.metadata.json"))) - docs
+        assert new_docs == {catalog.load_table_metadata_location(IDENT)}
 
 
 def test_cas_branch_commits_through_per_ref_entry(spark, catalog, tmp_path):
@@ -311,15 +349,19 @@ def test_cas_fast_forward_publishes_through_catalog(spark, catalog, tmp_path):
     assert tbl._load_snap(s3)["parent"] == s2
 
 
-def test_cas_fast_forward_refuses_divergence_and_race(spark, catalog, tmp_path):
+@ARBITERS
+def test_cas_fast_forward_refuses_divergence_and_race(spark, catalog, tmp_path, arbiter):
     even, odd = halves(spark)
-    tbl = CatalogArbitratedTable.create(spark, catalog, IDENT, str(tmp_path / "tbl"))
+    tbl = _open(arbiter, spark, catalog, str(tmp_path / "tbl"))
     tbl.append(even)
     tbl.create_branch("audit")
     tbl.append(odd.limit(5), ref="audit")
-    tbl.append(odd.limit(3))  # main advances too: branches diverge
+    main = tbl.append(odd.limit(3))  # main advances too: branches diverge
     with pytest.raises(SnapshotError, match="not a fast-forward"):
         tbl.fast_forward("main", "audit")
+    assert tbl.current_snapshot_id() == main
+    if arbiter == "file":
+        return  # under its flock the file arbiter's move cannot lose a race
     # now a fast-forwardable state, but the CAS loses the race
     tbl2 = CatalogArbitratedTable.create(
         spark, catalog, TableIdentifier.of("lake", "orders_cas2"), str(tmp_path / "t2")
@@ -363,3 +405,99 @@ def test_commit_index_heal_tolerates_vanished_staged_manifest(spark, catalog, tm
     finally:
         type(tbl).history_ids = orig_history_ids
     assert sorted(idx) == real_ids  # phantom skipped, live ids healed
+
+
+def _arrow_files(path, lo, hi):
+    """One data file of keys ``[lo, hi)`` written with pyarrow (no
+    Spark), as a path relative to the table."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(path, "data"), exist_ok=True)
+    rel = f"data/k-{lo}-{hi}.parquet"
+    pq.write_table(pa.table({"k": list(range(lo, hi))}), os.path.join(path, rel))
+    return [rel]
+
+
+def test_refused_create_leaves_the_existing_table_untouched(catalog, tmp_path):
+    """``create`` on a taken identifier must not rewrite the live
+    table's v0 doc or move its version hint: a path-based catalog
+    reading the directory still resolves the committed head."""
+    import os
+
+    from iceberg_catalog_migrator_spark.catalog import HadoopCatalog
+    from iceberg_catalog_migrator_spark.catalog.base import (
+        METADATA_DIR,
+        VERSION_HINT,
+        TableAlreadyExistsError,
+        read_table_metadata,
+    )
+
+    path = str(tmp_path / "wh" / "lake" / "orders_cas")
+    tbl = CatalogArbitratedTable.create(None, catalog, IDENT, path)
+    files, head = [], None
+    for i in range(3):
+        files = files + _arrow_files(path, 10 * i, 10 * i + 10)
+        head = tbl._commit(files, "append", head)
+    meta = os.path.join(path, METADATA_DIR)
+    v0 = read_table_metadata(os.path.join(meta, "v0.metadata.json"))
+    with pytest.raises(TableAlreadyExistsError):
+        CatalogArbitratedTable.create(None, catalog, IDENT, path, "struct<x:int>")
+    with open(os.path.join(meta, VERSION_HINT)) as f:
+        assert f.read().strip() == str(head)
+    assert read_table_metadata(os.path.join(meta, "v0.metadata.json")) == v0
+    hadoop = HadoopCatalog("h", str(tmp_path / "wh"))
+    doc = read_table_metadata(hadoop.load_table_metadata_location(IDENT))
+    assert doc["properties"]["snapshot-id"] == str(head)
+    # same identifier at a fresh path: the register refuses and the
+    # writer removes the doc it created, and only that
+    other = str(tmp_path / "other")
+    with pytest.raises(TableAlreadyExistsError):
+        CatalogArbitratedTable.create(None, catalog, IDENT, other)
+    assert os.listdir(os.path.join(other, METADATA_DIR)) == []
+    assert tbl.current_snapshot_id() == head
+
+
+class _StaleMainReads:
+    """A catalog whose reads of main's pointer stay at ``loc`` — a
+    handle that read the pointer before another writer's swap."""
+
+    def __init__(self, catalog, loc):
+        self._catalog, self._loc = catalog, loc
+
+    def load_table_metadata_location(self, ident):
+        if ident == IDENT:
+            return self._loc
+        return self._catalog.load_table_metadata_location(ident)
+
+    def __getattr__(self, name):
+        return getattr(self._catalog, name)
+
+
+def test_stale_fast_forward_loser_keeps_the_winners_doc(catalog, tmp_path):
+    """Two handles fast-forward main to the audited branch; the one
+    whose pointer read is stale loses, and must leave the winner's
+    ``v<dst>`` doc — the doc the catalog pointer now names — in place."""
+    import os
+
+    from iceberg_catalog_migrator_spark.catalog.base import read_table_metadata
+
+    path = str(tmp_path / "tbl")
+    tbl = CatalogArbitratedTable.create(None, catalog, IDENT, path)
+    s1 = tbl._commit(_arrow_files(path, 0, 10), "append", None)
+    tbl.create_branch("audit")
+    s2 = tbl._commit(
+        tbl._load_snap(s1)["files"] + _arrow_files(path, 10, 20), "append", s1, ref="audit"
+    )
+    stale = catalog.load_table_metadata_location(IDENT)
+    a = CatalogArbitratedTable(None, catalog, IDENT)
+    b = CatalogArbitratedTable(None, _StaleMainReads(catalog, stale), IDENT)
+    assert a.fast_forward("main", "audit") == s2
+    with pytest.raises(CommitConflictError):
+        b.fast_forward("main", "audit")
+    loc = catalog.load_table_metadata_location(IDENT)
+    assert os.path.isfile(loc), "the catalog pointer names a deleted doc"
+    assert read_table_metadata(loc)["properties"]["snapshot-id"] == str(s2)
+    assert a.current_snapshot_id() == s2
