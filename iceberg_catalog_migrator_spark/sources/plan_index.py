@@ -55,8 +55,11 @@ index doc that was fresh (:func:`restamp`). Planning only reads: a
 snapshot with no fresh doc (committed before commits wrote one, or its
 doc rewritten with other content or lost) plans through the manifest
 dict until the next commit indexes its successor.
-``expire_snapshots`` unlinks index docs with their snapshots and
-garbage-collects segments no retained index references.
+Segments are shared across index docs, so what a snapshot's index
+keeps is its doc plus the segments the doc names (:func:`index_files`),
+one part of the table's reachable set (``snapshots._reachable``):
+expiry unlinks the docs and segments only expired snapshots reach, and
+the vacuum sweeps any no retained snapshot reaches.
 
 Reference anchor: the reference migrates a metadata POINTER
 (`CatalogMigrator.java:212-213`); this module keeps the pointer's
@@ -109,15 +112,10 @@ _STRUCTURAL_SCALARS = (
 
 def sidecar_path(table_path: str, snapshot_id: int) -> str:
     """The per-snapshot index DOC (v3: JSON; the name is kept from the
-    single-parquet v2 era — tests and expiry address the index by it)."""
+    single-parquet v2 era, whose ``.parquet`` sidecars nothing reads:
+    the vacuum sweeps them as unreachable)."""
     return os.path.join(
         table_path, "metadata", f"plan-index-{snapshot_id}.json"
-    )
-
-
-def _legacy_sidecar(table_path: str, snapshot_id: int) -> str:
-    return os.path.join(
-        table_path, "metadata", f"plan-index-{snapshot_id}.parquet"
     )
 
 
@@ -521,13 +519,12 @@ def advance_plan_index(table_path: str, snapshot_id: int, raw: dict) -> dict | N
         k in raw
         for k in ("partition_spec", "partition_specs", "current_spec_id")
     ):
-        specs = raw.get("partition_specs") or (
-            [{"spec_id": 0, "spec": [list(p) for p in raw["partition_spec"]]}]
-            if raw.get("partition_spec")
-            else (part_meta or {}).get("specs") or []
-        )
+        specs = raw.get("partition_specs")
         if not specs:
-            return None  # spec state unclear: the full build decides
+            # the spec moved but its list did not (an existing spec
+            # re-selected, or a table from before spec ids): only the
+            # resolved manifest says which spec each id names
+            return None
         part_meta = {
             "specs": [{**s, "spec": [list(p) for p in s["spec"]]} for s in specs],
             "current_spec_id": raw.get(
@@ -730,43 +727,17 @@ def index_commit(table_path: str, snapshot_id: int) -> None:
         pass
 
 
-def drop_plan_index(table_path: str, snapshot_id: int) -> None:
-    """Unlink a snapshot's index doc (and any pre-v3 single-parquet
-    sidecar). Shared segments are garbage-collected separately by
-    :func:`gc_plan_segments` once no retained doc references them."""
-    for p in (
-        sidecar_path(table_path, snapshot_id),
-        _legacy_sidecar(table_path, snapshot_id),
-    ):
-        try:
-            os.unlink(p)
-        except OSError:
-            pass
-
-
-def gc_plan_segments(table_path: str) -> int:
-    """Unlink segments referenced by NO index doc — expiry's cleanup
-    pass. O(index docs + segments), all metadata-sized."""
-    import glob
-
-    meta_dir = os.path.join(table_path, "metadata")
-    referenced: set[str] = set()
-    for doc_path in glob.glob(os.path.join(meta_dir, "plan-index-*.json")):
-        try:
-            with open(doc_path) as f:
-                doc = json.load(f)
-            referenced.update(s["name"] for s in doc.get("segments", []))
-        except (OSError, json.JSONDecodeError, TypeError, KeyError):
-            continue
-    dropped = 0
-    for seg in glob.glob(os.path.join(meta_dir, "plan-seg-*.parquet")):
-        if os.path.basename(seg) not in referenced:
-            try:
-                os.unlink(seg)
-                dropped += 1
-            except OSError:
-                pass
-    return dropped
+def index_files(table_path: str, snapshot_id: int) -> list[str]:
+    """The table-relative files a snapshot's index keeps: its doc and
+    the segments the doc names; none when the snapshot has no readable
+    doc of the current format — planning never reads such a doc."""
+    doc = _read_doc(table_path, snapshot_id)
+    if doc is None:
+        return []
+    return [
+        os.path.relpath(sidecar_path(table_path, snapshot_id), table_path),
+        *(os.path.join("metadata", s["name"]) for s in doc["segments"]),
+    ]
 
 
 # ------------------------------------------------------------ plan reads

@@ -38,8 +38,8 @@ Design rules, all load-bearing at scale:
   (``CatalogMigrator.java:208-224`` registers through the catalog's
   own atomic commit).
 - **Expiry never breaks retained history.** ``expire_snapshots`` drops
-  the oldest manifests and deletes only data files unreferenced by
-  every retained snapshot; reads of retained snapshots are untouched
+  the oldest manifests and deletes only files no retained snapshot
+  reaches (``_reachable``); reads of retained snapshots are untouched
   and a read of an expired one fails with the retention hint.
 """
 
@@ -872,6 +872,17 @@ class SnapshotTable:
         """Swap ``ref``'s head from ``token`` to ``snap``; whether it won."""
         return True
 
+    # What the vacuum lists (globs under the table; ``_stage_*`` are
+    # writers' staging dirs) and the pointer docs a snapshot reaches.
+    # A plain table lists and keeps no pointer doc: the catalog that
+    # names ``register_in_catalog``'s doc is one it cannot see.
+    _LISTED = ("data/*", "metadata/stats/*", "metadata/plan-index-*", "metadata/plan-seg-*", "_stage_*")
+
+    def _pointer_docs(self, ids: set[int]) -> set[str]:
+        """The pointer docs snapshots ``ids`` reach (``_reachable``'s
+        arbiter hook), table-relative."""
+        return set()
+
     def _move_head(self, ref: str, token, snap: dict, staged: bool) -> None:
         """Move ``ref``'s head to ``snap``: a manifest this commit
         ``staged``, or a committed one a fast-forward adopts. A lost
@@ -1561,17 +1572,20 @@ class SnapshotTable:
     def expire_snapshots(
         self, keep_last: int = 1, older_than_ms: int | None = None
     ) -> dict:
-        """Drop expirable snapshots; delete data AND delete files no
-        retained snapshot references. Retention is the union of two
-        rules (Iceberg's expire_snapshots shape): the newest
-        ``keep_last`` always stay, and with ``older_than_ms`` set, any
-        snapshot committed at or after that timestamp stays too.
-        Runs under the commit lock: expiry races neither a commit (the
-        id it is about to retire cannot be re-linked) nor another
-        expiry, and the commit index is compacted in the same critical
-        section so index readers never see an expired id as live.
+        """Drop expirable snapshots and unlink the one reachable set
+        (:func:`_reachable`) of the expired ids minus that of the
+        retained: data and delete files, statistics puffins, manifests,
+        plan-index docs and segments, and an arbiter's pointer docs.
+        Retention is the union of two rules (Iceberg's expire_snapshots
+        shape): the newest ``keep_last`` always stay, and with
+        ``older_than_ms`` set, any snapshot committed at or after that
+        timestamp stays too; every ref's ``head`` stays as well. Runs
+        under the commit lock: expiry races neither a commit (the id it
+        is about to retire cannot be re-linked) nor another expiry, and
+        the commit index is compacted in the same critical section so
+        index readers never see an expired id as live.
 
-        Returns a summary."""
+        Returns a summary; ``removed_files`` counts the files unlinked."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         with self._commit_lock():
@@ -1579,17 +1593,14 @@ class SnapshotTable:
 
     def _expire_locked(self, keep_last: int, older_than_ms: int | None) -> dict:
         ids = self.history_ids()
+        young: set[int] = set()
         if older_than_ms is not None:
-            idx = {
-                i: e
-                for i, e in self._read_index_raw().items()
-                if i in set(ids)
-            }
+            # timestamps come from the index when it has the id — zero
+            # manifest opens on an indexed table
+            idx = self._read_index_raw()
             young = {
                 i
                 for i in ids
-                # timestamps come from the index when it has the id —
-                # zero manifest opens on an indexed table
                 if (
                     idx[i]["timestamp_ms"]
                     if i in idx
@@ -1597,16 +1608,19 @@ class SnapshotTable:
                 )
                 >= older_than_ms
             }
-        else:
-            young = set()
         # ref heads (branches AND tags) are pinned: expiring a named
         # pointer's snapshot out from under it would break every read
         # through that ref. Their ancestor chains may expire — refs
-        # resolve to a snapshot, not a chain.
+        # resolve to a snapshot, not a chain. A head is what the
+        # arbiter reads (a catalog entry may be ahead of its refs.json
+        # row), not the row.
         refs = self.refs()
-        pinned = set(refs["branches"].values()) | set(refs["tags"].values()) | young
+        pinned = {self.head(r) for r in [*refs["branches"], *refs["tags"]]} | young
         expire = [i for i in ids[:-keep_last] if i not in pinned]
-        retain = sorted(set(ids[-keep_last:]) | (pinned & set(ids)))
+        expire_set = set(expire)
+        retain = [i for i in ids if i not in expire_set]
+        if not expire:
+            return {"expired_snapshots": 0, "removed_files": 0, "retained": retain}
         # a retained DELTA manifest whose base chain passes through an
         # expiring id must be materialized to full form FIRST (resolve
         # while the chain is intact, then atomically replace — content
@@ -1614,7 +1628,6 @@ class SnapshotTable:
         # It suffices to rebase manifests whose direct base expires:
         # bases always have smaller ids, so every deeper retained link
         # is itself either full or rebased by this same loop.
-        expire_set = set(expire)
         for rid in retain:
             try:
                 with open(self._snap_path(rid)) as f:
@@ -1623,52 +1636,27 @@ class SnapshotTable:
                 continue
             if raw.get("delta_base") in expire_set:
                 self._rebase_to_full(rid)
-        keep_files = set()
-        for sid in retain:
-            snap = self._load_snap(sid)
-            # delete files (equality AND positional) are referenced via
-            # their own manifest keys, not "files" — a retained
-            # snapshot's delete files are as load-bearing as its data
-            # files (dropping one silently resurrects deleted rows on
-            # the read path)
-            keep_files.update(snap["files"])
-            keep_files.update(snap.get("deletes", []))
-            keep_files.update(snap.get("pos_deletes", []))
-        # resolve EVERY expiring manifest before unlinking ANY: an
+        # both sets resolve EVERY manifest before ANY unlink: an
         # expiring delta whose base is also expiring would otherwise
-        # become unresolvable mid-loop in a cold process (ascending
-        # unlink order removes the base first; the in-process memo
-        # only masks this when it happens to be warm), aborting expiry
-        # half-done — manifests gone, index never compacted
-        resolved_expire = {sid: self._load_snap(sid) for sid in expire}
+        # become unresolvable mid-way in a cold process, aborting
+        # expiry half-done — manifests gone, index never compacted
+        doomed = _reachable(self, expire) - _reachable(self, retain)
         removed_files = 0
-        for sid in expire:
-            snap = resolved_expire[sid]
-            for f in snap["files"] + snap.get("deletes", []) + snap.get("pos_deletes", []):
-                if f not in keep_files:
-                    target = os.path.join(self.path, f)
-                    if os.path.exists(target):
-                        os.unlink(target)
-                        removed_files += 1
-            os.unlink(self._snap_path(sid))
-            # the columnar plan-index doc dies with its snapshot
-            from .plan_index import drop_plan_index
-
-            drop_plan_index(self.path, sid)
-        if expire:
-            # segments are SHARED across snapshot indexes (Iceberg's
-            # manifest reuse): unlink only the ones no retained index
-            # doc still references
-            from .plan_index import gc_plan_segments
-
-            gc_plan_segments(self.path)
-        if expire and os.path.exists(self._index_path()):
+        # manifests first: a crash part-way leaves only files no
+        # snapshot reaches, which the vacuum sweeps
+        for rel in sorted(doomed, key=lambda r: not r.startswith("metadata/snap-")):
+            try:
+                os.unlink(os.path.join(self.path, rel))
+                removed_files += 1
+            except FileNotFoundError:
+                pass
+        if os.path.exists(self._index_path()):
             # compact the index to the retained ids: rewrite-and-replace
             # (atomic), still under the lock taken by expire_snapshots
             kept = [
                 e
                 for i, e in sorted(self._read_index_raw().items())
-                if i not in set(expire)
+                if i not in expire_set
             ]
             tmp = self._index_path() + f".tmp.{os.getpid()}"
             with open(tmp, "w") as f:
@@ -3641,9 +3629,15 @@ class CatalogArbitratedTable(SnapshotTable):
     fast-forwards CAS it, and ``drop_ref`` retires the entry. Tags stay
     in ``refs.json`` (immutable pointers need no arbitration). A branch
     created through a plain :class:`SnapshotTable` on the same path
-    (refs.json only) is refused here — its head is not CAS-arbitrated."""
+    (refs.json only) is refused here — its head is not CAS-arbitrated.
+
+    **Pointer docs go with their snapshot** (the one it records, read
+    from the doc, not its name): expiry unlinks only the docs recording
+    an expired snapshot, never ``v0`` or a doc a ref entry names. In
+    register mode a second catalog may still name such a doc."""
 
     _FLOCK_ARBITRATES = False
+    _LISTED = (*SnapshotTable._LISTED, "metadata/v*.metadata.json")
 
     def __init__(self, spark: SparkSession, catalog, identifier):
         from ..catalog.base import read_table_metadata
@@ -3780,17 +3774,43 @@ class CatalogArbitratedTable(SnapshotTable):
     def _set_branch_head(self, ref: str, snapshot_id: int) -> None:
         """Refresh the directory's own pointers after a won swap —
         refs.json for a branch; snapshot-hint and version-hint for main
-        (the hint names the doc that won, so path-based readers never
-        resolve a loser's unlinked doc). Best-effort: the catalog entry
-        already moved and stays the source of truth."""
-        from ..catalog.base import write_version_hint
+        (the hint names a doc that won, so path-based readers never
+        resolve a loser's unlinked doc). They take the head the catalog
+        names under the commit lock, not ``snapshot_id``: a racer may
+        win the next swap before this writer takes the lock, and the
+        pointers never move back. Best-effort: the catalog entry stays
+        the source of truth."""
+        from ..catalog.base import CatalogError, write_version_hint
 
         try:
-            super()._set_branch_head(ref, snapshot_id)
+            head = self._read_head(ref)[0]
+            super()._set_branch_head(ref, head)
             if ref == MAIN:
-                write_version_hint(self.path, snapshot_id)
-        except OSError:
+                write_version_hint(self.path, head)
+        except (CatalogError, SnapshotError, OSError):
             pass
+
+    def _pointer_docs(self, ids: set[int]) -> set[str]:
+        """``v0``, the doc each ref entry names, and every pointer doc
+        recording a snapshot in ``ids``."""
+        from ..catalog.base import CatalogError
+
+        docs = {os.path.join("metadata", "v0.metadata.json")}
+        for ref in [MAIN, *self._load_refs()["branches"]]:
+            try:
+                loc = self.catalog.load_table_metadata_location(self._ref_ident(ref))
+            except CatalogError:
+                continue  # a plain-table branch with no entry
+            docs.add(os.path.relpath(loc, self.path))
+        for p in glob.glob(os.path.join(self._meta, "v*.metadata.json")):
+            try:
+                with open(p) as f:
+                    sid = int(json.load(f)["properties"]["snapshot-id"])
+            except (OSError, ValueError, KeyError, TypeError):
+                continue
+            if sid in ids:
+                docs.add(os.path.relpath(p, self.path))
+        return docs
 
     def create_branch(self, name: str, at: int | None = None) -> int:
         """Branch = a new catalog entry CASing independently of main
@@ -4182,64 +4202,71 @@ def partition_pruned_scan(
     return _read_plan(table, sid, plan, exact), summary
 
 
+def _reachable(table: SnapshotTable, ids: list[int]) -> set[str]:
+    """Every file snapshots ``ids`` reach, as table-relative paths —
+    the one reachable set expiry, the vacuum and the maintenance
+    advisor take differences of. Per snapshot: its data and delete
+    files (equality AND positional — a retained snapshot's delete files
+    are as load-bearing as its data files), its table and partition
+    statistics puffins, its manifest, and its plan-index doc with the
+    segments the doc names; plus the arbiter's pointer docs for ``ids``
+    (``_pointer_docs``). Resolves every manifest it is given."""
+    from .plan_index import index_files
+
+    out: set[str] = set()
+    for sid in ids:
+        snap = table._load_snap(sid)
+        out.update(snap["files"], snap.get("deletes", ()), snap.get("pos_deletes", ()))
+        for key in ("table_stats", "partition_stats"):
+            if snap.get(key):
+                out.add(snap[key]["path"])
+        out.add(os.path.relpath(table._snap_path(sid), table.path))
+        out.update(index_files(table.path, sid))
+    return out | table._pointer_docs(set(ids))
+
+
+def _orphans(table: SnapshotTable, min_age_sec: float) -> list[str]:
+    """The paths the table lists (``_LISTED``) that no retained
+    snapshot reaches (:func:`_reachable` over ``history_ids``), at
+    least ``min_age_sec`` old, sorted — what :func:`vacuum_orphans`
+    removes and :func:`plan_maintenance` counts. The age guard protects
+    in-flight writers, whose files exist before their manifest does."""
+    listed = [
+        os.path.relpath(p, table.path)
+        for pat in table._LISTED
+        for p in glob.glob(os.path.join(table.path, pat))
+    ]
+    reachable = _reachable(table, table.history_ids())
+    now = time.time()
+    return sorted(
+        rel
+        for rel in listed
+        if rel not in reachable
+        and now - os.path.getmtime(os.path.join(table.path, rel)) >= min_age_sec
+    )
+
+
 def vacuum_orphans(table: SnapshotTable, min_age_sec: float = 3600.0) -> dict:
-    """Delete data files and stage directories referenced by NO
-    snapshot — the debris a crash between staging and commit leaves
-    behind. ``min_age_sec`` protects in-flight writers: anything
-    younger stays (a concurrent append's files exist on disk before
-    their manifest does — deleting them would corrupt its commit).
-    Manifests are the source of truth; nothing referenced is ever
+    """Remove every listed file no retained snapshot reaches
+    (:func:`_orphans`: listed minus the one reachable set, under the
+    age guard) — the debris a crash between staging and commit leaves
+    behind (data files, ``_stage_*`` dirs), and what an interrupted
+    expiry, a dropped index doc or a pre-v3 index sidecar leaves
+    (puffins, index docs, segments, an arbiter's pointer docs).
+    ``min_age_sec`` protects in-flight writers: anything younger stays.
+    Manifests are the source of truth; nothing reachable is ever
     touched, so vacuum composes safely with expiry, time travel, and
     rollback."""
-    now = time.time()
-    referenced = set()
-    stats_referenced = set()
-    for sid in table.history_ids():
-        snap = table._load_snap(sid)
-        referenced.update(snap["files"])
-        # equality-delete files live under data/ too but are referenced
-        # only via the "deletes"/"pos_deletes" manifest keys — missing
-        # them here would unlink LIVE delete files as "orphans" and
-        # resurrect deleted rows (or break read_with_deletes with
-        # path-not-found)
-        referenced.update(snap.get("deletes", []))
-        referenced.update(snap.get("pos_deletes", []))
-        ts = snap.get("table_stats")
-        if ts:
-            stats_referenced.add(os.path.basename(ts["path"]))
-        ps = snap.get("partition_stats")
-        if ps:
-            stats_referenced.add(os.path.basename(ps["path"]))
-    removed = []
-    if os.path.isdir(table._data):
-        for name in os.listdir(table._data):
-            rel = os.path.join("data", name)
-            full = os.path.join(table._data, name)
-            if rel in referenced:
-                continue
-            if now - os.path.getmtime(full) < min_age_sec:
-                continue
+    removed, stages = [], 0
+    for rel in _orphans(table, min_age_sec):
+        full = os.path.join(table.path, rel)
+        if os.path.isdir(full):  # a crashed writer's stage dir
+            shutil.rmtree(full, ignore_errors=True)
+            stages += 1
+        else:
             os.unlink(full)
             removed.append(rel)
-    # statistics puffins whose recording snapshot expired are orphans
-    # too (same age guard — a concurrent record_table_statistics
-    # writes the puffin before its commit lands)
-    stats_dir = os.path.join(table._meta, "stats")
-    if os.path.isdir(stats_dir):
-        for name in os.listdir(stats_dir):
-            if name in stats_referenced:
-                continue
-            full = os.path.join(stats_dir, name)
-            if now - os.path.getmtime(full) < min_age_sec:
-                continue
-            os.unlink(full)
-            removed.append(os.path.join("metadata", "stats", name))
-    stages_removed = 0
-    for stage in glob.glob(os.path.join(table.path, "_stage_*")):
-        if now - os.path.getmtime(stage) >= min_age_sec:
-            shutil.rmtree(stage, ignore_errors=True)
-            stages_removed += 1
-    return {"removed_files": sorted(removed), "removed_stages": stages_removed}
+    return {"removed_files": removed, "removed_stages": stages}
 
 
 def rewrite_small_files(
@@ -4361,6 +4388,11 @@ def plan_maintenance(
     cadence; this keeps the decision O(metadata) — per-file sizes come
     from one ``data/`` directory listing, never a data read.
 
+    ``n_orphan_files`` counts :func:`_orphans` — the listed files and
+    stage dirs no retained snapshot reaches, past ``min_age_sec`` — so
+    ``vacuum_orphans`` is recommended exactly when it would remove
+    something.
+
     Returns a dict of observations plus a ``recommended`` list of
     action names, each justified by a recorded observation."""
     head = table.head(ref)
@@ -4370,34 +4402,18 @@ def plan_maintenance(
     files = snap["files"]
     n_eq = len(snap.get("deletes", []))
     n_pos = len(snap.get("pos_deletes", []))
-    sizes, mtimes = {}, {}
+    sizes = {}
     if os.path.isdir(table._data):
         with os.scandir(table._data) as it:
             for e in it:
-                st = e.stat()
-                rel = os.path.join("data", e.name)
-                sizes[rel] = st.st_size
-                mtimes[rel] = st.st_mtime
+                sizes[os.path.join("data", e.name)] = e.stat().st_size
     n_small = sum(
         1 for f in files if sizes.get(f, small_file_bytes) < small_file_bytes // 2
     )
     depth, _accum = _manifest_depth(table.path, head)
     n_snapshots = len(table.history_ids())
-    referenced_names = set(files)
-    for sid in table.history_ids():
-        s = table._load_snap(sid)
-        referenced_names.update(s["files"])
-        referenced_names.update(s.get("deletes", []))
-        referenced_names.update(s.get("pos_deletes", []))
-    # the same age guard vacuum_orphans applies: a concurrent writer
-    # stages data files BEFORE its manifest exists — a young unlisted
-    # file is an in-flight commit, not debris
-    now = time.time()
-    n_orphans = sum(
-        1
-        for rel in sizes
-        if rel not in referenced_names and now - mtimes[rel] >= min_age_sec
-    )
+    # exactly what vacuum_orphans would remove, under the same age guard
+    n_orphans = len(_orphans(table, min_age_sec))
     # recorded table statistics go stale as data lands on top of the
     # snapshot they were computed over; count the files added since
     ts = snap.get("table_stats")

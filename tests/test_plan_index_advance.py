@@ -19,7 +19,6 @@ from iceberg_catalog_migrator_spark.sources.plan_index import (
     _fresh_doc,
     advance_plan_index,
     current_rows_table,
-    gc_plan_segments,
     plan_partition_paths,
     plan_paths,
     sidecar_path,
@@ -1124,3 +1123,56 @@ def test_rename_shaped_delta_advances_and_rekeys_stat_plans(tmp_path):
     # snapshot 1 still answers under the OLD name
     res1 = _plan(root, 1, [("k", ">=", 150), ("k", "<=", 210)])
     assert sorted(res1[0]) == ["data/f0001.parquet", "data/f0002.parquet"]
+
+
+def test_reselected_spec_keeps_every_spec_in_the_index(tmp_path):
+    """A delta that re-selects an existing spec moves ``partition_spec``
+    and ``current_spec_id`` but not the spec list: the index must keep
+    every spec under its own id, not read the current spec as spec 0
+    (that pruned a bucket-spec file holding a matching key)."""
+    from iceberg_catalog_migrator_spark.sources.plan_index import index_commit
+
+    root = str(tmp_path / "resel")
+    meta = os.path.join(root, "metadata")
+    os.makedirs(meta)
+    specs = [
+        {"spec_id": 0, "spec": [["k", "bucket[4]"]]},
+        {"spec_id": 1, "spec": [["k", "truncate[1]"]]},
+    ]
+    snap = {
+        "snapshot_id": 1,
+        "parent": None,
+        "timestamp_ms": 0,
+        "operation": "append",
+        "files": ["data/f0.parquet", "data/f1.parquet"],
+        "partition_spec": [["k", "truncate[1]"]],
+        "partition_specs": specs,
+        "current_spec_id": 1,
+        "file_partitions": {"data/f0.parquet": ["3"], "data/f1.parquet": ["1"]},
+        "file_spec_ids": {"data/f0.parquet": 0, "data/f1.parquet": 1},
+    }
+    with open(os.path.join(meta, "snap-1.json"), "w") as f:
+        json.dump(snap, f)
+    assert write_plan_index(root, snap) is not None
+    raw = {
+        "snapshot_id": 2,
+        "parent": 1,
+        "delta_base": 1,
+        "delta_depth": 1,
+        "timestamp_ms": 1,
+        "operation": "append",
+        "files_added": ["data/f2.parquet"],
+        "files_removed": [],
+        "partition_spec": [["k", "bucket[4]"]],
+        "current_spec_id": 0,
+        "file_partitions": {"data/f2.parquet": ["2"]},
+        "file_spec_ids": {"data/f2.parquet": 0},
+    }
+    with open(os.path.join(meta, "snap-2.json"), "w") as f:
+        json.dump(raw, f)
+    index_commit(root, 2)
+    pm = _fresh_doc(root, 2)["partition_specs"]
+    assert [(s["spec_id"], s["spec"]) for s in pm["specs"]] == [
+        (s["spec_id"], s["spec"]) for s in load_manifest(root, 2)["partition_specs"]
+    ]
+    assert pm["current_spec_id"] == 0

@@ -138,12 +138,10 @@ def test_vacuum_reaps_orphaned_stats_keeps_live(stats_table):
     ]["path"]
     assert old != live
     stats_table.expire_snapshots(keep_last=1)
-    res = vacuum_orphans(stats_table, min_age_sec=0.0)
-    assert os.path.join("metadata", "stats", os.path.basename(old)) in res[
-        "removed_files"
-    ]
-    assert os.path.exists(os.path.join(stats_table.path, live))
+    # expiry removes the puffin only expired snapshots record
     assert not os.path.exists(os.path.join(stats_table.path, old))
+    vacuum_orphans(stats_table, min_age_sec=0.0)
+    assert os.path.exists(os.path.join(stats_table.path, live))
     assert column_ndv(stats_table, "k") > 0
 
 def test_update_statistics_incremental_appends_only(spark, stats_table, monkeypatch):
