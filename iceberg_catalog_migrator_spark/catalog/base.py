@@ -7,20 +7,18 @@ same location without touching data files
 (reference ``api/.../CatalogMigrator.java:212-213``).
 
 Since no Iceberg runtime jar ships in this environment, tables here are
-"pointer tables": a metadata JSON document holding the table location,
-schema DDL, and the data directory (parquet, written/read by Spark).
-The dataflow semantics — namespaces, listing, register, metadata-only
-drop — mirror the Iceberg catalog API one-to-one, so swapping in
+"pointer tables": a spec ``metadata.json`` (:mod:`.table_metadata`)
+holding the table location and schema, with the data under
+``<location>/data`` (parquet, written/read by Spark). The dataflow
+semantics — namespaces, listing, register, metadata-only drop — mirror
+the Iceberg catalog API one-to-one, so swapping in
 ``org.apache.iceberg.spark.SparkCatalog`` on a cluster with the runtime
 jar changes only this module.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
-import uuid
 from abc import ABC, abstractmethod
 
 from .identifiers import TableIdentifier
@@ -208,46 +206,28 @@ def write_table_metadata(
     write_hint: bool = True,
     table_uuid: str | None = None,
 ) -> str:
-    """Write ``v<version>.metadata.json`` (+ version hint unless
+    """Write the spec doc ``v<version>.metadata.json`` whose schema is
+    ``schema_ddl`` (either DDL form) (+ version hint unless
     ``write_hint=False``); returns its path. ``version`` is a number,
     or a string such as ``"<snapshot-id>-<ref>"`` for a branch's doc.
 
-    ``write_hint=False`` is for CANDIDATE docs staged before a catalog
-    register or compare-and-swap: the hint must only ever point at a
-    doc that WON, or a losing racer's cleanup would leave it dangling
-    at an unlinked file. A candidate is created exclusively — an
-    existing doc of that name raises ``FileExistsError`` and is left as
-    it is, so a writer never rewrites (nor, cleaning up, unlinks) a doc
-    another writer's pointer may name. ``table_uuid`` carries a table's
+    Every doc is created exclusively: an existing doc of that name
+    raises ``FileExistsError`` and is left as it is, so a writer never
+    rewrites (nor, cleaning up, unlinks) a doc another writer's pointer
+    may name. ``write_hint=False`` is for CANDIDATE docs staged before a
+    catalog register or compare-and-swap: the hint must only ever point
+    at a doc that WON, or a losing racer's cleanup would leave it
+    dangling at an unlinked file. ``table_uuid`` carries a table's
     identity forward across commits (Iceberg's stable table-uuid);
     omitted = a fresh identity, i.e. table creation."""
-    meta_dir = os.path.join(table_location, METADATA_DIR)
-    os.makedirs(meta_dir, exist_ok=True)
-    doc = {
-        "format-version": 2,
-        "table-uuid": table_uuid or str(uuid.uuid4()),
-        "location": table_location,
-        "data-location": os.path.join(table_location, "data"),
-        "schema-ddl": schema_ddl,
-        "last-updated-ms": int(time.time() * 1000),
-        "properties": properties or {},
-    }
-    metadata_path = os.path.join(meta_dir, f"v{version}.metadata.json")
+    from .table_metadata import build_metadata, schema_from_ddl, write_metadata
+
+    path = os.path.join(table_location, METADATA_DIR, f"v{version}.metadata.json")
+    schemas = [schema_from_ddl(schema_ddl)]
+    write_metadata(path, build_metadata(table_location, schemas, table_uuid=table_uuid, properties=properties))
     if write_hint:
-        with open(metadata_path, "w", encoding="utf-8") as f:
-            json.dump(doc, f, indent=2)
         write_version_hint(table_location, version)
-        return metadata_path
-    # a candidate is written under a private name and linked into place
-    # whole: exclusive, and a writer reusing it never reads a torn doc
-    tmp = metadata_path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(doc, f, indent=2)
-    try:
-        os.link(tmp, metadata_path)
-    finally:
-        os.unlink(tmp)
-    return metadata_path
+    return path
 
 
 def write_version_hint(table_location: str, version: int | str) -> None:
@@ -261,7 +241,8 @@ def write_version_hint(table_location: str, version: int | str) -> None:
 
 
 def read_table_metadata(metadata_location: str) -> dict:
-    if not os.path.isfile(metadata_location):
-        raise NoSuchTableError(f"Metadata file not found: {metadata_location}")
-    with open(metadata_location, encoding="utf-8") as f:
-        return json.load(f)
+    """The doc at ``metadata_location``, read by the one lenient parser
+    (:func:`.table_metadata.load_metadata`)."""
+    from .table_metadata import load_metadata
+
+    return load_metadata(metadata_location)[1]

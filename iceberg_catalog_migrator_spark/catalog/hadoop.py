@@ -29,8 +29,11 @@ from .base import (
     NamespaceAlreadyExistsError,
     NoSuchTableError,
     TableAlreadyExistsError,
+    read_table_metadata,
+    write_version_hint,
 )
 from .identifiers import TableIdentifier
+from .table_metadata import write_metadata
 
 
 class HadoopCatalog(Catalog):
@@ -123,11 +126,12 @@ class HadoopCatalog(Catalog):
             return  # already in place (same-warehouse create/register)
         if self.table_exists(identifier):
             raise TableAlreadyExistsError(f"Table already exists: {identifier}")
-        meta_dir = os.path.join(table_path, METADATA_DIR)
-        os.makedirs(meta_dir, exist_ok=True)
-        shutil.copyfile(metadata_location, os.path.join(meta_dir, "v1.metadata.json"))
-        with open(os.path.join(meta_dir, VERSION_HINT), "w", encoding="utf-8") as f:
-            f.write("1")
+        doc = read_table_metadata(metadata_location)
+        try:
+            write_metadata(os.path.join(table_path, METADATA_DIR, "v1.metadata.json"), doc)
+        except FileExistsError:
+            raise TableAlreadyExistsError(f"Table already exists: {identifier}") from None
+        write_version_hint(table_path, 1)
 
     def drop_table(self, identifier: TableIdentifier, purge: bool = False) -> bool:
         if not self.table_exists(identifier):

@@ -14,28 +14,27 @@ engine's own client uses. Both vocabularies are served; the store's
 atomic pointer swap stays the single arbitration point, so a foreign
 commit and an engine commit race through the same CAS.
 
-Everything here is pure document logic (build / check / apply / write);
-the HTTP wiring lives in :mod:`.rest_server`. Shapes follow the public
-Iceberg table-spec and REST-spec JSON forms.
+Everything here is pure document logic (build / check / apply); docs
+are built and written through :mod:`.table_metadata`, and the HTTP
+wiring lives in :mod:`.rest_server`. Shapes follow the public Iceberg
+table-spec and REST-spec JSON forms.
 """
 
 from __future__ import annotations
 
 import copy
-import json
 import os
-import re
 import time
-import uuid
 
 from .base import CatalogError
+from .table_metadata import build_metadata, max_field_id
 
 __all__ = [
     "CommitConflictError",
     "apply_commit",
     "build_create_doc",
     "is_pointer_commit",
-    "write_metadata_doc",
+    "table_location",
 ]
 
 
@@ -45,27 +44,7 @@ class CommitConflictError(CatalogError):
     conflict), unlike :class:`CatalogError`'s 400 (a bad request)."""
 
 
-# --------------------------------------------------------------- schema
-def _max_field_id(node) -> int:
-    """Largest field id anywhere in an Iceberg JSON schema node —
-    struct fields carry ``id``, lists ``element-id``, maps
-    ``key-id``/``value-id``; nested types recurse."""
-    best = 0
-    if isinstance(node, dict):
-        for key in ("id", "element-id", "key-id", "value-id"):
-            v = node.get(key)
-            if isinstance(v, int):
-                best = max(best, v)
-        for key in ("fields", "element", "key", "value", "type"):
-            v = node.get(key)
-            if isinstance(v, (dict, list)):
-                best = max(best, _max_field_id(v))
-    elif isinstance(node, list):
-        for item in node:
-            best = max(best, _max_field_id(item))
-    return best
-
-
+# --------------------------------------------------------------- create
 def _normalize_spec(spec: dict | None, next_field_id: int = 1000) -> dict:
     """A PartitionSpec JSON with spec-id and per-field field-ids filled
     (CreateTableRequest may omit both; partition field ids start at
@@ -97,102 +76,45 @@ def _normalize_order(order: dict | None) -> dict:
     }
 
 
+def table_location(
+    location: str | None, warehouse: str | None, namespace: tuple[str, ...], name: str
+) -> str:
+    """``location`` when a request names one, else the table's
+    directory under the server-side warehouse root."""
+    if location:
+        return location
+    if not warehouse:
+        raise CatalogError(
+            f"creating {name!r} without an explicit location needs a "
+            "server-side warehouse root (none configured)"
+        )
+    return os.path.join(warehouse, *namespace, name)
+
+
 def build_create_doc(
     body: dict, namespace: tuple[str, ...], warehouse: str | None
-) -> tuple[str, dict]:
-    """(table location, fresh spec-shaped metadata doc) for the spec's
-    CreateTableRequest. The schema arrives in Iceberg JSON form and is
-    stored verbatim (schema-id forced to 0 — it is the first schema)."""
+) -> dict:
+    """The fresh spec doc for the spec's CreateTableRequest. The schema
+    arrives in Iceberg JSON form and is stored verbatim (schema-id
+    forced to 0 — it is the first schema)."""
     name = body.get("name")
     schema = body.get("schema")
     if not name or not isinstance(schema, dict) or schema.get("type") != "struct":
         raise CatalogError(
             "CreateTable requires 'name' and a struct 'schema'"
         )
-    location = body.get("location")
-    if not location:
-        if not warehouse:
-            raise CatalogError(
-                "CreateTable without an explicit 'location' needs a "
-                "server-side warehouse root (none configured)"
-            )
-        location = os.path.join(warehouse, *namespace, name)
-    schema = {**schema, "schema-id": 0}
     spec = _normalize_spec(body.get("partition-spec"))
     order = _normalize_order(body.get("write-order"))
-    now_ms = int(time.time() * 1000)
-    doc = {
-        "format-version": 2,
-        "table-uuid": str(uuid.uuid4()),
-        "location": location,
-        "last-sequence-number": 0,
-        "last-updated-ms": now_ms,
-        "last-column-id": _max_field_id(schema),
-        "current-schema-id": 0,
-        "schemas": [schema],
-        "default-spec-id": spec["spec-id"],
-        "partition-specs": [spec],
-        "last-partition-id": max(
-            (f["field-id"] for f in spec["fields"]), default=999
-        ),
-        "default-sort-order-id": order["order-id"],
-        "sort-orders": (
-            [{"order-id": 0, "fields": []}] if order["order-id"] != 0 else []
-        )
+    return build_metadata(
+        table_location(body.get("location"), warehouse, namespace, name),
+        [{**schema, "schema-id": 0}],
+        default_spec_id=spec["spec-id"],
+        partition_specs=[spec],
+        default_sort_order_id=order["order-id"],
+        sort_orders=([{"order-id": 0, "fields": []}] if order["order-id"] != 0 else [])
         + [order],
-        "properties": dict(body.get("properties") or {}),
-        "current-snapshot-id": -1,
-        "snapshots": [],
-        "snapshot-log": [],
-        "metadata-log": [],
-        "refs": {},
-    }
-    return location, doc
-
-
-def build_stage_skeleton(
-    namespace: tuple[str, ...], name: str, warehouse: str | None,
-    location: str | None = None,
-) -> dict:
-    """Empty-base metadata doc for a staged-create (CTAS/RTAS) commit.
-
-    The endpoint stages STATELESSLY — the stage-create response is not
-    durable server state (racing creates arbitrate at the commit's
-    pointer CAS, and a shared SQL store may back several endpoints) —
-    so the ``assert-create`` commit must carry the stock client's full
-    metadata-building vocabulary (``createChanges``: assign-uuid /
-    add-schema / set-current-schema / add-spec / set-default-spec /
-    add-sort-order / set-default-sort-order / set-location /
-    set-properties, then the CTAS data's add-snapshot +
-    set-snapshot-ref), applied over this skeleton."""
-    if not location:
-        if not warehouse:
-            raise CatalogError(
-                "staged-create commit without a 'set-location' update "
-                "needs a server-side warehouse root (none configured)"
-            )
-        location = os.path.join(warehouse, *namespace, name)
-    return {
-        "format-version": 2,
-        "table-uuid": str(uuid.uuid4()),
-        "location": location,
-        "last-sequence-number": 0,
-        "last-updated-ms": int(time.time() * 1000),
-        "last-column-id": 0,
-        "current-schema-id": -1,
-        "schemas": [],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": -1,
-        "snapshots": [],
-        "snapshot-log": [],
-        "metadata-log": [],
-        "refs": {},
-    }
+        properties=dict(body.get("properties") or {}),
+    )
 
 
 # --------------------------------------------------------------- commit
@@ -216,6 +138,16 @@ def _drop_stats_entries(doc: dict, key: str, sid) -> None:
     doc[key] = [
         e for e in doc.get(key, []) if e.get("snapshot-id") != sid
     ]
+
+
+#: requirement type -> (the doc field it asserts, the requirement's field)
+_ASSERTED_FIELDS = {
+    "assert-last-assigned-field-id": ("last-column-id", "last-assigned-field-id"),
+    "assert-current-schema-id": ("current-schema-id", "current-schema-id"),
+    "assert-last-assigned-partition-id": ("last-partition-id", "last-assigned-partition-id"),
+    "assert-default-spec-id": ("default-spec-id", "default-spec-id"),
+    "assert-default-sort-order-id": ("default-sort-order-id", "default-sort-order-id"),
+}
 
 
 def _check_requirements(
@@ -249,39 +181,12 @@ def _check_requirements(
             raise CommitConflictError(
                 "Requirement failed: table already exists"
             )
-        elif t in (
-            "assert-last-assigned-field-id",
-            "assert-current-schema-id",
-            "assert-last-assigned-partition-id",
-            "assert-default-spec-id",
-            "assert-default-sort-order-id",
-        ):
-            key = {
-                "assert-last-assigned-field-id": (
-                    "last-column-id",
-                    "last-assigned-field-id",
-                ),
-                "assert-current-schema-id": (
-                    "current-schema-id",
-                    "current-schema-id",
-                ),
-                "assert-last-assigned-partition-id": (
-                    "last-partition-id",
-                    "last-assigned-partition-id",
-                ),
-                "assert-default-spec-id": (
-                    "default-spec-id",
-                    "default-spec-id",
-                ),
-                "assert-default-sort-order-id": (
-                    "default-sort-order-id",
-                    "default-sort-order-id",
-                ),
-            }[t]
-            if doc.get(key[0]) != r.get(key[1]):
+        elif t in _ASSERTED_FIELDS:
+            field, asserted = _ASSERTED_FIELDS[t]
+            if doc.get(field) != r.get(asserted):
                 raise CommitConflictError(
-                    f"Requirement failed: {key[0]} is {doc.get(key[0])}, "
-                    f"expected {r.get(key[1])}"
+                    f"Requirement failed: {field} is {doc.get(field)}, "
+                    f"expected {r.get(asserted)}"
                 )
         else:
             # an unknown requirement silently treated as satisfied
@@ -297,11 +202,12 @@ def apply_commit(doc: dict, body: dict, staged: bool = False) -> dict:
     unknown actions refuse loudly rather than dropping updates.
     ``staged`` marks a staged-create commit over an empty skeleton
     (``assert-create`` is then satisfied by construction)."""
-    if "schemas" not in doc:
+    if (doc.get("properties") or {}).get("table-kind") == "snapshot-table":
         raise CatalogError(
-            "table carries a pointer-model metadata doc; snapshot-"
-            "vocabulary commits require a spec-shaped table (created "
-            "via the CreateTable route)"
+            "table is an engine snapshot table, whose catalog doc records "
+            "the engine's head; its commits swap the pointer "
+            "(set-current-metadata-location), not snapshot-vocabulary "
+            "updates"
         )
     _check_requirements(doc, body.get("requirements") or [], staged=staged)
     new = copy.deepcopy(doc)
@@ -317,6 +223,8 @@ def apply_commit(doc: dict, body: dict, staged: bool = False) -> dict:
                     f"cannot downgrade format-version to {fv}"
                 )
             new["format-version"] = fv
+            if fv >= 3:
+                new.setdefault("next-row-id", 0)  # the spec's v3 upgrade
         elif a == "add-schema":
             s = dict(u["schema"])
             taken = {sc.get("schema-id") for sc in new.get("schemas", [])}
@@ -328,7 +236,7 @@ def apply_commit(doc: dict, body: dict, staged: bool = False) -> dict:
             new["last-column-id"] = max(
                 new.get("last-column-id", 0),
                 int(u.get("last-column-id") or 0),
-                _max_field_id(s),
+                max_field_id(s),
             )
             last_added["schema"] = sid
         elif a == "set-current-schema":
@@ -527,55 +435,3 @@ def apply_commit(doc: dict, body: dict, staged: bool = False) -> dict:
             raise CatalogError(f"unsupported commit update action: {a!r}")
     new["last-updated-ms"] = int(time.time() * 1000)
     return new
-
-
-# ---------------------------------------------------------------- files
-_ORDINAL_RE = re.compile(r"^(\d+)-.*\.metadata\.json$|^v(\d+)\.metadata\.json$")
-
-
-def _ordinal(metadata_location: str | None) -> int:
-    if not metadata_location:
-        return -1
-    m = _ORDINAL_RE.match(os.path.basename(metadata_location))
-    if m is None:
-        return -1
-    return int(m.group(1) or m.group(2))
-
-
-def write_metadata_doc(
-    doc: dict,
-    prior_location: str | None = None,
-    prior_updated_ms: int | None = None,
-) -> tuple[str, dict]:
-    """Write ``doc`` as the next ``<NNNNN>-<uuid>.metadata.json`` under
-    ``{location}/metadata`` (the OSS naming the engine's reader already
-    orders). On a commit, the prior doc is appended to metadata-log
-    with ITS OWN last-updated-ms — the spec's rollback chain. The uuid
-    suffix makes racing writers' candidate files collision-free; the
-    store's pointer CAS decides which one becomes current. Returns
-    ``(path, doc-as-written)`` so callers respond without re-reading
-    the file they just serialized."""
-    if prior_location:
-        doc = {
-            **doc,
-            "metadata-log": (doc.get("metadata-log") or [])
-            + [
-                {
-                    "timestamp-ms": prior_updated_ms
-                    if prior_updated_ms is not None
-                    else doc.get("last-updated-ms"),
-                    "metadata-file": prior_location,
-                }
-            ],
-        }
-    meta_dir = os.path.join(doc["location"], "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    nxt = _ordinal(prior_location) + 1
-    path = os.path.join(
-        meta_dir, f"{nxt:05d}-{uuid.uuid4()}.metadata.json"
-    )
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(doc, f, indent=2)
-    os.replace(tmp, path)
-    return path, doc

@@ -34,6 +34,11 @@ POST    /v1/tables/rename                              RenameTable
 POST    /v1/transactions/commit                        CommitTransaction
 ======  =============================================  ===========================
 
+LoadTable (and the RegisterTable response) serves the doc the pointer
+names, read by :mod:`.table_metadata`'s lenient parser. Every doc the
+engine writes there is a spec doc — engine-created and CAS-committed
+tables included — so a stock client finds every required field.
+
 Multi-level namespaces join on the spec's ``0x1F`` unit separator in
 URL paths and the ``parent`` query parameter. Errors return the spec's
 ``ErrorModel`` envelope ``{"error": {"message", "type", "code"}}`` with
@@ -86,6 +91,7 @@ from .base import (
     read_table_metadata,
 )
 from .identifiers import TableIdentifier
+from .table_metadata import build_metadata, write_next_metadata
 
 #: the spec's multi-level namespace separator in URL path segments
 NS_SEPARATOR = "\x1f"
@@ -532,14 +538,14 @@ class _Handler(BaseHTTPRequestHandler):
                 # spec CreateTable: mint a spec-shaped metadata doc the
                 # endpoint owns structurally, register its pointer —
                 # this is the route a STOCK Iceberg client starts with
-                from .rest_managed import build_create_doc, write_metadata_doc
+                from .rest_managed import build_create_doc
 
                 ns = _decode_ns(parts[1])
                 if not self.store.namespace_exists(ns):
                     raise NoSuchNamespaceError(
                         f"Namespace does not exist: {'.'.join(ns)}"
                     )
-                location, doc = build_create_doc(
+                doc = build_create_doc(
                     body, ns, getattr(self.server, "warehouse", None)
                 )
                 ident = TableIdentifier(namespace=ns, name=body["name"])
@@ -556,18 +562,15 @@ class _Handler(BaseHTTPRequestHandler):
                         doc["table-uuid"] = read_table_metadata(cur).get(
                             "table-uuid", doc["table-uuid"]
                         )
-                    except NoSuchTableError:
-                        pass
-                    except (OSError, ValueError):
-                        # live pointer's metadata file missing/corrupt:
-                        # stage with the skeleton's fresh uuid exactly
-                        # like the no-table case instead of surfacing a
-                        # 500 (ADVICE r15); the follow-up commit's CAS
-                        # still arbitrates
+                    except (CatalogError, OSError, ValueError):
+                        # no live table, or its metadata file is
+                        # missing/corrupt: stage with the fresh uuid
+                        # instead of surfacing an error (ADVICE r15);
+                        # the follow-up commit's CAS still arbitrates
                         pass
                     self._send_json(200, {"metadata": doc})
                     return
-                loc, doc = write_metadata_doc(doc)
+                loc, doc = write_next_metadata(doc)
                 try:
                     self.store.register_table(ident, loc)
                 except Exception:
@@ -651,7 +654,7 @@ class _Handler(BaseHTTPRequestHandler):
         spec updates are applied to the current doc and the next doc is
         written here (``written``: the caller unlinks it when its swap
         does not happen)."""
-        from .rest_managed import apply_commit, is_pointer_commit, write_metadata_doc
+        from .rest_managed import apply_commit, is_pointer_commit
 
         if is_pointer_commit(change):
             expected = next(
@@ -679,11 +682,7 @@ class _Handler(BaseHTTPRequestHandler):
             return expected, new, {}, False
         current = self.store.load_table_metadata_location(ident)
         doc = read_table_metadata(current)
-        new, new_doc = write_metadata_doc(
-            apply_commit(doc, change),
-            prior_location=current,
-            prior_updated_ms=doc.get("last-updated-ms"),
-        )
+        new, new_doc = write_next_metadata(apply_commit(doc, change), prior=(current, doc))
         return current, new, new_doc, True
 
     def _commit_transaction(self, body: dict) -> None:
@@ -779,12 +778,7 @@ class _Handler(BaseHTTPRequestHandler):
         endpoint keeps no staged state, so the table's existence is
         minted atomically by the store's register (a racing staged
         create loses with the spec's 409 CommitFailedException)."""
-        from .rest_managed import (
-            CommitConflictError,
-            apply_commit,
-            build_stage_skeleton,
-            write_metadata_doc,
-        )
+        from .rest_managed import CommitConflictError, apply_commit, table_location
 
         if self.store.table_exists(ident):
             raise CommitConflictError(
@@ -794,21 +788,11 @@ class _Handler(BaseHTTPRequestHandler):
             raise NoSuchNamespaceError(
                 f"Namespace does not exist: {'.'.join(ident.namespace)}"
             )
-        explicit_loc = next(
-            (
-                u.get("location")
-                for u in body.get("updates") or []
-                if u.get("action") == "set-location"
-            ),
-            None,
+        new_doc = apply_commit(build_metadata(None, []), body, staged=True)
+        new_doc["location"] = table_location(
+            new_doc["location"], getattr(self.server, "warehouse", None),
+            ident.namespace, ident.name,
         )
-        base = build_stage_skeleton(
-            ident.namespace,
-            ident.name,
-            getattr(self.server, "warehouse", None),
-            location=explicit_loc,
-        )
-        new_doc = apply_commit(base, body, staged=True)
         if new_doc.get("current-schema-id") not in {
             s.get("schema-id") for s in new_doc.get("schemas", [])
         }:
@@ -817,7 +801,7 @@ class _Handler(BaseHTTPRequestHandler):
                 "updates (add-schema + set-current-schema): this "
                 "endpoint stages statelessly"
             )
-        new_loc, new_doc = write_metadata_doc(new_doc)
+        new_loc, new_doc = write_next_metadata(new_doc)
         try:
             self.store.register_table(ident, new_loc)
         except TableAlreadyExistsError:

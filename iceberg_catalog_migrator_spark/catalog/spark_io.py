@@ -38,4 +38,4 @@ def read_table(spark: SparkSession, catalog: Catalog, identifier: TableIdentifie
     """Resolve the metadata pointer and scan the table's data files."""
     metadata_location = catalog.load_table_metadata_location(identifier)
     meta = read_table_metadata(metadata_location)
-    return spark.read.parquet(meta["data-location"])
+    return spark.read.parquet(os.path.join(meta["location"], "data"))

@@ -1902,13 +1902,12 @@ def snapshot_iceberg_publish_orders(spark: SparkSession, sf_dir: str) -> DataFra
     table."""
     import os
 
+    from ..catalog.table_metadata import metadata_version
     from ..sources.iceberg_read import IcebergTable
 
     tbl = _table(spark, _published_orders, sf_dir, "tbl")
     it = IcebergTable(spark, os.path.join(tbl.path, "metadata", "iceberg"))
-    version = int(
-        os.path.basename(it.metadata_location).split(".")[0][1:]
-    )
+    version = metadata_version(it.metadata_location)
     return it.read().agg(
         F.count("*").cast("bigint").alias("n_rows"),
         dsum("o_totalprice").alias("total"),

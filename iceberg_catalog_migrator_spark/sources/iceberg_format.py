@@ -13,9 +13,9 @@ Iceberg-shaped metadata:
   ``<table>/metadata/iceberg/``:
   a version-incremented ``vN.metadata.json`` (format-version 2:
   schemas with field ids, partition specs, sort orders, snapshot list
-  + log, metadata-log of prior docs, refs — the doc is created
-  O_CREAT|O_EXCL so racing exporters never clobber a claimed
-  version), one
+  + log, metadata-log of prior docs, refs — built and created
+  exclusively by ``catalog/table_metadata.py``, so racing exporters
+  never clobber a claimed version), one
   Avro **manifest list** per exported snapshot, and one Avro
   **manifest file** per snapshot carrying every data file's
   ``record_count``, ``file_size_in_bytes``, sequence numbers, and
@@ -51,14 +51,22 @@ import hashlib
 import json
 import os
 import struct
-import time
 import uuid
 import zlib
 
+from ..catalog import table_metadata
+from ..catalog.base import CatalogError, read_table_metadata
+from ..catalog.table_metadata import (
+    build_metadata,
+    iceberg_schema,
+    metadata_files,
+    metadata_version,
+    write_metadata,
+)
 from . import codecs
 from .codecs import CODECS, compress, decompress
 from .mor import _coords_table, _key_type
-from .snapshots import MAIN, SnapshotError, SnapshotTable
+from .snapshots import MAIN, SnapshotError, SnapshotTable, _schema_by_id
 
 # ------------------------------------------------------------ avro write
 # Minimal Avro 1.x binary container writer (null codec).
@@ -608,33 +616,6 @@ _ADDED, _EXISTING = 1, 0
 # table-sized manifest (10^6 files -> 100 manifests of 10^4)
 _MANIFEST_MAX_ENTRIES = 10_000
 
-_SPARK_TO_ICEBERG = {
-    "bigint": "long",
-    "int": "int",
-    "smallint": "int",
-    "tinyint": "int",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "boolean": "boolean",
-    "date": "date",
-    "timestamp": "timestamptz",
-    "timestamp_ntz": "timestamp",
-    "binary": "binary",
-}
-
-
-def _iceberg_type(spark_type: str) -> str:
-    if spark_type.startswith("decimal"):
-        return spark_type  # decimal(p, s) — same spelling
-    t = _SPARK_TO_ICEBERG.get(spark_type)
-    if t is None:
-        raise SnapshotError(
-            f"cannot export column type {spark_type!r} to Iceberg metadata"
-        )
-    return t
-
-
 def _single_value_bytes(iceberg_type: str, v) -> bytes | None:
     """Iceberg single-value binary serialization (spec appendix D)."""
     if v is None:
@@ -666,8 +647,6 @@ def _name_resolvable_by_head(
     or a scan-time cast error."""
     if not head_schemas:
         return True  # no tracked evolution anywhere: names never moved
-    from .snapshots import _schema_by_id
-
     head_cur = _schema_by_id(head_schemas, head_cur_id)
     head_by_id = {f["id"]: (f["name"], f["type"]) for f in head_cur["fields"]}
     schemas = snap.get("schemas") or head_schemas
@@ -705,16 +684,21 @@ _CODEC_PROPERTY_NAMES = {
 }
 
 
+#: the modules that SHAPE exported bytes: this one, the codec table its
+#: write path compresses through, and the one that builds, types and
+#: writes the doc
+_FINGERPRINTED = (__file__, codecs.__file__, table_metadata.__file__)
+
+
 def _exporter_fingerprint() -> str:
-    """A hash of what SHAPES exported bytes: this module, the codec
-    table its write path compresses through, and the pyarrow release
-    whose libzstd and libsnappy do the compressing. Any change to one
-    of them invalidates reuse caches, so a stale /tmp fixture can never
-    keep serving bytes the current code would not write."""
+    """A hash of the :data:`_FINGERPRINTED` modules and the pyarrow
+    release whose libzstd and libsnappy do the compressing. Any change
+    to one of them invalidates reuse caches, so a stale /tmp fixture
+    can never keep serving bytes the current code would not write."""
     import pyarrow
 
     h = hashlib.md5()
-    for fname in (__file__, codecs.__file__):
+    for fname in _FINGERPRINTED:
         with open(fname, "rb") as f:
             h.update(f.read())
     h.update(pyarrow.__version__.encode())
@@ -757,22 +741,14 @@ def _latest_reusable(
     candidate whose head predates the current one (export history is
     append-only, so older docs cannot match either)."""
     try:
-        prior = sorted(
-            (
-                f
-                for f in os.listdir(out_dir)
-                if f.startswith("v") and f.endswith(".metadata.json")
-            ),
-            key=lambda f: int(f.split(".")[0][1:]),
-        )
+        prior = metadata_files(out_dir)
     except OSError:
         return None
     for fname in reversed(prior):
         mpath = os.path.join(out_dir, fname)
         try:
-            with open(mpath) as f:
-                doc = json.load(f)
-        except (OSError, json.JSONDecodeError):
+            doc = read_table_metadata(mpath)
+        except (CatalogError, OSError, ValueError):
             # a torn write from a crashed exporter must not disable
             # reuse outright — an older valid doc for the same head may
             # exist further down; the head-ordering early-exit below
@@ -968,58 +944,36 @@ def export_iceberg_metadata(
     # ---- schema with field ids: tracked log when present, else the
     # head files' parquet schema in column order
     if head_snap.get("schemas"):
-        cur = next(
-            s
-            for s in head_snap["schemas"]
-            if s["schema_id"] == head_snap["current_schema_id"]
-        )
-        fields = [
-            {
-                "id": f["id"],
-                "name": f["name"],
-                "required": False,
-                "type": _iceberg_type(f["type"]),
-                # v3 column defaults ride along in the spec's hyphened
-                # single-value JSON form (scalars: value verbatim).
-                # write-default only travels in v3 metadata — it is a
-                # WRITER-side hint with no read semantics for existing
-                # data, so a v2 export drops it; initial-default is
-                # gated below because dropping IT would change what
-                # pre-addition files read as.
-                **(
-                    {"initial-default": f["initial_default"]}
-                    if f.get("initial_default") is not None
-                    else {}
-                ),
-                **(
-                    {"write-default": f["write_default"]}
-                    if f.get("write_default") is not None and v3
-                    else {}
-                ),
-            }
-            for f in cur["fields"]
-        ]
-        schema_id = head_snap["current_schema_id"]
-        if not v3 and any("initial-default" in f for f in fields):
-            raise SnapshotError(
-                "format-version 2 metadata cannot carry initial-default "
-                "(a v3 schema field): pre-addition files would silently "
-                "read as null in the exported tree — export "
-                "format_version=3, or avoid initial defaults on "
-                "exported tables"
-            )
+        cur = _schema_by_id(head_snap["schemas"], head_snap["current_schema_id"])
+        columns = [(f["id"], f["name"], f["type"]) for f in cur["fields"]]
     else:
+        cur = {"schema_id": 0, "fields": []}
         spark_schema = table._read_files(head_snap["files"]).schema
-        fields = [
-            {
-                "id": i + 1,
-                "name": f.name,
-                "required": False,
-                "type": _iceberg_type(f.dataType.simpleString()),
-            }
+        columns = [
+            (i + 1, f.name, f.dataType.simpleString())
             for i, f in enumerate(spark_schema.fields)
         ]
-        schema_id = 0
+    schema = iceberg_schema(columns, cur["schema_id"])
+    fields = schema["fields"]
+    for out, f in zip(fields, cur["fields"]):
+        # v3 column defaults ride along in the spec's hyphened
+        # single-value JSON form (scalars: value verbatim).
+        # write-default only travels in v3 metadata — it is a
+        # WRITER-side hint with no read semantics for existing data, so
+        # a v2 export drops it; initial-default is gated below because
+        # dropping IT would change what pre-addition files read as.
+        if f.get("initial_default") is not None:
+            out["initial-default"] = f["initial_default"]
+        if f.get("write_default") is not None and v3:
+            out["write-default"] = f["write_default"]
+    if not v3 and any("initial-default" in f for f in fields):
+        raise SnapshotError(
+            "format-version 2 metadata cannot carry initial-default "
+            "(a v3 schema field): pre-addition files would silently "
+            "read as null in the exported tree — export "
+            "format_version=3, or avoid initial defaults on "
+            "exported tables"
+        )
     type_by_name = {f["name"]: f["type"] for f in fields}
     id_by_name = {f["name"]: f["id"] for f in fields}
     # sort orders whose every column resolves in the EXPORTED schema;
@@ -1654,7 +1608,7 @@ def export_iceberg_metadata(
                 "timestamp-ms": snap["timestamp_ms"],
                 "summary": summary,
                 "manifest-list": mlpath,
-                "schema-id": schema_id,
+                "schema-id": schema["schema-id"],
                 **lineage_json,
             }
         )
@@ -1780,21 +1734,14 @@ def export_iceberg_metadata(
             }
         )
 
-    metadata = {
-        "format-version": 3 if v3 else 2,
-        **(
-            {"next-row-id": int(head_snap["next_row_id"])} if v3 else {}
-        ),
-        "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, table.path)),
-        "location": table.path,
-        "last-sequence-number": int(head_snap.get("sequence_number", 0)),
-        "last-updated-ms": int(time.time() * 1000),
-        "last-column-id": max(f["id"] for f in fields),
-        "current-schema-id": schema_id,
-        "schemas": [
-            {"type": "struct", "schema-id": schema_id, "fields": fields}
-        ],
-        "default-spec-id": (
+    metadata = build_metadata(
+        table.path,
+        [schema],
+        format_version=3 if v3 else 2,
+        next_row_id=int(head_snap["next_row_id"]) if v3 else None,
+        table_uuid=str(uuid.uuid5(uuid.NAMESPACE_URL, table.path)),
+        last_sequence_number=int(head_snap.get("sequence_number", 0)),
+        default_spec_id=(
             head_snap.get(
                 "current_spec_id",
                 max(s["spec_id"] for s in head_specs),
@@ -1802,7 +1749,7 @@ def export_iceberg_metadata(
             if head_specs
             else 0
         ),
-        "partition-specs": (
+        partition_specs=(
             [
                 {
                     "spec-id": s["spec_id"],
@@ -1816,7 +1763,7 @@ def export_iceberg_metadata(
                 else []
             )
         ),
-        "last-partition-id": max(
+        last_partition_id=max(
             (
                 1000 + s["spec_id"] * 100 + len(s["spec"]) - 1
                 for s in head_specs
@@ -1830,8 +1777,7 @@ def export_iceberg_metadata(
         # is OMITTED whole (exportable_order_ids gates the entries
         # too): a non-zero order with missing fields is spec-invalid,
         # and a partially-resolved one would overclaim the clustering.
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}]
+        sort_orders=[{"order-id": 0, "fields": []}]
         + [
             {
                 "order-id": o["order_id"],
@@ -1848,7 +1794,7 @@ def export_iceberg_metadata(
             for o in head_snap.get("sort_orders") or []
             if o["order_id"] in exportable_order_ids
         ],
-        "properties": {
+        properties={
             # summaries' total-records is NET of MOR deletes (the
             # engine's maintained visible count) — foreign writers'
             # is gross; readers key the distinction off this marker
@@ -1884,60 +1830,39 @@ def export_iceberg_metadata(
                 ]
             ),
         },
-        "current-snapshot-id": head,
-        "snapshots": snapshots_json,
-        "snapshot-log": [
+        current_snapshot_id=head,
+        snapshots=snapshots_json,
+        snapshot_log=[
             {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
             for s in snapshots_json
         ],
-        "metadata-log": [],
-        "refs": _exportable_refs(table, ref, head, snapshots_json),
-        **({"statistics": statistics_json} if statistics_json else {}),
-        **(
-            {"partition-statistics": pstats_json} if pstats_json else {}
-        ),
-    }
+        refs=_exportable_refs(table, ref, head, snapshots_json),
+        statistics=statistics_json or None,
+        partition_statistics=pstats_json or None,
+    )
     # version-increment like Iceberg's metadata.json lifecycle: each
     # export writes v<N+1> and records the prior doc in metadata-log,
-    # so a catalog pointer can roll back along the log. The doc is
-    # created O_CREAT|O_EXCL — of N racing exporters each version is
+    # so a catalog pointer can roll back along the log. Each version is
+    # created exclusively — of N racing exporters each version is
     # claimed by exactly one; losers recompute against the winner's
     # doc and take the next number, never clobbering it.
     while True:
-        prior = sorted(
-            (
-                f
-                for f in os.listdir(out_dir)
-                if f.startswith("v") and f.endswith(".metadata.json")
-            ),
-            key=lambda f: int(f.split(".")[0][1:]),
-        )
+        prior = metadata_files(out_dir)
+        prev = None
         if prior:
             prev_path = os.path.join(out_dir, prior[-1])
             try:
-                with open(prev_path) as f:
-                    prev = json.load(f)
-                metadata["metadata-log"] = (prev.get("metadata-log") or []) + [
-                    {
-                        "timestamp-ms": prev["last-updated-ms"],
-                        "metadata-file": prev_path,
-                    }
-                ]
-            except (OSError, json.JSONDecodeError, KeyError):
-                # a racing exporter's doc mid-write: still claim the
-                # next version, just without linking the torn doc
-                metadata["metadata-log"] = []
-            version = int(prior[-1].split(".")[0][1:]) + 1
-        else:
-            metadata["metadata-log"] = []
-            version = 1
+                prev = (prev_path, read_table_metadata(prev_path))
+            except (CatalogError, OSError, ValueError):
+                # a racing exporter's torn doc: still claim the next
+                # version, just without linking it
+                pass
+        version = metadata_version(prior[-1]) + 1 if prior else 1
         mpath = os.path.join(out_dir, f"v{version}.metadata.json")
         try:
-            fd = os.open(mpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+            write_metadata(mpath, metadata, prior=prev)
         except FileExistsError:
             continue  # lost the race: rebuild the log off the winner
-        with os.fdopen(fd, "w") as f:
-            json.dump(metadata, f, indent=1)
         return {
             "metadata_location": mpath,
             "files": written

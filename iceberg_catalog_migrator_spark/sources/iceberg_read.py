@@ -35,7 +35,8 @@ Deliberate scope, refused loudly rather than silently wrong:
 - **equality deletes without equality_ids** — unappliable metadata,
   never guessed.
 - **non-parquet data files** (``file_format != PARQUET``).
-- **unknown column types** — anything outside the exporter's type map.
+- **unknown column types** — anything outside the one type map
+  (``catalog/table_metadata.py``).
 
 Entries with status DELETED (2) are dropped per spec; status EXISTING
 (0) / ADDED (1) are live. Bounds pruning treats a file with missing
@@ -47,9 +48,9 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import struct
 
+from ..catalog.table_metadata import _TO_SPARK, load_metadata, spark_type
 from .iceberg_format import read_avro
 from .mor import (
     _basename,
@@ -60,84 +61,25 @@ from .mor import (
     _row_identity,
 )
 from .pruning import overlaps, render_sets
-from .snapshots import SnapshotError
-
-# inverse of the exporter's _SPARK_TO_ICEBERG; timestamptz loses the
-# zone to Spark's session-zoned timestamp, same as Spark's own Iceberg
-# source does
-_ICEBERG_TO_SPARK = {
-    "long": "bigint",
-    "int": "int",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "boolean": "boolean",
-    "date": "date",
-    "timestamptz": "timestamp",
-    "timestamp": "timestamp_ntz",
-    "binary": "binary",
-}
+from .snapshots import _DEFAULTABLE_SPARK_TYPES, SnapshotError, _default_scalar_matches
 
 _DATA, _DELETED_STATUS = 0, 2
 
-# both naming conventions real tables use: the exporter's
-# "v3.metadata.json" and Iceberg's "00003-<uuid>.metadata.json"
-_MD_VERSION_RE = re.compile(r"^v?(\d+)")
-
-
-def _metadata_version(fname: str) -> int:
-    m = _MD_VERSION_RE.match(fname)
-    if m is None:
-        raise SnapshotError(
-            f"cannot order metadata file {fname!r}: expected "
-            "v<N>.metadata.json or <NNNNN>-<uuid>.metadata.json"
-        )
-    return int(m.group(1))
-
-
-def _spark_type(iceberg_type) -> str:
-    # struct columns render recursively into Spark DDL (round 14:
-    # needed so flat-struct initial-defaults have a readable column);
-    # list/map shapes keep refusing below
-    if isinstance(iceberg_type, dict) and iceberg_type.get("type") == "struct":
-        inner = ",".join(
-            f"{sf['name']}:{_spark_type(sf['type'])}"
-            for sf in iceberg_type.get("fields", [])
-        )
-        return f"struct<{inner}>"
-    if not isinstance(iceberg_type, str):
-        raise SnapshotError(
-            f"cannot import Iceberg column type {iceberg_type!r}"
-        )
-    if iceberg_type.startswith("decimal"):
-        return iceberg_type
-    t = _ICEBERG_TO_SPARK.get(iceberg_type)
-    if t is None:
-        raise SnapshotError(
-            f"cannot import Iceberg column type {iceberg_type!r}"
-        )
-    return t
-
-
 #: primitive types whose v3 ``initial-default`` (spec JSON single-value
 #: serialization: bare scalars; date as "YYYY-MM-DD") this reader can
-#: serve exactly at read time
-_DEFAULTABLE_TYPES = frozenset(
-    {"boolean", "int", "long", "float", "double", "string", "date"}
-)
+#: serve exactly at read time: the write side's, through the one type map
+_DEFAULTABLE_TYPES = frozenset(t for t, s in _TO_SPARK.items() if s in _DEFAULTABLE_SPARK_TYPES)
 
 
-def _default_json_matches(iceberg_type: str, v) -> bool:
-    """True when ``v`` is the spec's single-value JSON form for the
-    primitive ``iceberg_type`` — a mismatched scalar would CAST to a
-    silent null (or silently wrap), exactly the misread the loud
-    refusals exist for. Thin alias wrapper over the single shared
-    matcher in snapshots.py so the write- and read-side guards cannot
-    drift."""
-    from .snapshots import _default_scalar_matches
-
-    spark_type = {"long": "bigint"}.get(iceberg_type, iceberg_type)
-    return _default_scalar_matches(spark_type, v)
+def _primitive_default(iceberg_type, v) -> bool:
+    """True when ``iceberg_type`` is a defaultable primitive and ``v``
+    its spec single-value JSON form: a mismatched scalar would CAST to
+    a silent null (or silently wrap)."""
+    return (
+        isinstance(iceberg_type, str)
+        and iceberg_type in _DEFAULTABLE_TYPES
+        and _default_scalar_matches(spark_type(iceberg_type), v)
+    )
 
 
 def _nested_initial_default(node) -> bool:
@@ -211,11 +153,11 @@ def _struct_default_resolve(t: dict, dflt: dict):
                     return None
             else:
                 return None  # a scalar where an id-keyed object belongs
-            out.append((sf["name"], _spark_type(st), sub))
+            out.append((sf["name"], spark_type(st), sub))
         else:
-            if v is not None and not _default_json_matches(st, v):
+            if v is not None and not _primitive_default(st, v):
                 return None
-            out.append((sf["name"], _spark_type(st), v))
+            out.append((sf["name"], spark_type(st), v))
     return out
 
 
@@ -288,24 +230,8 @@ class IcebergTable:
 
     def __init__(self, spark, location: str):
         self.spark = spark
-        if os.path.isdir(location):
-            cands = sorted(
-                (f for f in os.listdir(location) if f.endswith(".metadata.json")),
-                key=_metadata_version,
-            )
-            if not cands:
-                raise SnapshotError(f"no metadata.json under {location}")
-            location = os.path.join(location, cands[-1])
-        self.metadata_location = location
-        with open(location) as f:
-            self.metadata = json.load(f)
-        self.format_version = self.metadata.get("format-version")
-        if self.format_version not in (1, 2, 3):
-            raise SnapshotError(
-                "only Iceberg format-version 1 (read-only), 2 and 3 "
-                "metadata are supported, got "
-                f"{self.metadata.get('format-version')!r}"
-            )
+        self.metadata_location, self.metadata = load_metadata(location)
+        self.format_version = self.metadata["format-version"]
         # v3 column defaults: a non-null initial-default changes what
         # files written BEFORE the column must read as. Primitive
         # scalar defaults are SERVED at read time (files whose parquet
@@ -334,10 +260,10 @@ class IcebergTable:
                     )
                 if dflt is None:
                     continue
-                primitive_ok = isinstance(
-                    fld.get("type"), str
-                ) and _default_json_matches(fld["type"], dflt)
-                if not primitive_ok and _struct_default_fields(fld) is None:
+                if (
+                    not _primitive_default(fld.get("type"), dflt)
+                    and _struct_default_fields(fld) is None
+                ):
                     raise SnapshotError(
                         f"column {fld.get('name')!r} carries an "
                         f"initial-default of type {fld.get('type')!r}: "
@@ -416,7 +342,7 @@ class IcebergTable:
 
     def spark_schema_ddl(self, snapshot: dict | None = None) -> str:
         return ", ".join(
-            f"{f['name']} {_spark_type(f['type'])}"
+            f"{f['name']} {spark_type(f['type'])}"
             for f in self.schema_fields(snapshot)
         )
 
@@ -438,10 +364,10 @@ class IcebergTable:
             if sub is not None:
                 # the SAME renderer that typed the read column — the
                 # fill literal can never diverge from the declared type
-                out.append((f["name"], _spark_type(f["type"]), sub))
+                out.append((f["name"], spark_type(f["type"]), sub))
             else:
                 out.append(
-                    (f["name"], _spark_type(f["type"]), f["initial-default"])
+                    (f["name"], spark_type(f["type"]), f["initial-default"])
                 )
         return out
 
@@ -809,7 +735,7 @@ class IcebergTable:
         key = (col, transform, lit)
         if key not in self._probe_cache:
             try:
-                typ = _spark_type(
+                typ = spark_type(
                     next(
                         f["type"]
                         for f in self.schema_fields(snapshot)
@@ -1192,7 +1118,7 @@ class IcebergTable:
                 )
             key_cols = [field_by_id[i]["name"] for i in ids]
             key_ddl = ", ".join(
-                f"{field_by_id[i]['name']} {_spark_type(field_by_id[i]['type'])}"
+                f"{field_by_id[i]['name']} {spark_type(field_by_id[i]['type'])}"
                 for i in ids
             )
             keys = None

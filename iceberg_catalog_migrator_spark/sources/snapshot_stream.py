@@ -52,7 +52,6 @@ over ``sources/snapshots.py`` tables:
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -75,6 +74,13 @@ from pyspark.sql.datasource import (
 )
 
 from .mor import _coords_table, _eq_applies, _filter_by_keys, _keys_table
+from .snapshots import (
+    CatalogArbitratedTable,
+    SnapshotTable,
+    _schema_extra_for_append,
+    commit_with_retries,
+    load_manifest,
+)
 
 SNAPSHOT_STREAM_NAME = "snapshot_commits"
 
@@ -131,15 +137,6 @@ def _arrow_to_ddl(schema: pa.Schema) -> str:
     return ", ".join(f"{f.name} {_arrow_field_type(f.type)}" for f in schema)
 
 
-def _load_snap(path: str, sid: int) -> dict:
-    # the shared resolver: manifests may be DELTA-encoded against their
-    # parent (O(changed-files) commits); this returns the resolved
-    # full-form snapshot either way, memoized across planner calls
-    from .snapshots import load_manifest
-
-    return load_manifest(path, sid)
-
-
 def _rename_map(snap: dict, f_rel: str) -> dict | None:
     """written-name → current-name map for one file of a schema-tracked
     snapshot (field-id resolution, mirrors snapshots.py); None when the
@@ -158,58 +155,29 @@ def _rename_map(snap: dict, f_rel: str) -> dict | None:
     return m or None
 
 
-def _sid_as_of(path: str, ts_ms: int) -> int:
-    """Newest snapshot committed at or before ``ts_ms`` — resolved from
-    the commit-log timestamps (kilobytes, no manifest opens in steady
-    state), the same index ``SnapshotTable.read_as_of`` consults.
-    Legacy tables whose log misses ids fall back to one manifest read
-    per missing id."""
-    meta = os.path.join(path, "metadata")
-    stamps: dict[int, int | None] = {}
-    try:
-        with open(os.path.join(meta, "commit-log.jsonl")) as f:
-            for ln in f.read().splitlines():
-                try:
-                    e = json.loads(ln)
-                except json.JSONDecodeError:
-                    continue  # torn tail line
-                stamps[int(e["snapshot_id"])] = e.get("timestamp_ms")
-    except FileNotFoundError:
-        pass
-    try:
-        listing = os.listdir(meta)
-    except FileNotFoundError:
-        listing = []
-    for fn in listing:
-        if fn.startswith("snap-") and fn.endswith(".json"):
-            sid = int(fn[5:-5])
-            if stamps.get(sid) is None:
-                try:
-                    stamps[sid] = _load_snap(path, sid).get("timestamp_ms")
-                except Exception:
-                    continue  # a CAS loser's vanishing staged manifest
-    eligible = sorted(i for i, t in stamps.items() if t is not None and t <= ts_ms)
-    if not eligible:
-        raise ValueError(f"no snapshot at or before {ts_ms} at {path}")
-    return eligible[-1]
-
-
-def _current_sid(path: str, ref: str = "main") -> int:
-    if ref != "main":
-        try:
-            with open(os.path.join(path, "metadata", "refs.json")) as f:
-                refs = json.load(f)
-        except FileNotFoundError:
-            raise RuntimeError(f"no refs recorded at {path}; unknown ref {ref!r}") from None
-        for kind in ("branches", "tags"):
-            if ref in refs.get(kind, {}):
-                return refs[kind][ref]
-        raise RuntimeError(f"unknown ref {ref!r} at {path}")
-    try:
-        with open(os.path.join(path, "metadata", "snapshot-hint.text")) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return 0
+def _read_sid(path: str, options) -> int:
+    """The snapshot a batch read names: ``snapshot_id``, the newest at
+    or before ``as_of_timestamp``, or ``ref``'s head (main's by
+    default) — at most one of the three — resolved by the table's own
+    Spark-free resolver."""
+    ref = options.get("ref")
+    sid = options.get("snapshot_id")
+    as_of = options.get("as_of_timestamp")
+    if sum(o is not None for o in (ref, sid, as_of)) > 1:
+        raise ValueError(
+            "pass at most one of snapshot_id, ref, as_of_timestamp"
+        )
+    if sid is not None:
+        sid = int(sid)
+    elif as_of is not None:
+        sid = SnapshotTable(None, path).snapshot_as_of(int(as_of))
+        if sid is None:
+            raise ValueError(f"no snapshot at or before {as_of} at {path}")
+    else:
+        sid = SnapshotTable(None, path).head(ref or "main")
+    if not sid:
+        raise ValueError(f"no committed snapshot at {path}")
+    return sid
 
 
 def _check_representable(snap: dict, parent_files: set) -> None:
@@ -227,14 +195,14 @@ def _added_files(path: str, start_sid: int, end_sid: int, ignore_changes: bool) 
     parent's re-emits or drops rows when treated as an append stream."""
     if end_sid <= start_sid:
         return []
-    end_snap = _load_snap(path, end_sid)
-    before = set(_load_snap(path, start_sid)["files"]) if start_sid else set()
+    end_snap = load_manifest(path, end_sid)
+    before = set(load_manifest(path, start_sid)["files"]) if start_sid else set()
     if not ignore_changes:
         sid = end_sid
         while sid is not None and sid > start_sid:
-            snap = _load_snap(path, sid)
+            snap = load_manifest(path, sid)
             parent = snap.get("parent")
-            parent_files = set(_load_snap(path, parent)["files"]) if parent else set()
+            parent_files = set(load_manifest(path, parent)["files"]) if parent else set()
             _check_representable(snap, parent_files)
             sid = parent
     return [f for f in end_snap["files"] if f not in before]
@@ -257,9 +225,9 @@ def _changelog_partitions(
     per_commit: list[list[dict]] = []
     sid = end_sid
     while sid is not None and sid > start_sid:
-        snap = _load_snap(path, sid)
+        snap = load_manifest(path, sid)
         parent = snap.get("parent")
-        psnap = _load_snap(path, parent) if parent else {"files": [], "deletes": []}
+        psnap = load_manifest(path, parent) if parent else {"files": [], "deletes": []}
         if snap["operation"] in _ROW_PRESERVING_OPS:
             # checked BEFORE the vector-state guard below: a
             # row-preserving commit has a provably empty changelog no
@@ -574,7 +542,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         return {"sid": self.start}
 
     def latestOffset(self):
-        return {"sid": max(self.start, _current_sid(self.path, self.ref))}
+        return {"sid": max(self.start, SnapshotTable(None, self.path).head(self.ref) or 0)}
 
     def _check_schema_drift(self, end_sid: int) -> None:
         """Fail loudly if the table's current schema changed
@@ -586,7 +554,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         only non-additive changes require a restart."""
         if self.arrow_schema is None or end_sid <= 0:
             return
-        snap = _load_snap(self.path, end_sid)
+        snap = load_manifest(self.path, end_sid)
         schemas = snap.get("schemas")
         if not schemas:
             return
@@ -624,7 +592,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         files = _added_files(
             self.path, int(start["sid"]), int(end["sid"]), self.ignore_changes
         )
-        end_snap = _load_snap(self.path, int(end["sid"])) if files else None
+        end_snap = load_manifest(self.path, int(end["sid"])) if files else None
         parts = []
         for f in files:
             if _rename_map(end_snap, f):
@@ -664,27 +632,8 @@ class SnapshotCommitsDataSource(DataSource):
         # head additively evolved ahead of main must stream its own
         # columns, and a branch-only table (main never committed) must
         # still resolve
-        sid_opt = self.options.get("snapshot_id")
-        as_of_opt = self.options.get("as_of_timestamp")
-        if (
-            sum(
-                o is not None
-                for o in (sid_opt, as_of_opt, self.options.get("ref"))
-            )
-            > 1
-        ):
-            raise ValueError(
-                "pass at most one of snapshot_id, ref, as_of_timestamp"
-            )
-        if sid_opt is not None:
-            sid = int(sid_opt)
-        elif as_of_opt is not None:
-            sid = _sid_as_of(path, int(as_of_opt))
-        else:
-            sid = _current_sid(path, self.options.get("ref") or "main")
-        if not sid:
-            raise ValueError(f"no committed snapshot at {path}")
-        snap = _load_snap(path, sid)
+        sid = _read_sid(path, self.options)
+        snap = load_manifest(path, sid)
         files = snap["files"]
         if not files:
             raise ValueError(f"snapshot {sid} at {path} has no data files")
@@ -771,21 +720,7 @@ class _SnapshotBatchReader(DataSourceReader):
                 "changelog=true is a STREAMING option (readStream); for a "
                 "batch diff use SnapshotTable.read_changelog"
             )
-        ref = options.get("ref")
-        sid = options.get("snapshot_id")
-        as_of = options.get("as_of_timestamp")
-        if sum(o is not None for o in (ref, sid, as_of)) > 1:
-            raise ValueError(
-                "pass at most one of snapshot_id, ref, as_of_timestamp"
-            )
-        if sid is not None:
-            self.sid = int(sid)
-        elif as_of is not None:
-            self.sid = _sid_as_of(self.path, int(as_of))
-        else:
-            self.sid = _current_sid(self.path, ref or "main")
-        if not self.sid:
-            raise ValueError(f"no committed snapshot at {self.path}")
+        self.sid = _read_sid(self.path, options)
         self.apply_deletes = (
             str(options.get("apply_deletes", "true")).lower() == "true"
         )
@@ -814,7 +749,7 @@ class _SnapshotBatchReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        snap = _load_snap(self.path, self.sid)
+        snap = load_manifest(self.path, self.sid)
         deletes = snap.get("deletes", []) if self.apply_deletes else []
         pos_deletes = snap.get("pos_deletes", []) if self.apply_deletes else []
         files = snap["files"]
@@ -828,7 +763,6 @@ class _SnapshotBatchReader(DataSourceReader):
         # sidecar scan (and an O(files) kept-set) to prune nothing
         if ranges:
             from .pruning import plan_files
-            from .snapshots import SnapshotTable
 
             # a session-less handle: a range plan renders no probes
             table = SnapshotTable(None, self.path)
@@ -910,8 +844,6 @@ class _SnapshotTableWriter(DataSourceArrowWriter):
             made = _sink_catalog(self._catalog_opts)
             catalog, ident = made
             try:
-                from .snapshots import CatalogArbitratedTable
-
                 cat_path = CatalogArbitratedTable(None, catalog, ident).path
             finally:
                 catalog.close()
@@ -944,12 +876,8 @@ class _SnapshotTableWriter(DataSourceArrowWriter):
         catalog."""
         made = _sink_catalog(self._catalog_opts) if self._catalog_opts else None
         if made is None:
-            from .snapshots import SnapshotTable
-
             return SnapshotTable(None, self.path), None
         catalog, ident = made
-        from .snapshots import CatalogArbitratedTable
-
         return CatalogArbitratedTable(None, catalog, ident), catalog
 
     def write(self, iterator):
@@ -975,8 +903,6 @@ class _SnapshotTableWriter(DataSourceArrowWriter):
         return _FilesCommitMessage(files=[os.path.join("data", name)])
 
     def commit(self, messages):
-        from .snapshots import _schema_extra_for_append, commit_with_retries
-
         new = [f for m in messages if m is not None for f in m.files]
         tbl, catalog = self._target_table()  # metadata ops never touch spark
         try:
@@ -1060,8 +986,6 @@ class _SnapshotTableStreamWriter(DataSourceStreamArrowWriter):
         return self._task_writer.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        from .snapshots import _schema_extra_for_append, commit_with_retries
-
         new = [f for m in messages if m is not None for f in m.files]
         # catalog-arbitrated targets commit through the catalog's
         # compare-and-swap (and retry lost races re-reading the head),

@@ -58,6 +58,7 @@ from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog.table_metadata import SnapshotError
 from .mor import (
     _by_coords,
     _coords_df,
@@ -70,10 +71,6 @@ from .mor import (
     _row_identity,
 )
 from .pruning import _file_schema, overlaps, plan_files, transform_col
-
-
-class SnapshotError(RuntimeError):
-    pass
 
 
 class CommitConflictError(SnapshotError):
@@ -1348,21 +1345,28 @@ class SnapshotTable:
         # plain read hides it (read_with_lineage surfaces it)
         return df.drop("_row_id") if snap.get("row_lineage") else df
 
+    def snapshot_as_of(self, timestamp_ms: int) -> int | None:
+        """The newest retained snapshot committed at or before
+        ``timestamp_ms``, or None. Lock-free: the commit index's
+        timestamps, plus one manifest read per retained id the index
+        misses (a losing CAS writer's vanishing manifest is skipped)."""
+        idx = self._read_index_raw()
+        found = None
+        for i in self.history_ids():
+            try:
+                ts = idx[i]["timestamp_ms"] if i in idx else self._load_snap(i)["timestamp_ms"]
+            except (SnapshotError, OSError, ValueError):
+                continue
+            if ts <= timestamp_ms:
+                found = i
+        return found
+
     def read_as_of(self, timestamp_ms: int) -> DataFrame:
-        """Newest snapshot committed at or before ``timestamp_ms``.
-        Resolution runs against the commit index (timestamps only), so
-        one manifest is opened — the one actually read — not the whole
-        history."""
-        eligible = [
-            i
-            for i, e in self.commit_index().items()
-            if e["timestamp_ms"] <= timestamp_ms
-        ]
-        if not eligible:
+        """:meth:`read` at the snapshot :meth:`snapshot_as_of` names."""
+        sid = self.snapshot_as_of(timestamp_ms)
+        if sid is None:
             raise SnapshotError(f"no snapshot as of {timestamp_ms}")
-        snap = self._load_snap(eligible[-1])
-        df = self._read_files(snap["files"])
-        return df.drop("_row_id") if snap.get("row_lineage") else df
+        return self.read(snapshot_id=sid)
 
     def read_incremental(self, from_id: int, to_id: int) -> DataFrame:
         """Rows in files ADDED between the two snapshots — the CDC
@@ -2092,9 +2096,9 @@ def widen_column(table: SnapshotTable, col: str, to_type: str, ref: str = MAIN) 
     )
 
 
-#: primitive types whose v3 column defaults the engine serves exactly
-#: (matches the read side's _DEFAULTABLE_TYPES in iceberg_read.py,
-#: expressed in Spark simpleString vocabulary)
+#: primitive types whose v3 column defaults the engine serves exactly,
+#: in Spark simpleString vocabulary (the read side's
+#: ``iceberg_read._DEFAULTABLE_TYPES`` is derived from this set)
 _DEFAULTABLE_SPARK_TYPES = frozenset(
     {"boolean", "int", "bigint", "float", "double", "string", "date"}
 )
@@ -2106,9 +2110,9 @@ def _default_scalar_matches(spark_type: str, v) -> bool:
     """True when JSON scalar ``v`` is the spec's single-value form for
     ``spark_type`` — guards the cast path from serving silent nulls or
     silently WRONG values. The single implementation for both sides:
-    the read side (iceberg_read._default_json_matches) delegates here
-    through an iceberg→spark type alias, so write and read guards
-    cannot drift. Range- and calendar-exact: Spark's non-ANSI cast
+    the read side calls it through the one Iceberg→Spark type map
+    (``table_metadata.spark_type``), so write and read guards cannot
+    drift. Range- and calendar-exact: Spark's non-ANSI cast
     WRAPS an out-of-range int and NULLS an invalid date, so shape
     checks alone would wave through exactly the misreads this exists
     to refuse."""
@@ -3717,7 +3721,7 @@ class CatalogArbitratedTable(SnapshotTable):
                 "CAS-protected)"
             ) from None
         doc = read_table_metadata(loc)
-        return int(doc.get("properties", {}).get("snapshot-id", "0")) or None, (loc, doc)
+        return _recorded_sid(doc), (loc, doc)
 
     def current_snapshot_id(self) -> int | None:
         return self._read_head(MAIN)[0]
@@ -3734,31 +3738,37 @@ class CatalogArbitratedTable(SnapshotTable):
 
     def _pointer_doc(self, ref: str, snap: dict, like: dict) -> tuple[str, bool]:
         """The doc naming ``ref`` at ``snap`` — ``v<id>`` for main,
-        ``v<id>-<ref>`` for a branch — with the snapshot's schema and
-        ``like``'s table uuid (Iceberg's metadata model: the uuid is the
-        table's identity, not the commit's). Created exclusively: a doc
-        of that name already records that snapshot of that ref, so it
-        is reused, never rewritten. Returns its path and whether this
-        writer created it (a writer unlinks only its own)."""
-        from ..catalog.base import write_table_metadata
+        ``v<id>-<ref>`` for a branch — with ``like``'s table uuid
+        (Iceberg's metadata model: the uuid is the table's identity, not
+        the commit's). Its schema is the snapshot's tracked schema with
+        the tracked field ids, else ``like``'s current schema as it is.
+        Created exclusively: a doc of that name already records that
+        snapshot of that ref, so it is reused, never rewritten. Returns
+        its path and whether this writer created it (a writer unlinks
+        only its own)."""
+        from ..catalog.table_metadata import build_metadata, iceberg_schema, write_metadata
 
         sid = snap["snapshot_id"]
         version = sid if ref == MAIN else f"{sid}-{ref}"
-        ddl = like.get("schema-ddl") or ""
+        path = os.path.join(self._meta, f"v{version}.metadata.json")
         if snap.get("schemas"):
             cur = _schema_by_id(snap["schemas"], snap["current_schema_id"])
-            ddl = "struct<" + ",".join(f"{f['name']}:{f['type']}" for f in cur["fields"]) + ">"
+            schema = iceberg_schema(
+                ((f["id"], f["name"], f["type"]) for f in cur["fields"]), cur["schema_id"]
+            )
+        else:
+            schema = next(
+                s for s in like["schemas"] if s["schema-id"] == like["current-schema-id"]
+            )
+        properties = {"snapshot-id": str(sid), "table-kind": "snapshot-table"}
         try:
-            return write_table_metadata(
-                self.path,
-                ddl,
-                version=version,
-                properties={"snapshot-id": str(sid), "table-kind": "snapshot-table"},
-                write_hint=False,
-                table_uuid=like.get("table-uuid"),
-            ), True
+            write_metadata(
+                path,
+                build_metadata(self.path, [schema], table_uuid=like["table-uuid"], properties=properties),
+            )
         except FileExistsError:
-            return os.path.join(self._meta, f"v{version}.metadata.json"), False
+            return path, False
+        return path, True
 
     def _swap_head(self, ref: str, token: tuple[str, dict], snap: dict) -> bool:
         """One compare-and-swap of ``ref``'s catalog entry from the doc
@@ -3793,7 +3803,7 @@ class CatalogArbitratedTable(SnapshotTable):
     def _pointer_docs(self, ids: set[int]) -> set[str]:
         """``v0``, the doc each ref entry names, and every pointer doc
         recording a snapshot in ``ids``."""
-        from ..catalog.base import CatalogError
+        from ..catalog.base import CatalogError, read_table_metadata
 
         docs = {os.path.join("metadata", "v0.metadata.json")}
         for ref in [MAIN, *self._load_refs()["branches"]]:
@@ -3804,9 +3814,8 @@ class CatalogArbitratedTable(SnapshotTable):
             docs.add(os.path.relpath(loc, self.path))
         for p in glob.glob(os.path.join(self._meta, "v*.metadata.json")):
             try:
-                with open(p) as f:
-                    sid = int(json.load(f)["properties"]["snapshot-id"])
-            except (OSError, ValueError, KeyError, TypeError):
+                sid = _recorded_sid(read_table_metadata(p))
+            except (CatalogError, OSError, ValueError, TypeError):
                 continue
             if sid in ids:
                 docs.add(os.path.relpath(p, self.path))
@@ -3835,6 +3844,12 @@ class CatalogArbitratedTable(SnapshotTable):
             self.catalog.drop_table(self._ref_ident(name), purge=False)
         except CatalogError:
             pass  # a tag, or a plain-table branch with no entry
+
+
+def _recorded_sid(doc: dict) -> int | None:
+    """The snapshot a catalog pointer doc records in
+    ``properties.snapshot-id`` (absent or 0: none)."""
+    return int((doc.get("properties") or {}).get("snapshot-id") or 0) or None
 
 
 def snapshot_table_from_catalog(spark: SparkSession, catalog, identifier) -> SnapshotTable:

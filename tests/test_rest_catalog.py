@@ -104,7 +104,9 @@ def test_register_and_load_over_raw_http(served, tmp_path):
         payload = json.loads(r.read())
     assert payload["metadata-location"] == meta
     # LoadTableResult carries the metadata document itself
-    assert payload["metadata"]["schema-ddl"] == ID_SCHEMA
+    assert payload["metadata"]["schemas"][0]["fields"] == [
+        {"id": 1, "name": "id", "required": False, "type": "long"}
+    ]
     status, payload = _get(uri, "/v1/namespaces/db/tables/t1")
     assert status == 200 and payload["metadata-location"] == meta
     assert server.requests_served == 2  # register + load, both on-wire

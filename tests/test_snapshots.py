@@ -68,6 +68,21 @@ def test_read_as_of_timestamp(spark, table):
         table.read_as_of(t1 - 1_000_000)
 
 
+def test_read_as_of_resolves_by_field_id(spark, table):
+    """read_as_of reads like read: on a schema-tracked table a renamed
+    column comes back under its current name."""
+    from iceberg_catalog_migrator_spark.sources.snapshots import rename_column, track_schema
+
+    table.append(spark.range(0, 10).select(F.col("id").alias("k")))
+    track_schema(table)
+    rename_column(table, "k", "key")
+    now = table.history()[-1]["timestamp_ms"]
+    assert table.read().columns == ["key"]
+    got = table.read_as_of(now)
+    assert got.columns == ["key"]
+    assert sorted(r.key for r in got.collect()) == list(range(10))
+
+
 def test_commit_conflict_detected(spark, table):
     even, odd = halves(spark)
     table.append(even)
